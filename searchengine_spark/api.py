@@ -103,6 +103,7 @@ def advanced_search(
     # sort key); heavy terms keep the distributed decode.
     from .index.engine import (
         SERVING_DRIVER_MAX,
+        _empty,
         _idf,
         _make_scorer,
         _score_rows_driver,
@@ -112,13 +113,13 @@ def advanced_search(
     st = ix.stats
     tmeta = term_meta(ix, terms)
     live = [t for t in terms if t in tmeta]
-    cand = ix.postings().where(F.col("term").isin(live))
-    if live and all(tmeta[t][1] is not None for t in live):
-        cand = cand.where(
-            F.col("bucket").isin(sorted({tmeta[t][1] for t in live}))
-        )
+    cand = (
+        ix.postings()
+        .where(F.col("bucket").isin(sorted({tmeta[t][1] for t in live})))
+        .where(F.col("term").isin(live))
+    )
     if not live:
-        matched = ix.spark.createDataFrame([], "doc_int LONG")
+        matched = _empty(ix.spark, "doc_int LONG")
     elif sum(tmeta[t][0] for t in live) <= SERVING_DRIVER_MAX:
         import pandas as pd
 

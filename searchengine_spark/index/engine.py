@@ -4,8 +4,9 @@ Mirrors the reference's query path (``internal/search/search.go:114-165``:
 term split → fuzzy/synonym expansion → boolean MUST filters → score →
 top-k) but as a distributed plan over the compressed postings table:
 
-1. driver: expand + dedup query terms, look up per-term df from the
-   ``terms`` table (parquet filter pushdown; result is tiny), compute
+1. driver: expand + dedup query terms, look up per-term (df, bucket)
+   in the pinned term dictionary (a parquet-pushdown point read of the
+   ``terms`` table when the vocabulary is too large to pin), compute
    idf per term;
 2. scan only the postings **buckets** the query terms hash to
    (directory partition pruning) with ``term IN (...)`` pushed to
@@ -22,8 +23,19 @@ top-k) but as a distributed plan over the compressed postings table:
    numpy; per-128-entry block bounds skip cold blocks within a
    segment), aggregate per doc, global top-k via
    ``orderBy().limit(k)`` (TakeOrderedAndProject);
-5. hydrate doc_id (and any payload) from ``docmap`` with an
-   ``isin``-pushdown point lookup.
+5. hydrate doc_id (and any payload) from the pinned doc-name column,
+   or ``docmap`` with an ``isin``-pushdown point lookup on corpora too
+   large to pin.
+
+Serving state lives on the :class:`IndexHandle`: it resolves each
+artifact DataFrame (postings / terms / docmap) once and pins the term
+dictionary, doc names and filter sets driver-side, so a warm query on
+the driver fast path runs one Spark job (the Σdf-bounded postings
+collect). Re-reading the artifact on every access cost a parquet
+schema-inference job each time: on the sf0.01 serve benchmark
+(4 vCPUs) pinning took ``search_index`` from 2 jobs to 1 and a
+filter-set miss from 2 to 1. A published snapshot never changes; a new
+snapshot gets a new handle (:func:`open_index`).
 
 The result is rank-identical to :func:`..query.bm25.search_direct`
 (tested in tests/test_index_engine.py): same float64 expression shape,
@@ -33,7 +45,7 @@ same score-desc/doc_id-asc tie-break.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import pandas as pd
@@ -44,7 +56,6 @@ from pyspark.sql import functions as F
 from .. import semantics as S
 from .catalog import IndexCatalog, Snapshot
 from .codec import BLOCK, SEG_SPAN, decode_postings
-from .build import bucket_col
 
 
 # hold the term dictionary driver-side below this vocabulary size — the
@@ -97,8 +108,22 @@ _FILTER_CACHE_ENTRIES = 8
 
 @dataclass
 class IndexHandle:
+    """Serving context of ONE published snapshot.
+
+    Pins, each resolved on first use and kept for the handle's
+    lifetime: the artifact DataFrames (``postings`` / ``terms`` /
+    ``docmap`` — the parquet file listing and footer schema, or the
+    Iceberg read at the pinned ``snapshot-id``), the term dictionary,
+    the doc-name column and up to ``_FILTER_CACHE_ENTRIES`` filter sets.
+    Pinning is safe because a published snapshot is write-once; a
+    republish is a NEW snapshot, which needs a new handle
+    (:func:`open_index`) — a handle held across it keeps answering from
+    its own snapshot until ``IndexCatalog.expire`` deletes that
+    snapshot's files. Everything pinned goes away with the handle."""
+
     spark: SparkSession
     snapshot: Snapshot
+    _frames: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     @property
     def stats(self) -> dict:
@@ -107,14 +132,22 @@ class IndexHandle:
     def _artifact(self, name: str, parquet_dir: str) -> DataFrame:
         """Parquet dirs (sandbox) or pinned Iceberg tables (prod): the
         snapshot's ``iceberg_snapshots`` pin makes the read VERSION AS
-        OF publish time, so concurrent republish never tears a query."""
+        OF publish time, so concurrent republish never tears a query.
+        Resolved once per handle: a fresh ``spark.read`` costs a
+        schema-inference job per call."""
+        df = self._frames.get(name)
+        if df is not None:
+            return df
         t = (self.snapshot.tables or {}).get(name)
         if t is None:
-            return self.spark.read.parquet(parquet_dir)
-        reader = self.spark.read.format("iceberg")
-        if t.get("snapshot_id") is not None:
-            reader = reader.option("snapshot-id", t["snapshot_id"])
-        return reader.load(t["table"])
+            df = self.spark.read.parquet(parquet_dir)
+        else:
+            reader = self.spark.read.format("iceberg")
+            if t.get("snapshot_id") is not None:
+                reader = reader.option("snapshot-id", t["snapshot_id"])
+            df = reader.load(t["table"])
+        self._frames[name] = df
+        return df
 
     def postings(self) -> DataFrame:
         return self._artifact("postings", self.snapshot.postings_dir)
@@ -153,7 +186,7 @@ class IndexHandle:
         """Lucene-style cached filter set: the sorted doc_int array
         satisfying ``doc_predicate``, evaluated against docmap ONCE per
         (snapshot, predicate) and pinned driver-side — repeated
-        filtered queries then run with zero Spark jobs. None when the
+        filtered queries then add no Spark job. None when the
         corpus is too large to pin a filter set (callers fall back to
         the distributed semi-join). Bounded: ≤ _FILTER_CACHE_ENTRIES
         arrays of ≤ n_docs int64 each, evicted FIFO."""
@@ -173,27 +206,23 @@ class IndexHandle:
             self._filter_cache = cache
         return arr
 
-    def term_dict(self) -> dict[str, tuple[int, int | None]] | None:
+    def term_dict(self) -> dict[str, tuple[int, int]] | None:
         """Driver-cached term → (df, bucket), or None if the vocabulary
         is too large to pin (callers fall back to point-reads)."""
         cached = getattr(self, "_term_dict", False)
         if cached is not False:
             return cached
-        t = self.terms()
-        has_bucket = "bucket" in t.columns
-        cols = ["term", "df"] + (["bucket"] if has_bucket else [])
-        rows = t.select(*cols).limit(TERM_CACHE_MAX + 1).collect()
+        rows = self.terms().select("term", "df", "bucket").limit(TERM_CACHE_MAX + 1).collect()
         if len(rows) > TERM_CACHE_MAX:
             self._term_dict = None
         else:
-            self._term_dict = {
-                r["term"]: (int(r["df"]), int(r["bucket"]) if has_bucket else None)
-                for r in rows
-            }
+            self._term_dict = {r["term"]: (int(r["df"]), int(r["bucket"])) for r in rows}
         return self._term_dict
 
 
 def open_index(spark: SparkSession, catalog: IndexCatalog) -> IndexHandle:
+    """A fresh handle on the catalog's CURRENT snapshot; nothing is
+    pinned until first use."""
     snap = catalog.current()
     if snap is None:
         raise FileNotFoundError(f"no published snapshot under {catalog.root}")
@@ -204,31 +233,18 @@ def open_index(spark: SparkSession, catalog: IndexCatalog) -> IndexHandle:
 # term lookup / expansion
 # --------------------------------------------------------------------------
 
-def term_dfs(ix: IndexHandle, terms: list[str]) -> dict[str, int]:
-    """df per existing query term — parquet-pushdown point lookups."""
-    if not terms:
-        return {}
-    rows = ix.terms().where(F.col("term").isin(terms)).select("term", "df").collect()
-    return {r["term"]: int(r["df"]) for r in rows}
-
-
-def term_meta(ix: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int | None]]:
+def term_meta(ix: IndexHandle, terms: list[str]) -> dict[str, tuple[int, int]]:
     """term → (df, bucket): a driver-dict lookup when the vocabulary is
-    pinned (TERM_CACHE_MAX), else one point-read of the terms table.
-    bucket is None on snapshots older than the bucket-in-terms layout."""
+    pinned (TERM_CACHE_MAX), else one point-read of the terms table."""
     if not terms:
         return {}
     td = ix.term_dict()
     if td is not None:
         return {t: td[t] for t in terms if t in td}
-    t = ix.terms()
-    has_bucket = "bucket" in t.columns
-    cols = ["term", "df"] + (["bucket"] if has_bucket else [])
-    rows = t.where(F.col("term").isin(terms)).select(*cols).collect()
-    return {
-        r["term"]: (int(r["df"]), int(r["bucket"]) if has_bucket else None)
-        for r in rows
-    }
+    rows = (
+        ix.terms().where(F.col("term").isin(terms)).select("term", "df", "bucket").collect()
+    )
+    return {r["term"]: (int(r["df"]), int(r["bucket"])) for r in rows}
 
 
 def expand_fuzzy(ix: IndexHandle, term: str) -> list[str]:
@@ -356,13 +372,20 @@ def _make_scorer(idfs: dict[str, float], avgdl: float, theta: float = 0.0):
     return score_batches
 
 
+def _empty(spark: SparkSession, schema: str) -> DataFrame:
+    """Typed empty frame whose collect runs no Spark job: the optimizer
+    folds the always-false filter into an empty local relation (a bare
+    ``createDataFrame([])`` is an RDD scan — one job per collect)."""
+    return spark.createDataFrame([], schema).where(F.lit(False))
+
+
 def _result_df(spark: SparkSession, pairs: list[tuple[str, float]]) -> DataFrame:
     """(doc_id, score) rows → result DataFrame via Arrow from pandas —
     ~8× cheaper per query than the row-tuple createDataFrame path (the
     serving result is rebuilt on every call, so this fixed cost is on
-    the latency floor)."""
+    the latency floor). Like the empty result, it collects with no job."""
     if not pairs:
-        return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
+        return _empty(spark, "doc_id STRING, score DOUBLE")
     import numpy as np
 
     pdf = pd.DataFrame(
@@ -399,13 +422,6 @@ def _score_rows_driver(
     uniq, inv, counts = np.unique(docs, return_inverse=True, return_counts=True)
     sums = np.bincount(inv, weights=contribs, minlength=len(uniq))
     return uniq, sums, counts
-
-
-def _buckets_of(ix: IndexHandle, terms: list[str]) -> list[int]:
-    nb = ix.snapshot.manifest["n_buckets"]
-    df = ix.spark.createDataFrame([(t,) for t in terms], "term STRING")
-    rows = df.select(bucket_col(F.col("term"), nb).alias("b")).distinct().collect()
-    return sorted({int(r["b"]) for r in rows})
 
 
 # pruning pays only when there are enough doc-aligned segments for the
@@ -481,29 +497,30 @@ def search_index(
     intersection, J4; pruning is disabled there — the OR-score θ bound
     is not sound for conjunctive top-k).
 
-    Serving-path job budget: 1 terms point-read (df + bucket), 1
-    score+top-k job (TakeOrderedAndProject over the pruned postings
-    scan), 1 docmap point-read to hydrate doc_ids — plus 2 metadata
-    jobs only when block-max pruning engages (large corpora)."""
+    Serving-path job budget on a warm handle (artifact frames, term
+    dictionary and doc names pinned): ONE job when Σ df fits
+    SERVING_DRIVER_MAX — the bucket+term-pruned postings collect scored
+    in driver numpy — plus one docmap job the first time a MUST
+    predicate is seen (its filter set is pinned for repeats). Above the
+    cap: one score+top-k job (TakeOrderedAndProject over the postings
+    scan), plus the θ-establishment metadata jobs when block-max
+    pruning engages (large corpora). Only corpora too large to pin add
+    a terms and a docmap point-read."""
     spark = ix.spark
     terms = list(dict.fromkeys(terms))
     meta = term_meta(ix, terms)
     if mode == "and" and len(meta) < len(terms):
         # a term absent from the corpus can never satisfy the conjunction
-        return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
+        return _result_df(spark, [])
     terms = [t for t in terms if t in meta]  # OR: unseen terms match nothing
     if not terms:
-        return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
+        return _result_df(spark, [])
     st = ix.stats
     idfs = {t: _idf(st["n_docs"], meta[t][0]) for t in terms}
 
-    if all(meta[t][1] is not None for t in terms):
-        buckets = sorted({meta[t][1] for t in terms})
-    else:  # pre-bucket-column snapshot fallback
-        buckets = _buckets_of(ix, terms)
     segs = (
         ix.postings()
-        .where(F.col("bucket").isin(buckets))
+        .where(F.col("bucket").isin(sorted({meta[t][1] for t in terms})))
         .where(F.col("term").isin(terms))
     )
 
@@ -580,7 +597,7 @@ def _hydrate_pairs(ix: IndexHandle, sel: list[tuple[int, float]]) -> DataFrame:
     doc_id comes from the pinned doc-name cache when available, else
     one docmap point-read over the ≤k ids (isin pushdown)."""
     if not sel:
-        return ix.spark.createDataFrame([], "doc_id STRING, score DOUBLE")
+        return _result_df(ix.spark, [])
     id2name = ix.doc_names()
     if id2name is None:  # corpus too large to pin: docmap point-read
         ids = [d for d, _ in sel]
@@ -622,7 +639,7 @@ def _search_driver(
         m = counts == len(terms)
         uniq, sums = uniq[m], sums[m]
     if len(uniq) == 0:
-        return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
+        return _result_df(spark, [])
     if doc_predicate is not None:
         allowed = ix.filter_doc_ints(doc_predicate)
         if allowed is not None:
@@ -634,7 +651,7 @@ def _search_driver(
             m = (allowed[idx] == uniq) if m else np.zeros(len(uniq), dtype=bool)
             uniq, sums = uniq[m], sums[m]
             if len(uniq) == 0:
-                return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
+                return _result_df(spark, [])
         else:
             # corpus too large for a pinned filter set: probe candidates
             # in rank order against docmap — the first k that satisfy
@@ -729,15 +746,11 @@ def search_many(
             if t in meta:
                 term_q.setdefault(t, []).append((qid, _idf(st["n_docs"], meta[t][0])))
     if not term_q:
-        return spark.createDataFrame([], "qid STRING, doc_id STRING, score DOUBLE")
+        return _empty(spark, "qid STRING, doc_id STRING, score DOUBLE")
 
-    if all(meta[t][1] is not None for t in term_q):
-        buckets = sorted({meta[t][1] for t in term_q})
-    else:
-        buckets = _buckets_of(ix, list(term_q))
     full = (
         ix.postings()
-        .where(F.col("bucket").isin(buckets))
+        .where(F.col("bucket").isin(sorted({meta[t][1] for t in term_q})))
         .where(F.col("term").isin(list(term_q)))
     )
     total_df = sum(meta[t][0] for t in term_q)
@@ -1229,7 +1242,7 @@ def _search_many_driver(
         if names is None:
             need_ids.update(d for d, _ in pairs)
     if not sel:
-        return spark.createDataFrame([], "qid STRING, doc_id STRING, score DOUBLE")
+        return _empty(spark, "qid STRING, doc_id STRING, score DOUBLE")
     if names is None:  # corpus too large to pin: one ≤ #qids·k point-read
         names = {
             int(r["doc_int"]): r["doc_id"]

@@ -60,7 +60,7 @@ from ..index.build import (
 )
 from ..index.catalog import IndexCatalog
 from ..index.codec import SEG_SPAN
-from ..index.engine import IndexHandle, _idf, _make_scorer
+from ..index.engine import IndexHandle, _idf, _make_scorer, _result_df
 
 # doc-count threshold above which apply_batch switches from the single
 # window doc_int assignment to the two-phase committed-parquet scan
@@ -163,6 +163,11 @@ class StreamingIndex:
         # base snapshot + delta log; the lock makes each micro-batch
         # land entirely before or entirely after a base swap
         self._write_lock = threading.RLock()
+        # serving pins (see :meth:`_delta_frame` and :meth:`search`): the
+        # base snapshot's handle, and each published delta's frames by
+        # delta id — dropped when an epoch republishes or compact() folds
+        self._base_ix: IndexHandle | None = None
+        self._delta_pins: dict[int, dict[str, DataFrame]] = {}
 
     # ------------------------------------------------------------------
     # bootstrap / delta log
@@ -179,6 +184,20 @@ class StreamingIndex:
             if name.startswith("delta-"):
                 out.append(int(name[6:]))
         return sorted(out)
+
+    def _delta_frame(self, did: int, part: str) -> DataFrame:
+        """One artifact (``upserts`` / ``docmap`` / ``postings`` /
+        ``tombstones``) of published delta ``did``, read once and pinned:
+        a published delta is immutable until its epoch republishes
+        (:meth:`apply_batch` drops the pin) or :meth:`compact` folds it.
+        The delta's pin dict is fetched BEFORE the read, so a read racing
+        a republish can only land in the dict that republish drops."""
+        pins = self._delta_pins.setdefault(did, {})
+        df = pins.get(part)
+        if df is None:
+            df = self.spark.read.parquet(os.path.join(self.delta_root, f"delta-{did}", part))
+            pins[part] = df
+        return df
 
     def _delta_meta(self, did: int) -> dict:
         with open(os.path.join(self.delta_root, f"delta-{did}", "meta.json")) as f:
@@ -421,6 +440,8 @@ class StreamingIndex:
         last.unpersist()
         shutil.rmtree(ddir, ignore_errors=True)
         os.replace(tmp, ddir)  # atomic publish of the delta
+        # a re-delivered epoch overwrote delta-<n>: its old pin is stale
+        self._delta_pins.pop(int(epoch_id), None)
 
     # ------------------------------------------------------------------
     # merge-on-read views
@@ -432,12 +453,10 @@ class StreamingIndex:
         the driver). Delta version ids strictly increase with doc_int
         ranges, so "dead" checks reduce to comparing a row's version
         (or doc_int) against its doc's max tombstoning delta."""
-        parts = []
-        for did in deltas:
-            t = self.spark.read.parquet(
-                os.path.join(self.delta_root, f"delta-{did}", "tombstones")
-            ).withColumn("_td", F.lit(did))
-            parts.append(t)
+        parts = [
+            self._delta_frame(did, "tombstones").withColumn("_td", F.lit(did))
+            for did in deltas
+        ]
         if not parts:
             return None
         allt = parts[0]
@@ -455,10 +474,7 @@ class StreamingIndex:
         base = self.spark.read.parquet(self.docs_base).withColumn("_v", F.lit(-1))
         parts = [base]
         for did in deltas:
-            up = self.spark.read.parquet(
-                os.path.join(self.delta_root, f"delta-{did}", "upserts")
-            ).withColumn("_v", F.lit(did))
-            parts.append(up)
+            parts.append(self._delta_frame(did, "upserts").withColumn("_v", F.lit(did)))
         allv = parts[0]
         for p in parts[1:]:
             allv = allv.unionByName(p)
@@ -486,11 +502,17 @@ class StreamingIndex:
         from the *results*. Block-max pruning is disabled on the live
         path (delta skip bounds were built with the stale base avgdl);
         ``compact()`` restores the pruned, exact base path.
+
+        The base snapshot's :class:`IndexHandle` is kept while CURRENT
+        names the same snapshot (a compaction publishes a new one), and
+        delta frames come pinned from :meth:`_delta_frame`.
         """
         spark = self.spark
         terms = list(dict.fromkeys(terms))
         base = self.catalog.current()
-        ix = IndexHandle(spark, base)
+        ix = self._base_ix
+        if ix is None or ix.snapshot.snap_id != base.snap_id:
+            ix = self._base_ix = IndexHandle(spark, base)
         deltas = self.delta_ids()
 
         # merged live stats
@@ -505,11 +527,8 @@ class StreamingIndex:
         posting_parts = [ix.postings()]
         docmap_parts = [ix.docmap().select("doc_int", "doc_id")]
         for did in deltas:
-            d = os.path.join(self.delta_root, f"delta-{did}")
-            posting_parts.append(spark.read.parquet(os.path.join(d, "postings")))
-            docmap_parts.append(
-                spark.read.parquet(os.path.join(d, "docmap")).select("doc_int", "doc_id")
-            )
+            posting_parts.append(self._delta_frame(did, "postings"))
+            docmap_parts.append(self._delta_frame(did, "docmap").select("doc_int", "doc_id"))
         postings = posting_parts[0]
         for p in posting_parts[1:]:
             postings = postings.unionByName(p)
@@ -524,7 +543,7 @@ class StreamingIndex:
         }
         live_terms = [t for t in terms if t in dfs]
         if not live_terms:
-            return spark.createDataFrame([], "doc_id STRING, score DOUBLE")
+            return _result_df(spark, [])
         idfs = {t: _idf(n_docs, dfs[t]) for t in live_terms}
 
         scored = (
@@ -597,3 +616,4 @@ class StreamingIndex:
                 shutil.rmtree(
                     os.path.join(self.delta_root, f"delta-{did}"), ignore_errors=True
                 )
+            self._delta_pins = {}

@@ -13,6 +13,28 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` under a job group of its own and
+    returns the ids of the Spark jobs it started — for pinning job
+    budgets. Jobs from other threads (other job groups) are not counted."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn) -> list[int]:
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def transcripts_sf0001_path() -> str:
     return ensure_transcripts(0.001)

@@ -54,6 +54,7 @@ def test_snapshot_reader_dispatch(spark):
 
         def load(self, ident):
             captured["ident"] = ident
+            captured["loads"] = captured.get("loads", 0) + 1
             return "DF"
 
     class FakeSpark:
@@ -61,7 +62,11 @@ def test_snapshot_reader_dispatch(spark):
 
     ix.spark = FakeSpark()
     assert ix.postings() == "DF"
-    assert captured == {"format": "iceberg", "snapshot-id": 42, "ident": "ice.ns.t_postings"}
+    # the handle pins the resolved read: a second access loads nothing
+    assert ix.postings() == "DF"
+    assert captured == {
+        "format": "iceberg", "snapshot-id": 42, "ident": "ice.ns.t_postings", "loads": 1
+    }
 
 
 def test_constructor_refuses_without_jars(spark):

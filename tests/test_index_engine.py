@@ -386,6 +386,56 @@ def test_driver_cache_budgets(ix):
     assert measured <= 300, measured
 
 
+def test_warm_serving_job_budget(spark, catalog, spark_jobs):
+    """A warm handle serves from its pinned artifact frames: the
+    driver fast path is ONE Spark job (the Σdf-bounded postings
+    collect), a repeated MUST predicate reuses its pinned filter set,
+    and only a new predicate adds its one docmap job."""
+    ix = open_index(spark, catalog)  # fresh handle: nothing resolved yet
+    ix.term_dict()
+    ix.doc_names()
+    search_index(ix, ["spark"]).collect()  # resolves the postings frame
+
+    def run(terms, pred=None):
+        return len(spark_jobs(lambda: search_index(ix, terms, doc_predicate=pred).collect()))
+
+    assert run(["query", "plan", "shuffle"]) == 1
+    assert run(["data", "model"]) == 1
+    pred = (F.col("role") == "assistant") & (F.col("tool") == "search")
+    assert run(["spark", "query"], pred) == 2  # new predicate: filter set + collect
+    same = (F.col("role") == "assistant") & (F.col("tool") == "search")
+    assert run(["spark", "query"], same) == 1
+    assert run(["data"], same) == 1  # filtered to nothing: the empty result adds no job
+    assert ix.postings() is ix.postings() and ix.docmap() is ix.docmap()
+
+
+def test_handle_pinned_across_republish(spark, transcripts, tmp_path):
+    """Snapshot swap safety: a handle held across a republish keeps
+    answering from ITS snapshot (pinned frames point at write-once
+    files), while ``open_index`` returns the new snapshot."""
+    cat = IndexCatalog(str(tmp_path / "swap"))
+    build_index(spark, transcripts, cat, n_buckets=4)
+    old = open_index(spark, cat)
+    terms = ["spark", "query"]
+    pred = F.col("role") == "assistant"
+    want_old = _pairs(search_direct(transcripts, terms))
+    want_old_f = _pairs(search_direct(transcripts, terms, doc_predicate=pred))
+    assert _pairs(search_index(old, terms)) == want_old
+
+    small = transcripts.orderBy("conv_id", "turn_idx").limit(200)
+    build_index(spark, small, cat, n_buckets=4)
+    assert _pairs(search_index(old, terms)) == want_old
+    # a first filtered query after the swap still reads the old docmap
+    assert _pairs(search_index(old, terms, doc_predicate=pred)) == want_old_f
+
+    new = open_index(spark, cat)
+    assert new.snapshot.snap_id == cat.current_id()
+    assert new.snapshot.snap_id != old.snapshot.snap_id
+    want_new = _pairs(search_direct(small, terms))
+    assert want_new != want_old
+    assert _pairs(search_index(new, terms)) == want_new
+
+
 def test_build_resumable_bucket_jobs(spark, transcripts, tmp_path, monkeypatch):
     """Crash between a postings group's write and its ledger commit,
     then resume: the re-run must overwrite (not duplicate) that group's

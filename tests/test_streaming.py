@@ -184,6 +184,61 @@ def test_second_stream_after_compact(sidx):
     assert "zstream:0003" in ids
 
 
+def _batch(spark, tmp_path, msgs: list[dict]):
+    """Messages → the typed micro-batch frame ``apply_batch`` receives."""
+    from searchengine_spark.streaming.ingest import message_schema
+
+    path = tmp_path / f"batch-{msgs[0]['seq']}.json"
+    path.write_text("".join(json.dumps(m) + "\n" for m in msgs))
+    return spark.read.schema(message_schema()).json(str(path))
+
+
+def _live_pairs(s, terms, k=10):
+    return [(r["doc_id"], r["score"]) for r in s.search(terms, k=k).collect()]
+
+
+def test_live_search_follows_compaction(spark, transcripts, tmp_path):
+    """search → compact() → search: the second search must run on the
+    NEW base snapshot (not the pinned pre-compaction handle or delta
+    frames) and be rank-identical to the direct path over the live
+    corpus."""
+    s = StreamingIndex(spark, str(tmp_path / "store"))
+    s.bootstrap(transcripts.limit(200))
+    s.apply_batch(_batch(spark, tmp_path, [
+        _msg(1, "zpin", 0, "pinned spark zebrapin"),
+        _msg(2, "zpin", 1, "zebrapin zebrapin query"),
+    ]), 0)
+    terms = ["zebrapin", "spark", "query"]
+    before = _live_pairs(s, terms)
+    assert {"zpin:0000", "zpin:0001"} <= {d for d, _ in before}
+    snap_before = s.catalog.current_id()
+
+    s.compact()
+    assert s.catalog.current_id() != snap_before and s.delta_ids() == []
+    after = _live_pairs(s, terms)
+    direct = search_direct(s.current_docs(), terms).collect()
+    assert after == [(r["doc_id"], r["score"]) for r in direct]
+
+
+def test_reapplied_epoch_replaces_delta_pin(spark, transcripts, tmp_path):
+    """A re-delivered epoch overwrites ``delta-<n>``: the next search and
+    ``current_docs()`` must see the new content, never the frames pinned
+    for the overwritten delta."""
+    s = StreamingIndex(spark, str(tmp_path / "store"))
+    s.bootstrap(transcripts.limit(200))
+    s.apply_batch(_batch(spark, tmp_path, [_msg(1, "zre", 0, "first zebraone")]), 0)
+    assert [d for d, _ in _live_pairs(s, ["zebraone"])] == ["zre:0000"]
+    assert _live_pairs(s, ["zebratwo"]) == []
+    assert s.current_docs().where(F.col("conv_id") == "zre").count() == 1
+
+    s.apply_batch(_batch(spark, tmp_path, [_msg(5, "zre", 1, "second zebratwo")]), 0)
+    assert s.delta_ids() == [0]
+    assert _live_pairs(s, ["zebraone"]) == []
+    assert [d for d, _ in _live_pairs(s, ["zebratwo"])] == ["zre:0001"]
+    live = s.current_docs().where(F.col("conv_id") == "zre").collect()
+    assert [(r["turn_idx"], r["text"]) for r in live] == [(1, "second zebratwo")]
+
+
 def test_parse_messages_kafka_shape(spark):
     """The Kafka value-bytes → typed message transform (S9/S10) on a
     static frame (the streaming plan uses the identical expression)."""
