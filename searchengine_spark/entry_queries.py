@@ -374,7 +374,8 @@ def q_term_df_top(spark, sf_dir):
     # df = docs containing the term: dedupe per-doc INSIDE the array
     # (array_distinct, scan-local) so the shuffle carries one row per
     # (doc, term) and the agg is a plain count — no count_distinct's
-    # expand+dedup pass over repeated tokens
+    # expand+dedup pass over repeated tokens. Exact because tokenized()
+    # keeps one row per doc_id (its docstring states the invariant)
     return (
         tok.select(F.explode(F.array_distinct("tokens")).alias("term"))
         .groupBy("term")

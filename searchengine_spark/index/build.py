@@ -344,7 +344,7 @@ def _collect_task_metrics(spark, prefix: str = "seng:") -> dict[str, dict]:
     # a JobEnd event flushes the log writer — run one tiny tagged job so
     # everything up to here is on disk before we read it
     _set_stage_group(spark, "_flush")
-    spark.range(1).count()
+    spark.range(1).collect()  # one job (a count runs two under AQE)
     sc.setLocalProperty("spark.jobGroup.id", None)
 
     import glob
@@ -461,7 +461,15 @@ def build_index(
     postings_dir = os.path.join(stage_dir, "postings")
     offsets_path = os.path.join(stage_dir, "offsets.json")
 
+    # Every staged table is re-read with the schema of the frame that
+    # wrote it: a parquet read that declares its schema starts no
+    # footer-inference job. The frames are built lazily (no job) so a
+    # resumed build has their schemas too.
+
     # ---- stage: docmap_raw (tokenize + partition-rank, computed ONCE) ------
+    ranked = _ranked_within_partitions(transcripts, synonyms=synonyms).select(
+        "_pid", "_rank", "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl", "tokens"
+    )
     observed: dict | None = None
     if not ledger.done("docmap_raw"):
         from pyspark.sql import Observation
@@ -469,17 +477,14 @@ def build_index(
         _set_stage_group(spark, "docmap_raw")
         t0 = time.perf_counter()
         obs = Observation("docmap_raw_stats")
-        ranked = _ranked_within_partitions(transcripts, synonyms=synonyms).observe(
+        ranked.observe(
             obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl")
-        )
-        ranked.select(
-            "_pid", "_rank", "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl", "tokens"
         ).write.mode("overwrite").parquet(raw_dir)
         observed = obs.get  # collected during the write — no extra pass
         dt = time.perf_counter() - t0
         ledger.commit("docmap_raw", seconds=round(dt, 3), bytes_written=_dir_bytes(raw_dir))
 
-    raw = spark.read.parquet(raw_dir)
+    raw = spark.read.schema(ranked.schema).parquet(raw_dir)
 
     # ---- stage: offsets + stats (exact, from the committed data) -----------
     if not ledger.done("stats"):
@@ -505,6 +510,9 @@ def build_index(
         offsets = {int(k): int(v) for k, v in json.load(f).items()}
 
     numbered = with_doc_int(raw, offsets)
+    docmap = numbered.select(
+        "doc_int", "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl"
+    )
 
     # ---- stage: docmap (final, token-free doc metadata table) --------------
     # Runs in a DRIVER THREAD concurrently with tf/postings: docmap is a
@@ -522,9 +530,7 @@ def build_index(
             try:
                 _set_stage_group(spark, "docmap")
                 t0 = time.perf_counter()
-                numbered.select(
-                    "doc_int", "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl"
-                ).write.mode("overwrite").parquet(docmap_dir)
+                docmap.write.mode("overwrite").parquet(docmap_dir)
                 dt = time.perf_counter() - t0
                 ledger.commit("docmap", rows=stats["n_docs"], seconds=round(dt, 3),
                               turns_per_sec=round(stats["n_docs"] / dt, 1),
@@ -553,31 +559,32 @@ def build_index(
     # resume point between the two big stages.)
     tf_checkpoint = bucket_jobs > 1 or os.environ.get("SENG_TF_CHECKPOINT") == "1"
     if tf_checkpoint:
+        tf = (
+            numbered.select("doc_int", "dl", F.explode("tokens").alias("term"))
+            .groupBy("doc_int", "dl", "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .withColumn("bucket", bucket_col(F.col("term"), n_buckets))
+            .withColumn("seg", (F.col("doc_int") / F.lit(SEG_SPAN)).cast("long"))
+        )
         if not ledger.done("tf"):
             from pyspark.sql import Observation
 
             _set_stage_group(spark, "tf")
             t0 = time.perf_counter()
             obs = Observation("tf_rows")
-            tf = (
-                numbered.select("doc_int", "dl", F.explode("tokens").alias("term"))
-                .groupBy("doc_int", "dl", "term")
-                .agg(F.count(F.lit(1)).alias("tf"))
-                .withColumn("bucket", bucket_col(F.col("term"), n_buckets))
-                .withColumn("seg", (F.col("doc_int") / F.lit(SEG_SPAN)).cast("long"))
-                .observe(obs, F.count(F.lit(1)).alias("rows"))
-            )
             # plain (non-dynamic-partition) write: one file per task, ~16×
             # fewer files than partitionBy; clustering by bucket inside each
             # task keeps parquet row-group min/max tight so bucket_jobs>1
             # resume still prunes bucket scans
-            tf.sortWithinPartitions("bucket").write.mode("overwrite").parquet(tf_dir)
+            tf.observe(obs, F.count(F.lit(1)).alias("rows")).sortWithinPartitions(
+                "bucket"
+            ).write.mode("overwrite").parquet(tf_dir)
             n_rows = int(obs.get["rows"])
             dt = time.perf_counter() - t0
             ledger.commit("tf", rows=n_rows, seconds=round(dt, 3),
                           postings_per_sec=round(n_rows / dt, 1),
                           bytes_written=_dir_bytes(tf_dir))
-        tf_staged = spark.read.parquet(tf_dir)
+        tf_staged = spark.read.schema(tf.schema).parquet(tf_dir)
     else:
         tf_staged = (
             numbered.select("doc_int", "dl", F.explode("tokens").alias("term"))
@@ -624,22 +631,23 @@ def build_index(
     # ---- stage: term stats (from postings segment metadata — the segment
     # rows are ≪ the tf table, so this reads ~(term, n, sum_tf) columns of
     # an already-small parquet instead of re-shuffling every posting) ------
+    terms = (
+        spark.read.schema(SEGMENT_SCHEMA).parquet(postings_dir)
+        .groupBy("term")
+        # bucket rides along so a query's term lookup returns df AND
+        # the postings partition to scan in ONE point-read (engine.py)
+        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"),
+             F.first("bucket").alias("bucket"))
+    )
     if not ledger.done("terms"):
         from pyspark.sql import Observation
 
         _set_stage_group(spark, "terms")
         t0 = time.perf_counter()
         obs = Observation("terms_rows")
-        terms = (
-            spark.read.parquet(postings_dir)
-            .groupBy("term")
-            # bucket rides along so a query's term lookup returns df AND
-            # the postings partition to scan in ONE point-read (engine.py)
-            .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"),
-                 F.first("bucket").alias("bucket"))
-            .observe(obs, F.count(F.lit(1)).alias("rows"), F.max("df").alias("max_df"))
-        )
-        terms.write.mode("overwrite").parquet(terms_dir)
+        terms.observe(
+            obs, F.count(F.lit(1)).alias("rows"), F.max("df").alias("max_df")
+        ).write.mode("overwrite").parquet(terms_dir)
         got = obs.get
         n_terms, max_df = int(got["rows"]), int(got["max_df"] or 0)
         # skew diagnostics for the north rule's heavy-hitter handling
@@ -672,6 +680,13 @@ def build_index(
         "build_seconds": round(elapsed, 3),
         "turns_per_sec": round(stats["n_docs"] / elapsed, 1),
         "ledger": Ledger(stage_dir).entries(),
+        # the artifacts' schemas, so a serving handle reads them with no
+        # footer-inference job (engine.IndexHandle._artifact)
+        "schemas": {
+            "postings": SEGMENT_SCHEMA.jsonValue(),
+            "docmap": docmap.schema.jsonValue(),
+            "terms": terms.schema.jsonValue(),
+        },
     }
     # drop staging intermediates (tokens + tf — the large artifacts) from
     # the published snapshot; keep ledger + final tables

@@ -34,8 +34,10 @@ the driver fast path runs one Spark job (the Σdf-bounded postings
 collect). Re-reading the artifact on every access cost a parquet
 schema-inference job each time: on the sf0.01 serve benchmark
 (4 vCPUs) pinning took ``search_index`` from 2 jobs to 1 and a
-filter-set miss from 2 to 1. A published snapshot never changes; a new
-snapshot gets a new handle (:func:`open_index`).
+filter-set miss from 2 to 1. Resolving an artifact starts no job
+either: the build records each artifact's schema in the manifest. A
+published snapshot never changes; a new snapshot gets a new handle
+(:func:`open_index`).
 
 The result is rank-identical to :func:`..query.bm25.search_direct`
 (tested in tests/test_index_engine.py): same float64 expression shape,
@@ -52,6 +54,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import semantics as S
 from .catalog import IndexCatalog, Snapshot
@@ -112,7 +115,7 @@ class IndexHandle:
 
     Pins, each resolved on first use and kept for the handle's
     lifetime: the artifact DataFrames (``postings`` / ``terms`` /
-    ``docmap`` — the parquet file listing and footer schema, or the
+    ``docmap`` — the parquet file listing and schema, or the
     Iceberg read at the pinned ``snapshot-id``), the term dictionary,
     the doc-name column and up to ``_FILTER_CACHE_ENTRIES`` filter sets.
     Pinning is safe because a published snapshot is write-once; a
@@ -133,14 +136,20 @@ class IndexHandle:
         """Parquet dirs (sandbox) or pinned Iceberg tables (prod): the
         snapshot's ``iceberg_snapshots`` pin makes the read VERSION AS
         OF publish time, so concurrent republish never tears a query.
-        Resolved once per handle: a fresh ``spark.read`` costs a
-        schema-inference job per call."""
+        Resolved once per handle. A parquet dir is read with the schema
+        the build recorded in the manifest, which starts no job;
+        manifests published before that record existed fall back to
+        footer inference (one job)."""
         df = self._frames.get(name)
         if df is not None:
             return df
         t = (self.snapshot.tables or {}).get(name)
         if t is None:
-            df = self.spark.read.parquet(parquet_dir)
+            schema = self.snapshot.manifest.get("schemas", {}).get(name)
+            reader = self.spark.read
+            if schema is not None:
+                reader = reader.schema(StructType.fromJson(schema))
+            df = reader.parquet(parquet_dir)
         else:
             reader = self.spark.read.format("iceberg")
             if t.get("snapshot_id") is not None:

@@ -32,7 +32,13 @@ from ..functions.text import doc_id_col, tokens_no_stop
 
 
 def tokenized(transcripts: DataFrame) -> DataFrame:
-    """(doc_id, tokens, dl) + passthrough metadata columns."""
+    """(doc_id, tokens, dl) + passthrough metadata columns.
+
+    Invariant: a row-wise projection, so exactly one output row per
+    input turn, i.e. per doc_id (a turn with no token left keeps its row
+    with ``dl`` 0). ``entry_queries.q_term_df_top`` counts document
+    frequency as a plain row count over ``array_distinct(tokens)`` and
+    relies on it (tests/test_tokenize.py)."""
     return transcripts.select(
         doc_id_col().alias("doc_id"),
         "conv_id",

@@ -409,6 +409,28 @@ def test_warm_serving_job_budget(spark, catalog, spark_jobs):
     assert ix.postings() is ix.postings() and ix.docmap() is ix.docmap()
 
 
+def test_artifact_schemas_from_manifest(spark, catalog, spark_jobs):
+    """The build records each artifact's schema in the manifest, so a
+    fresh handle resolves postings/terms/docmap with no Spark job and
+    the frames match what footer inference reads. A manifest without
+    the record (published before it existed) falls back to inference."""
+    from dataclasses import replace
+
+    from searchengine_spark.index.engine import IndexHandle
+
+    snap = catalog.current()
+    assert set(snap.manifest["schemas"]) == {"postings", "terms", "docmap"}
+    ix = IndexHandle(spark, snap)
+    assert spark_jobs(lambda: (ix.postings(), ix.terms(), ix.docmap())) == []
+    old = IndexHandle(spark, replace(snap, manifest={k: v for k, v in snap.manifest.items()
+                                                     if k != "schemas"}))
+    for name in ("postings", "terms", "docmap"):
+        declared, inferred = getattr(ix, name)(), []
+        assert len(spark_jobs(lambda: inferred.append(getattr(old, name)()))) == 1
+        assert sorted(declared.dtypes) == sorted(inferred[0].dtypes)
+        assert sorted(declared.collect()) == sorted(inferred[0].collect())
+
+
 def test_handle_pinned_across_republish(spark, transcripts, tmp_path):
     """Snapshot swap safety: a handle held across a republish keeps
     answering from ITS snapshot (pinned frames point at write-once

@@ -239,6 +239,148 @@ def test_reapplied_epoch_replaces_delta_pin(spark, transcripts, tmp_path):
     assert [(r["turn_idx"], r["text"]) for r in live] == [(1, "second zebratwo")]
 
 
+TIE = "zebratie tie spark query"
+
+
+@pytest.fixture(scope="module")
+def placed(spark, transcripts, tmp_path_factory):
+    """A store with two pending deltas over a base of 200 corpus docs
+    plus twelve ``zb:*`` docs sharing one text (``TIE``): a corpus doc
+    upserted and another deleted; ``zpl:0000`` added in delta 0 and
+    re-upserted in delta 1, ``zb:0000`` re-upserted in delta 1 (both
+    leave a dead version tied with live ones); ``aaa:0000`` added in
+    delta 1 with the ``TIE`` text — the highest doc_int but the lowest
+    doc_id of the tie group, which outnumbers k + T, so the driver
+    placement's candidate cut falls inside it."""
+    tmp = tmp_path_factory.mktemp("placed")
+    corpus = transcripts.orderBy("conv_id", "turn_idx").limit(200)
+    first = corpus.first()
+    tied = spark.createDataFrame(
+        [("zb", i, "user", TIE, "", first["ts"]) for i in range(12)], corpus.schema
+    )
+    s = StreamingIndex(spark, str(tmp / "store"))
+    s.bootstrap(corpus.unionByName(tied))
+    upd, dele = corpus.limit(2).collect()
+    s.apply_batch(_batch(spark, tmp, [
+        _msg(1, upd["conv_id"], upd["turn_idx"], TIE),
+        _msg(2, dele["conv_id"], dele["turn_idx"], "", delete=True),
+        _msg(3, "zpl", 0, TIE),
+        _msg(4, "zpl", 1, TIE),
+        _msg(5, "zpl", 2, "zebratie zebratie other spark words"),
+    ]), 0)
+    s.apply_batch(_batch(spark, tmp, [
+        _msg(6, "zpl", 0, TIE),
+        _msg(7, "zpl", 3, TIE),
+        _msg(8, "aaa", 0, TIE),
+        _msg(9, "zb", 0, TIE),
+        _msg(10, "zpl", 4, "tie query"),
+    ]), 1)
+    return s, dele
+
+
+def test_live_placements_identical(placed, monkeypatch):
+    """The driver and the distributed placement of the live search
+    return identical (doc_id, score) lists, ties at the k cut, dead
+    versions and a deleted base doc included."""
+    from searchengine_spark.oracle import tokenize
+    from searchengine_spark.streaming import ingest as ing
+
+    s, dele = placed
+    assert len(s.delta_ids()) == 2
+    dead_terms = list(dict.fromkeys(tokenize(dele["text"])))[:2]
+    queries = [["zebratie", "tie"], ["spark", "query", "zebratie"], ["tie"],
+               dead_terms + ["zebratie"]]
+
+    def answers():
+        return {(tuple(q), k): _live_pairs(s, q, k) for q in queries for k in (1, 3)}
+
+    def unreachable(*a, **kw):
+        raise AssertionError("wrong placement")
+
+    with monkeypatch.context() as m:
+        m.setattr(StreamingIndex, "_search_distributed", unreachable)
+        driver = answers()
+    with monkeypatch.context() as m:
+        m.setattr(ing, "SERVING_DRIVER_MAX", 0)
+        m.setattr(StreamingIndex, "_search_driver", unreachable)
+        distributed = answers()
+    assert driver == distributed
+    dead_id = f"{dele['conv_id']}:{dele['turn_idx']:04d}"
+    for pairs in driver.values():
+        assert dead_id not in [d for d, _ in pairs]
+        assert len({d for d, _ in pairs}) == len(pairs)  # one live version per doc
+    # the TIE docs share one score: k cuts inside the tie by doc_id
+    assert [d for d, _ in driver[(("zebratie", "tie"), 1)]] == ["aaa:0000"]
+    top3 = driver[(("zebratie", "tie"), 3)]
+    assert len({sc for _, sc in top3}) == 1 and [d for d, _ in top3] == sorted(d for d, _ in top3)
+
+
+def test_live_search_job_budget(placed, spark_jobs):
+    """On a warm base (term dictionary pinned) with pending deltas the
+    live search's driver placement runs two Spark jobs: the postings
+    collect and the candidates' doc_id + tombstone collect. Collecting
+    the result runs none."""
+    s, _ = placed
+    s.search(["spark"]).collect()  # pins the base term dictionary
+    result = []
+    assert len(spark_jobs(lambda: result.append(s.search(["zebratie", "spark"], k=3)))) == 2
+    assert spark_jobs(lambda: result[0].collect()) == []
+
+
+def test_delta_frames_start_no_job(placed, spark_jobs):
+    """A delta's four frames, and a fresh snapshot's three artifact
+    frames, are read with declared schemas: opening them starts no job."""
+    from searchengine_spark.index.engine import IndexHandle
+    from searchengine_spark.streaming.ingest import DELTA_SCHEMAS
+
+    s, _ = placed
+    did = s.delta_ids()[0]
+    s._delta_pins.pop(did, None)
+    frames = {}
+    opened = spark_jobs(lambda: frames.update({p: s._delta_frame(did, p) for p in DELTA_SCHEMAS}))
+    assert opened == []
+    assert dict(frames["docmap"].dtypes)["doc_int"] == "bigint"
+    ix = IndexHandle(s.spark, s.catalog.current())
+    assert spark_jobs(lambda: (ix.postings(), ix.terms(), ix.docmap())) == []
+
+
+def test_apply_batch_job_budget(spark, transcripts, tmp_path, spark_jobs):
+    """A small micro-batch lands in eight Spark jobs: N and Σdl come from
+    an Observation on the docmap write, and every delta part is re-read
+    with its declared schema."""
+    s = StreamingIndex(spark, str(tmp_path / "store"))
+    s.bootstrap(transcripts.limit(50))
+    batch = _batch(spark, tmp_path, [_msg(i, "zjb", i, f"budget body tok{i}") for i in range(5)])
+    assert len(spark_jobs(lambda: s.apply_batch(batch, 0))) <= 8
+
+
+@pytest.mark.parametrize("large", [False, True])
+def test_apply_batch_meta_stats(spark, transcripts, tmp_path, monkeypatch, large):
+    """``meta.json``'s n_docs / sum_dl (observed during the docmap
+    write) equal the published docmap's row count and Σdl, on the
+    window path and on the two-phase ``LARGE_BATCH_DOCS`` path."""
+    from searchengine_spark.streaming import ingest as ing
+
+    if large:
+        monkeypatch.setattr(ing, "LARGE_BATCH_DOCS", 4)
+    s = StreamingIndex(spark, str(tmp_path / "store"))
+    base = transcripts.orderBy("conv_id", "turn_idx").limit(50)
+    s.bootstrap(base)
+    victim = base.first()
+    msgs = [_msg(i, "zst", i, " ".join(["stat body"] + [f"w{j}" for j in range(i)]))
+            for i in range(10)]
+    msgs += [_msg(10, victim["conv_id"], victim["turn_idx"], "", delete=True),
+             _msg(11, "zst", 20, "ephemeral"), _msg(12, "zst", 20, "", delete=True)]
+    s.apply_batch(_batch(spark, tmp_path, msgs), 0)
+    meta = s._delta_meta(0)
+    dm = spark.read.parquet(os.path.join(s.delta_root, "delta-0", "docmap"))
+    row = dm.agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl")).collect()[0]
+    want = (10, sum(2 + i for i in range(10)))  # "stat body w0 .. w<i-1>": dl = 2 + i
+    assert (meta["n_docs"], meta["sum_dl"]) == (row["n"], row["sdl"]) == want
+    assert meta["doc_int_end"] - meta["doc_int_start"] == 10
+    assert dict(dm.dtypes)["doc_int"] == "bigint"
+
+
 def test_parse_messages_kafka_shape(spark):
     """The Kafka value-bytes → typed message transform (S9/S10) on a
     static frame (the streaming plan uses the identical expression)."""

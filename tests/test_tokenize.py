@@ -50,3 +50,21 @@ def test_underscore_and_digits(spark):
     # Java \p{L}\p{N} must match Python [^\W_] exactly: underscore splits
     assert oracle.tokenize("a_b") == ["b"]  # 'a' is a stopword
     assert oracle.tokenize("café Ünïcode") == ["café", "ünïcode"]
+
+
+def test_tokenized_one_row_per_doc(spark, transcripts):
+    """``tokenized()`` keeps exactly one row per input turn, hence per
+    doc_id, also for turns with no token left (stopwords only, empty)."""
+    from searchengine_spark.query.bm25 import tokenized
+
+    sample = transcripts.orderBy("conv_id", "turn_idx").limit(40)
+    odd = spark.createDataFrame(
+        [("zodd", i, "user", text, "", r["ts"]) for i, (text, r) in enumerate(
+            zip(["a the and", "", "spark spark spark"], sample.limit(3).collect()))],
+        sample.select("conv_id", "turn_idx", "role", "text", "tool", "ts").schema,
+    )
+    docs = sample.select("conv_id", "turn_idx", "role", "text", "tool", "ts").unionByName(odd)
+    rows = tokenized(docs).select("doc_id", "dl").collect()
+    assert len(rows) == docs.count() == 43
+    assert len({r["doc_id"] for r in rows}) == len(rows)
+    assert sorted(r["dl"] for r in rows if r["doc_id"].startswith("zodd:")) == [0, 0, 3]
