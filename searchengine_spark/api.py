@@ -102,41 +102,30 @@ def advanced_search(
     # is bounded (one JVM job: docmap semi-join → TakeOrdered on the
     # sort key); heavy terms keep the distributed decode.
     from .index.engine import (
+        _SCORED,
         SERVING_DRIVER_MAX,
         _empty,
-        _idf,
         _make_scorer,
-        _score_rows_driver,
+        _score_rows,
+        _term_postings,
         term_meta,
     )
 
-    st = ix.stats
     tmeta = term_meta(ix, terms)
-    live = [t for t in terms if t in tmeta]
-    cand = (
-        ix.postings()
-        .where(F.col("bucket").isin(sorted({tmeta[t][1] for t in live})))
-        .where(F.col("term").isin(live))
-    )
-    if not live:
+    ones = [{t: 1.0 for t in tmeta}]  # the match set needs no idf
+    cand = _term_postings(ix, tmeta).select("term", "postings")
+    if not tmeta:
         matched = _empty(ix.spark, "doc_int LONG")
-    elif sum(tmeta[t][0] for t in live) <= SERVING_DRIVER_MAX:
+    elif sum(df for df, _ in tmeta.values()) <= SERVING_DRIVER_MAX:
         import pandas as pd
 
-        rows = cand.select("term", "postings").collect()  # Σ-df bounded
-        uniq, _s, _c = _score_rows_driver(
-            rows, {t: 1.0 for t in live}, st["avgdl"]
-        )
+        uniq = _score_rows(cand.collect(), ones, ix.stats["avgdl"])[0][0]  # Σ-df bounded
         matched = ix.spark.createDataFrame(
             pd.DataFrame({"doc_int": uniq}), schema="doc_int LONG"
         )
     else:
-        idfs = {t: _idf(st["n_docs"], tmeta[t][0]) for t in live}
         matched = (
-            cand.select("term", "postings", "block_max_tfnorm")
-            .mapInPandas(
-                _make_scorer(idfs, st["avgdl"], 0.0), "doc_int LONG, contrib DOUBLE"
-            )
+            cand.mapInPandas(_make_scorer(ones, ix.stats["avgdl"]), _SCORED)
             .select("doc_int")
             .distinct()
         )

@@ -2,35 +2,35 @@
 
 Mirrors the reference's query path (``internal/search/search.go:114-165``:
 term split → fuzzy/synonym expansion → boolean MUST filters → score →
-top-k) but as a distributed plan over the compressed postings table:
+top-k). A single query is a one-query batch: :func:`search_index` and
+:func:`search_many` both run one core, :func:`_search`:
 
-1. driver: expand + dedup query terms, look up per-term (df, bucket)
-   in the pinned term dictionary (a parquet-pushdown point read of the
-   ``terms`` table when the vocabulary is too large to pin), compute
-   idf per term;
-2. scan only the postings **buckets** the query terms hash to
-   (directory partition pruning) with ``term IN (...)`` pushed to
-   parquet row groups;
-3. **block-max pruning** (WAND-style, north_rule): segments are
-   doc-aligned across terms (``seg = doc_int >> 16``), so
-   ``ub(seg) = Σ_t idf_t · seg_max_tfnorm(t, seg)`` bounds the total
-   BM25 score of every doc in that segment. A metadata-only pass (no
-   postings bytes read — column pruning) scores the richest segments
-   first, establishes θ = k-th best exact score, and prunes every
-   segment with ``ub ≤ θ``. Exactness is preserved: a pruned segment
-   cannot contain a doc beating θ.
-4. decode+score survivors in an Arrow ``mapInPandas`` (vectorized
-   numpy; per-128-entry block bounds skip cold blocks within a
-   segment), aggregate per doc, global top-k via
-   ``orderBy().limit(k)`` (TakeOrderedAndProject);
-5. hydrate doc_id (and any payload) from the pinned doc-name column,
-   or ``docmap`` with an ``isin``-pushdown point lookup on corpora too
-   large to pin.
+1. look up each distinct term's (df, bucket) in the pinned term
+   dictionary (a point read of the ``terms`` table when the vocabulary
+   is too large to pin) and scan only the postings **buckets** the terms
+   hash to, with ``term IN (...)`` pushed to parquet row groups;
+2. place the scoring by Σ df, known before any job runs. At most
+   ``SERVING_DRIVER_MAX`` postings are collected in one JVM action and
+   scored in driver numpy (:func:`_driver_top_k`); above it one
+   ``mapInPandas`` scorer (:func:`_make_scorer`) decodes each
+   (term, segment) row once, fans its contributions out to every query
+   holding the term, and the sums are cut to top-k per query. Both
+   placements decode through :func:`_decode_tfnorm`;
+3. on large corpora the distributed placement first runs one
+   **block-max θ pass** (:func:`_prune`): segments are doc-aligned
+   across terms (``seg = doc_int >> 16``), so
+   ``ub(q, seg) = Σ_t idf_t · seg_max_tfnorm(t, seg)`` bounds query q's
+   score of every doc in that segment. θ_q, the k-th exact score inside
+   q's richest segments, drops every segment and, inside the scorer,
+   every 128-posting block that cannot beat it — exact, since a dropped
+   doc provably scores below θ_q;
+4. hydrate every query's doc_ids in one lookup: the pinned doc-name
+   column, or a docmap point read on corpora too large to pin.
 
 Serving state lives on the :class:`IndexHandle`: it resolves each
 artifact DataFrame (postings / terms / docmap) once and pins the term
 dictionary, doc names and filter sets driver-side, so a warm query on
-the driver fast path runs one Spark job (the Σdf-bounded postings
+the driver placement runs one Spark job (the Σdf-bounded postings
 collect). Re-reading the artifact on every access cost a parquet
 schema-inference job each time: on the sf0.01 serve benchmark
 (4 vCPUs) pinning took ``search_index`` from 2 jobs to 1 and a
@@ -50,13 +50,15 @@ import math
 from dataclasses import dataclass, field
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .. import semantics as S
+from ..metrics import timed
 from .catalog import IndexCatalog, Snapshot
 from .codec import BLOCK, SEG_SPAN, decode_postings
 
@@ -94,17 +96,16 @@ class _DocNames:
     def nbytes(self) -> int:
         return int(self._arr.nbytes)
 
-# serving fast path: when the query terms' TOTAL posting count (Σ df,
-# known driver-side from the term dictionary before any job runs) is
-# at most this, the matching segment blobs are collected and scored in
-# driver numpy — one JVM-only collect instead of a mapInPandas job
-# (no Python workers, no shuffle). This is the Lucene/Bleve serving
-# shape (one node scores a query); heavy queries above the cap keep
-# the distributed block-max path, so no unbounded driver transfer can
-# occur: Σ df bounds the decoded entries (~6 B/entry on the wire).
-import os as _os
 
-SERVING_DRIVER_MAX = int(_os.environ.get("SENG_SERVING_DRIVER_MAX", "2000000"))
+# driver placement: when the queries' TOTAL posting count (Σ df over
+# the distinct terms, known driver-side from the term dictionary before
+# any job runs) is at most this, the matching segment blobs are
+# collected and scored in driver numpy — one JVM-only collect instead
+# of a mapInPandas job (no Python workers, no shuffle). This is the
+# Lucene/Bleve serving shape (one node scores a query); heavier work
+# keeps the distributed block-max path, so no unbounded driver transfer
+# can occur: Σ df bounds the decoded entries (~6 B/entry on the wire).
+SERVING_DRIVER_MAX = 2_000_000
 # cached filter sets pinned per snapshot (Lucene filter-cache analogue)
 _FILTER_CACHE_ENTRIES = 8
 
@@ -197,12 +198,10 @@ class IndexHandle:
         (snapshot, predicate) and pinned driver-side — repeated
         filtered queries then add no Spark job. None when the
         corpus is too large to pin a filter set (callers fall back to
-        the distributed semi-join). Bounded: ≤ _FILTER_CACHE_ENTRIES
+        a rank-ordered docmap probe). Bounded: ≤ _FILTER_CACHE_ENTRIES
         arrays of ≤ n_docs int64 each, evicted FIFO."""
         if self.stats["n_docs"] > DOC_NAME_CACHE_MAX:
             return None
-        import numpy as np
-
         key = str(doc_predicate._jc)
         cache: dict = getattr(self, "_filter_cache", None) or {}
         arr = cache.get(key)
@@ -309,6 +308,11 @@ def _idf(n_docs: int, df: int) -> float:
 # be dropped; only widens what is kept, never prunes more
 _THETA_EPS = 1e-9
 
+# scorer output: one row per (query, doc, term) contribution. The query
+# is its integer ordinal in the batch, not the caller's qid string, so
+# a single query's rows and aggregation shuffle stay narrow.
+_SCORED = "q INT, doc_int LONG, contrib DOUBLE"
+
 
 def _decode_tfnorm(blob: bytes, avgdl: float) -> tuple["object", "object"]:
     """Decode one postings blob → (doc_ints, tfnorm) float64 arrays.
@@ -316,8 +320,6 @@ def _decode_tfnorm(blob: bytes, avgdl: float) -> tuple["object", "object"]:
     decode side — every scorer (executor mapInPandas and driver numpy)
     must call this so the association order stays bit-identical to
     ``bm25_score_expr`` and the plans can never desynchronize."""
-    import numpy as np
-
     k1, b = S.K1, S.B
     docs, tfs, dls = decode_postings(blob)
     tfd = tfs.astype(np.float64)
@@ -327,58 +329,193 @@ def _decode_tfnorm(blob: bytes, avgdl: float) -> tuple["object", "object"]:
     return docs, tfn
 
 
-def _make_scorer(idfs: dict[str, float], avgdl: float, theta: float = 0.0):
-    """mapInPandas stage: decode segments → per-entry contributions.
+def _make_scorer(
+    qidfs: list[dict[str, float]], avgdl: float, thetas: dict[int, float] | None = None
+):
+    """mapInPandas stage: decode each (term, seg) row ONCE and fan its
+    contributions out to every query holding the term → ``_SCORED``
+    rows. ``qidfs[q]`` is query q's term → idf.
 
-    Emits (doc_int, contrib). Block-max WAND skip (north_star), exact
-    for ANY number of query terms: segments are doc-aligned across
-    terms (codec.SEG_SPAN), so for block b of term t in segment s
+    Block-max WAND skip, exact for ANY number of query terms: segments
+    are doc-aligned across terms (codec.SEG_SPAN), so for block b of
+    term t in segment s
 
-        bound(t, b) = idf_t·block_max_tfnorm(b) + Σ_{u≠t} idf_u·seg_max_tfnorm(u, s)
+        bound(q, t, b) = idf_t·block_max_tfnorm(b) + (ub(q, s) − idf_t·seg_max_tfnorm(t, s))
 
-    upper-bounds the TOTAL BM25 score of every doc in that block. The
-    cross-term complement arrives as the ``seg_ub`` column (segment
-    ub = Σ_t idf_t·seg_max, attached by ``_prune_segments``), so
-    other = seg_ub − idf_t·seg_max_t — exactly 0.0 for single-term
-    queries. Dropping a block with bound < θ − ε is exact even though
-    the doc's OTHER term contributions still flow: its total score is
-    provably < θ, so its (partial) aggregate can never reach the top-k
-    boundary, ties at θ included.
-    """
-    k1, b = S.K1, S.B
+    upper-bounds query q's TOTAL score of every doc in the block. The
+    segment bound ``ub(q, s) = Σ_u idf_u·seg_max_tfnorm(u, s)`` arrives
+    in the row's ``qubs`` list (attached by :func:`_prune`); the
+    complement is 0.0 for a one-term query, which therefore skips even
+    without ``qubs``. A block whose bound is below θ_q − ε is dropped
+    for q: the doc's other contributions still flow, but its total is
+    provably below θ_q, so its partial aggregate can never reach q's
+    top-k boundary, ties at θ included."""
+    term_q: dict[str, list[tuple[int, float]]] = {}
+    for q, idfs in enumerate(qidfs):
+        for t, idf in idfs.items():
+            term_q.setdefault(t, []).append((q, idf))
+    thetas = thetas or {}
 
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
-            outs_d, outs_s = [], []
-            prune = theta > 0.0 and "seg_ub" in pdf.columns
-            seg_ubs = pdf["seg_ub"] if prune else pdf["term"]
-            seg_maxes = pdf["seg_max_tfnorm"] if prune else pdf["term"]
-            for term, blob, bmax, seg_ub, seg_max in zip(
-                pdf["term"], pdf["postings"], pdf["block_max_tfnorm"], seg_ubs, seg_maxes
-            ):
-                idf = idfs[term]
+            qs, ds, cs = [], [], []
+            skip = bool(thetas) and "seg_max_tfnorm" in pdf.columns
+            absent = [None] * len(pdf)
+            meta = [pdf[c] if c in pdf.columns else absent
+                    for c in ("block_max_tfnorm", "seg_max_tfnorm", "qubs")]
+            for term, blob, bmax, seg_max, qubs in zip(pdf["term"], pdf["postings"], *meta):
                 docs, tfn = _decode_tfnorm(bytes(blob), avgdl)
-                contrib = idf * tfn
-                if prune:
-                    other = float(seg_ub) - idf * float(seg_max)
-                    bm = np.asarray(bmax, dtype=np.float64) * idf + other
-                    keep_block = bm >= theta - _THETA_EPS
-                    if not keep_block.all():
-                        mask = np.repeat(keep_block, BLOCK)[: len(docs)]
-                        docs, contrib = docs[mask], contrib[mask]
-                outs_d.append(docs)
-                outs_s.append(contrib)
-            if outs_d:
+                ubs = {} if qubs is None else {int(e["q"]): float(e["ub"]) for e in qubs}
+                for q, idf in term_q[term]:
+                    d, c = docs, idf * tfn
+                    theta = thetas.get(q, 0.0)
+                    one_term = len(qidfs[q]) == 1
+                    if skip and theta > 0.0 and (one_term or q in ubs):
+                        other = 0.0 if one_term else ubs[q] - idf * float(seg_max)
+                        bound = np.asarray(bmax, dtype=np.float64) * idf + other
+                        keep = bound >= theta - _THETA_EPS
+                        if not keep.all():
+                            mask = np.repeat(keep, BLOCK)[: len(docs)]
+                            d, c = docs[mask], c[mask]
+                    qs.append(np.full(len(d), q, dtype=np.int32))
+                    ds.append(d)
+                    cs.append(c)
+            if ds:
                 yield pd.DataFrame(
                     {
-                        "doc_int": np.concatenate(outs_d),
-                        "contrib": np.concatenate(outs_s),
+                        "q": np.concatenate(qs),
+                        "doc_int": np.concatenate(ds),
+                        "contrib": np.concatenate(cs),
                     }
                 )
 
     return score_batches
+
+
+def _score_rows(rows: list, qidfs: list[dict[str, float]], avgdl: float) -> list[tuple]:
+    """Driver twin of :func:`_make_scorer` for a Σ-df-bounded row set:
+    decode each collected (term, postings) row once, then aggregate per
+    doc for every query → one (doc_ints, scores, matched_term_counts)
+    triple per query, unordered. The engine's driver placement, the SQL
+    table function, the API sort path and live search all score here."""
+    decoded: dict[str, list] = {}
+    for r in rows:
+        decoded.setdefault(r["term"], []).append(_decode_tfnorm(bytes(r["postings"]), avgdl))
+    out = []
+    for idfs in qidfs:
+        parts = [(d, idf * tfn) for t, idf in idfs.items() for d, tfn in decoded.get(t, ())]
+        if not parts:
+            out.append((np.zeros(0, dtype=np.int64), np.zeros(0), np.zeros(0, dtype=np.int64)))
+            continue
+        uniq, inv, counts = np.unique(
+            np.concatenate([d for d, _ in parts]), return_inverse=True, return_counts=True
+        )
+        sums = np.bincount(inv, weights=np.concatenate([c for _, c in parts]), minlength=len(uniq))
+        out.append((uniq, sums, counts))
+    return out
+
+
+def _driver_top_k(
+    ix: IndexHandle,
+    rows: list,
+    qidfs: list[dict[str, float]],
+    k: int,
+    mode: str = "or",
+    doc_predicate: Column | None = None,
+) -> list[list[tuple[int, float]]]:
+    """Driver placement: each query's exact top-k (doc_int, raw score),
+    in rank order, from collected rows.
+
+    A doc's postings for EVERY query term live in its one doc-aligned
+    segment, so the rows carry complete per-doc scores and mode="and"
+    reduces to counting matched terms. A MUST predicate masks the
+    candidates with the handle's pinned filter set (its first use pays
+    one docmap job); on corpora too large to pin one, the candidates
+    are probed against docmap in rank order (:func:`_probe_docmap`)."""
+    out = []
+    for idfs, (uniq, sums, counts) in zip(qidfs, _score_rows(rows, qidfs, ix.stats["avgdl"])):
+        if mode == "and":
+            uniq, sums = uniq[counts == len(idfs)], sums[counts == len(idfs)]
+        allowed = None
+        if doc_predicate is not None and len(uniq):
+            allowed = ix.filter_doc_ints(doc_predicate)
+        if allowed is not None:
+            pos = np.minimum(np.searchsorted(allowed, uniq), max(len(allowed) - 1, 0))
+            m = allowed[pos] == uniq if len(allowed) else np.zeros(len(uniq), dtype=bool)
+            uniq, sums = uniq[m], sums[m]
+        order = np.lexsort((uniq, -sums))  # exact final rank order
+        if doc_predicate is not None and allowed is None and len(uniq):
+            out.append(_probe_docmap(ix, uniq[order], sums[order], k, doc_predicate))
+        else:
+            out.append([(int(uniq[i]), float(sums[i])) for i in order[:k]])
+    return out
+
+
+def _probe_docmap(
+    ix: IndexHandle, docs, scores, k: int, doc_predicate: Column
+) -> list[tuple[int, float]]:
+    """Top-k of rank-ordered candidates under a MUST predicate, for
+    corpora too large to pin a filter set: the first k candidates that
+    satisfy it ARE the top-k (everything unprobed ranks below everything
+    probed); the probe widens ×8 on the rare under-selective predicate."""
+    probe = min(len(docs), max(50 * k, 500))
+    while True:
+        cand = ix.spark.createDataFrame(
+            pd.DataFrame({"doc_int": docs[:probe], "score_raw": scores[:probe]}),
+            schema="doc_int LONG, score_raw DOUBLE",
+        )
+        top = (
+            cand.join(ix.docmap().where(doc_predicate).select("doc_int"), "doc_int", "left_semi")
+            .orderBy(F.desc("score_raw"), F.asc("doc_int"))
+            .limit(k)
+            .collect()
+        )
+        if len(top) >= k or probe >= len(docs):
+            return [(int(r["doc_int"]), float(r["score_raw"])) for r in top]
+        probe = min(len(docs), probe * 8)
+
+
+def _aggregate(
+    ix: IndexHandle,
+    scan: DataFrame,
+    qidfs: list[dict[str, float]],
+    thetas: dict[int, float] | None = None,
+    doc_predicate: Column | None = None,
+) -> DataFrame:
+    """Distributed placement: score ``scan`` with :func:`_make_scorer`
+    and sum per (q, doc_int) → ``score_raw`` and the matched-term count
+    ``_nt``. The MUST semi-join runs AFTER the aggregation: it drops
+    whole docs, never single contributions, so it joins the few
+    aggregated rows instead of every contribution row."""
+    agg = (
+        scan.mapInPandas(_make_scorer(qidfs, ix.stats["avgdl"], thetas), _SCORED)
+        .groupBy("q", "doc_int")
+        .agg(F.sum("contrib").alias("score_raw"), F.count(F.lit(1)).alias("_nt"))
+    )
+    if doc_predicate is not None:
+        agg = agg.join(ix.docmap().where(doc_predicate).select("doc_int"), "doc_int", "left_semi")
+    return agg
+
+
+def _top_k(agg: DataFrame, n_queries: int, k: int) -> DataFrame:
+    """Each query's top-k rows of ``agg``, cut by (score desc, doc_int
+    asc) — doc_int order is doc_id order, so the tie-break at the k
+    boundary is exact before hydration. One query takes
+    ``orderBy().limit()`` (TakeOrderedAndProject: per-partition heaps,
+    no global sort); a batch takes a window partitioned by query."""
+    if n_queries == 1:
+        return agg.orderBy(F.desc("score_raw"), F.asc("doc_int")).limit(k)
+    w = Window.partitionBy("q").orderBy(F.desc("score_raw"), F.asc("doc_int"))
+    return agg.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
+
+
+def _collect_top_k(agg: DataFrame, n_queries: int, k: int) -> list[list[tuple[int, float]]]:
+    """:func:`_top_k`, collected into per-query rank-ordered
+    (doc_int, raw score) lists."""
+    out: list[list[tuple[int, float]]] = [[] for _ in range(n_queries)]
+    for r in _top_k(agg, n_queries, k).select("q", "doc_int", "score_raw").collect():
+        out[r["q"]].append((int(r["doc_int"]), float(r["score_raw"])))
+    return [sorted(top, key=lambda x: (-x[1], x[0])) for top in out]
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
@@ -388,89 +525,222 @@ def _empty(spark: SparkSession, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema).where(F.lit(False))
 
 
-def _result_df(spark: SparkSession, pairs: list[tuple[str, float]]) -> DataFrame:
-    """(doc_id, score) rows → result DataFrame via Arrow from pandas —
-    ~8× cheaper per query than the row-tuple createDataFrame path (the
-    serving result is rebuilt on every call, so this fixed cost is on
-    the latency floor). Like the empty result, it collects with no job."""
-    if not pairs:
-        return _empty(spark, "doc_id STRING, score DOUBLE")
-    import numpy as np
+def _result_df(
+    spark: SparkSession, rows: list[tuple], schema: str = "doc_id STRING, score DOUBLE"
+) -> DataFrame:
+    """Result rows → DataFrame via Arrow from pandas — ~8× cheaper per
+    query than the row-tuple createDataFrame path (the serving result
+    is rebuilt on every call, so this fixed cost is on the latency
+    floor). Like the empty result, it collects with no job."""
+    if not rows:
+        return _empty(spark, schema)
+    cols = [c.split()[0] for c in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema=schema)
 
-    pdf = pd.DataFrame(
-        {
-            "doc_id": np.array([p[0] for p in pairs], dtype=object),
-            "score": np.array([p[1] for p in pairs], dtype=np.float64),
+
+def _hydrate(ix: IndexHandle, tops: list[list[tuple[int, float]]]) -> list[list[tuple[str, float]]]:
+    """Per-query (doc_int, raw score) lists → (doc_id, rounded score)
+    lists ordered (score desc, doc_id asc). One lookup serves every
+    query: the pinned doc-name column, or one ≤ #queries·k docmap
+    point-read on corpora too large to pin."""
+    ids = sorted({d for top in tops for d, _ in top})
+    names = ix.doc_names() if ids else {}
+    if names is None:
+        names = {
+            int(r["doc_int"]): r["doc_id"]
+            for r in ix.docmap()
+            .where(F.col("doc_int").isin(ids))
+            .select("doc_int", "doc_id")
+            .collect()
         }
+    named = [sorted(((names[d], s) for d, s in top), key=lambda x: (-x[1], x[0])) for top in tops]
+    return [[(n, S.round_score(s)) for n, s in top] for top in named]
+
+
+# --------------------------------------------------------------------------
+# the query core
+# --------------------------------------------------------------------------
+
+def _term_postings(ix: IndexHandle, meta: dict[str, tuple[int, int]]) -> DataFrame:
+    """Postings rows of the terms in ``meta`` (term → (df, bucket)): the
+    bucket predicate prunes whole directory partitions, the term
+    predicate is pushed to parquet row groups."""
+    return (
+        ix.postings()
+        .where(F.col("bucket").isin(sorted({b for _, b in meta.values()})))
+        .where(F.col("term").isin(list(meta)))
     )
-    return spark.createDataFrame(pdf, schema="doc_id STRING, score DOUBLE")
 
 
-def _score_rows_driver(
-    rows: list, idfs: dict[str, float], avgdl: float
-) -> tuple["object", "object", "object"]:
-    """Decode + score collected segment rows in driver numpy — the same
-    float64 expression shape as :func:`_make_scorer`, aggregated per
-    doc. Returns (doc_ints, scores, matched_term_counts) as arrays.
-    Caller guarantees the row set is Σ-df bounded (SERVING_DRIVER_MAX /
-    the pruned pick set)."""
-    import numpy as np
+def _search(
+    ix: IndexHandle,
+    queries: list[list[str]],
+    k: int,
+    *,
+    mode: str = "or",
+    doc_predicate: Column | None = None,
+    driver: bool | None = None,
+) -> list[list[tuple[int, float]]]:
+    """THE query core: each query's exact top-k (doc_int, raw score),
+    in rank order. Σ df over the distinct terms (from the term
+    dictionary, no job) picks the placement: at most SERVING_DRIVER_MAX
+    collects every blob in ONE bounded JVM action, each decoded once
+    and scored per query in driver numpy; above it (or ``driver=False``)
+    the distributed placement scores on the cluster."""
+    meta = term_meta(ix, sorted({t for ts in queries for t in ts}))
+    n_docs = ix.stats["n_docs"]
+    qidfs = [
+        {t: _idf(n_docs, meta[t][0]) for t in ts if t in meta}
+        # a term absent from the corpus can never satisfy a conjunction
+        if mode == "or" or all(t in meta for t in ts) else {}
+        for ts in queries
+    ]
+    terms = sorted({t for idfs in qidfs for t in idfs})
+    if not terms:
+        return [[] for _ in queries]
+    full = _term_postings(ix, {t: meta[t] for t in terms})
+    total_df = sum(meta[t][0] for t in terms)
+    if driver is None:
+        driver = total_df <= SERVING_DRIVER_MAX
+    if driver:
+        rows = full.select("term", "postings").collect()  # JVM-only, Σ-df bounded
+        return _driver_top_k(ix, rows, qidfs, k, mode, doc_predicate)
+    return _search_distributed(ix, full, qidfs, k, mode, doc_predicate, total_df)
 
-    k1, b = S.K1, S.B
-    ds, cs = [], []
-    for r in rows:
-        idf = idfs[r["term"]]
-        docs, tfn = _decode_tfnorm(bytes(r["postings"]), avgdl)
-        ds.append(docs)
-        cs.append(idf * tfn)
-    if not ds:
-        z = np.zeros(0, dtype=np.int64)
-        return z, np.zeros(0), np.zeros(0, dtype=np.int64)
-    docs = np.concatenate(ds)
-    contribs = np.concatenate(cs)
-    uniq, inv, counts = np.unique(docs, return_inverse=True, return_counts=True)
-    sums = np.bincount(inv, weights=contribs, minlength=len(uniq))
-    return uniq, sums, counts
 
+def _search_distributed(
+    ix: IndexHandle,
+    full: DataFrame,
+    qidfs: list[dict[str, float]],
+    k: int,
+    mode: str,
+    doc_predicate: Column | None,
+    total_df: int,
+) -> list[list[tuple[int, float]]]:
+    """Distributed placement of :func:`_search`: the θ pass on large
+    corpora (OR mode only — the OR-score θ bound is not sound for a
+    conjunctive top-k), then one scorer pass, per-(query, doc) sums and
+    the per-query top-k."""
+    scan, thetas = full.select("term", "postings"), {}
+    if mode == "and" and len(qidfs[0]) > 1:
+        # conjunctive segment pruning (exact): a doc matching ALL terms
+        # lives in a segment where EVERY term has postings — intersect
+        # the per-term segment sets from metadata columns alone
+        every = (
+            full.groupBy("seg")
+            .agg(F.count_distinct("term").alias("_nt"))
+            .where(F.col("_nt") == len(qidfs[0]))
+            .select("seg")
+        )
+        scan = full.join(F.broadcast(every), "seg", "left_semi").select("term", "postings")
+    elif (
+        mode == "or"
+        and ix.stats["n_docs"] >= PRUNE_MIN_DOCS
+        and (len(qidfs) == 1 or total_df >= PRUNE_MIN_POSTINGS)
+    ):
+        scan, thetas, _ = _prune(ix, full, qidfs, k, doc_predicate)
+    agg = _aggregate(ix, scan, qidfs, thetas, doc_predicate)
+    if mode == "and":  # a one-query mode: one scorer row per (term, doc)
+        agg = agg.where(F.col("_nt") == len(qidfs[0]))
+    return _collect_top_k(agg, len(qidfs), k)
+
+
+@timed("search_index")
+def search_index(
+    ix: IndexHandle,
+    terms: list[str],
+    *,
+    k: int = S.TOP_K,
+    doc_predicate: Column | None = None,
+    mode: str = "or",
+) -> DataFrame:
+    """Top-k (doc_id, score) over the postings index — rank-identical to
+    the direct path; a one-query :func:`_search`. ``doc_predicate``
+    filters candidate docs via docmap (MUST block, reference
+    search.go:133-139); df/idf stay corpus-global. ``mode="and"`` keeps
+    only docs matching every term (posting-list intersection, J4;
+    block-max pruning is off there).
+
+    Job budget on a warm handle (artifact frames, term dictionary and
+    doc names pinned): ONE job when Σ df fits SERVING_DRIVER_MAX — the
+    bucket+term-pruned postings collect scored in driver numpy — plus
+    one docmap job the first time a MUST predicate is seen (its filter
+    set is pinned for repeats). Above the cap: one score+top-k job
+    (TakeOrderedAndProject over the postings scan), plus the θ pass's
+    metadata and candidate jobs when block-max pruning engages (large
+    corpora). Only corpora too large to pin add a terms and a docmap
+    point-read."""
+    (top,) = _hydrate(ix, _search(ix, [terms], k, mode=mode, doc_predicate=doc_predicate))
+    return _result_df(ix.spark, top)
+
+
+@timed("search_many")
+def search_many(
+    ix: IndexHandle,
+    queries: dict[str, list[str]],
+    *,
+    k: int = S.TOP_K,
+    driver: bool | None = None,
+) -> DataFrame:
+    """Batched top-k for MANY queries → (qid, doc_id, score), ordered
+    (qid, score desc, doc_id), each query's rows equal to
+    :func:`search_index` on its terms.
+
+    The offline-evaluation path: one postings read over the union of
+    all query terms, each (term, segment) row decoded once and fanned
+    out to every query holding the term, so per-job scheduling cost
+    amortizes over the whole batch (serving N queries one-by-one pays
+    it N times). A warm Σ-df-bounded batch is one Spark job, like one
+    query. ``driver=False`` forces the distributed placement, whose
+    per-query top-k is a window partitioned by query; on large corpora
+    (PRUNE_MIN_DOCS) with a real decode volume (Σ df ≥
+    PRUNE_MIN_POSTINGS) it runs the θ pass first (:func:`_prune`)."""
+    qids = sorted(queries)
+    tops = _hydrate(ix, _search(ix, [queries[q] for q in qids], k, driver=driver))
+    rows = [(qid, d, s) for qid, top in zip(qids, tops) for d, s in top]
+    return _result_df(ix.spark, rows, "qid STRING, doc_id STRING, score DOUBLE")
+
+
+# --------------------------------------------------------------------------
+# block-max θ pass
+# --------------------------------------------------------------------------
 
 # pruning pays only when there are enough doc-aligned segments for the
 # metadata pass to skip some; below this the extra driver round-trips
 # cost more than scanning every segment
 PRUNE_MIN_DOCS = 4 * (1 << 16)
-# batch-path pruning additionally requires a real decode volume: below
-# this Σ df (known driver-side from the term dictionary, no job) the
-# direct one-pass decode is cheaper than the θ-establishment round.
-# Measured on a 4 M-doc index: the prune pass costs ~2.5 s of fixed
-# metadata/θ jobs and skips ~10 % of a multi-term batch's decode
-# (≥50 % for single-term qids, where the WAND bound is tight) — at
-# ~1 M decoded postings/s/core that breaks even around 10⁷ postings
+# a batch additionally needs a real decode volume: below this Σ df
+# (known driver-side from the term dictionary, no job) the direct
+# one-pass decode is cheaper than the θ round. Measured on a 4 M-doc
+# index: the θ pass costs ~2.5 s of fixed metadata/θ jobs and skips
+# ~10 % of a multi-term batch's decode (≥50 % for single-term queries,
+# where the WAND bound is tight) — at ~1 M decoded postings/s/core that
+# breaks even around 10⁷ postings. A lone query reaches the distributed
+# placement only above SERVING_DRIVER_MAX and is not gated by this.
 PRUNE_MIN_POSTINGS = 4 * SERVING_DRIVER_MAX
+# θ candidate pool: each query picks its richest segments until they
+# cover OVERFETCH·k postings
+OVERFETCH = 4
 # MUST-filtered θ establishment: extra ×4 pick-set expansion rounds
 # before giving up (θ=0) when the picked segments hold <k ALLOWED docs.
 # 3 rounds × overfetch 4 × k 10 reaches a 2560-doc candidate pool —
 # enough for ~0.5 % selectivity filters — while every round stays a
-# bounded metadata collect + a ≤2560-doc scoring job
+# bounded metadata read + a ≤2560-doc scoring pass
 _PRUNE_FILTER_ROUNDS = 3
-# per-seg (qid, ub) block-skip metadata is broadcast onto the scan only
-# below this (#qids × max-possible-segs) bound — ~32 B/entry → ≤128 MB
+# per-seg (q, ub) block-skip metadata is broadcast onto the scan only
+# below this (#queries × max-possible-segs) bound — ~32 B/entry → ≤128 MB
 _QUBS_BROADCAST_MAX = 4_000_000
-# the batch prune's per-(term, seg) metadata is collected and the whole
-# pick/ub/survivor computation runs in driver numpy when
-# #terms × max-possible-segs fits this bound (~80 B/row → ≤80 MB): one
-# narrow JVM collect replaces the metadata shuffle + per-qid window +
-# persist of the distributed pass (which remains the fallback for
-# huge-corpus × many-term batches)
+_QUBS = "seg LONG, qubs ARRAY<STRUCT<q: INT, ub: DOUBLE>>"
+# the per-(term, seg) metadata is collected and ranked in driver pandas
+# when #terms × max-possible-segs fits this bound (~80 B/row → ≤80 MB):
+# one narrow JVM collect replaces the metadata shuffle + per-query
+# window + persist of the distributed metadata placement, which stays
+# the only one that prunes past this bound
 _META_COLLECT_MAX = 1_000_000
 
-# last batch search's persisted segment-metadata frame (see
-# _prune_segments_many); released when the next batch search starts
+# the last distributed θ pass's persisted segment-metadata frame;
+# released when the next one starts
 _BATCH_META_CACHE = None
-
-# diagnostic: the last θ-pass pick set and its EXACT postings volume
-# (Σ n over every queried (term, seg) row landing in the picked segs —
-# the quantity the SERVING_DRIVER_MAX collect gate bounds); tests
-# assert it against an independent recount
-_LAST_PICKED: dict | None = None
 
 
 def clear_batch_meta_cache() -> None:
@@ -485,903 +755,169 @@ def clear_batch_meta_cache() -> None:
         _BATCH_META_CACHE = None
 
 
-from ..metrics import timed
+class _DriverSegMeta:
+    """Segment metadata in driver pandas, off ONE narrow collect of
+    (term, seg, n, seg_max_tfnorm): no metadata shuffle, window or
+    persist. ``tq`` maps each term to its (query ordinal, idf) pairs."""
 
-
-@timed("search_index")
-def search_index(
-    ix: IndexHandle,
-    terms: list[str],
-    *,
-    k: int = S.TOP_K,
-    doc_predicate: Column | None = None,
-    prune: bool = True,
-    overfetch: int = 4,
-    mode: str = "or",
-) -> DataFrame:
-    """Top-k (doc_id, score) over the postings index — rank-identical to
-    the direct path. ``doc_predicate`` filters candidate docs via docmap
-    (MUST block, reference search.go:133-139); df/idf stay corpus-global.
-    ``mode="and"`` keeps only docs matching every term (posting-list
-    intersection, J4; pruning is disabled there — the OR-score θ bound
-    is not sound for conjunctive top-k).
-
-    Serving-path job budget on a warm handle (artifact frames, term
-    dictionary and doc names pinned): ONE job when Σ df fits
-    SERVING_DRIVER_MAX — the bucket+term-pruned postings collect scored
-    in driver numpy — plus one docmap job the first time a MUST
-    predicate is seen (its filter set is pinned for repeats). Above the
-    cap: one score+top-k job (TakeOrderedAndProject over the postings
-    scan), plus the θ-establishment metadata jobs when block-max
-    pruning engages (large corpora). Only corpora too large to pin add
-    a terms and a docmap point-read."""
-    spark = ix.spark
-    terms = list(dict.fromkeys(terms))
-    meta = term_meta(ix, terms)
-    if mode == "and" and len(meta) < len(terms):
-        # a term absent from the corpus can never satisfy the conjunction
-        return _result_df(spark, [])
-    terms = [t for t in terms if t in meta]  # OR: unseen terms match nothing
-    if not terms:
-        return _result_df(spark, [])
-    st = ix.stats
-    idfs = {t: _idf(st["n_docs"], meta[t][0]) for t in terms}
-
-    segs = (
-        ix.postings()
-        .where(F.col("bucket").isin(sorted({meta[t][1] for t in terms})))
-        .where(F.col("term").isin(terms))
-    )
-
-    # serving fast path: Σ df (exact, from the term dictionary — zero
-    # jobs) bounds the decode work, so light queries collect their few
-    # segment blobs and score in driver numpy: one JVM-only collect,
-    # no Python workers, no shuffle. Heavy queries (Σ df above the
-    # cap) fall through to the distributed block-max plan — the
-    # driver transfer is provably bounded either way.
-    if sum(meta[t][0] for t in terms) <= SERVING_DRIVER_MAX:
-        return _search_driver(ix, segs, terms, idfs, k, mode, doc_predicate)
-
-    # ONE allowed-docs frame serves both the θ-establishment inside
-    # _prune_segments and the post-aggregation MUST semi-join below —
-    # the pruning proof requires both sides to use the same predicate
-    allowed = (
-        ix.docmap().where(doc_predicate).select("doc_int")
-        if doc_predicate is not None
-        else None
-    )
-    theta = 0.0
-    if prune and mode == "or" and st["n_docs"] >= PRUNE_MIN_DOCS:
-        # MUST-filtered queries prune too: θ is established among
-        # ALLOWED docs only (a θ from the unfiltered corpus could
-        # exceed the k-th allowed score → unsound), and every bound
-        # still upper-bounds every doc, allowed or not
-        segs, theta = _prune_segments(ix, segs, idfs, k, overfetch, allowed=allowed)
-    if mode == "and" and len(terms) > 1:
-        # conjunctive segment pruning (exact): segments are doc-aligned
-        # across terms, so a doc matching ALL terms can only live in a
-        # segment where EVERY term has postings — intersect the per-term
-        # segment sets from metadata columns alone (the OR θ-bound is
-        # not sound for AND; this intersection is, and it is usually
-        # far stronger for selective conjunctions)
-        full = (
-            segs.groupBy("seg")
-            .agg(F.count_distinct("term").alias("_nt"))
-            .where(F.col("_nt") == len(terms))
-            .select("seg")
+    def __init__(self, spark: SparkSession, full: DataFrame, tq: pd.DataFrame):
+        rows = full.select("term", "seg", "n", "seg_max_tfnorm").toPandas()
+        # Σ n over ALL queried terms of the segment, before the fan-out
+        # to queries: exactly what the θ candidates read if it is picked
+        rows["seg_tot"] = rows.groupby("seg")["n"].transform("sum")
+        rows = rows.merge(tq, on="term")
+        rows["part"] = rows["idf"] * rows["seg_max_tfnorm"]
+        self.spark, self.rows = spark, rows[["term", "q", "seg"]]
+        self.meta = (
+            rows.groupby(["q", "seg"], as_index=False)
+            .agg(ub=("part", "sum"), cnt=("n", "sum"), seg_tot=("seg_tot", "first"))
+            .sort_values(["q", "ub", "seg"], ascending=[True, False, True])
         )
-        segs = segs.join(F.broadcast(full), "seg", "left_semi")
 
-    score_cols = ["term", "postings", "block_max_tfnorm"]
-    if theta > 0.0 and "seg_ub" in segs.columns:
-        score_cols += ["seg_max_tfnorm", "seg_ub"]
-    scored = segs.select(*score_cols).mapInPandas(
-        _make_scorer(idfs, st["avgdl"], theta), "doc_int LONG, contrib DOUBLE"
-    )
+    def ranked(self, target: int) -> pd.DataFrame:
+        """Each query's ≤ ``target`` highest-ub segments, in rank order."""
+        return self.meta.groupby("q").head(target)
 
-    agg = scored.groupBy("doc_int").agg(
-        F.sum("contrib").alias("score_raw"), F.count(F.lit(1)).alias("_nt")
-    )
-    if allowed is not None:
-        # MUST filter commutes with per-doc aggregation (it drops whole
-        # docs, never individual term contributions) — joining AFTER the
-        # groupBy semi-joins the few aggregated rows instead of every
-        # (term, doc) contribution row
-        agg = agg.join(allowed, "doc_int", "left_semi")
-    if mode == "and":
-        # one scorer row per (term, doc) → row count == matched terms
-        agg = agg.where(F.col("_nt") == len(terms))
-    top_rows = (
-        # doc_int order == doc_id order (monotone numbering) → the
-        # tie-break at the k boundary is exact before hydration
-        agg.orderBy(F.desc("score_raw"), F.asc("doc_int"))
-        .limit(k)
-        .collect()
-    )
-    return _hydrate_pairs(ix, [(int(r["doc_int"]), float(r["score_raw"])) for r in top_rows])
-
-
-def _hydrate_pairs(ix: IndexHandle, sel: list[tuple[int, float]]) -> DataFrame:
-    """≤k (doc_int, raw score) → ordered (doc_id, score) result frame.
-    doc_id comes from the pinned doc-name cache when available, else
-    one docmap point-read over the ≤k ids (isin pushdown)."""
-    if not sel:
-        return _result_df(ix.spark, [])
-    id2name = ix.doc_names()
-    if id2name is None:  # corpus too large to pin: docmap point-read
-        ids = [d for d, _ in sel]
-        id2name = {
-            int(r["doc_int"]): r["doc_id"]
-            for r in ix.docmap()
-            .where(F.col("doc_int").isin(ids))
-            .select("doc_int", "doc_id")
-            .collect()
-        }
-    out = sorted(((id2name[d], s) for d, s in sel), key=lambda x: (-x[1], x[0]))
-    return _result_df(ix.spark, [(d, S.round_score(s)) for d, s in out])
-
-
-def _search_driver(
-    ix: IndexHandle,
-    segs: DataFrame,
-    terms: list[str],
-    idfs: dict[str, float],
-    k: int,
-    mode: str,
-    doc_predicate: Column | None,
-) -> DataFrame:
-    """Driver-resident scoring for Σ-df-bounded queries (the serving
-    fast path of :func:`search_index` — see SERVING_DRIVER_MAX).
-
-    A doc's postings for EVERY query term live in its one doc-aligned
-    segment (``seg = doc_int >> 16``), so the collected rows carry
-    complete per-doc scores: aggregation here is exact, and mode="and"
-    reduces to counting matched terms per doc. A MUST predicate still
-    evaluates distributed (docmap semi-join over the candidate frame —
-    the predicate may touch any metadata column at corpus scale)."""
-    spark = ix.spark
-    import numpy as np
-
-    rows = segs.select("term", "postings").collect()  # JVM-only, Σ-df bounded
-    uniq, sums, counts = _score_rows_driver(rows, idfs, ix.stats["avgdl"])
-    if mode == "and" and len(terms) > 1:
-        m = counts == len(terms)
-        uniq, sums = uniq[m], sums[m]
-    if len(uniq) == 0:
-        return _result_df(spark, [])
-    if doc_predicate is not None:
-        allowed = ix.filter_doc_ints(doc_predicate)
-        if allowed is not None:
-            # cached filter set (first use pays one docmap job; repeats
-            # are zero-job): membership via sorted searchsorted
-            idx = np.searchsorted(allowed, uniq)
-            idx[idx >= len(allowed)] = max(len(allowed) - 1, 0)
-            m = len(allowed) > 0
-            m = (allowed[idx] == uniq) if m else np.zeros(len(uniq), dtype=bool)
-            uniq, sums = uniq[m], sums[m]
-            if len(uniq) == 0:
-                return _result_df(spark, [])
-        else:
-            # corpus too large for a pinned filter set: probe candidates
-            # in rank order against docmap — the first k that satisfy
-            # the MUST predicate ARE the global top-k (everything
-            # unprobed ranks below everything probed); escalate
-            # geometrically on the rare under-selective predicate.
-            order = np.lexsort((uniq, -sums))
-            probe = min(len(order), max(50 * k, 500))
-            while True:
-                sub = order[:probe]
-                cand = spark.createDataFrame(
-                    pd.DataFrame({"doc_int": uniq[sub], "score_raw": sums[sub]}),
-                    schema="doc_int LONG, score_raw DOUBLE",
-                )
-                top_rows = (
-                    cand.join(
-                        ix.docmap().where(doc_predicate).select("doc_int"),
-                        "doc_int",
-                        "left_semi",
-                    )
-                    .orderBy(F.desc("score_raw"), F.asc("doc_int"))
-                    .limit(k)
-                    .collect()
-                )
-                if len(top_rows) >= k or probe >= len(order):
-                    break
-                probe = min(len(order), probe * 8)
-            return _hydrate_pairs(
-                ix, [(int(r["doc_int"]), float(r["score_raw"])) for r in top_rows]
-            )
-    order = np.lexsort((uniq, -sums))[:k]  # exact final rank order
-    return _hydrate_pairs(ix, [(int(uniq[i]), float(sums[i])) for i in order])
-
-
-@timed("search_many")
-def search_many(
-    ix: IndexHandle,
-    queries: dict[str, list[str]],
-    *,
-    k: int = S.TOP_K,
-    prune: bool = True,
-    overfetch: int = 4,
-    driver: bool | None = None,
-) -> DataFrame:
-    """Batched top-k for MANY queries in ONE distributed pass →
-    (qid, doc_id, score), ordered (qid, score desc, doc_id).
-
-    The offline-evaluation path: one postings scan over the union of
-    all query terms, segments decoded once and fanned out to every
-    query containing the term, per-query top-k via a window — per-job
-    scheduling cost amortizes over the whole batch (serving N queries
-    one-by-one pays it N times).
-
-    Like the serving path, a batch whose UNION posting volume (Σ df
-    over the distinct terms, known driver-side before any job) fits
-    SERVING_DRIVER_MAX collects the segment blobs in ONE JVM action
-    and scores every query in driver numpy — the whole batch costs one
-    bounded collect instead of a shuffle + window. ``driver=False``
-    forces the distributed plan (e.g. to keep a huge result set on the
-    cluster); ``driver=True`` forces the collect.
-
-    On large corpora (PRUNE_MIN_DOCS) with a real decode volume
-    (Σ df ≥ PRUNE_MIN_POSTINGS — both known driver-side from the term
-    dictionary, no job) the distributed scan is pruned per query
-    before any postings byte is decoded, at two granularities:
-
-    - SEGMENT level: a metadata pass establishes a per-qid θ (k-th
-      exact candidate score inside each query's richest segments —
-      computed in driver numpy when the pick set is Σ-n bounded), and
-      a ``(term, seg)`` row is decoded only if SOME query containing
-      the term has ``ub(qid, seg) ≥ θ_qid``;
-    - BLOCK level: inside the scorer, each 128-posting block is skipped
-      PER QID when ``idf_t·block_max + (ub(qid,seg) − idf_t·seg_max)``
-      falls below θ_qid — the same cross-term-complement WAND bound as
-      the serving scorer, exact for any term count because doc-aligned
-      segments carry a doc's complete per-query score. Measured on a
-      4 M-doc index: the segment bound is loose for common terms (seg
-      maxima ≈ the global max) but the block bound skips ~99 % of a
-      heavy term's blocks.
-
-    See :func:`_prune_segments_many`."""
-    from pyspark.sql import Window
-
-    spark = ix.spark
-    qterms = {q: list(dict.fromkeys(ts)) for q, ts in queries.items()}
-    all_terms = sorted({t for ts in qterms.values() for t in ts})
-    meta = term_meta(ix, all_terms)
-    st = ix.stats
-    term_q: dict[str, list[tuple[str, float]]] = {}
-    for qid, ts in qterms.items():
-        for t in ts:
-            if t in meta:
-                term_q.setdefault(t, []).append((qid, _idf(st["n_docs"], meta[t][0])))
-    if not term_q:
-        return _empty(spark, "qid STRING, doc_id STRING, score DOUBLE")
-
-    full = (
-        ix.postings()
-        .where(F.col("bucket").isin(sorted({meta[t][1] for t in term_q})))
-        .where(F.col("term").isin(list(term_q)))
-    )
-    total_df = sum(meta[t][0] for t in term_q)
-    if driver is None:
-        driver = total_df <= SERVING_DRIVER_MAX
-    if driver:
-        return _search_many_driver(ix, full, term_q, k)
-    # NOTE a whole-query hybrid split (light qids answered by a driver
-    # collect, heavy qids distributed) was measured on the 4 M-doc
-    # corpus and REJECTED: the heavy remainder pays the same fixed
-    # plan costs and the light qids ride the shared distributed scan
-    # nearly free, so the split only serialized work the cluster was
-    # doing in parallel (4.4 s both ways). The win that survives is
-    # folding the prune pass's METADATA machinery driver-side — see
-    # _prune_segments_many_driver.
-    thetas: dict[str, float] | None = None
-    if (
-        prune
-        and st["n_docs"] >= PRUNE_MIN_DOCS
-        and total_df >= PRUNE_MIN_POSTINGS
-    ):
-        segs, thetas = _prune_segments_many(ix, full, term_q, k, overfetch)
-    else:
-        segs = full.select("term", "postings")
-    scored = segs.mapInPandas(
-        _make_batch_scorer(term_q, st["avgdl"], thetas),
-        "qid STRING, doc_int LONG, contrib DOUBLE",
-    )
-    agg = scored.groupBy("qid", "doc_int").agg(F.sum("contrib").alias("score_raw"))
-    w = Window.partitionBy("qid").orderBy(F.desc("score_raw"), F.asc("doc_int"))
-    top = agg.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= k)
-    return (
-        top.join(ix.docmap().select("doc_int", "doc_id"), "doc_int")
-        .select("qid", "doc_id", F.round("score_raw", S.SCORE_DECIMALS).alias("score"), "score_raw")
-        .orderBy("qid", F.desc("score_raw"), F.asc("doc_id"))
-        .drop("score_raw")
-    )
-
-
-def _make_batch_scorer(
-    term_q: dict[str, list[tuple[str, float]]],
-    avgdl: float,
-    thetas: dict[str, float] | None = None,
-):
-    """mapInPandas stage for the batch path: decode each (term, seg)
-    row ONCE and fan its contributions out to every query containing
-    the term — (qid, doc_int, contrib) rows.
-
-    When the pruning pass supplied per-qid θ values AND the input rows
-    carry block metadata, each 128-posting block is skipped PER QID via
-    the same cross-term-complement WAND bound as the serving scorer
-    (:func:`_make_scorer`):
-
-        bound(qid, t, b) = idf_t·block_max(b) + (ub(qid,seg) − idf_t·seg_max(t,seg))
-
-    where ``ub(qid,seg)`` arrives as the row's ``qubs`` list (attached
-    by a broadcast join of per-seg metadata). For single-term qids the
-    complement is identically 0.0, so those skip even when ``qubs`` is
-    absent (the attach is size-gated). Dropping a block for a qid is
-    exact: every doc in it provably scores below θ_qid in TOTAL, so its
-    partial contribution can never reach that query's top-k boundary."""
-    k1, b = S.K1, S.B
-    qid_nterms: dict[str, int] = {}
-    for lst in term_q.values():
-        for qid, _ in lst:
-            qid_nterms[qid] = qid_nterms.get(qid, 0) + 1
-
-    def score_batches(batches):
-        import numpy as np
-
-        for pdf in batches:
-            qids, dints, contribs = [], [], []
-            blocks_on = thetas is not None and "block_max_tfnorm" in pdf.columns
-            bm_col = pdf["block_max_tfnorm"] if blocks_on else pdf["term"]
-            sm_col = pdf["seg_max_tfnorm"] if blocks_on else pdf["term"]
-            qu_col = pdf["qubs"] if blocks_on and "qubs" in pdf.columns else pdf["term"]
-            for term, blob, bmax, seg_max, qubs in zip(
-                pdf["term"], pdf["postings"], bm_col, sm_col, qu_col
-            ):
-                docs, tfs, dls = decode_postings(bytes(blob))
-                tfd = tfs.astype(np.float64)
-                dld = dls.astype(np.float64)
-                tfn = tfd * (k1 + 1.0) / (tfd + k1 * ((1.0 - b) + b * dld / avgdl))
-                if blocks_on:
-                    bm = np.asarray(bmax, dtype=np.float64)
-                    ubd = (
-                        {e["qid"]: float(e["ub"]) for e in qubs}
-                        if qubs is not None and not isinstance(qubs, str)
-                        else None
-                    )
-                for qid, idf in term_q[term]:
-                    d, c = docs, idf * tfn
-                    theta = thetas.get(qid, 0.0) if thetas else 0.0
-                    if blocks_on and theta > 0.0:
-                        if qid_nterms[qid] == 1:
-                            other = 0.0
-                        elif ubd is not None and qid in ubd:
-                            other = ubd[qid] - idf * float(seg_max)
-                        else:
-                            other = None  # complement unknown → no skip
-                        if other is not None:
-                            keep = bm * idf + other >= theta - _THETA_EPS
-                            if not keep.all():
-                                mask = np.repeat(keep, BLOCK)[: len(docs)]
-                                d, c = docs[mask], c[mask]
-                    qids.append(np.full(len(d), qid, dtype=object))
-                    dints.append(d)
-                    contribs.append(c)
-            if dints:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(qids),
-                        "doc_int": np.concatenate(dints),
-                        "contrib": np.concatenate(contribs),
-                    }
-                )
-
-    return score_batches
-
-
-def _establish_batch_thetas(
-    ix: IndexHandle,
-    full: DataFrame,
-    term_q: dict[str, list[tuple[str, float]]],
-    k: int,
-    picked_segs: set[int],
-    picked_n: int,
-) -> dict[str, float]:
-    """Per-qid θ = k-th best exact candidate score inside the picked
-    segments. The pick set's posting count is known from metadata, so
-    when it fits SERVING_DRIVER_MAX this is ONE bounded JVM collect
-    scored in driver numpy; only an oversized pick set pays a
-    distributed candidate job. Shared by both metadata paths of
-    :func:`_prune_segments_many`."""
-    from pyspark.sql import Window
-
-    spark = ix.spark
-    pick_df = spark.createDataFrame(
-        pd.DataFrame({"seg": sorted(picked_segs)}), schema="seg LONG"
-    )
-    head = full.join(F.broadcast(pick_df), "seg", "left_semi")
-    if picked_n <= SERVING_DRIVER_MAX:
-        rows = head.select("term", "postings").collect()  # Σ-n bounded pick set
-        return _batch_thetas_driver(rows, term_q, ix.stats["avgdl"], k)
-    cand = (
-        head.select("term", "postings")
-        .mapInPandas(
-            _make_batch_scorer(term_q, ix.stats["avgdl"]),
-            "qid STRING, doc_int LONG, contrib DOUBLE",
-        )
-        .groupBy("qid", "doc_int")
-        .agg(F.sum("contrib").alias("sc"))
-    )
-    wq = Window.partitionBy("qid").orderBy(F.desc("sc"))
-    kth = (
-        cand.withColumn("_rn", F.row_number().over(wq))
-        .where(F.col("_rn") == k)
-        .select("qid", "sc")
-        .collect()  # ≤ #qids rows; a qid with < k candidates gets θ=0
-    )
-    return {r["qid"]: float(r["sc"]) for r in kth}
-
-
-def _prune_segments_many_driver(
-    ix: IndexHandle,
-    full: DataFrame,
-    term_q: dict[str, list[tuple[str, float]]],
-    k: int,
-    overfetch: int,
-) -> tuple[DataFrame, dict[str, float]]:
-    """Driver-numpy metadata path of :func:`_prune_segments_many` —
-    identical semantics (same ub definition, greedy pick, θ, survivor
-    rule, qubs attach), but the per-(term, seg) metadata is ONE narrow
-    JVM collect (≤ #terms × max_segs rows, gated by _META_COLLECT_MAX)
-    and the pick/ub/survivor computation is plain dict/loop work over
-    it: no metadata shuffle, no per-qid window, no persist — the fixed
-    prune cost a near-break-even batch pays drops ~2.5×."""
-    spark = ix.spark
-    mrows = full.select("term", "seg", "n", "seg_max_tfnorm").collect()
-    # per-seg posting totals (over ALL queried terms — the exact number
-    # the θ pass collects if the segment is picked) and per-(qid, seg)
-    # ub sums / per-qid coverage counts
-    seg_tot: dict[int, int] = {}
-    ubs: dict[tuple[str, int], float] = {}
-    cnts: dict[tuple[str, int], int] = {}
-    for r in mrows:
-        s, n, smax = int(r["seg"]), int(r["n"]), float(r["seg_max_tfnorm"])
-        seg_tot[s] = seg_tot.get(s, 0) + n
-        for qid, idf in term_q[r["term"]]:
-            key = (qid, s)
-            ubs[key] = ubs.get(key, 0.0) + idf * smax
-            cnts[key] = cnts.get(key, 0) + n
-    per_qid: dict[str, list[tuple[float, int]]] = {}
-    for (qid, s), ub in ubs.items():
-        per_qid.setdefault(qid, []).append((ub, s))
-    picked_segs: set[int] = set()
-    picked_n = 0
-    for qid in sorted(per_qid):  # deterministic pick order
-        lst = sorted(per_qid[qid], key=lambda x: (-x[0], x[1]))
-        acc = 0
-        for ub, s in lst[: overfetch * k]:
-            if acc >= overfetch * k:
-                break
-            if s not in picked_segs:
-                picked_segs.add(s)
-                picked_n += seg_tot[s]
-            acc += cnts[(qid, s)]
-    global _LAST_PICKED, _BATCH_META_CACHE
-    clear_batch_meta_cache()  # release any previous batch's cache
-    _LAST_PICKED = {"segs": sorted(picked_segs), "n": picked_n}
-    scan_cols = ["term", "seg", "postings", "block_max_tfnorm", "seg_max_tfnorm"]
-    if not picked_segs:
-        return full.select("term", "postings"), {}
-    thetas = _establish_batch_thetas(ix, full, term_q, k, picked_segs, picked_n)
-    if not thetas:
-        return full.select("term", "postings"), {}
-    # survivor rule (identical to the distributed path): a (term, seg)
-    # row is decoded iff SOME qid containing the term has
-    # ub(qid, seg) ≥ θ_qid − ε; a θ-less qid (<k candidates) keeps all
-    # its rows (θ treated as 0)
-    surv_pairs = [
-        (r["term"], int(r["seg"]))
-        for r in mrows
-        if any(
-            ubs[(qid, int(r["seg"]))] >= thetas.get(qid, 0.0) - _THETA_EPS
-            for qid, _ in term_q[r["term"]]
-        )
-    ]
-    if not surv_pairs:
-        return full.select("term", "postings"), {}
-    surv_df = spark.createDataFrame(
-        pd.DataFrame({"term": [t for t, _ in surv_pairs], "seg": [s for _, s in surv_pairs]}),
-        schema="term STRING, seg LONG",
-    )
-    scan = full.join(F.broadcast(surv_df), ["term", "seg"], "left_semi")
-    n_qids = len(per_qid)
-    max_segs = -(-ix.stats["n_docs"] // SEG_SPAN)
-    if n_qids * max_segs <= _QUBS_BROADCAST_MAX:
-        surv_segs = {s for _, s in surv_pairs}
-        qub_rows = [
-            (s, [(qid, ubs[(qid, s)]) for qid in sorted(per_qid) if (qid, s) in ubs])
-            for s in sorted(surv_segs)
+    def survivors(self, thetas: dict[int, float]) -> tuple[DataFrame, DataFrame]:
+        """(term, seg) rows to decode, and the per-seg ``qubs`` lists."""
+        m = self.meta
+        keep = m[m["ub"] >= m["q"].map(thetas).fillna(0.0) - _THETA_EPS]
+        surv = self.rows.merge(keep[["q", "seg"]])[["term", "seg"]].drop_duplicates()
+        qubs = [
+            (int(s), [(int(q), float(u)) for q, u in zip(g["q"], g["ub"])])
+            for s, g in m[m["seg"].isin(surv["seg"])].groupby("seg")
         ]
-        seg_ubs = spark.createDataFrame(
-            qub_rows, "seg LONG, qubs ARRAY<STRUCT<qid: STRING, ub: DOUBLE>>"
+        return (
+            F.broadcast(self.spark.createDataFrame(surv, "term STRING, seg LONG")),
+            self.spark.createDataFrame(qubs, _QUBS),
         )
-        scan = scan.join(F.broadcast(seg_ubs), "seg", "left")
-        return scan.select(*scan_cols, "qubs"), thetas
-    return scan.select(*scan_cols), thetas
 
 
-def _prune_segments_many(
+class _SparkSegMeta:
+    """:class:`_DriverSegMeta` as a distributed aggregate, persisted for
+    the search (ranking, survivors and ``qubs`` all read it). The
+    per-query ranking window is partitioned by query: each task sorts
+    one query's segment METADATA (~24 B/row), never postings."""
+
+    def __init__(self, spark: SparkSession, full: DataFrame, tq: pd.DataFrame):
+        global _BATCH_META_CACHE
+        self.tq = spark.createDataFrame(tq, "term STRING, q INT, idf DOUBLE")
+        meta = (
+            full.select("term", "seg", "n", "seg_max_tfnorm")
+            .withColumn("seg_tot", F.sum("n").over(Window.partitionBy("seg")))
+            .join(F.broadcast(self.tq), "term")
+            .groupBy("q", "seg")
+            .agg(
+                F.sum(F.col("idf") * F.col("seg_max_tfnorm")).alias("ub"),
+                F.sum("n").alias("cnt"),
+                F.first("seg_tot").alias("seg_tot"),
+            )
+        )
+        clear_batch_meta_cache()
+        self.meta = _BATCH_META_CACHE = meta.persist()
+
+    def ranked(self, target: int) -> pd.DataFrame:
+        w = Window.partitionBy("q").orderBy(F.desc("ub"), F.asc("seg"))
+        top = self.meta.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= target)
+        return top.select("q", "seg", "cnt", "seg_tot", "_rn").toPandas().sort_values(["q", "_rn"])
+
+    def survivors(self, thetas: dict[int, float]) -> tuple[DataFrame, DataFrame]:
+        theta = F.create_map(*[F.lit(v) for q, t in thetas.items() for v in (q, t - _THETA_EPS)])
+        keep = self.meta.where(F.col("ub") >= F.coalesce(theta[F.col("q")], F.lit(0.0)))
+        qt = F.broadcast(self.tq.select("q", "term"))
+        surv = keep.join(qt, "q").select("term", "seg").distinct()
+        return surv, self.meta.groupBy("seg").agg(F.collect_list(F.struct("q", "ub")).alias("qubs"))
+
+
+def _prune(
     ix: IndexHandle,
     full: DataFrame,
-    term_q: dict[str, list[tuple[str, float]]],
+    qidfs: list[dict[str, float]],
     k: int,
-    overfetch: int,
-) -> tuple[DataFrame, dict[str, float]]:
-    """Per-query pruning for the batch path (:func:`search_many`).
-    Returns ``(scan, thetas)``: the (term, seg) rows to decode — with
-    block metadata attached so the scorer can skip per-qid — and the
-    per-qid θ values.
+    doc_predicate: Column | None = None,
+) -> tuple[DataFrame, dict[int, float], dict]:
+    """The block-max θ pass of the distributed placement →
+    ``(scan, thetas, picked)``: the (term, seg) rows left to decode,
+    carrying the block metadata and per-seg ``qubs`` the scorer skips
+    blocks by; θ per query ordinal; and the pick accounting
+    ``{"segs", "n"}``, n being the exact posting volume the θ candidates
+    read (Σ n over every queried row in the picked segments).
 
-    All metadata-only until the θ pass; exactness argument:
+    Exactness:
 
-    1. ``ub(qid, seg) = Σ_{t ∈ qid ∩ seg} idf_t · seg_max_tfnorm``
-       upper-bounds every doc's FULL score for ``qid`` inside ``seg``
-       (doc-aligned segments: a doc's postings for all of a query's
-       terms live in its one segment);
-    2. θ_qid = k-th best exact candidate score inside the query's
-       greedily-picked richest segments. The pick set's total posting
-       count is known from metadata BEFORE any decode, so when it fits
-       SERVING_DRIVER_MAX the θ pass is ONE bounded JVM collect scored
-       in driver numpy (the common case: ≤ overfetch·k docs of
-       coverage per qid); only an oversized pick set pays a
-       distributed candidate job. Contributions from OTHER queries'
-       picked segments only tighten θ;
-    3. a ``(term, seg)`` row is decoded in the main pass iff SOME qid
-       containing ``term`` has ``ub(qid, seg) ≥ θ_qid`` (ties kept).
-       A dropped row covers only docs provably below θ for every query
-       that could reach them through it — exact. (Measured: this seg
-       bound is loose for common terms — the real skip happens at
-       block granularity inside the scorer, which is why ``scan``
-       carries ``block_max_tfnorm``/``seg_max_tfnorm``/``qubs``.);
-    4. ``qubs`` (per-seg list of (qid, ub)) rides a BROADCAST join onto
-       the scan — postings blobs never shuffle. The attach is gated by
-       a driver-computed size bound (#qids × max possible segs); when
-       skipped, single-term qids still block-skip (complement ≡ 0).
+    1. ``ub(q, seg) = Σ_{t ∈ q} idf_t · seg_max_tfnorm(t, seg)`` bounds
+       every doc's full score for q inside seg, allowed by a MUST
+       predicate or not (doc-aligned segments hold all of a doc's
+       postings);
+    2. θ_q is the k-th best exact score among q's candidates — allowed
+       docs only — in the picked segments. Each query picks its
+       highest-ub segments until they cover OVERFETCH·k postings;
+       another query's picks only tighten θ. A query whose pick holds
+       <k candidates (a selective filter thins them, and a θ from
+       unfiltered docs could exceed the k-th allowed score) widens it
+       ×4 for up to _PRUNE_FILTER_ROUNDS rounds; once every one of its
+       segments is picked it has <k matches and keeps θ = 0;
+    3. a (term, seg) row is decoded iff SOME query holding the term has
+       ``ub(q, seg) ≥ θ_q − ε``: a dropped row covers only docs provably
+       below θ for every query that reaches them through it.
 
-    The per-qid metadata window is ``partitionBy(qid)`` — parallel
-    across the batch; each task sorts one query's segment METADATA
-    (~24 B/row), never postings.
-
-    When ``#terms × max_segs`` fits ``_META_COLLECT_MAX`` the whole
-    metadata computation instead runs in driver numpy off one narrow
-    collect (:func:`_prune_segments_many_driver`) — measured 1.6 s →
-    ~0.6 s of fixed prune cost on a 4 M-doc 24-term batch, which is
-    what lets ``PRUNE_MIN_POSTINGS`` sit at 2× the driver collect cap
-    instead of 4×."""
-    from pyspark.sql import Window
-
+    Placements, chosen from sizes known before the jobs they pick: the
+    metadata in driver pandas when #terms × max_segs fits
+    _META_COLLECT_MAX, else distributed (:class:`_SparkSegMeta`); the θ
+    candidates scored in driver numpy when the picked volume fits
+    SERVING_DRIVER_MAX, else by the distributed scorer. ``qubs`` rides a
+    broadcast join (postings never shuffle) when #queries × max_segs
+    fits _QUBS_BROADCAST_MAX; without it one-term queries still skip."""
+    nq = len(qidfs)
+    tq = pd.DataFrame(
+        [(t, q, idf) for q, idfs in enumerate(qidfs) for t, idf in idfs.items()],
+        columns=["term", "q", "idf"],
+    ).astype({"q": "int32"})
     max_segs = -(-ix.stats["n_docs"] // SEG_SPAN)
-    if len(term_q) * max_segs <= _META_COLLECT_MAX:
-        return _prune_segments_many_driver(ix, full, term_q, k, overfetch)
-
-    spark = ix.spark
-    qt_pairs = [(q, t) for t, lst in term_q.items() for q, _ in lst]
-    tq = spark.createDataFrame(
-        [(t, [(q, float(i)) for q, i in lst]) for t, lst in term_q.items()],
-        "term STRING, qs ARRAY<STRUCT<qid: STRING, idf: DOUBLE>>",
-    )
-    # seg_tot = Σ n over ALL queried (term, seg) rows of the segment —
-    # computed BEFORE the per-qid explode so shared terms aren't double
-    # counted. This is the exact number of postings the θ pass collects
-    # if the segment is picked (`head` below filters on seg only), which
-    # is what the SERVING_DRIVER_MAX gate must bound; a per-qid cnt
-    # would undercount segments rich for several queries' terms.
-    w_seg = Window.partitionBy("seg")
-    meta_q = (
-        full.select("term", "seg", "n", "seg_max_tfnorm")
-        .join(F.broadcast(tq), "term")
-        .withColumn("seg_tot", F.sum("n").over(w_seg))
-        .select("seg", "n", "seg_tot", "seg_max_tfnorm", F.explode("qs").alias("q"))
-        .select(
-            F.col("q.qid").alias("qid"),
-            "seg",
-            "n",
-            "seg_tot",
-            (F.col("q.idf") * F.col("seg_max_tfnorm")).alias("part"),
-        )
-        .groupBy("qid", "seg")
-        .agg(
-            F.sum("part").alias("ub"),
-            F.sum("n").alias("cnt"),
-            F.first("seg_tot").alias("seg_tot"),
-        )
-    )
-    # meta_q feeds three plans (top-meta collect, survivor semi-join,
-    # seg_ubs broadcast) — cache it so the metadata scan + shuffle run
-    # once per batch; the previous batch's cache is released here (the
-    # stale handle would only recompute, never mis-answer).
-    global _BATCH_META_CACHE
-    clear_batch_meta_cache()
-    meta_q = meta_q.persist()
-    _BATCH_META_CACHE = meta_q
-    w = Window.partitionBy("qid").orderBy(F.desc("ub"), F.asc("seg"))
-    top_meta = (
-        meta_q.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= overfetch * k)
-        .select("qid", "seg", "cnt", "seg_tot")
-        .collect()  # ≤ #qids · overfetch·k metadata rows
-    )
-    by_qid: dict[str, list] = {}
-    for r in top_meta:
-        by_qid.setdefault(r["qid"], []).append(r)
-    picked_segs: set[int] = set()
-    picked_n = 0
-    for rows in by_qid.values():  # rows arrive in (ub desc, seg) order per qid
-        acc = 0
-        for r in rows:
-            if acc >= overfetch * k:
-                break
-            if int(r["seg"]) not in picked_segs:
-                picked_segs.add(int(r["seg"]))
-                picked_n += int(r["seg_tot"])
-            acc += int(r["cnt"])
-    scan_cols = ["term", "seg", "postings", "block_max_tfnorm", "seg_max_tfnorm"]
-    global _LAST_PICKED
-    _LAST_PICKED = {"segs": sorted(picked_segs), "n": picked_n}
-    if not picked_segs:
-        return full.select("term", "postings"), {}
-
-    thetas = _establish_batch_thetas(ix, full, term_q, k, picked_segs, picked_n)
+    small = tq["term"].nunique() * max_segs <= _META_COLLECT_MAX
+    meta = (_DriverSegMeta if small else _SparkSegMeta)(ix.spark, full, tq)
+    thetas: dict[int, float] = {}
+    picked: set[int] = set()
+    picked_n, target, pending = 0, OVERFETCH * k, set(range(nq))
+    for _ in range(_PRUNE_FILTER_ROUNDS + 1):
+        ranked = {int(q): g for q, g in meta.ranked(target).groupby("q")}
+        pending &= set(ranked)  # a query with no postings needs no θ
+        for q in sorted(pending):  # deterministic pick order
+            acc = 0
+            for s, cnt, tot in zip(ranked[q]["seg"], ranked[q]["cnt"], ranked[q]["seg_tot"]):
+                if acc >= target:
+                    break
+                if s not in picked:
+                    picked.add(int(s))
+                    picked_n += int(tot)
+                acc += int(cnt)
+        if not pending:
+            break
+        in_picked = F.expr(f"seg IN ({','.join(map(str, sorted(picked)))})")
+        head = full.where(in_picked).select("term", "postings")
+        sub = [idfs if q in pending else {} for q, idfs in enumerate(qidfs)]
+        if picked_n <= SERVING_DRIVER_MAX:
+            tops = _driver_top_k(ix, head.collect(), sub, k, doc_predicate=doc_predicate)
+        else:
+            tops = _collect_top_k(_aggregate(ix, head, sub, None, doc_predicate), nq, k)
+        thetas.update({q: top[-1][1] for q, top in enumerate(tops) if len(top) == k})
+        # every segment of a query in view and still <k candidates: it
+        # has <k matches, and no further round can add one
+        pending = {
+            q
+            for q in pending
+            if q not in thetas
+            and not (len(ranked[q]) < target and picked.issuperset(ranked[q]["seg"]))
+        }
+        if not pending:
+            break
+        target *= 4
+    accounting = {"segs": sorted(picked), "n": picked_n}
     if not thetas:
-        return full.select("term", "postings"), {}
-    theta_map = F.create_map(
-        *[F.lit(v) for q, t in thetas.items() for v in (q, t - _THETA_EPS)]
-    )
-    survivors = meta_q.where(
-        F.col("ub") >= F.coalesce(theta_map[F.col("qid")], F.lit(0.0))
-    )
-    qt = spark.createDataFrame(qt_pairs, "qid STRING, term STRING")
-    surv_ts = (
-        survivors.join(F.broadcast(qt), "qid").select("term", "seg").distinct()
-    )
-    scan = full.join(surv_ts, ["term", "seg"], "left_semi")
-    # block-skip complement metadata: per-seg (qid, ub) list. Size bound
-    # is driver-computable with no job: every queried term spans at most
-    # ceil(n_docs/SEG_SPAN) segments.
-    max_segs = -(-ix.stats["n_docs"] // SEG_SPAN)
-    n_qids = len({q for lst in term_q.values() for q, _ in lst})
-    if n_qids * max_segs <= _QUBS_BROADCAST_MAX:
-        seg_ubs = meta_q.groupBy("seg").agg(
-            F.collect_list(F.struct("qid", "ub")).alias("qubs")
-        )
-        scan = scan.join(F.broadcast(seg_ubs), "seg", "left")
-        return scan.select(*scan_cols, "qubs"), thetas
-    return scan.select(*scan_cols), thetas
-
-
-def _decode_rows_per_term(rows: list, avgdl: float) -> dict[str, list]:
-    """Decode collected (term, postings) rows once into per-term
-    (docs, tfnorm) arrays — the same float64 expression shape as
-    :func:`_make_batch_scorer`."""
-    import numpy as np
-
-    per_term: dict[str, list] = {}
-    for r in rows:
-        docs, tfn = _decode_tfnorm(bytes(r["postings"]), avgdl)
-        per_term.setdefault(r["term"], []).append((docs, tfn))
-    return per_term
-
-
-def _qid_doc_scores(
-    per_term: dict[str, list], terms: list[tuple[float, str]]
-) -> tuple["object", "object"]:
-    """One query's exact per-doc scores over decoded arrays →
-    (doc_ints, scores), unordered."""
-    import numpy as np
-
-    ds, cs = [], []
-    for idf, t in terms:
-        for docs, tfn in per_term.get(t, []):
-            ds.append(docs)
-            cs.append(idf * tfn)
-    if not ds:
-        z = np.zeros(0, dtype=np.int64)
-        return z, np.zeros(0)
-    docs = np.concatenate(ds)
-    contribs = np.concatenate(cs)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    sums = np.bincount(inv, weights=contribs, minlength=len(uniq))
-    return uniq, sums
-
-
-def _by_qid(term_q: dict[str, list[tuple[str, float]]]) -> dict[str, list]:
-    out: dict[str, list[tuple[float, str]]] = {}
-    for t, lst in term_q.items():
-        for qid, idf in lst:
-            out.setdefault(qid, []).append((idf, t))
-    return out
-
-
-def _batch_thetas_driver(
-    rows: list, term_q: dict[str, list[tuple[str, float]]], avgdl: float, k: int
-) -> dict[str, float]:
-    """Per-qid k-th best exact score over collected pick-set rows, in
-    driver numpy — each row decoded once, contributions fanned out to
-    the queries containing its term (the driver twin of
-    :func:`_make_batch_scorer`)."""
-    import numpy as np
-
-    per_term = _decode_rows_per_term(rows, avgdl)
-    thetas: dict[str, float] = {}
-    for qid, terms in _by_qid(term_q).items():
-        uniq, sums = _qid_doc_scores(per_term, terms)
-        if len(uniq) >= k:
-            thetas[qid] = float(np.sort(sums)[-k])
-    return thetas
-
-
-def _search_many_driver(
-    ix: IndexHandle,
-    segs: DataFrame,
-    term_q: dict[str, list[tuple[str, float]]],
-    k: int,
-) -> DataFrame:
-    """Driver-resident batch scoring for Σ-df-bounded batches — the
-    :func:`search_many` twin of :func:`_search_driver`: ONE bounded JVM
-    collect of the union term blobs, each decoded once, every query
-    scored from the shared arrays. Rank semantics are identical to the
-    distributed plan: top-k cut by (score desc, doc_int asc), display
-    order (qid, score desc, doc_id asc)."""
-    import numpy as np
-
-    spark = ix.spark
-    rows = segs.select("term", "postings").collect()  # JVM-only, Σ-df bounded
-    per_term = _decode_rows_per_term(rows, ix.stats["avgdl"])
-    names = ix.doc_names()
-    sel: dict[str, list[tuple[int, float]]] = {}
-    need_ids: set[int] = set()
-    for qid, terms in _by_qid(term_q).items():
-        uniq, sums = _qid_doc_scores(per_term, terms)
-        if len(uniq) == 0:
-            continue
-        order = np.lexsort((uniq, -sums))[:k]  # exact final rank cut
-        pairs = [(int(uniq[i]), float(sums[i])) for i in order]
-        sel[qid] = pairs
-        if names is None:
-            need_ids.update(d for d, _ in pairs)
-    if not sel:
-        return _empty(spark, "qid STRING, doc_id STRING, score DOUBLE")
-    if names is None:  # corpus too large to pin: one ≤ #qids·k point-read
-        names = {
-            int(r["doc_int"]): r["doc_id"]
-            for r in ix.docmap()
-            .where(F.col("doc_int").isin(sorted(need_ids)))
-            .select("doc_int", "doc_id")
-            .collect()
-        }
-    out_q, out_d, out_s = [], [], []
-    for qid in sorted(sel):
-        hydrated = sorted(
-            ((names[d], s) for d, s in sel[qid]), key=lambda x: (-x[1], x[0])
-        )
-        for d, s in hydrated:
-            out_q.append(qid)
-            out_d.append(d)
-            out_s.append(S.round_score(s))
-    pdf = pd.DataFrame(
-        {
-            "qid": np.array(out_q, dtype=object),
-            "doc_id": np.array(out_d, dtype=object),
-            "score": np.array(out_s, dtype=np.float64),
-        }
-    )
-    return spark.createDataFrame(pdf, schema="qid STRING, doc_id STRING, score DOUBLE")
-
-
-def _prune_segments(
-    ix: IndexHandle,
-    segs: DataFrame,
-    idfs: dict[str, float],
-    k: int,
-    overfetch: int,
-    allowed: DataFrame | None = None,
-) -> tuple[DataFrame, float]:
-    """Block-max segment pruning, fully distributed metadata pass.
-
-    1. aggregate per-segment ``ub = Σ_t idf_t · seg_max_tfnorm`` and doc
-       count from the metadata columns only (postings bytes never read);
-    2. greedy prefix via TakeOrderedAndProject: every segment holds ≥ 1
-       doc, so the richest ``overfetch·k`` segments are always enough
-       to cover ≥ overfetch·k docs — ``orderBy(ub desc).limit(O·k)``
-       is a distributed top-M (per-partition heaps, no global sort, no
-       single-partition window), and the driver runs the greedy prefix
-       over those ≤ O·k metadata rows only;
-    3. θ = k-th exact score inside the picked segments. Unfiltered, the
-       picked blobs (Σ n bounded by ~O·k + one segment span per term)
-       are collected and scored in driver numpy — the θ-establishment
-       job folds into a cheap JVM collect. With a MUST filter the
-       candidate job stays distributed (θ must be established among
-       ``allowed`` docs; the predicate evaluates against docmap), and
-       the pick set EXPANDS GEOMETRICALLY (×4 per round, up to
-       ``_PRUNE_FILTER_ROUNDS`` extra rounds) when the picked segments
-       hold fewer than k allowed docs — a selective filter thins the
-       candidates, so a pick set sized by unfiltered ub alone would
-       silently disable pruning (θ=0) exactly where the filter makes an
-       unpruned scan most wasteful. Each round re-reads metadata
-       columns and re-scores a ≤4×-larger bounded head only; if every
-       candidate segment is in view and still <k allowed docs score,
-       the corpus genuinely has <k allowed matches and θ=0 is correct.
-       The bound side needs no filtering either way: ub ≥ any doc's
-       score;
-    4. survivors (``ub ≥ θ`` ∪ picked) stay a DataFrame, applied via a
-       broadcast semi-join — the driver never materializes the survivor
-       list either."""
-    idf_map = F.create_map(*[F.lit(v) for t, f in idfs.items() for v in (t, float(f))])
-    seg_meta = (
-        segs.select(
-            "seg", "n", (idf_map[F.col("term")] * F.col("seg_max_tfnorm")).alias("part")
-        )
-        .groupBy("seg")
-        .agg(F.sum("part").alias("ub"), F.sum("n").alias("cnt"))
-    )
-
-    def pick(limit: int) -> tuple[list[int], bool]:
-        """Greedy ub-desc prefix covering ≥ ``limit`` docs; second value
-        is True when the WHOLE candidate segment set is in the prefix
-        (no further expansion round can add anything)."""
-        top = seg_meta.orderBy(F.desc("ub"), F.asc("seg")).limit(limit).collect()
-        p, acc = [], 0
-        for r in top:
-            if acc >= limit:
-                return p, False
-            p.append(int(r["seg"]))
-            acc += int(r["cnt"])
-        return p, len(top) < limit
-
-    picked, exhausted = pick(overfetch * k)
-    if not picked:
-        return segs, 0.0
-    if allowed is None:
-        head = segs.where(F.col("seg").isin(picked))
-        rows = head.select("term", "postings").collect()  # Σ-n bounded pick set
-        uniq, sums, _cnt = _score_rows_driver(rows, idfs, ix.stats["avgdl"])
-        if len(uniq) < k:
-            return segs, 0.0  # not enough candidates to establish a safe θ
-        import numpy as np
-
-        theta = float(np.sort(sums)[-k])
-    else:
-        theta = None
-        for round_i in range(_PRUNE_FILTER_ROUNDS + 1):
-            if round_i:  # expansion round: ×4 doc target, superset pick
-                picked, exhausted = pick(overfetch * k * (4**round_i))
-            head = segs.where(F.col("seg").isin(picked))
-            cand = (
-                head.select("term", "postings", "block_max_tfnorm")
-                .mapInPandas(
-                    _make_scorer(idfs, ix.stats["avgdl"], 0.0),
-                    "doc_int LONG, contrib DOUBLE",
-                )
-                .groupBy("doc_int")
-                .agg(F.sum("contrib").alias("sc"))
-            )
-            cand = cand.join(allowed, "doc_int", "left_semi")
-            exact = cand.orderBy(F.desc("sc")).limit(k).collect()
-            if len(exact) >= k:
-                theta = float(exact[-1]["sc"])
-                break
-            if exhausted:
-                # every candidate segment scored: the corpus has <k
-                # allowed matches, an unpruned scan can't find more
-                return segs, 0.0
-        if theta is None:
-            return segs, 0.0  # selective beyond the expansion budget
-    # keep ties: a pruned doc scoring exactly θ could win the doc_id tie-break.
-    # Inner join (same broadcast the old semi-join used) so every surviving
-    # row carries its segment's ub — the scorer derives the cross-term
-    # block-max complement from it (multi-term WAND, zero extra jobs)
-    survivors = seg_meta.where(
-        (F.col("ub") >= theta) | F.col("seg").isin(picked)
-    ).select("seg", F.col("ub").alias("seg_ub"))
-    return segs.join(F.broadcast(survivors), "seg"), theta
+        return full.select("term", "postings"), {}, accounting
+    surv, qubs = meta.survivors(thetas)
+    scan = full.join(surv, ["term", "seg"], "left_semi")
+    cols = ["term", "postings", "block_max_tfnorm", "seg_max_tfnorm"]
+    if nq * max_segs <= _QUBS_BROADCAST_MAX:
+        scan, cols = scan.join(F.broadcast(qubs), "seg", "left"), cols + ["qubs"]
+    return scan.select(*cols), thetas, accounting

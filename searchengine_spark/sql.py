@@ -21,7 +21,7 @@ parquet artifacts every executor already reads):
   filters (``term IN``, ``bucket IN``, ``seg IN``, ``doc_int IN``) —
   the same predicate-pushdown point-reads the serving engine issues
   through Spark, here pushed to parquet row groups directly;
-- scoring reuses the engine's numpy scorer (`_score_rows_driver` →
+- scoring reuses the engine's numpy scorer (`_score_rows` →
   `_decode_tfnorm`) so the BM25 expression shape — and the HALF_UP
   rounding (`semantics.round_score`) — is byte-for-byte the single
   home shared by every path;
@@ -109,7 +109,7 @@ def search_snapshot_rows(
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    from .index.engine import _score_rows_driver
+    from .index.engine import SERVING_DRIVER_MAX, _score_rows
 
     if mode not in ("or", "and"):
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
@@ -121,11 +121,7 @@ def search_snapshot_rows(
         return []
     postings_dir, docmap_dir, terms_dir, stats = _current_snapshot_dirs(catalog_root)
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    budget = (
-        chunk_budget
-        if chunk_budget is not None
-        else int(os.environ.get("SENG_SERVING_DRIVER_MAX", "2000000"))
-    )
+    budget = chunk_budget if chunk_budget is not None else SERVING_DRIVER_MAX
 
     tmeta = ds.dataset(terms_dir, format="parquet").to_table(
         columns=["term", "df", "bucket"], filter=pc.field("term").isin(terms)
@@ -167,7 +163,7 @@ def search_snapshot_rows(
         if len(chunks) > 1:  # one-shot read needs no seg predicate
             filt = filt & pc.field("seg").isin(segs)
         rows = post.to_table(columns=["term", "postings"], filter=filt).to_pylist()
-        uniq, sums, counts = _score_rows_driver(rows, idfs, avgdl)
+        uniq, sums, counts = _score_rows(rows, [idfs], avgdl)[0]
         if mode == "and" and len(terms) > 1:
             m = counts == len(terms)
             uniq, sums = uniq[m], sums[m]

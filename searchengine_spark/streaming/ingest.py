@@ -74,12 +74,14 @@ from ..index.build import (
 from ..index.catalog import IndexCatalog
 from ..index.codec import SEG_SPAN
 from ..index.engine import (
+    _SCORED,
     SERVING_DRIVER_MAX,
     IndexHandle,
     _idf,
     _make_scorer,
     _result_df,
-    _score_rows_driver,
+    _score_rows,
+    _term_postings,
     term_meta,
 )
 
@@ -616,7 +618,7 @@ class StreamingIndex:
         1. The query terms' posting rows — base pruned by bucket and
            term, as ``search_index`` does, each delta by term. Live df is
            Σ ``n`` over them (maxDoc semantics) and the rows are scored
-           with ``_score_rows_driver``, the float64 expression of the
+           with ``_score_rows``, the float64 expression of the
            serving engine.
         2. The candidates' doc_ids (an IN point-read of base and delta
            docmaps) together with every pending tombstone record.
@@ -634,11 +636,7 @@ class StreamingIndex:
         deltas = sorted(metas)
         parts = []
         if base_meta:
-            parts.append(
-                ix.postings()
-                .where(F.col("bucket").isin(sorted({b for _, b in base_meta.values()})))
-                .where(F.col("term").isin(list(base_meta)))
-            )
+            parts.append(_term_postings(ix, base_meta))
         for did in deltas:
             parts.append(self._delta_frame(did, "postings").where(F.col("term").isin(terms)))
         rows = _union([p.select("term", "n", "postings") for p in parts]).collect() if parts else []
@@ -648,7 +646,7 @@ class StreamingIndex:
         for r in rows:
             dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["n"])
         idfs = {t: _idf(n_docs, df) for t, df in dfs.items()}
-        uniq, sums, _ = _score_rows_driver(rows, idfs, avgdl)
+        uniq, sums, _ = _score_rows(rows, [idfs], avgdl)[0]
 
         if len(sums) > k + n_tomb:
             keep = sums >= np.sort(sums)[-(k + n_tomb)]  # ties at the cut stay
@@ -716,8 +714,8 @@ class StreamingIndex:
 
         scored = (
             hit.where(F.col("term").isin(live_terms))
-            .select("term", "postings", "block_max_tfnorm")
-            .mapInPandas(_make_scorer(idfs, avgdl, 0.0), "doc_int LONG, contrib DOUBLE")
+            .select("term", "postings")
+            .mapInPandas(_make_scorer([idfs], avgdl), _SCORED)
             .groupBy("doc_int")
             .agg(F.sum("contrib").alias("score_raw"))
         )

@@ -30,8 +30,36 @@ def ix(spark, catalog):
     return open_index(spark, catalog)
 
 
+@pytest.fixture(scope="session")
+def ix64(spark, transcripts, tmp_path_factory):
+    """The transcripts index built with SEG_SPAN = 64: ~16 doc-aligned
+    segments, so the block-max θ pass has segments to drop."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(B, "SEG_SPAN", 64)
+        cat = IndexCatalog(str(tmp_path_factory.mktemp("seg64") / "t"))
+        build_index(spark, transcripts, cat, n_buckets=8)
+    return open_index(spark, cat)
+
+
 def _pairs(df):
     return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+def _unpruned(monkeypatch, fn):
+    """``fn()`` with the θ pass gated off (no corpus reaches the gate)."""
+    import searchengine_spark.index.engine as E
+
+    with monkeypatch.context() as m:
+        m.setattr(E, "PRUNE_MIN_DOCS", 1 << 62)
+        return fn()
+
+
+def _qidfs(ix, queries):
+    """Each query's term → idf, as the engine computes them."""
+    from searchengine_spark.index.engine import _idf, term_meta
+
+    meta = term_meta(ix, sorted({t for ts in queries for t in ts}))
+    return [{t: _idf(ix.stats["n_docs"], meta[t][0]) for t in ts if t in meta} for ts in queries]
 
 
 QUERIES = [
@@ -49,10 +77,14 @@ def test_rank_identical_to_direct(ix, transcripts, terms):
     assert _pairs(search_index(ix, terms)) == _pairs(search_direct(transcripts, terms))
 
 
-def test_pruned_equals_unpruned(ix):
+def test_pruned_equals_unpruned(ix, monkeypatch):
+    import searchengine_spark.index.engine as E
+
     terms = ["query", "plan", "shuffle"]
-    assert _pairs(search_index(ix, terms, prune=True)) == _pairs(
-        search_index(ix, terms, prune=False)
+    monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 0)
+    monkeypatch.setattr(E, "PRUNE_MIN_DOCS", 0)
+    assert _pairs(search_index(ix, terms)) == _pairs(
+        _unpruned(monkeypatch, lambda: search_index(ix, terms))
     )
 
 
@@ -163,16 +195,29 @@ def test_and_mode_unseen_term_empty(spark, ix):
     assert search_index(ix, ["spark", "zzznotaterm"], mode="and").count() == 0
 
 
-def test_search_many_matches_singles(spark, ix):
+def test_search_many_matches_singles(spark, ix, ix64, monkeypatch):
+    """Each query of a batch equals that query alone, on the driver
+    placement, the distributed placement, and the SEG_SPAN = 64 index
+    with the θ pass forced on."""
+    import searchengine_spark.index.engine as E
     from searchengine_spark.index.engine import search_many
 
     batch = {"qa": ["spark"], "qb": ["query", "plan", "shuffle"], "qc": ["data", "model", "run"]}
-    got = search_many(ix, batch).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["qid"], []).append((r["doc_id"], r["score"]))
-    for qid, terms in batch.items():
-        assert by_q.get(qid, []) == _pairs(search_index(ix, terms)), qid
+
+    def check(index):
+        by_q = {}
+        for r in search_many(index, batch).collect():
+            by_q.setdefault(r["qid"], []).append((r["doc_id"], r["score"]))
+        for qid, terms in batch.items():
+            assert by_q.get(qid, []) == _pairs(search_index(index, terms)), qid
+        assert by_q  # non-vacuous
+
+    check(ix)
+    monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 0)
+    check(ix)
+    monkeypatch.setattr(E, "PRUNE_MIN_DOCS", 0)
+    monkeypatch.setattr(E, "PRUNE_MIN_POSTINGS", 0)
+    check(ix64)
 
 
 def test_filtered_prune_expansion(spark, tmp_path_factory, monkeypatch):
@@ -198,7 +243,6 @@ def test_filtered_prune_expansion(spark, tmp_path_factory, monkeypatch):
     import datetime
 
     import searchengine_spark.index.engine as E
-    from searchengine_spark.index.engine import _idf, _prune_segments, term_meta
 
     rows = []
     ts = datetime.datetime(2025, 3, 1)
@@ -225,7 +269,7 @@ def test_filtered_prune_expansion(spark, tmp_path_factory, monkeypatch):
     terms = ["needle"]
     k = 5
     got = _pairs(search_index(ixp, terms, doc_predicate=pred, k=k))
-    want = _pairs(search_index(ixp, terms, doc_predicate=pred, k=k, prune=False))
+    want = _pairs(_unpruned(monkeypatch, lambda: search_index(ixp, terms, doc_predicate=pred, k=k)))
     assert got == want
     assert len(got) == k  # non-vacuous: the filter leaves ≥k matches
 
@@ -233,49 +277,33 @@ def test_filtered_prune_expansion(spark, tmp_path_factory, monkeypatch):
     # so θ>0 here proves the expansion rounds ran; the background
     # segments' ub = idf·tfnorm(tf=1) < θ = 5th allowed score (tf=4)
     # must then be dropped AND their entries never decoded
-    meta = term_meta(ixp, terms)
-    idfs = {t: _idf(ixp.stats["n_docs"], meta[t][0]) for t in terms if t in meta}
-    full = ixp.postings().where(F.col("term").isin(list(idfs)))
-    allowed = ixp.docmap().where(pred).select("doc_int")
-    pruned, theta = _prune_segments(ixp, full, idfs, k=k, overfetch=4, allowed=allowed)
-    assert theta > 0.0
+    qidfs = _qidfs(ixp, [terms])
+    full = ixp.postings().where(F.col("term").isin(terms))
+    pruned, thetas, _ = E._prune(ixp, full, qidfs, k, doc_predicate=pred)
+    assert thetas[0] > 0.0
     n_full, n_pruned = full.count(), pruned.count()
     assert 0 < n_pruned < n_full, (n_pruned, n_full)
-    out_schema = "doc_int LONG, contrib DOUBLE"
-    skipped = (
-        pruned.select("term", "postings", "block_max_tfnorm", "seg_max_tfnorm", "seg_ub")
-        .mapInPandas(E._make_scorer(idfs, ixp.stats["avgdl"], theta), out_schema)
-        .count()
-    )
+    avgdl = ixp.stats["avgdl"]
+    skipped = pruned.mapInPandas(E._make_scorer(qidfs, avgdl, thetas), E._SCORED).count()
     unskipped = (
-        full.select("term", "postings", "block_max_tfnorm")
-        .mapInPandas(E._make_scorer(idfs, ixp.stats["avgdl"], 0.0), out_schema)
-        .count()
+        full.select("term", "postings").mapInPandas(E._make_scorer(qidfs, avgdl), E._SCORED).count()
     )
     assert 0 < skipped < unskipped, (skipped, unskipped)
+    # the driver θ placement (pinned filter-set mask) expands to the
+    # same θ as the distributed candidate job above
+    monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 2_000_000)
+    assert E._prune(ixp, full, qidfs, k, doc_predicate=pred)[1] == thetas
 
 
-def test_search_many_pruned_parity(spark, transcripts, tmp_path_factory, monkeypatch):
-    """Batch-path pruning (per-qid θ, seg survivors + per-qid block
-    skip): forced multi-segment layout + zero engagement gates —
-    pruned results must equal unpruned on BOTH θ paths (driver-numpy
-    and distributed candidate job), AND the pruned scan must decode
-    strictly fewer (term, seg) rows."""
+def test_search_many_pruned_parity(spark, ix64, monkeypatch):
+    """Batch θ pass (per-query θ, (term, seg) survivors + per-query
+    block skip) with zero engagement gates: pruned results must equal
+    unpruned on BOTH metadata placements (driver pandas, distributed)
+    and BOTH θ placements (driver numpy, distributed scorer), the
+    pruned scan must decode strictly fewer (term, seg) rows, and the
+    pick accounting must equal an independent recount."""
     import searchengine_spark.index.engine as E
-    from searchengine_spark.index.engine import (
-        _idf,
-        _prune_segments_many,
-        open_index,
-        search_many,
-        term_meta,
-    )
-
-    monkeypatch.setattr(B, "SEG_SPAN", 64)
-    cat = IndexCatalog(str(tmp_path_factory.mktemp("prune_many") / "t"))
-    build_index(spark, transcripts, cat, n_buckets=8)
-    ixp = open_index(spark, cat)
-    monkeypatch.setattr(E, "PRUNE_MIN_DOCS", 0)
-    monkeypatch.setattr(E, "PRUNE_MIN_POSTINGS", 0)
+    from searchengine_spark.index.engine import search_many
 
     batch = {
         "qa": ["spark"],
@@ -287,70 +315,53 @@ def test_search_many_pruned_parity(spark, transcripts, tmp_path_factory, monkeyp
     def rows(df):
         return [(r["qid"], r["doc_id"], r["score"]) for r in df.collect()]
 
-    unpruned = rows(search_many(ixp, batch, prune=False, driver=False))
-    # driver fast path (Σ df fits the bound → auto-selected)
-    assert rows(search_many(ixp, batch)) == unpruned
-    # distributed plan, pruned, driver-numpy θ (pick set fits the bound)
-    assert rows(search_many(ixp, batch, prune=True, driver=False)) == unpruned
+    unpruned = _unpruned(monkeypatch, lambda: rows(search_many(ix64, batch, driver=False)))
+    monkeypatch.setattr(E, "PRUNE_MIN_DOCS", 0)
+    monkeypatch.setattr(E, "PRUNE_MIN_POSTINGS", 0)
+    # driver placement (Σ df fits the bound → auto-selected)
+    assert rows(search_many(ix64, batch)) == unpruned
 
-    # the prune actually drops (term, seg) rows for this batch, and the
-    # scan carries the block-skip metadata for the scorer
-    meta = term_meta(ixp, sorted({t for ts in batch.values() for t in ts}))
-    st = ixp.stats
-    term_q = {}
-    for qid, ts in batch.items():
-        for t in ts:
-            if t in meta:
-                term_q.setdefault(t, []).append((qid, _idf(st["n_docs"], meta[t][0])))
-    full = ixp.postings().where(F.col("term").isin(list(term_q)))
-    pruned, thetas = _prune_segments_many(ixp, full, term_q, k=10, overfetch=1)
-    n_full, n_pruned = full.count(), pruned.count()
-    assert 0 < n_pruned < n_full, (n_pruned, n_full)
-    assert thetas and all(v > 0.0 for v in thetas.values())
-    for col in ("block_max_tfnorm", "seg_max_tfnorm", "qubs"):
-        assert col in pruned.columns, col
+    queries = [batch[q] for q in sorted(batch)]
+    qidfs = _qidfs(ix64, queries)
+    full = ix64.postings().where(F.col("term").isin(sorted({t for ts in queries for t in ts})))
+    n_full = full.count()
 
-    # the SERVING_DRIVER_MAX gate's accounting must equal the EXACT
-    # volume the θ pass would collect: Σ n over ALL queried (term, seg)
-    # rows in the picked segments — multiple queries sharing a rich
-    # segment may not inflate the count past what `head` pulls, and a
-    # per-qid cnt must not undercount it (driver-OOM guard regression)
-    picked = E._LAST_PICKED
-    assert picked is not None and picked["segs"]
-    exact = (
-        full.where(F.col("seg").isin(picked["segs"]))
-        .agg(F.sum("n"))
-        .collect()[0][0]
-    )
-    assert picked["n"] == exact, (picked["n"], exact)
+    def engaged():
+        """The pass drops (term, seg) rows, carries the block-skip
+        metadata, and its accounting equals the EXACT volume the θ
+        candidates read: Σ n over ALL queried (term, seg) rows in the
+        picked segments — queries sharing a rich segment may not
+        inflate it, and a per-query count must not undercount it
+        (driver-OOM guard regression)."""
+        with monkeypatch.context() as m:
+            m.setattr(E, "OVERFETCH", 1)
+            pruned, thetas, picked = E._prune(ix64, full, qidfs, 10)
+        assert 0 < pruned.count() < n_full
+        assert thetas and all(v > 0.0 for v in thetas.values())
+        for col in ("block_max_tfnorm", "seg_max_tfnorm", "qubs"):
+            assert col in pruned.columns, col
+        assert picked["segs"]
+        exact = full.where(F.col("seg").isin(picked["segs"])).agg(F.sum("n")).collect()[0][0]
+        assert picked["n"] == exact, (picked["n"], exact)
 
-    # distributed-θ fallback: force the pick set past the driver cap
+    # driver metadata placement: driver-numpy θ, then distributed θ
+    # (the pick set forced past the driver cap)
+    assert rows(search_many(ix64, batch, driver=False)) == unpruned
+    engaged()
     monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 0)
-    assert rows(search_many(ixp, batch, prune=True, driver=False)) == unpruned
+    assert rows(search_many(ix64, batch, driver=False)) == unpruned
     monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 2_000_000)
 
-    # everything above ran the driver-METADATA fast path (small corpus
-    # fits _META_COLLECT_MAX); force the distributed metadata pass and
-    # require the same results, engagement, and the same exact
-    # picked-volume accounting
+    # distributed metadata placement: same results, engagement and
+    # exact picked-volume accounting
     monkeypatch.setattr(E, "_META_COLLECT_MAX", 0)
-    assert rows(search_many(ixp, batch, prune=True, driver=False)) == unpruned
-    pruned_d, thetas_d = _prune_segments_many(ixp, full, term_q, k=10, overfetch=1)
-    assert 0 < pruned_d.count() < n_full
-    assert thetas_d and all(v > 0.0 for v in thetas_d.values())
-    picked_d = E._LAST_PICKED
-    assert picked_d is not None and picked_d["segs"]
-    exact_d = (
-        full.where(F.col("seg").isin(picked_d["segs"]))
-        .agg(F.sum("n"))
-        .collect()[0][0]
-    )
-    assert picked_d["n"] == exact_d, (picked_d["n"], exact_d)
+    assert rows(search_many(ix64, batch, driver=False)) == unpruned
+    engaged()
     monkeypatch.setattr(E, "_META_COLLECT_MAX", 1_000_000)
 
-    # corpus "too large" to pin doc names → ≤ #qids·k point-read hydration
+    # corpus "too large" to pin doc names → ≤ #queries·k point-read hydration
     monkeypatch.setattr(E, "DOC_NAME_CACHE_MAX", 0)
-    ix_cold = open_index(spark, cat)
+    ix_cold = E.IndexHandle(spark, ix64.snapshot)
     assert ix_cold.doc_names() is None
     assert rows(search_many(ix_cold, batch)) == unpruned
 
@@ -406,6 +417,10 @@ def test_warm_serving_job_budget(spark, catalog, spark_jobs):
     same = (F.col("role") == "assistant") & (F.col("tool") == "search")
     assert run(["spark", "query"], same) == 1
     assert run(["data"], same) == 1  # filtered to nothing: the empty result adds no job
+    from searchengine_spark.index.engine import search_many
+
+    batch = {"qa": ["spark"], "qb": ["query", "plan", "shuffle"], "qc": ["data", "model"]}
+    assert len(spark_jobs(lambda: search_many(ix, batch).collect())) == 1
     assert ix.postings() is ix.postings() and ix.docmap() is ix.docmap()
 
 
@@ -571,74 +586,56 @@ def test_fused_and_checkpointed_builds_identical(spark, transcripts, tmp_path_fa
     assert rows_a == rows_b and len(rows_a) > 100
 
 
-def test_block_max_pruning_engages_and_is_exact(spark, transcripts, tmp_path_factory, monkeypatch):
-    """Force multi-segment layout (tiny SEG_SPAN) and a zero engagement
-    gate so _prune_segments actually runs: the distributed greedy
-    prefix + theta semi-join must stay rank-identical to the unpruned
-    path and to the direct path, and must actually drop segments."""
+def test_block_max_pruning_engages_and_is_exact(spark, transcripts, ix64, monkeypatch):
+    """Multi-segment layout (tiny SEG_SPAN) and a zero engagement gate
+    so the θ pass actually runs: the pruned distributed plan must stay
+    rank-identical to the unpruned plan and to the direct path, and
+    must establish a positive θ."""
     import searchengine_spark.index.engine as E
 
-    monkeypatch.setattr(B, "SEG_SPAN", 64)  # ~1000 docs -> ~16 segments
-    cat = IndexCatalog(str(tmp_path_factory.mktemp("prune") / "t"))
-    build_index(spark, transcripts, cat, n_buckets=8)
-    ixp = open_index(spark, cat)
-    n_segs = ixp.postings().select("seg").distinct().count()
+    n_segs = ix64.postings().select("seg").distinct().count()
     assert n_segs > 4
 
     monkeypatch.setattr(E, "PRUNE_MIN_DOCS", 0)
     monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 0)  # keep the distributed path under test
     for terms in (["spark"], ["query", "plan", "shuffle"], ["data", "model", "run"]):
-        pruned = _pairs(search_index(ixp, terms, prune=True))
-        unpruned = _pairs(search_index(ixp, terms, prune=False))
+        pruned = _pairs(search_index(ix64, terms))
+        unpruned = _pairs(_unpruned(monkeypatch, lambda: search_index(ix64, terms)))
         direct = _pairs(search_direct(transcripts, terms))
         assert pruned == unpruned == direct
 
     # MUST-filtered queries prune too (θ established among allowed docs)
     pred = F.col("role") == "assistant"
     for terms in (["query", "plan", "shuffle"], ["data", "model", "run"]):
-        pruned = _pairs(search_index(ixp, terms, doc_predicate=pred, prune=True))
-        unpruned = _pairs(search_index(ixp, terms, doc_predicate=pred, prune=False))
+        pruned = _pairs(search_index(ix64, terms, doc_predicate=pred))
+        unpruned = _pairs(
+            _unpruned(monkeypatch, lambda: search_index(ix64, terms, doc_predicate=pred))
+        )
         direct = _pairs(search_direct(transcripts, terms, doc_predicate=pred))
         assert pruned == unpruned == direct
 
-    # the prune path must actually produce a positive theta (i.e. it
-    # engaged) for a query with more matches than overfetch*k
-    segs = ixp.postings().where(F.col("term").isin(["data", "model", "run"]))
-    from searchengine_spark.index.engine import _idf, _prune_segments
-
-    st = ixp.stats
-    idfs = {t: _idf(st["n_docs"], 100) for t in ["data", "model", "run"]}
-    kept, theta = _prune_segments(ixp, segs, idfs, k=10, overfetch=1)
-    assert theta > 0.0
-    assert kept.select("seg").distinct().count() <= n_segs
+    # the θ pass must actually produce a positive theta (i.e. it
+    # engaged) for a query with more matches than OVERFETCH·k
+    segs = ix64.postings().where(F.col("term").isin(["data", "model", "run"]))
+    idfs = {t: E._idf(ix64.stats["n_docs"], 100) for t in ["data", "model", "run"]}
+    monkeypatch.setattr(E, "OVERFETCH", 1)
+    kept, thetas, _ = E._prune(ix64, segs, [idfs], 10)
+    assert thetas[0] > 0.0
+    assert kept.count() <= segs.count()
 
 
 def test_serving_plan_shape(ix):
-    """Plan-shape regression gate for the serving path: the postings
-    scan must push the term predicate into parquet (row-group pruning)
-    and read only the scoring columns; the top-k must be
-    TakeOrderedAndProject (per-partition heaps), not a global sort."""
-    from searchengine_spark.index.engine import _idf, _make_scorer, term_meta
-    from pyspark.sql import functions as F
+    """Plan-shape regression gate for one query on the distributed
+    placement: the postings scan must push the term predicate into
+    parquet (row-group pruning) and read only the scoring columns; the
+    top-k must be TakeOrderedAndProject (per-partition heaps), not a
+    global sort or a window partitioned by query."""
+    import searchengine_spark.index.engine as E
 
-    meta = term_meta(ix, ["spark"])
-    st = ix.stats
-    segs = (
-        ix.postings()
-        .where(F.col("bucket").isin([meta["spark"][1]]))
-        .where(F.col("term").isin(["spark"]))
-        .select("term", "postings", "block_max_tfnorm")
-    )
-    scored = segs.mapInPandas(
-        _make_scorer({"spark": _idf(st["n_docs"], meta["spark"][0])}, st["avgdl"], 0.0),
-        "doc_int LONG, contrib DOUBLE",
-    )
-    top = (
-        scored.groupBy("doc_int").agg(F.sum("contrib").alias("s"))
-        .orderBy(F.desc("s"), F.asc("doc_int")).limit(10)
-    )
+    segs = E._term_postings(ix, E.term_meta(ix, ["spark"])).select("term", "postings")
+    top = E._top_k(E._aggregate(ix, segs, _qidfs(ix, [["spark"]])), 1, 10)
     plan = top._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
+    assert "TakeOrderedAndProject" in plan and "Window" not in plan
     scan = segs._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in scan and "term" in scan.split("PushedFilters", 1)[1][:200]
     # column pruning: the scan schema must not include posting metadata
@@ -648,7 +645,7 @@ def test_serving_plan_shape(ix):
 
 def test_multiterm_block_skip_exact(monkeypatch):
     """Multi-term block-max WAND (north_star): with the cross-term
-    segment complement (seg_ub − idf_t·seg_max_t) a cold block of ONE
+    segment complement (ub(q, seg) − idf_t·seg_max_t) a cold block of ONE
     term is skipped even though other terms keep scoring its docs, and
     every doc whose total can reach θ keeps its full score.
 
@@ -684,12 +681,12 @@ def test_multiterm_block_skip_exact(monkeypatch):
             "postings": [blob_a, blob_b],
             "block_max_tfnorm": [bmax_a, bmax_b],
             "seg_max_tfnorm": [segmax_a, segmax_b],
-            "seg_ub": [seg_ub, seg_ub],
+            "qubs": [[{"q": 0, "ub": seg_ub}]] * 2,
         }
     )
 
     def agg(theta):
-        out = list(E._make_scorer(idfs, avgdl, theta)(iter([pdf])))
+        out = list(E._make_scorer([idfs], avgdl, {0: theta})(iter([pdf])))
         rows = pd.concat(out)
         return rows.groupby("doc_int")["contrib"].sum().to_dict(), len(rows)
 
@@ -738,9 +735,9 @@ def test_wand_parity_fuzz(spark, tmp_path_factory, monkeypatch):
         pred = F.col("role") == "assistant"
         for _ in range(4):
             terms = rng.sample(vocab, rng.randint(1, 3))
-            assert _pairs(search_index(ixf, terms, prune=True)) == _pairs(
+            assert _pairs(search_index(ixf, terms)) == _pairs(
                 search_direct(docs, terms)
             ), (seed, terms)
             assert _pairs(
-                search_index(ixf, terms, doc_predicate=pred, prune=True)
+                search_index(ixf, terms, doc_predicate=pred)
             ) == _pairs(search_direct(docs, terms, doc_predicate=pred)), (seed, terms, "filtered")
