@@ -117,8 +117,6 @@ def _fresh_build(spark, sf_dir: str) -> dict:
 
 def _query_p95(spark, sf_dir: str, reps: int = 10) -> dict:
     """Serving-path latency: reference query classes over the warm index."""
-    from pyspark.sql import functions as F
-
     from searchengine_spark.entry_queries import (
         FUZZY_SOURCE, Q_FILTERED, Q_HEAVY, Q_MULTI, Q_SINGLE, Q_SYNONYM, ensure_index,
     )
@@ -141,12 +139,12 @@ def _query_p95(spark, sf_dir: str, reps: int = 10) -> dict:
         "fuzzy": expand_fuzzy(ix, FUZZY_SOURCE),
         "filtered": Q_FILTERED,
     }
-    pred = (F.col("role") == "assistant") & (F.col("tool") == "search")
+    req = {"category": "assistant", "one-select": [{"name": "tool", "value": "search"}]}
     samples: dict[str, list[float]] = {k: [] for k in classes}
     for _ in range(reps):
         for name, terms in classes.items():
             t0 = time.perf_counter()
-            search_index(ix, terms, doc_predicate=pred if name == "filtered" else None).collect()
+            search_index(ix, terms, filters=req if name == "filtered" else None).collect()
             samples[name].append(time.perf_counter() - t0)
     flat = sorted(x for v in samples.values() for x in v)
 

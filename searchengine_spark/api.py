@@ -25,6 +25,7 @@ the full stored text (handler Fields=["*"], ``search.go:141-142``).
 
 from __future__ import annotations
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -32,7 +33,7 @@ from . import semantics as S
 from .configs import IndexConfig, default_transcripts_index_config
 from .filters import compile_filters
 from .functions.text import doc_id_col
-from .index.engine import IndexHandle, expand_query, search_index
+from .index.engine import IndexHandle, _in_sorted, _result_df, expand_query, search_index
 from .validate import ValidationError, validate_sort_field
 
 
@@ -58,6 +59,37 @@ def _hydrate(
             [F.desc("score"), F.asc("doc_id")] if "score" in hits.columns else [F.asc("doc_id")]
         )
     return out.orderBy(*order)
+
+
+def _sort_pinned(
+    ix: IndexHandle,
+    matched,
+    filter_request: dict | None,
+    sort_field: str,
+    sort_desc: bool,
+    from_: int,
+    k: int,
+) -> DataFrame:
+    """Explicit-sort page ``[from_, from_ + k)`` of the sorted doc_int
+    array ``matched``, resolved on the pinned doc values with no Spark
+    job: filter set, key order (Spark's null order: desc puts NULLs
+    last, asc first; doc_int asc on ties, which is doc_id order), and a
+    local (doc_id, key) frame with the key's Spark type."""
+    if filter_request:
+        matched = matched[_in_sorted(matched, ix.filter_doc_ints(filter_request))]
+    sel = ix.doc_values().take(matched)  # row i of the doc values is doc_int i
+    order = pc.sort_indices(
+        sel,
+        sort_keys=[(sort_field, "descending" if sort_desc else "ascending"), ("doc_int", "ascending")],
+        null_placement="at_end" if sort_desc else "at_start",
+    )
+    page = sel.take(order[from_ : from_ + k])
+    dtype = ix.docmap().schema[sort_field].dataType.simpleString()
+    return _result_df(
+        ix.spark,
+        list(zip(page.column("doc_id").to_pylist(), page.column(sort_field).to_pylist())),
+        f"doc_id STRING, {sort_field} {dtype}",
+    )
 
 
 from .metrics import timed
@@ -87,20 +119,23 @@ def advanced_search(
     if sort_field is not None and not validate_sort_field(cfg, sort_field):
         raise ValidationError(f"field '{sort_field}' is not sortable")  # handler.go:198-204
     terms = expand_query(ix, query, fuzzy=fuzzy, synonyms=synonyms)
-    pred = compile_filters(filter_request)
 
     if sort_field is None:
-        hits = search_index(ix, terms, k=k + from_, doc_predicate=pred)
+        hits = search_index(ix, terms, k=k + from_, filters=filter_request)
         if from_:
             hits = hits.offset(from_)
         return _hydrate(ix, hits, docs) if docs is not None else hits
 
     # explicit sort overrides ranking entirely (R4, rank.go:100-110):
-    # candidates = any-term matches ∧ filters, ordered by the field.
-    # The match set is built with bucket + term parquet pushdown, and —
-    # like the scoring path — collects/decodes driver-side when Σ df
-    # is bounded (one JVM job: docmap semi-join → TakeOrdered on the
-    # sort key); heavy terms keep the distributed decode.
+    # candidates = any-term matches ∧ filters, ordered by the field
+    # (desc NULLS LAST / asc NULLS FIRST, doc_id asc on ties). The match
+    # set is built with bucket + term parquet pushdown and, like the
+    # scoring path, collected and decoded driver-side when Σ df is
+    # bounded. With the doc values pinned that collect is the ONE job:
+    # the filter set and the sort key are read from the pinned table
+    # (:func:`_sort_pinned`). Corpora too large to pin semi-join the
+    # match set to docmap and TakeOrdered on the key; heavy terms keep
+    # the distributed decode.
     from .index.engine import (
         _SCORED,
         SERVING_DRIVER_MAX,
@@ -114,33 +149,40 @@ def advanced_search(
     tmeta = term_meta(ix, terms)
     ones = [{t: 1.0 for t in tmeta}]  # the match set needs no idf
     cand = _term_postings(ix, tmeta).select("term", "postings")
-    if not tmeta:
-        matched = _empty(ix.spark, "doc_int LONG")
-    elif sum(df for df, _ in tmeta.values()) <= SERVING_DRIVER_MAX:
-        import pandas as pd
-
-        uniq = _score_rows(cand.collect(), ones, ix.stats["avgdl"])[0][0]  # Σ-df bounded
-        matched = ix.spark.createDataFrame(
-            pd.DataFrame({"doc_int": uniq}), schema="doc_int LONG"
-        )
-    else:
-        matched = (
-            cand.mapInPandas(_make_scorer(ones, ix.stats["avgdl"]), _SCORED)
-            .select("doc_int")
-            .distinct()
-        )
-    dm = ix.docmap()
-    if pred is not None:
-        dm = dm.where(pred)
     key = F.col(sort_field).desc() if sort_desc else F.col(sort_field).asc()
-    hits = (
-        dm.join(matched, "doc_int")
-        .orderBy(key, F.asc("doc_id"))
-        .limit(k + from_)
-        .select("doc_id", sort_field)
-    )
-    if from_:
-        hits = hits.offset(from_)
+    bounded = sum(df for df, _ in tmeta.values()) <= SERVING_DRIVER_MAX
+    if bounded:
+        rows = cand.collect() if tmeta else []  # Σ-df bounded
+        uniq = _score_rows(rows, ones, ix.stats["avgdl"])[0][0]
+    if bounded and ix.doc_values() is not None:
+        hits = _sort_pinned(ix, uniq, filter_request, sort_field, sort_desc, from_, k)
+    else:
+        if not tmeta:
+            matched = _empty(ix.spark, "doc_int LONG")
+        elif bounded:
+            import pandas as pd
+
+            matched = ix.spark.createDataFrame(
+                pd.DataFrame({"doc_int": uniq}), schema="doc_int LONG"
+            )
+        else:
+            matched = (
+                cand.mapInPandas(_make_scorer(ones, ix.stats["avgdl"]), _SCORED)
+                .select("doc_int")
+                .distinct()
+            )
+        dm = ix.docmap()
+        pred = compile_filters(filter_request)
+        if pred is not None:
+            dm = dm.where(pred)
+        hits = (
+            dm.join(matched, "doc_int")
+            .orderBy(key, F.asc("doc_id"))
+            .limit(k + from_)
+            .select("doc_id", sort_field)
+        )
+        if from_:
+            hits = hits.offset(from_)
     if docs is not None:
         # keep the sort key through hydration so rank order (R4) survives
         return _hydrate(ix, hits, docs, order=[key, F.asc("doc_id")])
@@ -159,10 +201,8 @@ def simple_search(
     """SimpleSearch equivalent (search.go:28-48): analyzed match query
     ∧ per-field equality terms; no fuzziness."""
     terms = expand_query(ix, query, fuzzy=False, synonyms=False)
-    pred = None
+    req = None
     if filters:
-        pred = compile_filters(
-            {"one-select": [{"name": f, "value": v} for f, v in sorted(filters.items())]}
-        )
-    hits = search_index(ix, terms, k=k, doc_predicate=pred)
+        req = {"one-select": [{"name": f, "value": v} for f, v in sorted(filters.items())]}
+    hits = search_index(ix, terms, k=k, filters=req)
     return _hydrate(ix, hits, docs) if docs is not None else hits

@@ -1,9 +1,8 @@
-"""Filter-request → Spark predicate compilation (SURVEY §2.3 F1-FA).
+"""Filter-request compilation (SURVEY §2.3 F1-FA): one walker, two renderings.
 
 Re-expresses the reference's Bleve query compilation
-(``internal/filter/filter.go:43-133``) as a single Catalyst ``Column``
-predicate so filters reach the parquet/Iceberg scan as pushed-down
-conjuncts wherever possible:
+(``internal/filter/filter.go:43-133``) as a single predicate over the
+doc metadata columns:
 
 - category equality (lowercased term, MUST)            — filter.go:54-59
 - range filters: number / timestamp, OR-ed with each
@@ -12,6 +11,17 @@ conjuncts wherever possible:
 - one-select: equality per field, AND across           — filter.go:106-117
 - bool-select: boolean equality, AND across            — filter.go:119-130
 - nil/empty request → no predicate                     — filter.go:43-50
+
+:func:`compile_filters` walks the request once, building the predicate
+from three constructors ``(col, lit, lower)``. The default ``F.col`` /
+``F.lit`` / ``F.lower`` give a Catalyst ``Column``, so filters reach the
+parquet/Iceberg scan as pushed-down conjuncts; :data:`ARROW`
+(``pc.field`` / ``pc.scalar`` / ``pc.utf8_lower``) gives a
+``pyarrow.compute`` Expression, which the serving engine evaluates on
+its pinned doc values with no Spark job. Both renderings use only
+``==``, ``>=``, ``<=``, ``&``, ``|`` and ``isin`` (a range is
+``(c >= lo) & (c <= hi)``, Catalyst's own definition of ``between``),
+and both treat a NULL comparison as not matching.
 
 String matching is case-insensitive on the value side exactly like the
 reference (it lowercases the query value and matches against analyzed,
@@ -27,6 +37,7 @@ from datetime import datetime, timezone
 from functools import reduce
 from operator import and_, or_
 
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,6 +50,9 @@ from pyspark.sql import functions as F
 #  "bool-select": [{"name","value": bool}]}
 
 RFC3339 = "%Y-%m-%dT%H:%M:%S%z"
+
+# the pyarrow.compute rendering: ``compile_filters(req, **ARROW)``
+ARROW = {"col": pc.field, "lit": pc.scalar, "lower": pc.utf8_lower}
 
 
 class FilterError(ValueError):
@@ -53,20 +67,19 @@ def _parse_rfc3339(s: str) -> datetime:
     return dt.astimezone(timezone.utc).replace(tzinfo=None)  # session TZ is UTC
 
 
-def _str_eq(colname: str, value: str, lowercase_cols: set[str]) -> Column:
-    v = value.lower()
-    if colname in lowercase_cols:
-        return F.col(colname) == F.lit(v)  # pushdown-friendly
-    return F.lower(F.col(colname)) == F.lit(v)
-
-
 def compile_filters(
     req: dict | None,
     *,
     category_field: str = "role",
     lowercase_cols: frozenset[str] = frozenset({"role", "tool"}),
-) -> Column | None:
-    """FilterRequest dict → one AND-combined predicate, or None."""
+    col=F.col,
+    lit=F.lit,
+    lower=F.lower,
+) -> "Column | pc.Expression | None":
+    """FilterRequest dict → one AND-combined predicate, or None. The
+    predicate is built from ``col`` / ``lit`` / ``lower``: a Spark
+    ``Column`` by default, a ``pyarrow.compute`` Expression with
+    ``**ARROW``."""
     if not req:
         return None
     rng = req.get("range") or []
@@ -77,10 +90,18 @@ def compile_filters(
     if not (rng or ms or os_ or bs or cat):
         return None
 
-    musts: list[Column] = []
+    def field(name: str):
+        # lowercase columns compare as stored: pushdown-friendly
+        return col(name) if name in lowercase_cols else lower(col(name))
+
+    def between(name: str, lo, hi):
+        c = col(name)
+        return (c >= lit(lo)) & (c <= lit(hi))
+
+    musts = []
 
     if cat:
-        musts.append(_str_eq(category_field, cat, set(lowercase_cols)))
+        musts.append(field(category_field) == lit(cat.lower()))
 
     if rng:
         shoulds = []
@@ -89,33 +110,26 @@ def compile_filters(
             if typ == "timestamp":
                 lo = _parse_rfc3339(r["from_value"])
                 hi = _parse_rfc3339(r["to_value"])
-                shoulds.append(F.col(name).between(F.lit(lo), F.lit(hi)))
+                shoulds.append(between(name, lo, hi))
             elif typ == "number":
                 try:
                     lo_f, hi_f = float(r["from_value"]), float(r["to_value"])
                 except ValueError as e:
                     raise FilterError(f"invalid numeric bound in {r}") from e
-                shoulds.append(F.col(name).between(F.lit(lo_f), F.lit(hi_f)))
+                shoulds.append(between(name, lo_f, hi_f))
             else:
                 raise FilterError(f"unsupported range type: {typ}")
         musts.append(reduce(or_, shoulds))
 
     if ms:
-        per_field = []
-        for m in ms:
-            vals = [v.lower() for v in m["value"]]
-            if m["name"] in lowercase_cols:
-                per_field.append(F.col(m["name"]).isin(vals))
-            else:
-                per_field.append(F.lower(F.col(m["name"])).isin(vals))
-        musts.append(reduce(and_, per_field))
-
-    if os_:
         musts.append(
-            reduce(and_, [_str_eq(o["name"], o["value"], set(lowercase_cols)) for o in os_])
+            reduce(and_, [field(m["name"]).isin([v.lower() for v in m["value"]]) for m in ms])
         )
 
+    if os_:
+        musts.append(reduce(and_, [field(o["name"]) == lit(o["value"].lower()) for o in os_]))
+
     if bs:
-        musts.append(reduce(and_, [F.col(b["name"]) == F.lit(bool(b["value"])) for b in bs]))
+        musts.append(reduce(and_, [col(b["name"]) == lit(bool(b["value"])) for b in bs]))
 
     return reduce(and_, musts)

@@ -24,19 +24,23 @@ top-k). A single query is a one-query batch: :func:`search_index` and
    q's richest segments, drops every segment and, inside the scorer,
    every 128-posting block that cannot beat it — exact, since a dropped
    doc provably scores below θ_q;
-4. hydrate every query's doc_ids in one lookup: the pinned doc-name
-   column, or a docmap point read on corpora too large to pin.
+4. hydrate every query's doc_ids in one lookup: the pinned doc values'
+   ``doc_id`` column, or a docmap point read on corpora too large to pin.
 
 Serving state lives on the :class:`IndexHandle`: it resolves each
 artifact DataFrame (postings / terms / docmap) once and pins the term
-dictionary, doc names and filter sets driver-side, so a warm query on
-the driver placement runs one Spark job (the Σdf-bounded postings
-collect). Re-reading the artifact on every access cost a parquet
+dictionary and the docmap driver-side — the docmap as one Arrow table
+in doc_int order, the analogue of Bleve's DocValues. Doc names, MUST
+filter sets (the :data:`..filters.ARROW` rendering of the FilterRequest)
+and explicit sort keys all read that table, so a warm query on the
+driver placement runs one Spark job (the Σdf-bounded postings collect),
+filtered or not. Re-reading the artifact on every access cost a parquet
 schema-inference job each time: on the sf0.01 serve benchmark
-(4 vCPUs) pinning took ``search_index`` from 2 jobs to 1 and a
-filter-set miss from 2 to 1. Resolving an artifact starts no job
-either: the build records each artifact's schema in the manifest. A
-published snapshot never changes; a new snapshot gets a new handle
+(4 vCPUs) pinning the frames took ``search_index`` from 2 jobs to 1,
+and evaluating filters on the pinned doc values took a first-seen
+filter set from 1 job to 0. Resolving an artifact starts no job either:
+the build records each artifact's schema in the manifest. A published
+snapshot never changes; a new snapshot gets a new handle
 (:func:`open_index`).
 
 The result is rank-identical to :func:`..query.bm25.search_direct`
@@ -52,12 +56,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .. import semantics as S
+from ..filters import ARROW, compile_filters
 from ..metrics import timed
 from .catalog import IndexCatalog, Snapshot
 from .codec import BLOCK, SEG_SPAN, decode_postings
@@ -70,11 +76,12 @@ from .codec import BLOCK, SEG_SPAN, decode_postings
 # measured, tests/test_index_engine.py::test_driver_cache_budgets):
 # 1 M entries ≈ 150-250 MB driver heap.
 TERM_CACHE_MAX = 1_000_000
-# gate for the doc_int → doc_id table. The pinned form is ONE Arrow
-# string column indexed by the dense doc_int (no per-entry CPython
-# objects): ~(avg doc_id bytes + 8) per entry ≈ 25-30 B → 5 M entries
-# ≈ 150 MB driver heap (budget-tested alongside the term cache).
-DOC_NAME_CACHE_MAX = 5_000_000
+# gate for pinning the docmap as driver-side doc values: one Arrow
+# table in doc_int order (no per-entry CPython objects). Measured on the
+# transcripts corpus: 68-69 B/row (doc_id, conv_id, role and tool
+# strings + offsets, turn_idx, ts, dl, doc_int) → 5 M docs ≈ 345 MB
+# driver heap (budget-tested alongside the term cache).
+DOC_VALUES_MAX = 5_000_000
 
 
 class _DocNames:
@@ -84,7 +91,7 @@ class _DocNames:
     real pinned footprint."""
 
     def __init__(self, arr):
-        self._arr = arr  # pyarrow (Chunked)Array of doc_id, doc_int order
+        self._arr = arr  # pyarrow ChunkedArray of doc_id, doc_int order
 
     def __getitem__(self, doc_int: int) -> str:
         return self._arr[doc_int].as_py()
@@ -106,8 +113,6 @@ class _DocNames:
 # keeps the distributed block-max path, so no unbounded driver transfer
 # can occur: Σ df bounds the decoded entries (~6 B/entry on the wire).
 SERVING_DRIVER_MAX = 2_000_000
-# cached filter sets pinned per snapshot (Lucene filter-cache analogue)
-_FILTER_CACHE_ENTRIES = 8
 
 
 @dataclass
@@ -117,8 +122,8 @@ class IndexHandle:
     Pins, each resolved on first use and kept for the handle's
     lifetime: the artifact DataFrames (``postings`` / ``terms`` /
     ``docmap`` — the parquet file listing and schema, or the
-    Iceberg read at the pinned ``snapshot-id``), the term dictionary,
-    the doc-name column and up to ``_FILTER_CACHE_ENTRIES`` filter sets.
+    Iceberg read at the pinned ``snapshot-id``), the term dictionary
+    and the docmap's doc values (:meth:`doc_values`).
     Pinning is safe because a published snapshot is write-once; a
     republish is a NEW snapshot, which needs a new handle
     (:func:`open_index`) — a handle held across it keeps answering from
@@ -168,51 +173,46 @@ class IndexHandle:
     def docmap(self) -> DataFrame:
         return self._artifact("docmap", self.snapshot.docmap_dir)
 
-    def doc_names(self) -> "_DocNames | None":
-        """Driver-cached doc_int → doc_id (indexable by doc_int), or
-        None when the corpus is too large to pin (callers fall back to
-        a docmap point-read). The serving analogue of keeping the docID
-        lookup table hot — saves the hydration job. Pinned as a single
-        Arrow string column (doc_int = array index; the numbering is
-        dense by construction), so the footprint is the string bytes +
-        offsets, not CPython dict entries; the transfer itself is
-        Arrow-native (``toArrow``), never row objects."""
-        cached = getattr(self, "_doc_names", False)
+    def doc_values(self) -> "pa.Table | None":
+        """The docmap pinned driver-side as one Arrow table in doc_int
+        order (row i is doc_int i: the numbering is dense by
+        construction), or None when the corpus is too large to pin
+        (DOC_VALUES_MAX; callers fall back to docmap reads). Doc names,
+        MUST filter sets and explicit sort keys all read it — the
+        serving analogue of Bleve's DocValues. One Arrow-native
+        transfer (``toArrow``), never row objects; timestamps are held
+        as UTC wall time, the form the filters' bounds take."""
+        cached = getattr(self, "_doc_values", False)
         if cached is not False:
             return cached
-        if self.stats["n_docs"] > DOC_NAME_CACHE_MAX:
-            self._doc_names = None
+        if self.stats["n_docs"] > DOC_VALUES_MAX:
+            self._doc_values = None
         else:
-            tbl = (
-                self.docmap()
-                .select("doc_int", "doc_id")
-                .toArrow()
-                .sort_by("doc_int")
-            )
-            self._doc_names = _DocNames(tbl.column("doc_id").combine_chunks())
-        return self._doc_names
+            tbl = self.docmap().toArrow().sort_by("doc_int").combine_chunks()
+            for i, f in enumerate(tbl.schema):
+                if pa.types.is_timestamp(f.type) and f.type.tz is not None:
+                    tbl = tbl.set_column(i, f.name, tbl.column(i).cast(pa.timestamp(f.type.unit)))
+            self._doc_values = tbl
+        return self._doc_values
 
-    def filter_doc_ints(self, doc_predicate: Column) -> "object | None":
-        """Lucene-style cached filter set: the sorted doc_int array
-        satisfying ``doc_predicate``, evaluated against docmap ONCE per
-        (snapshot, predicate) and pinned driver-side — repeated
-        filtered queries then add no Spark job. None when the
-        corpus is too large to pin a filter set (callers fall back to
-        a rank-ordered docmap probe). Bounded: ≤ _FILTER_CACHE_ENTRIES
-        arrays of ≤ n_docs int64 each, evicted FIFO."""
-        if self.stats["n_docs"] > DOC_NAME_CACHE_MAX:
+    def doc_names(self) -> "_DocNames | None":
+        """doc_int → doc_id over the pinned doc values' ``doc_id``
+        column, or None when the corpus is too large to pin (callers
+        fall back to a docmap point-read). Saves the hydration job."""
+        dv = self.doc_values()
+        return None if dv is None else _DocNames(dv.column("doc_id"))
+
+    def filter_doc_ints(self, filters: dict | None) -> "np.ndarray | None":
+        """The sorted doc_int array satisfying the FilterRequest
+        ``filters`` (every doc for an empty request), evaluated as a
+        ``pyarrow.compute`` Expression on the pinned doc values — no
+        Spark job. None when the corpus is too large to pin (callers
+        fall back to a rank-ordered docmap probe)."""
+        dv = self.doc_values()
+        if dv is None:
             return None
-        key = str(doc_predicate._jc)
-        cache: dict = getattr(self, "_filter_cache", None) or {}
-        arr = cache.get(key)
-        if arr is None:
-            pdf = self.docmap().where(doc_predicate).select("doc_int").toPandas()
-            arr = np.sort(pdf["doc_int"].to_numpy(dtype=np.int64))
-            while len(cache) >= _FILTER_CACHE_ENTRIES:
-                cache.pop(next(iter(cache)))
-            cache[key] = arr
-            self._filter_cache = cache
-        return arr
+        expr = compile_filters(filters, **ARROW)
+        return (dv if expr is None else dv.filter(expr)).column("doc_int").to_numpy()
 
     def term_dict(self) -> dict[str, tuple[int, int]] | None:
         """Driver-cached term → (df, bucket), or None if the vocabulary
@@ -415,6 +415,13 @@ def _score_rows(rows: list, qidfs: list[dict[str, float]], avgdl: float) -> list
     return out
 
 
+def _in_sorted(uniq: np.ndarray, allowed: np.ndarray) -> np.ndarray:
+    """Mask of the ``uniq`` doc_ints present in the sorted ``allowed``."""
+    if not len(allowed):
+        return np.zeros(len(uniq), dtype=bool)
+    return allowed[np.minimum(np.searchsorted(allowed, uniq), len(allowed) - 1)] == uniq
+
+
 def _driver_top_k(
     ix: IndexHandle,
     rows: list,
@@ -422,26 +429,24 @@ def _driver_top_k(
     k: int,
     mode: str = "or",
     doc_predicate: Column | None = None,
+    allowed: np.ndarray | None = None,
 ) -> list[list[tuple[int, float]]]:
     """Driver placement: each query's exact top-k (doc_int, raw score),
     in rank order, from collected rows.
 
     A doc's postings for EVERY query term live in its one doc-aligned
     segment, so the rows carry complete per-doc scores and mode="and"
-    reduces to counting matched terms. A MUST predicate masks the
-    candidates with the handle's pinned filter set (its first use pays
-    one docmap job); on corpora too large to pin one, the candidates
-    are probed against docmap in rank order (:func:`_probe_docmap`)."""
+    reduces to counting matched terms. A MUST filter masks the
+    candidates with ``allowed``, its doc_int set in the pinned doc
+    values (:meth:`IndexHandle.filter_doc_ints`); on corpora too large
+    to pin (``allowed`` None), the candidates are probed against
+    docmap with ``doc_predicate`` in rank order (:func:`_probe_docmap`)."""
     out = []
     for idfs, (uniq, sums, counts) in zip(qidfs, _score_rows(rows, qidfs, ix.stats["avgdl"])):
         if mode == "and":
             uniq, sums = uniq[counts == len(idfs)], sums[counts == len(idfs)]
-        allowed = None
-        if doc_predicate is not None and len(uniq):
-            allowed = ix.filter_doc_ints(doc_predicate)
         if allowed is not None:
-            pos = np.minimum(np.searchsorted(allowed, uniq), max(len(allowed) - 1, 0))
-            m = allowed[pos] == uniq if len(allowed) else np.zeros(len(uniq), dtype=bool)
+            m = _in_sorted(uniq, allowed)
             uniq, sums = uniq[m], sums[m]
         order = np.lexsort((uniq, -sums))  # exact final rank order
         if doc_predicate is not None and allowed is None and len(uniq):
@@ -455,7 +460,7 @@ def _probe_docmap(
     ix: IndexHandle, docs, scores, k: int, doc_predicate: Column
 ) -> list[tuple[int, float]]:
     """Top-k of rank-ordered candidates under a MUST predicate, for
-    corpora too large to pin a filter set: the first k candidates that
+    corpora too large to pin doc values: the first k candidates that
     satisfy it ARE the top-k (everything unprobed ranks below everything
     probed); the probe widens ×8 on the rare under-selective predicate."""
     probe = min(len(docs), max(50 * k, 500))
@@ -578,7 +583,7 @@ def _search(
     k: int,
     *,
     mode: str = "or",
-    doc_predicate: Column | None = None,
+    filters: dict | None = None,
     driver: bool | None = None,
 ) -> list[list[tuple[int, float]]]:
     """THE query core: each query's exact top-k (doc_int, raw score),
@@ -586,7 +591,10 @@ def _search(
     dictionary, no job) picks the placement: at most SERVING_DRIVER_MAX
     collects every blob in ONE bounded JVM action, each decoded once
     and scored per query in driver numpy; above it (or ``driver=False``)
-    the distributed placement scores on the cluster."""
+    the distributed placement scores on the cluster. The MUST filter
+    block ``filters`` is compiled once to a Catalyst predicate for the
+    Spark placements and resolved once to its doc_int set on the pinned
+    doc values for the driver ones."""
     meta = term_meta(ix, sorted({t for ts in queries for t in ts}))
     n_docs = ix.stats["n_docs"]
     qidfs = [
@@ -598,14 +606,16 @@ def _search(
     terms = sorted({t for idfs in qidfs for t in idfs})
     if not terms:
         return [[] for _ in queries]
+    pred = compile_filters(filters)
+    allowed = ix.filter_doc_ints(filters) if pred is not None else None
     full = _term_postings(ix, {t: meta[t] for t in terms})
     total_df = sum(meta[t][0] for t in terms)
     if driver is None:
         driver = total_df <= SERVING_DRIVER_MAX
     if driver:
         rows = full.select("term", "postings").collect()  # JVM-only, Σ-df bounded
-        return _driver_top_k(ix, rows, qidfs, k, mode, doc_predicate)
-    return _search_distributed(ix, full, qidfs, k, mode, doc_predicate, total_df)
+        return _driver_top_k(ix, rows, qidfs, k, mode, pred, allowed)
+    return _search_distributed(ix, full, qidfs, k, mode, pred, allowed, total_df)
 
 
 def _search_distributed(
@@ -615,6 +625,7 @@ def _search_distributed(
     k: int,
     mode: str,
     doc_predicate: Column | None,
+    allowed: np.ndarray | None,
     total_df: int,
 ) -> list[list[tuple[int, float]]]:
     """Distributed placement of :func:`_search`: the θ pass on large
@@ -638,7 +649,7 @@ def _search_distributed(
         and ix.stats["n_docs"] >= PRUNE_MIN_DOCS
         and (len(qidfs) == 1 or total_df >= PRUNE_MIN_POSTINGS)
     ):
-        scan, thetas, _ = _prune(ix, full, qidfs, k, doc_predicate)
+        scan, thetas, _ = _prune(ix, full, qidfs, k, doc_predicate, allowed)
     agg = _aggregate(ix, scan, qidfs, thetas, doc_predicate)
     if mode == "and":  # a one-query mode: one scorer row per (term, doc)
         agg = agg.where(F.col("_nt") == len(qidfs[0]))
@@ -651,26 +662,27 @@ def search_index(
     terms: list[str],
     *,
     k: int = S.TOP_K,
-    doc_predicate: Column | None = None,
+    filters: dict | None = None,
     mode: str = "or",
 ) -> DataFrame:
     """Top-k (doc_id, score) over the postings index — rank-identical to
-    the direct path; a one-query :func:`_search`. ``doc_predicate``
-    filters candidate docs via docmap (MUST block, reference
-    search.go:133-139); df/idf stay corpus-global. ``mode="and"`` keeps
-    only docs matching every term (posting-list intersection, J4;
-    block-max pruning is off there).
+    the direct path; a one-query :func:`_search`. ``filters`` is the
+    FilterRequest of the MUST block (reference search.go:133-139,
+    :mod:`..filters`): it restricts candidate docs, while df/idf stay
+    corpus-global. ``mode="and"`` keeps only docs matching every term
+    (posting-list intersection, J4; block-max pruning is off there).
 
     Job budget on a warm handle (artifact frames, term dictionary and
-    doc names pinned): ONE job when Σ df fits SERVING_DRIVER_MAX — the
-    bucket+term-pruned postings collect scored in driver numpy — plus
-    one docmap job the first time a MUST predicate is seen (its filter
-    set is pinned for repeats). Above the cap: one score+top-k job
-    (TakeOrderedAndProject over the postings scan), plus the θ pass's
-    metadata and candidate jobs when block-max pruning engages (large
-    corpora). Only corpora too large to pin add a terms and a docmap
-    point-read."""
-    (top,) = _hydrate(ix, _search(ix, [terms], k, mode=mode, doc_predicate=doc_predicate))
+    doc values pinned): ONE job when Σ df fits SERVING_DRIVER_MAX — the
+    bucket+term-pruned postings collect scored in driver numpy — with
+    or without ``filters``, whose doc set is evaluated on the pinned
+    doc values. Above the cap: one score+top-k job
+    (TakeOrderedAndProject over the postings scan, the MUST block a
+    docmap semi-join), plus the θ pass's metadata and candidate jobs
+    when block-max pruning engages (large corpora). Only corpora too
+    large to pin add a terms point-read, a docmap probe per filtered
+    query and a docmap point-read for the names."""
+    (top,) = _hydrate(ix, _search(ix, [terms], k, mode=mode, filters=filters))
     return _result_df(ix.spark, top)
 
 
@@ -835,6 +847,7 @@ def _prune(
     qidfs: list[dict[str, float]],
     k: int,
     doc_predicate: Column | None = None,
+    allowed: np.ndarray | None = None,
 ) -> tuple[DataFrame, dict[int, float], dict]:
     """The block-max θ pass of the distributed placement →
     ``(scan, thetas, picked)``: the (term, seg) rows left to decode,
@@ -865,7 +878,10 @@ def _prune(
     metadata in driver pandas when #terms × max_segs fits
     _META_COLLECT_MAX, else distributed (:class:`_SparkSegMeta`); the θ
     candidates scored in driver numpy when the picked volume fits
-    SERVING_DRIVER_MAX, else by the distributed scorer. ``qubs`` rides a
+    SERVING_DRIVER_MAX, else by the distributed scorer. A MUST filter
+    comes in both renderings: ``doc_predicate`` for the distributed
+    candidates, ``allowed`` (its doc_int set on the pinned doc values,
+    None when they are not pinned) for the driver ones. ``qubs`` rides a
     broadcast join (postings never shuffle) when #queries × max_segs
     fits _QUBS_BROADCAST_MAX; without it one-term queries still skip."""
     nq = len(qidfs)
@@ -897,7 +913,7 @@ def _prune(
         head = full.where(in_picked).select("term", "postings")
         sub = [idfs if q in pending else {} for q, idfs in enumerate(qidfs)]
         if picked_n <= SERVING_DRIVER_MAX:
-            tops = _driver_top_k(ix, head.collect(), sub, k, doc_predicate=doc_predicate)
+            tops = _driver_top_k(ix, head.collect(), sub, k, "or", doc_predicate, allowed)
         else:
             tops = _collect_top_k(_aggregate(ix, head, sub, None, doc_predicate), nq, k)
         thetas.update({q: top[-1][1] for q, top in enumerate(tops) if len(top) == k})

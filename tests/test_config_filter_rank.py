@@ -14,7 +14,7 @@ from searchengine_spark.configs import (
     RankConfig,
     default_transcripts_index_config,
 )
-from searchengine_spark.filters import FilterError, compile_filters
+from searchengine_spark.filters import ARROW, FilterError, compile_filters
 from searchengine_spark.rank import apply_ranking
 from searchengine_spark.validate import ValidationError, validate_document, validate_sort_field
 
@@ -118,12 +118,77 @@ def test_filter_bool_and_one_select(spark):
 
 
 def test_filter_errors():
-    with pytest.raises(FilterError):
-        compile_filters({"range": [{"name": "x", "type": "geo", "from_value": "0", "to_value": "1"}]})
-    with pytest.raises(FilterError):
-        compile_filters({"range": [{"name": "x", "type": "number", "from_value": "abc", "to_value": "1"}]})
-    with pytest.raises(FilterError):
-        compile_filters({"range": [{"name": "ts", "type": "timestamp", "from_value": "not-a-date", "to_value": "2025-01-01T00:00:00Z"}]})
+    for rendering in ({}, ARROW):  # the Catalyst and the pyarrow.compute rendering
+        with pytest.raises(FilterError):
+            compile_filters({"range": [{"name": "x", "type": "geo", "from_value": "0", "to_value": "1"}]}, **rendering)
+        with pytest.raises(FilterError):
+            compile_filters({"range": [{"name": "x", "type": "number", "from_value": "abc", "to_value": "1"}]}, **rendering)
+        with pytest.raises(FilterError):
+            compile_filters({"range": [{"name": "ts", "type": "timestamp", "from_value": "not-a-date", "to_value": "2025-01-01T00:00:00Z"}]}, **rendering)
+
+
+@pytest.fixture(scope="module", params=["timestamp_ntz", "timestamp"])
+def pinned_ix(request, spark, transcripts, tmp_path_factory):
+    """The transcripts index, its ``ts`` column stored as either Spark
+    timestamp type."""
+    from searchengine_spark.index.build import build_index
+    from searchengine_spark.index.catalog import IndexCatalog
+    from searchengine_spark.index.engine import open_index
+
+    docs = transcripts.withColumn("ts", F.col("ts").cast(request.param))
+    cat = IndexCatalog(str(tmp_path_factory.mktemp("filters") / request.param))
+    build_index(spark, docs, cat, n_buckets=4)
+    return open_index(spark, cat)
+
+
+def _ts_range(lo: str, hi: str) -> dict:
+    return {"name": "ts", "type": "timestamp", "from_value": lo, "to_value": hi}
+
+
+PARITY_REQUESTS = {
+    "category": {"category": "Assistant"},
+    "one-select-lowercase-col": {"one-select": [{"name": "role", "value": "ToOl"}]},
+    "one-select-lower-col": {"one-select": [{"name": "conv_id", "value": "C0000003"}]},
+    "multi-select-lowercase-col": {"multi-select": [{"name": "role", "value": ["User", "SYSTEM"]}]},
+    "multi-select-lower-col": {
+        "multi-select": [
+            {"name": "conv_id", "value": [f"C{i:07d}" for i in range(0, 40, 2)]},
+            {"name": "tool", "value": ["Bash", "SEARCH"]},
+        ],
+    },
+    "number-range": {"range": [{"name": "turn_idx", "type": "number", "from_value": "2", "to_value": "5.5"}]},
+    # c0000000's turns 1 and 4 sit exactly on the edges
+    "timestamp-range": {"range": [_ts_range("2025-01-01T00:00:13Z", "2025-01-01T00:00:52Z")]},
+    "two-ranges-or": {
+        "category": "user",
+        "range": [
+            _ts_range("2025-01-01T01:00:00+01:00", "2025-01-01T00:05:00Z"),
+            {"name": "turn_idx", "type": "number", "from_value": "30", "to_value": "39"},
+        ],
+    },
+    "nothing": {"category": "assistant", "one-select": [{"name": "role", "value": "user"}]},
+}
+
+
+@pytest.mark.parametrize("name", sorted(PARITY_REQUESTS))
+def test_arrow_filter_parity(pinned_ix, spark_jobs, name):
+    """The pyarrow.compute rendering of a FilterRequest, evaluated on
+    the pinned doc values with no Spark job, selects exactly the doc_int
+    set the Catalyst rendering selects from docmap."""
+    req = PARITY_REQUESTS[name]
+    pinned_ix.doc_values()
+    got = []
+    assert spark_jobs(lambda: got.append(pinned_ix.filter_doc_ints(req))) == []
+    dm = pinned_ix.docmap()
+    want = [r["doc_int"] for r in dm.where(compile_filters(req)).orderBy("doc_int").collect()]
+    assert got[0].tolist() == want
+    if name == "nothing":
+        assert want == []
+    else:
+        assert 0 < len(want) < pinned_ix.stats["n_docs"]
+    if name == "timestamp-range":
+        edges = dm.where((F.col("conv_id") == "c0000000") & F.col("turn_idx").isin(1, 4))
+        assert {r["doc_int"] for r in edges.collect()} <= set(want)
 
 
 # ------------------------------------------------------------------- rank ---

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from searchengine_spark.filters import compile_filters
 from searchengine_spark.index import build as B
 from searchengine_spark.index.build import build_index
 from searchengine_spark.index.catalog import IndexCatalog
@@ -62,6 +63,10 @@ def _qidfs(ix, queries):
     return [{t: _idf(ix.stats["n_docs"], meta[t][0]) for t in ts if t in meta} for ts in queries]
 
 
+# MUST filter blocks as FilterRequests (role is the category field)
+ASSISTANT = {"category": "assistant"}
+ASSISTANT_SEARCH = {"category": "assistant", "one-select": [{"name": "tool", "value": "search"}]}
+
 QUERIES = [
     ["spark"],
     ["query", "plan", "shuffle"],
@@ -95,13 +100,12 @@ def test_driver_path_equals_distributed(ix, transcripts, monkeypatch):
     re-runs each query through the distributed path for comparison."""
     import searchengine_spark.index.engine as E
 
-    pred = (F.col("role") == "assistant") & (F.col("tool") == "search")
     cases = [
         (["spark"], {}),
         (["query", "plan", "shuffle"], {}),
         (["data", "model", "run"], {"k": 25}),
         (["data", "model"], {"mode": "and"}),
-        (["spark", "query"], {"doc_predicate": pred}),
+        (["spark", "query"], {"filters": ASSISTANT_SEARCH}),
         (["кепка", "шапка", "бейсболка", "панама"], {}),
     ]
     results_fast = [_pairs(search_index(ix, t, **kw)) for t, kw in cases]
@@ -119,9 +123,10 @@ def test_rank_identical_to_oracle(ix, oracle_index):
 
 
 def test_filtered_search(ix, transcripts):
-    pred = (F.col("role") == "assistant") & (F.col("tool") == "search")
-    got = _pairs(search_index(ix, ["spark", "query"], doc_predicate=pred))
-    want = _pairs(search_direct(transcripts, ["spark", "query"], doc_predicate=pred))
+    got = _pairs(search_index(ix, ["spark", "query"], filters=ASSISTANT_SEARCH))
+    want = _pairs(
+        search_direct(transcripts, ["spark", "query"], doc_predicate=compile_filters(ASSISTANT_SEARCH))
+    )
     assert got == want
 
 
@@ -265,11 +270,11 @@ def test_filtered_prune_expansion(spark, tmp_path_factory, monkeypatch):
     monkeypatch.setattr(E, "PRUNE_MIN_POSTINGS", 0)
     monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 0)  # force the distributed plan
 
-    pred = F.col("role") == "assistant"  # 12/2000 = 0.6 % selectivity
+    pred = compile_filters(ASSISTANT)  # 12/2000 = 0.6 % selectivity
     terms = ["needle"]
     k = 5
-    got = _pairs(search_index(ixp, terms, doc_predicate=pred, k=k))
-    want = _pairs(_unpruned(monkeypatch, lambda: search_index(ixp, terms, doc_predicate=pred, k=k)))
+    got = _pairs(search_index(ixp, terms, filters=ASSISTANT, k=k))
+    want = _pairs(_unpruned(monkeypatch, lambda: search_index(ixp, terms, filters=ASSISTANT, k=k)))
     assert got == want
     assert len(got) == k  # non-vacuous: the filter leaves ≥k matches
 
@@ -289,10 +294,12 @@ def test_filtered_prune_expansion(spark, tmp_path_factory, monkeypatch):
         full.select("term", "postings").mapInPandas(E._make_scorer(qidfs, avgdl), E._SCORED).count()
     )
     assert 0 < skipped < unskipped, (skipped, unskipped)
-    # the driver θ placement (pinned filter-set mask) expands to the
-    # same θ as the distributed candidate job above
+    # the driver θ placement expands to the same θ as the distributed
+    # candidate job above, masking with the pinned filter set or, when
+    # none is pinned, probing docmap
     monkeypatch.setattr(E, "SERVING_DRIVER_MAX", 2_000_000)
-    assert E._prune(ixp, full, qidfs, k, doc_predicate=pred)[1] == thetas
+    for allowed in (ixp.filter_doc_ints(ASSISTANT), None):
+        assert E._prune(ixp, full, qidfs, k, doc_predicate=pred, allowed=allowed)[1] == thetas
 
 
 def test_search_many_pruned_parity(spark, ix64, monkeypatch):
@@ -360,7 +367,7 @@ def test_search_many_pruned_parity(spark, ix64, monkeypatch):
     monkeypatch.setattr(E, "_META_COLLECT_MAX", 1_000_000)
 
     # corpus "too large" to pin doc names → ≤ #queries·k point-read hydration
-    monkeypatch.setattr(E, "DOC_NAME_CACHE_MAX", 0)
+    monkeypatch.setattr(E, "DOC_VALUES_MAX", 0)
     ix_cold = E.IndexHandle(spark, ix64.snapshot)
     assert ix_cold.doc_names() is None
     assert rows(search_many(ix_cold, batch)) == unpruned
@@ -369,11 +376,18 @@ def test_search_many_pruned_parity(spark, ix64, monkeypatch):
 def test_driver_cache_budgets(ix):
     """The pinned serving caches must hold their documented per-entry
     budgets (VERDICT r3: the old '~40 B/doc' dict sizing ignored
-    CPython overhead). doc_names is now one Arrow string column —
-    measured bytes come from the buffers themselves; term_dict stays a
-    dict (hash lookups) with a tracemalloc-measured ceiling."""
+    CPython overhead). The doc values are one Arrow table — measured
+    bytes come from the buffers themselves: 68-69 B/row on the
+    transcripts corpus (its 2,000-doc and 20,000-doc samples alike), so
+    a corpus at the DOC_VALUES_MAX cap of 5 M docs pins ~345 MB of
+    driver heap. term_dict stays a dict (hash lookups) with a
+    tracemalloc-measured ceiling."""
     import tracemalloc
 
+    dv = ix.doc_values()
+    assert dv is not None and dv.num_rows == ix.stats["n_docs"]
+    assert dv.column("doc_int").to_pylist() == list(range(dv.num_rows))  # row i is doc_int i
+    assert dv.nbytes / dv.num_rows <= 96, dv.nbytes / dv.num_rows
     names = ix.doc_names()
     assert names is not None and len(names) == ix.stats["n_docs"]
     per_entry = names.nbytes / len(names)
@@ -398,25 +412,34 @@ def test_driver_cache_budgets(ix):
 
 
 def test_warm_serving_job_budget(spark, catalog, spark_jobs):
-    """A warm handle serves from its pinned artifact frames: the
-    driver fast path is ONE Spark job (the Σdf-bounded postings
-    collect), a repeated MUST predicate reuses its pinned filter set,
-    and only a new predicate adds its one docmap job."""
+    """A warm handle serves from its pinned artifact frames and doc
+    values: the driver fast path is ONE Spark job (the Σdf-bounded
+    postings collect), and a MUST filter, first seen or repeated, adds
+    none — its doc set is evaluated on the pinned doc values."""
     ix = open_index(spark, catalog)  # fresh handle: nothing resolved yet
     ix.term_dict()
     ix.doc_names()
     search_index(ix, ["spark"]).collect()  # resolves the postings frame
 
-    def run(terms, pred=None):
-        return len(spark_jobs(lambda: search_index(ix, terms, doc_predicate=pred).collect()))
+    def run(terms, filters=None):
+        return len(spark_jobs(lambda: search_index(ix, terms, filters=filters).collect()))
 
     assert run(["query", "plan", "shuffle"]) == 1
     assert run(["data", "model"]) == 1
-    pred = (F.col("role") == "assistant") & (F.col("tool") == "search")
-    assert run(["spark", "query"], pred) == 2  # new predicate: filter set + collect
-    same = (F.col("role") == "assistant") & (F.col("tool") == "search")
+    assert run(["spark", "query"], ASSISTANT_SEARCH) == 1  # new filter: the collect only
+    same = {"category": "assistant", "one-select": [{"name": "tool", "value": "search"}]}
     assert run(["spark", "query"], same) == 1
     assert run(["data"], same) == 1  # filtered to nothing: the empty result adds no job
+
+    from searchengine_spark.api import advanced_search
+
+    def served(**kw):
+        return len(spark_jobs(lambda: advanced_search(ix, "spark query", **kw).collect()))
+
+    user_bash = {"category": "user", "one-select": [{"name": "tool", "value": "bash"}]}
+    assert served(filter_request=user_bash) == 1  # a first-seen filter
+    assert served(sort_field="ts") == 1
+    assert served(sort_field="ts", filter_request=ASSISTANT, from_=10) == 1
     from searchengine_spark.index.engine import search_many
 
     batch = {"qa": ["spark"], "qb": ["query", "plan", "shuffle"], "qc": ["data", "model"]}
@@ -454,16 +477,15 @@ def test_handle_pinned_across_republish(spark, transcripts, tmp_path):
     build_index(spark, transcripts, cat, n_buckets=4)
     old = open_index(spark, cat)
     terms = ["spark", "query"]
-    pred = F.col("role") == "assistant"
     want_old = _pairs(search_direct(transcripts, terms))
-    want_old_f = _pairs(search_direct(transcripts, terms, doc_predicate=pred))
+    want_old_f = _pairs(search_direct(transcripts, terms, doc_predicate=compile_filters(ASSISTANT)))
     assert _pairs(search_index(old, terms)) == want_old
 
     small = transcripts.orderBy("conv_id", "turn_idx").limit(200)
     build_index(spark, small, cat, n_buckets=4)
     assert _pairs(search_index(old, terms)) == want_old
     # a first filtered query after the swap still reads the old docmap
-    assert _pairs(search_index(old, terms, doc_predicate=pred)) == want_old_f
+    assert _pairs(search_index(old, terms, filters=ASSISTANT)) == want_old_f
 
     new = open_index(spark, cat)
     assert new.snapshot.snap_id == cat.current_id()
@@ -522,7 +544,7 @@ def test_large_corpus_fallback_paths(spark, transcripts, ix, monkeypatch):
     import searchengine_spark.index.engine as E
 
     monkeypatch.setattr(E, "TERM_CACHE_MAX", 0)
-    monkeypatch.setattr(E, "DOC_NAME_CACHE_MAX", 0)
+    monkeypatch.setattr(E, "DOC_VALUES_MAX", 0)
     ix2 = E.IndexHandle(spark, ix.snapshot)  # fresh handle, no caches
     terms = ["query", "plan", "shuffle"]
     assert _pairs(E.search_index(ix2, terms)) == _pairs(search_direct(transcripts, terms))
@@ -605,11 +627,11 @@ def test_block_max_pruning_engages_and_is_exact(spark, transcripts, ix64, monkey
         assert pruned == unpruned == direct
 
     # MUST-filtered queries prune too (θ established among allowed docs)
-    pred = F.col("role") == "assistant"
+    pred = compile_filters(ASSISTANT)
     for terms in (["query", "plan", "shuffle"], ["data", "model", "run"]):
-        pruned = _pairs(search_index(ix64, terms, doc_predicate=pred))
+        pruned = _pairs(search_index(ix64, terms, filters=ASSISTANT))
         unpruned = _pairs(
-            _unpruned(monkeypatch, lambda: search_index(ix64, terms, doc_predicate=pred))
+            _unpruned(monkeypatch, lambda: search_index(ix64, terms, filters=ASSISTANT))
         )
         direct = _pairs(search_direct(transcripts, terms, doc_predicate=pred))
         assert pruned == unpruned == direct
@@ -732,12 +754,12 @@ def test_wand_parity_fuzz(spark, tmp_path_factory, monkeypatch):
         cat = IndexCatalog(str(tmp_path_factory.mktemp("fuzz") / f"s{seed}"))
         build_index(spark, docs, cat, n_buckets=4)
         ixf = open_index(spark, cat)
-        pred = F.col("role") == "assistant"
+        pred = compile_filters(ASSISTANT)
         for _ in range(4):
             terms = rng.sample(vocab, rng.randint(1, 3))
             assert _pairs(search_index(ixf, terms)) == _pairs(
                 search_direct(docs, terms)
             ), (seed, terms)
             assert _pairs(
-                search_index(ixf, terms, doc_predicate=pred)
+                search_index(ixf, terms, filters=ASSISTANT)
             ) == _pairs(search_direct(docs, terms, doc_predicate=pred)), (seed, terms, "filtered")
