@@ -10,9 +10,10 @@ hot path is the Arrow ``applyInPandas`` segment encoder):
    ``monotonically_increasing_id()``'s per-partition counter, commit,
    then ``doc_int = offset[_pid] + _rank`` with offsets read from the
    committed files' parquet footers (the scalable zipWithIndex pattern —
-   no global window, no extra job, and immune to
-   ``repartitionByRange``'s sampled-boundary nondeterminism because the
-   ranged output is materialized exactly once).
+   no global window; the offsets ride in the plan as a literal map, so
+   numbering adds no job; and immune to ``repartitionByRange``'s
+   sampled-boundary nondeterminism because the ranged output is
+   materialized exactly once).
 2. **stats** — N, Σdl, avgdl collected by ``Observation`` during the
    docmap write (no extra pass) → stats.json.
 3. **tf** — explode tokens → ``groupBy(doc_int, dl, term).count()``;
@@ -31,8 +32,18 @@ hot path is the Arrow ``applyInPandas`` segment encoder):
    tiny segment table, not the tf table).
 
 Each stage commits a ledger entry (status, rows, seconds, throughput,
-skew ratio); re-running `build_index` with the same staging snapshot
-skips completed stages — kill/rerun resumes, never duplicates work.
+skew ratio, bytes written); re-running `build_index` with the same
+staging snapshot skips completed stages — kill/rerun resumes, never
+duplicates work.
+
+At rest, every serving artifact (``postings``, ``docmap``, ``terms``,
+and each CDC delta's parts in ``streaming/ingest.py``) is zstd Parquet
+with v2 data pages (:data:`ARTIFACT_PARQUET`): ints take
+DELTA_BINARY_PACKED and strings DELTA_BYTE_ARRAY, so the dense sorted
+``doc_int`` and the ``ts``/``doc_id`` columns shrink to a fraction of
+their PLAIN size. Readers need no change — each parquet footer names
+its own codec and encodings, so snapshots written before (snappy, v1
+pages) read as they always did.
 """
 
 from __future__ import annotations
@@ -51,6 +62,12 @@ from .catalog import IndexCatalog, Snapshot
 from .codec import BLOCK, SEG_SPAN, block_metadata
 
 DEFAULT_BUCKETS = 16
+
+# the one writer setting of every serving artifact: zstd pages, and
+# Parquet v2 data pages for the delta encodings (DELTA_BINARY_PACKED
+# ints, DELTA_BYTE_ARRAY strings). A per-writer option, not a session
+# conf, so a session the caller builds writes the same bytes
+ARTIFACT_PARQUET = {"compression": "zstd", "parquet.writer.version": "v2"}
 
 SEGMENT_SCHEMA = T.StructType(
     [
@@ -192,17 +209,18 @@ def partition_offsets(raw_dir: str, expected_rows: int | None = None) -> dict[in
 
 def with_doc_int(raw: DataFrame, offsets: dict[int, int]) -> DataFrame:
     """doc_int = offset[_pid] + _rank — dense 0-based rank of doc_id in
-    global string order (== the stable (conv_id, turn_idx) order)."""
-    off_df = F.broadcast(
-        raw.sparkSession.createDataFrame(
-            [(int(k), int(v)) for k, v in offsets.items()], "_pid INT, _off LONG"
-        )
-    )
-    return (
-        raw.join(off_df, "_pid")
-        .withColumn("doc_int", F.col("_off") + F.col("_rank"))
-        .drop("_pid", "_rank", "_off")
-    )
+    global string order (== the stable (conv_id, turn_idx) order).
+
+    The offsets (one per write task) ride in the plan as a literal map,
+    so the lookup adds no job — a broadcast join against a local frame
+    of them would cost one per use."""
+    off = F.create_map(*[
+        c for pid, o in sorted(offsets.items())
+        for c in (F.lit(int(pid)), F.lit(int(o)).cast("long"))
+    ])
+    return raw.withColumn(
+        "doc_int", (off[F.col("_pid")] + F.col("_rank")).cast("long")
+    ).drop("_pid", "_rank")
 
 
 # --------------------------------------------------------------------------
@@ -530,7 +548,7 @@ def build_index(
             try:
                 _set_stage_group(spark, "docmap")
                 t0 = time.perf_counter()
-                docmap.write.mode("overwrite").parquet(docmap_dir)
+                docmap.write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(docmap_dir)
                 dt = time.perf_counter() - t0
                 ledger.commit("docmap", rows=stats["n_docs"], seconds=round(dt, 3),
                               turns_per_sec=round(stats["n_docs"] / dt, 1),
@@ -610,16 +628,14 @@ def build_index(
         segs = part.groupBy("bucket", "seg").applyInPandas(encoder, SEGMENT_SCHEMA).observe(
             obs, F.count(F.lit(1)).alias("segments"), F.sum("n").alias("postings")
         )
-        if bucket_jobs == 1:
-            segs.write.mode("overwrite").partitionBy("bucket").parquet(postings_dir)
-        else:
+        writer = segs.write.options(**ARTIFACT_PARQUET).mode("overwrite")
+        if bucket_jobs > 1:
             # dynamic partition overwrite replaces ONLY this group's
             # bucket dirs — idempotent, so a group that crashed after
             # its write but before its ledger commit re-runs cleanly on
             # resume instead of appending duplicates
-            segs.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("bucket").parquet(postings_dir)
+            writer = writer.option("partitionOverwriteMode", "dynamic")
+        writer.partitionBy("bucket").parquet(postings_dir)
         dt = time.perf_counter() - t0
         got = obs.get
         seg_rows, post_n = got["segments"], got["postings"]
@@ -647,13 +663,14 @@ def build_index(
         obs = Observation("terms_rows")
         terms.observe(
             obs, F.count(F.lit(1)).alias("rows"), F.max("df").alias("max_df")
-        ).write.mode("overwrite").parquet(terms_dir)
+        ).write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(terms_dir)
         got = obs.get
         n_terms, max_df = int(got["rows"]), int(got["max_df"] or 0)
         # skew diagnostics for the north rule's heavy-hitter handling
         mean_df = stats["sum_dl"] / max(n_terms, 1)
         ledger.commit("terms", rows=n_terms, seconds=round(time.perf_counter() - t0, 3),
-                      max_df=max_df, skew_ratio=round(max_df / max(mean_df, 1e-9), 2))
+                      max_df=max_df, skew_ratio=round(max_df / max(mean_df, 1e-9), 2),
+                      bytes_written=_dir_bytes(terms_dir))
 
     # ---- join the overlapped docmap stage before publishing ----------------
     if docmap_thread is not None:

@@ -6,16 +6,19 @@ The reference delegates posting storage to Bleve's zapx segments
 Our layout is the columnar analogue (BASELINE.json north_star: "delta-gap
 + varint-style compression stored as binary columns"):
 
-- a posting **segment** is one row of the postings table:
-  ``(term, seg, n, first_doc, last_doc, postings BINARY,
-  block_last_doc ARRAY<BIGINT>, block_max_score ARRAY<DOUBLE>)``;
+- a posting **segment** is one row of the postings table
+  (``build.SEGMENT_SCHEMA``): ``(bucket, term, seg, n, first_doc,
+  last_doc, postings BINARY, block_last_doc ARRAY<BIGINT>,
+  block_max_tfnorm ARRAY<DOUBLE>, seg_max_tfnorm DOUBLE, sum_tf BIGINT)``;
 - ``postings`` is a single LEB128 varint stream of ``3*n`` values
   ``[doc0, tf0, dl0, gap1, tf1, dl1, ...]`` — doc ids are delta-gapped
   (ascending), tf/dl stored inline so query-time scoring needs **no join
   back to a doc table**;
 - block metadata every ``BLOCK`` entries carries the block's last docID
-  and an upper bound on the per-entry BM25 contribution — the block-max
-  structures used for WAND-style pruning (north_rule).
+  and its max BM25 tf-norm; times the query-time idf that bounds every
+  entry's contribution — the block-max structures used for WAND-style
+  pruning (north_rule). ``seg_max_tfnorm`` is the same bound over the
+  whole row, and ``sum_tf`` its collection frequency share.
 
 Everything here is plain numpy on host memory; Spark calls it from Arrow
 pandas UDFs (one call per segment group, vectorized inside).
@@ -124,8 +127,9 @@ def block_metadata(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Per-block (last_doc, max_score) for WAND-style skipping.
 
-    ``scores`` are the exact per-entry BM25 contributions of this term
-    (idf * tf_norm), computed at build time when idf/avgdl are known.
+    ``scores`` are the per-entry values to bound; the build passes each
+    entry's BM25 tf-norm (avgdl is known at build time, idf is not), so
+    ``max_score * idf`` bounds the block's contributions at query time.
     """
     n = len(doc_ints)
     if n == 0:

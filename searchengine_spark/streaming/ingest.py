@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 from .. import semantics as S
 from ..functions.text import doc_id_col, tokens_no_stop
 from ..index.build import (
+    ARTIFACT_PARQUET,
     SEGMENT_SCHEMA,
     _make_segment_encoder,
     bucket_col,
@@ -87,8 +88,8 @@ from ..index.engine import (
 
 # doc-count threshold above which apply_batch switches from the single
 # window doc_int assignment to the two-phase committed-parquet scan
-# (same pattern as the batch build) — keeps tiny micro-batches cheap
-# (one job) while large CDC batches never funnel through one task
+# (same pattern as the batch build) — spares tiny micro-batches the
+# staged write while large CDC batches never funnel through one task
 LARGE_BATCH_DOCS = 65536
 
 # source helpers tag the DataFrames they return so ingest_stream can
@@ -392,7 +393,12 @@ class StreamingIndex:
         driver list or an ``isin`` literal tree. doc_int assignment
         likewise switches to the batch build's two-phase
         committed-parquet scan above ``LARGE_BATCH_DOCS`` — below it a
-        single-window row_number keeps tiny micro-batches at one job.
+        single-window row_number numbers the docs with no staged write.
+        A small batch runs 8 Spark jobs: 3 for the tombstones write
+        (its cached last-write-wins window included), 1 for upserts, 2
+        for the docmap (the window's exchange runs as its own job) and
+        2 for the postings. Every part is written as
+        :data:`..index.build.ARTIFACT_PARQUET` (zstd, v2 pages).
         """
         with self._write_lock:
             self._apply_batch_locked(batch, epoch_id)
@@ -425,7 +431,7 @@ class StreamingIndex:
 
         tomb_obs = Observation(f"tombstones_{epoch_id}")
         last.select("doc_id").observe(tomb_obs, F.count(F.lit(1)).alias("n")) \
-            .write.mode("overwrite").parquet(os.path.join(tmp, "tombstones"))
+            .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "tombstones"))
         n_tombstones = int(tomb_obs.get["n"])
         if n_tombstones == 0:
             # empty trigger (e.g. socket batch 0): nothing to apply —
@@ -435,7 +441,7 @@ class StreamingIndex:
             return
         up_obs = Observation(f"upserts_{epoch_id}")
         upserts.observe(up_obs, F.count(F.lit(1)).alias("n")) \
-            .write.mode("overwrite").parquet(os.path.join(tmp, "upserts"))
+            .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "upserts"))
         n_up = int(up_obs.get["n"])
 
         # --- mini index over the new rows (same layout as the base) ----
@@ -476,7 +482,7 @@ class StreamingIndex:
         tok.select("doc_int", "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl") \
             .observe(dm_obs, F.count(F.lit(1)).alias("n"),
                      F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl")) \
-            .write.mode("overwrite").parquet(os.path.join(tmp, "docmap"))
+            .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "docmap"))
         n_docs, sum_dl = int(dm_obs.get["n"]), int(dm_obs.get["sdl"])
 
         base = self.catalog.current()
@@ -490,7 +496,7 @@ class StreamingIndex:
             .withColumn("seg", (F.col("doc_int") / F.lit(SEG_SPAN)).cast("long"))
         )
         tf.groupBy("bucket", "seg").applyInPandas(encoder, SEGMENT_SCHEMA) \
-            .write.mode("overwrite").parquet(os.path.join(tmp, "postings"))
+            .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "postings"))
 
         shutil.rmtree(os.path.join(tmp, "docmap_raw"), ignore_errors=True)
         meta = {

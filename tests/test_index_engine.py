@@ -763,3 +763,129 @@ def test_wand_parity_fuzz(spark, tmp_path_factory, monkeypatch):
             assert _pairs(
                 search_index(ixf, terms, filters=ASSISTANT)
             ) == _pairs(search_direct(docs, terms, doc_predicate=pred)), (seed, terms, "filtered")
+
+
+def test_with_doc_int_one_job(spark, tmp_path, spark_jobs):
+    """``doc_int = offsets[_pid] + _rank`` over a committed
+    multi-partition frame is one Spark job: the offsets ride in the plan
+    as a literal map, not a broadcast join against a local frame."""
+    ranked = (
+        spark.range(0, 1000, numPartitions=4)
+        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_rank", F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)))
+    )
+    raw_dir = str(tmp_path / "raw")
+    ranked.write.parquet(raw_dir)
+    raw = spark.read.schema(ranked.schema).parquet(raw_dir)
+    offsets = B.partition_offsets(raw_dir, expected_rows=1000)
+    assert len(offsets) == 4
+    # past 2^31, so the sum must be long arithmetic
+    offsets = {pid: o + (1 << 40) for pid, o in offsets.items()}
+    got: list = []
+    numbered = B.with_doc_int(raw, offsets)
+    assert len(spark_jobs(lambda: got.extend(numbered.collect()))) == 1
+    assert dict(numbered.dtypes)["doc_int"] == "bigint"
+    want = {r["id"]: offsets[r["_pid"]] + r["_rank"] for r in raw.collect()}
+    assert {r["id"]: r["doc_int"] for r in got} == want
+    assert sorted(want.values()) == [(1 << 40) + i for i in range(1000)]
+
+
+def test_ledger_bytes_match_snapshot(catalog):
+    """The ledger records the on-disk size of all three serving
+    artifacts: for a ``bucket_jobs=1`` build, docmap + postings-0 +
+    terms bytes equal the published snapshot's three directories."""
+    snap = catalog.current()
+    led = snap.manifest["ledger"]
+    assert "postings-1" not in led
+    for stage, path in (("docmap", snap.docmap_dir), ("postings-0", snap.postings_dir),
+                        ("terms", snap.terms_dir)):
+        assert led[stage]["bytes_written"] == B._dir_bytes(path) > 0, stage
+
+
+def _parquet_files(path):
+    import glob
+    import os
+
+    files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
+    assert files, path
+    return files
+
+
+def _chunks(path):
+    """(file, column path, compression, encodings) of every column
+    chunk of every parquet file under ``path``, from the footers."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in _parquet_files(path):
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(rg).column(c)
+                out.append((f, col.path_in_schema, col.compression, set(col.encodings)))
+    return out
+
+
+def test_artifacts_zstd_v2_and_old_snapshots_read(spark, transcripts, tmp_path):
+    """Every serving artifact — a snapshot's postings/docmap/terms and a
+    CDC delta's four parts — is written as zstd column chunks, and the
+    docmap's dense ``doc_int`` takes the v2 DELTA_BINARY_PACKED
+    encoding. A snapshot whose docmap and postings are snappy Parquet v1
+    (as written before) reads with no fallback code: the same results
+    for a multi-term and a filtered query, base alone and under a delta."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    from searchengine_spark.streaming import StreamingIndex
+    from searchengine_spark.streaming.ingest import message_schema
+
+    root = str(tmp_path / "store")
+    s = StreamingIndex(spark, root)
+    s.bootstrap(transcripts)
+    msgs = [{"seq": i, "doc_id": f"zfmt:{i:04d}", "delete": False,
+             "doc": {"conv_id": "zfmt", "turn_idx": i, "role": "assistant",
+                     "text": f"spark query format body {i}", "tool": "search",
+                     "ts": "2025-02-01T00:00:00"}} for i in range(5)]
+    (tmp_path / "batch.json").write_text("".join(json.dumps(m) + "\n" for m in msgs))
+    s.apply_batch(spark.read.schema(message_schema()).json(str(tmp_path / "batch.json")), 0)
+
+    snap = s.catalog.current()
+    parts = [snap.postings_dir, snap.docmap_dir, snap.terms_dir] + [
+        os.path.join(s.delta_root, "delta-0", p)
+        for p in ("tombstones", "upserts", "docmap", "postings")
+    ]
+    for path in parts:
+        assert {c[2] for c in _chunks(path)} == {"ZSTD"}, path
+    for path in (snap.docmap_dir, os.path.join(s.delta_root, "delta-0", "docmap")):
+        doc_int = [c[3] for c in _chunks(path) if c[1] == "doc_int"]
+        assert doc_int and all("DELTA_BINARY_PACKED" in e for e in doc_int), path
+
+    multi, filtered = ["spark", "query", "plan"], dict(ASSISTANT_SEARCH)
+
+    def answers():
+        ix = open_index(spark, s.catalog)
+        live = StreamingIndex(spark, root)  # a fresh object: nothing pinned
+        return (_pairs(search_index(ix, multi)),
+                _pairs(search_index(ix, multi, filters=filtered)),
+                _pairs(live.search(multi)))
+
+    want = answers()
+    assert want[0] == _pairs(search_direct(transcripts, multi))
+    assert want[1] == _pairs(
+        search_direct(transcripts, multi, doc_predicate=compile_filters(filtered))
+    )
+    assert want[1] and any(d.startswith("zfmt:") for d, _ in want[2])
+
+    # rewrite the base docmap and postings in place as snappy v1 pages,
+    # keeping every file name (the stale .crc checksums go with them)
+    for path in (snap.docmap_dir, snap.postings_dir):
+        for f in _parquet_files(path):
+            table = pq.ParquetFile(f).read()
+            pq.write_table(table, f, compression="snappy", data_page_version="1.0")
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+        assert {c[2] for c in _chunks(path)} == {"SNAPPY"}, path
+    assert answers() == want
