@@ -63,7 +63,7 @@ from .codec import BLOCK, SEG_SPAN, block_metadata
 
 DEFAULT_BUCKETS = 16
 
-# the one writer setting of every serving artifact: zstd pages, and
+# the one writer setting of every serving artifact: zstd compression, and
 # Parquet v2 data pages for the delta encodings (DELTA_BINARY_PACKED
 # ints, DELTA_BYTE_ARRAY strings). A per-writer option, not a session
 # conf, so a session the caller builds writes the same bytes

@@ -15,10 +15,11 @@ Our layout is the columnar analogue (BASELINE.json north_star: "delta-gap
   (ascending), tf/dl stored inline so query-time scoring needs **no join
   back to a doc table**;
 - block metadata every ``BLOCK`` entries carries the block's last docID
-  and its max BM25 tf-norm; times the query-time idf that bounds every
-  entry's contribution — the block-max structures used for WAND-style
-  pruning (north_rule). ``seg_max_tfnorm`` is the same bound over the
-  whole row, and ``sum_tf`` its collection frequency share.
+  and the max BM25 tf-norm of its entries, which times the query-time
+  idf bounds each entry's contribution — the block-max structures used
+  for WAND-style pruning (north_rule). ``seg_max_tfnorm`` is the same
+  bound over the whole row, and ``sum_tf`` the row's share of the
+  term's collection frequency.
 
 Everything here is plain numpy on host memory; Spark calls it from Arrow
 pandas UDFs (one call per segment group, vectorized inside).
