@@ -128,17 +128,19 @@ def advanced_search(
 
     # explicit sort overrides ranking entirely (R4, rank.go:100-110):
     # candidates = any-term matches ∧ filters, ordered by the field
-    # (desc NULLS LAST / asc NULLS FIRST, doc_id asc on ties). The match
-    # set is built with bucket + term parquet pushdown and, like the
-    # scoring path, collected and decoded driver-side when Σ df is
-    # bounded. With the doc values pinned that collect is the ONE job:
-    # the filter set and the sort key are read from the pinned table
-    # (:func:`_sort_pinned`). Corpora too large to pin semi-join the
-    # match set to docmap and TakeOrdered on the key; heavy terms keep
-    # the distributed decode.
+    # (desc NULLS LAST / asc NULLS FIRST, doc_id asc on ties). When Σ df
+    # is bounded the match set is decoded driver-side from the engine's
+    # driver-placement rows (:func:`..index.engine._driver_postings`): a
+    # slice of the handle's pinned postings, or one bucket + term pruned
+    # collect on an index too large to pin. With the doc values pinned
+    # too, the filter set and the sort key are read from the pinned
+    # table (:func:`_sort_pinned`), so the request runs no Spark job.
+    # Corpora too large to pin semi-join the match set to docmap and
+    # TakeOrdered on the key; heavy terms keep the distributed decode.
     from .index.engine import (
         _SCORED,
         SERVING_DRIVER_MAX,
+        _driver_postings,
         _empty,
         _make_scorer,
         _score_rows,
@@ -148,11 +150,10 @@ def advanced_search(
 
     tmeta = term_meta(ix, terms)
     ones = [{t: 1.0 for t in tmeta}]  # the match set needs no idf
-    cand = _term_postings(ix, tmeta).select("term", "postings")
     key = F.col(sort_field).desc() if sort_desc else F.col(sort_field).asc()
     bounded = sum(df for df, _ in tmeta.values()) <= SERVING_DRIVER_MAX
     if bounded:
-        rows = cand.collect() if tmeta else []  # Σ-df bounded
+        rows = _driver_postings(ix, tmeta) if tmeta else []
         uniq = _score_rows(rows, ones, ix.stats["avgdl"])[0][0]
     if bounded and ix.doc_values() is not None:
         hits = _sort_pinned(ix, uniq, filter_request, sort_field, sort_desc, from_, k)
@@ -167,7 +168,9 @@ def advanced_search(
             )
         else:
             matched = (
-                cand.mapInPandas(_make_scorer(ones, ix.stats["avgdl"]), _SCORED)
+                _term_postings(ix, tmeta)
+                .select("term", "postings")
+                .mapInPandas(_make_scorer(ones, ix.stats["avgdl"]), _SCORED)
                 .select("doc_int")
                 .distinct()
             )

@@ -10,8 +10,10 @@ top-k). A single query is a one-query batch: :func:`search_index` and
    is too large to pin) and scan only the postings **buckets** the terms
    hash to, with ``term IN (...)`` pushed to parquet row groups;
 2. place the scoring by Σ df, known before any job runs. At most
-   ``SERVING_DRIVER_MAX`` postings are collected in one JVM action and
-   scored in driver numpy (:func:`_driver_top_k`); above it one
+   ``SERVING_DRIVER_MAX`` postings are scored in driver numpy
+   (:func:`_driver_top_k`), read from the handle's pinned postings or,
+   on an index too large to pin, collected in one JVM action
+   (:func:`_driver_postings`); above it one
    ``mapInPandas`` scorer (:func:`_make_scorer`) decodes each
    (term, segment) row once, fans its contributions out to every query
    holding the term, and the sums are cut to top-k per query. Both
@@ -29,19 +31,24 @@ top-k). A single query is a one-query batch: :func:`search_index` and
 
 Serving state lives on the :class:`IndexHandle`: it resolves each
 artifact DataFrame (postings / terms / docmap) once and pins the term
-dictionary and the docmap driver-side — the docmap as one Arrow table
-in doc_int order, the analogue of Bleve's DocValues. Doc names, MUST
-filter sets (the :data:`..filters.ARROW` rendering of the FilterRequest)
-and explicit sort keys all read that table, so a warm query on the
-driver placement runs one Spark job (the Σdf-bounded postings collect),
-filtered or not. Re-reading the artifact on every access cost a parquet
-schema-inference job each time: on the sf0.01 serve benchmark
-(4 vCPUs) pinning the frames took ``search_index`` from 2 jobs to 1,
-and evaluating filters on the pinned doc values took a first-seen
-filter set from 1 job to 0. Resolving an artifact starts no job either:
-the build records each artifact's schema in the manifest. A published
-snapshot never changes; a new snapshot gets a new handle
-(:func:`open_index`).
+dictionary, the docmap and, on an index whose whole posting volume fits
+``SERVING_DRIVER_MAX``, the postings driver-side — the analogue of
+Bleve's in-memory segments. The docmap is one Arrow table in doc_int
+order (Bleve's DocValues): doc names, MUST filter sets (the
+:data:`..filters.ARROW` rendering of the FilterRequest) and explicit
+sort keys all read it. The postings are one Arrow table of (term,
+postings) rows that the driver placement slices. So a warm query on the
+driver placement of a pinned handle runs no Spark job, filtered or not;
+the first one pins the postings (one ``toArrow`` job), and an index too
+large to pin them runs one (the Σdf-bounded postings collect). Measured
+on the sf0.01 serve benchmark (4 vCPUs): pinning the frames took
+``search_index`` from 2 jobs to 1 (re-reading an artifact cost a
+parquet schema-inference job each time), evaluating filters on the
+pinned doc values took a first-seen filter set from 1 job to 0, and
+pinning the postings took a warm request from 1 job to 0. Resolving an
+artifact starts no job either: the build records each artifact's
+schema in the manifest. A published snapshot never changes; a new
+snapshot gets a new handle (:func:`open_index`).
 
 The result is rank-identical to :func:`..query.bm25.search_direct`
 (tested in tests/test_index_engine.py): same float64 expression shape,
@@ -57,6 +64,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -106,12 +114,17 @@ class _DocNames:
 
 # driver placement: when the queries' TOTAL posting count (Σ df over
 # the distinct terms, known driver-side from the term dictionary before
-# any job runs) is at most this, the matching segment blobs are
-# collected and scored in driver numpy — one JVM-only collect instead
-# of a mapInPandas job (no Python workers, no shuffle). This is the
-# Lucene/Bleve serving shape (one node scores a query); heavier work
-# keeps the distributed block-max path, so no unbounded driver transfer
-# can occur: Σ df bounds the decoded entries (~6 B/entry on the wire).
+# any job runs) is at most this, the matching segment blobs are scored
+# in driver numpy — no mapInPandas job (no Python workers, no shuffle).
+# This is the Lucene/Bleve serving shape (one node scores a query);
+# heavier work keeps the distributed block-max path, so no unbounded
+# driver transfer can occur: Σ df bounds the decoded entries (~6 B/entry
+# on the wire). The same cap gates pinning the postings on the handle:
+# an index whose WHOLE posting volume (Σ df over its term dictionary)
+# fits is pinned as one Arrow table. Measured at 3.6 B/posting on the
+# perfbench serve corpus (0.45 MB for 131,848 postings; 5.4 B on a
+# 2,000-doc index, whose term strings weigh more), so the worst case is
+# ~7-11 MB of driver heap (budget-tested alongside the term cache).
 SERVING_DRIVER_MAX = 2_000_000
 
 
@@ -122,8 +135,9 @@ class IndexHandle:
     Pins, each resolved on first use and kept for the handle's
     lifetime: the artifact DataFrames (``postings`` / ``terms`` /
     ``docmap`` — the parquet file listing and schema, or the
-    Iceberg read at the pinned ``snapshot-id``), the term dictionary
-    and the docmap's doc values (:meth:`doc_values`).
+    Iceberg read at the pinned ``snapshot-id``), the term dictionary,
+    the docmap's doc values (:meth:`doc_values`) and, on an index small
+    enough, the postings (:meth:`pinned_postings`).
     Pinning is safe because a published snapshot is write-once; a
     republish is a NEW snapshot, which needs a new handle
     (:func:`open_index`) — a handle held across it keeps answering from
@@ -213,6 +227,27 @@ class IndexHandle:
             return None
         expr = compile_filters(filters, **ARROW)
         return (dv if expr is None else dv.filter(expr)).column("doc_int").to_numpy()
+
+    def pinned_postings(self) -> "pa.Table | None":
+        """The snapshot's postings pinned driver-side as one Arrow table of
+        (term, postings) rows — the serving analogue of Bleve's in-memory
+        postings — or None when the index is too large to pin: its whole
+        posting volume, Σ df over the pinned term dictionary (no job),
+        exceeds SERVING_DRIVER_MAX, or the vocabulary itself is too large
+        to pin (TERM_CACHE_MAX). Pinned lazily by the first
+        driver-placement postings read (:func:`_driver_postings`), with
+        one Arrow-native transfer (``toArrow``)."""
+        cached = getattr(self, "_pinned_postings", False)
+        if cached is not False:
+            return cached
+        td = self.term_dict()
+        if td is None or sum(df for df, _ in td.values()) > SERVING_DRIVER_MAX:
+            self._pinned_postings = None
+        else:
+            self._pinned_postings = (
+                self.postings().select("term", "postings").toArrow().combine_chunks()
+            )
+        return self._pinned_postings
 
     def term_dict(self) -> dict[str, tuple[int, int]] | None:
         """Driver-cached term → (df, bucket), or None if the vocabulary
@@ -577,6 +612,18 @@ def _term_postings(ix: IndexHandle, meta: dict[str, tuple[int, int]]) -> DataFra
     )
 
 
+def _driver_postings(ix: IndexHandle, meta: dict[str, tuple[int, int]]) -> list:
+    """The (term, postings) rows of the terms in ``meta`` for a driver
+    placement: a slice of the handle's pinned postings (no Spark job),
+    or, when the index is too large to pin, one JVM-only collect of
+    :func:`_term_postings`. Either way Σ df over ``meta`` bounds the
+    rows' posting volume."""
+    pinned = ix.pinned_postings()
+    if pinned is None:
+        return _term_postings(ix, meta).select("term", "postings").collect()
+    return pinned.filter(pc.field("term").isin(list(meta))).to_pylist()
+
+
 def _search(
     ix: IndexHandle,
     queries: list[list[str]],
@@ -589,8 +636,9 @@ def _search(
     """THE query core: each query's exact top-k (doc_int, raw score),
     in rank order. Σ df over the distinct terms (from the term
     dictionary, no job) picks the placement: at most SERVING_DRIVER_MAX
-    collects every blob in ONE bounded JVM action, each decoded once
-    and scored per query in driver numpy; above it (or ``driver=False``)
+    reads every blob with :func:`_driver_postings` (the pinned postings,
+    or ONE bounded JVM collect), each decoded once and scored per query
+    in driver numpy; above it (or ``driver=False``)
     the distributed placement scores on the cluster. The MUST filter
     block ``filters`` is compiled once to a Catalyst predicate for the
     Spark placements and resolved once to its doc_int set on the pinned
@@ -608,13 +656,13 @@ def _search(
         return [[] for _ in queries]
     pred = compile_filters(filters)
     allowed = ix.filter_doc_ints(filters) if pred is not None else None
-    full = _term_postings(ix, {t: meta[t] for t in terms})
-    total_df = sum(meta[t][0] for t in terms)
+    used = {t: meta[t] for t in terms}
+    total_df = sum(df for df, _ in used.values())
     if driver is None:
         driver = total_df <= SERVING_DRIVER_MAX
     if driver:
-        rows = full.select("term", "postings").collect()  # JVM-only, Σ-df bounded
-        return _driver_top_k(ix, rows, qidfs, k, mode, pred, allowed)
+        return _driver_top_k(ix, _driver_postings(ix, used), qidfs, k, mode, pred, allowed)
+    full = _term_postings(ix, used)
     return _search_distributed(ix, full, qidfs, k, mode, pred, allowed, total_df)
 
 
@@ -673,15 +721,17 @@ def search_index(
     (posting-list intersection, J4; block-max pruning is off there).
 
     Job budget on a warm handle (artifact frames, term dictionary and
-    doc values pinned): ONE job when Σ df fits SERVING_DRIVER_MAX — the
-    bucket+term-pruned postings collect scored in driver numpy — with
-    or without ``filters``, whose doc set is evaluated on the pinned
-    doc values. Above the cap: one score+top-k job
-    (TakeOrderedAndProject over the postings scan, the MUST block a
-    docmap semi-join), plus the θ pass's metadata and candidate jobs
-    when block-max pruning engages (large corpora). Only corpora too
-    large to pin add a terms point-read, a docmap probe per filtered
-    query and a docmap point-read for the names."""
+    doc values pinned), when Σ df fits SERVING_DRIVER_MAX: NO job once
+    the handle has pinned its postings (the first such query pins them,
+    in one job), and ONE on an index too large to pin them (the
+    bucket+term-pruned postings collect). Either way the rows are
+    scored in driver numpy, with or without ``filters``, whose doc set
+    is evaluated on the pinned doc values. Above the cap: one
+    score+top-k job (TakeOrderedAndProject over the postings scan, the
+    MUST block a docmap semi-join), plus the θ pass's metadata and
+    candidate jobs when block-max pruning engages (large corpora). Only
+    corpora too large to pin add a terms point-read, a docmap probe per
+    filtered query and a docmap point-read for the names."""
     (top,) = _hydrate(ix, _search(ix, [terms], k, mode=mode, filters=filters))
     return _result_df(ix.spark, top)
 
@@ -702,10 +752,11 @@ def search_many(
     all query terms, each (term, segment) row decoded once and fanned
     out to every query holding the term, so per-job scheduling cost
     amortizes over the whole batch (serving N queries one-by-one pays
-    it N times). A warm Σ-df-bounded batch is one Spark job, like one
-    query. ``driver=False`` forces the distributed placement, whose
-    per-query top-k is a window partitioned by query; on large corpora
-    (PRUNE_MIN_DOCS) with a real decode volume (Σ df ≥
+    it N times). A warm Σ-df-bounded batch has the job budget of one
+    query (:func:`search_index`): none on a handle that has pinned its
+    postings, else one. ``driver=False`` forces the distributed
+    placement, whose per-query top-k is a window partitioned by query;
+    on large corpora (PRUNE_MIN_DOCS) with a real decode volume (Σ df ≥
     PRUNE_MIN_POSTINGS) it runs the θ pass first (:func:`_prune`)."""
     qids = sorted(queries)
     tops = _hydrate(ix, _search(ix, [queries[q] for q in qids], k, driver=driver))

@@ -225,6 +225,62 @@ def test_search_many_matches_singles(spark, ix, ix64, monkeypatch):
     check(ix64)
 
 
+def test_pinned_postings_parity(spark, catalog, monkeypatch):
+    """A handle serving from its pinned postings answers exactly like a
+    handle that cannot pin them (TERM_CACHE_MAX = 0: no pinned term
+    dictionary, so no Σdf to gate the pin on) and like the distributed
+    placement (SERVING_DRIVER_MAX = 0, ``driver=False``): doc ids,
+    rounded scores and order, for single, multi-term, OR and AND,
+    filtered, filtered-to-nothing, batched, fuzzy, synonym, sorted and
+    page-2 requests."""
+    import searchengine_spark.index.engine as E
+    from searchengine_spark.api import advanced_search
+    from searchengine_spark.index.engine import search_many
+
+    cases = [
+        (["spark"], {}),
+        (["query", "plan", "shuffle"], {}),
+        (["data", "model", "run"], {"k": 25}),
+        (["spark", "query"], {"mode": "and"}),
+        (["data", "model"], {"mode": "and"}),
+        (["spark", "query"], {"filters": ASSISTANT_SEARCH}),
+        (["data"], {"filters": ASSISTANT_SEARCH}),  # matches nothing
+        (["кепка", "шапка", "бейсболка", "панама"], {}),
+    ]
+    requests = [
+        ("spark query", {}),
+        ("serach qurey plna", {}),  # fuzzy
+        ("кепка", {"synonyms": True}),
+        ("spark query", {"filter_request": ASSISTANT, "from_": 10}),
+        ("data model", {"sort_field": "ts"}),
+        ("data model", {"sort_field": "ts", "sort_desc": False, "from_": 10}),
+        ("data model", {"sort_field": "turn_idx", "sort_desc": False, "filter_request": ASSISTANT}),
+    ]
+    batch = {"qa": ["spark"], "qb": ["query", "plan", "shuffle"], "qc": ["data", "model", "run"]}
+
+    def answers(ix, driver=None):
+        return (
+            [_pairs(search_index(ix, t, **kw)) for t, kw in cases],
+            [tuple(r) for r in search_many(ix, batch, driver=driver).collect()],
+            [[tuple(r) for r in advanced_search(ix, q, **kw).collect()] for q, kw in requests],
+        )
+
+    ix = open_index(spark, catalog)
+    pinned = answers(ix)
+    assert ix.pinned_postings() is not None
+    singles, many, served = pinned
+    assert all(singles[i] for i in (0, 1, 3, 5, 7)) and singles[6] == []  # non-vacuous
+    assert many and all(served)
+    with monkeypatch.context() as m:
+        m.setattr(E, "TERM_CACHE_MAX", 0)
+        cold = E.IndexHandle(spark, ix.snapshot)
+        assert answers(cold) == pinned
+        assert cold.pinned_postings() is None
+    with monkeypatch.context() as m:
+        m.setattr(E, "SERVING_DRIVER_MAX", 0)
+        assert answers(ix, driver=False) == pinned
+
+
 def test_filtered_prune_expansion(spark, tmp_path_factory, monkeypatch):
     """Under a highly selective MUST filter (0.6 % of docs) the θ pick
     set expands geometrically until θ is established among ALLOWED docs
@@ -380,7 +436,8 @@ def test_driver_cache_budgets(ix):
     bytes come from the buffers themselves: 68-69 B/row on the
     transcripts corpus (its 2,000-doc and 20,000-doc samples alike), so
     a corpus at the DOC_VALUES_MAX cap of 5 M docs pins ~345 MB of
-    driver heap. term_dict stays a dict (hash lookups) with a
+    driver heap. The pinned postings are one Arrow table too, bounded
+    per posting. term_dict stays a dict (hash lookups) with a
     tracemalloc-measured ceiling."""
     import tracemalloc
 
@@ -396,6 +453,16 @@ def test_driver_cache_budgets(ix):
     # spot-check correctness of the dense indexing
     row = ix.docmap().where(F.col("doc_int") == 7).select("doc_id").collect()[0]
     assert names[7] == row["doc_id"]
+    # the pinned postings: (term, varint blob) rows, in bytes per posting.
+    # Measured 5.4 B on this 2,000-doc corpus (71,836 B for 13,279
+    # postings; the per-row term strings weigh more on a small index)
+    # and 3.6 B on the 20,000-turn perfbench serve corpus (473,413 B for
+    # 131,848), so an index at the SERVING_DRIVER_MAX cap of 2 M postings
+    # pins ~7-11 MB, and ≤ 24 MB at this bound
+    pp = ix.pinned_postings()
+    n_postings = sum(df for df, _ in ix.term_dict().values())
+    assert pp is not None and pp.column_names == ["term", "postings"]
+    assert pp.nbytes / n_postings <= 12, pp.nbytes / n_postings
 
     from searchengine_spark.index.engine import IndexHandle
 
@@ -411,40 +478,75 @@ def test_driver_cache_budgets(ix):
     assert measured <= 300, measured
 
 
-def test_warm_serving_job_budget(spark, catalog, spark_jobs):
-    """A warm handle serves from its pinned artifact frames and doc
-    values: the driver fast path is ONE Spark job (the Σdf-bounded
-    postings collect), and a MUST filter, first seen or repeated, adds
-    none — its doc set is evaluated on the pinned doc values."""
-    ix = open_index(spark, catalog)  # fresh handle: nothing resolved yet
-    ix.term_dict()
-    ix.doc_names()
-    search_index(ix, ["spark"]).collect()  # resolves the postings frame
+def test_warm_serving_job_budget(spark, catalog, spark_jobs, monkeypatch):
+    """A warm handle serves from its pinned artifact frames, doc values
+    and postings. On an index whose whole posting volume fits
+    SERVING_DRIVER_MAX the first driver-placement read pins the postings
+    (one job); after that no request runs a Spark job — single,
+    multi-term, filtered (first seen, repeated, or matching nothing),
+    fuzzy, synonym, sorted, page-2 and batched alike. A handle that
+    cannot pin its postings runs ONE job per request (the Σdf-bounded
+    postings collect), and a MUST filter adds none: its doc set is
+    evaluated on the pinned doc values."""
+    import pyspark.sql
 
-    def run(terms, filters=None):
-        return len(spark_jobs(lambda: search_index(ix, terms, filters=filters).collect()))
-
-    assert run(["query", "plan", "shuffle"]) == 1
-    assert run(["data", "model"]) == 1
-    assert run(["spark", "query"], ASSISTANT_SEARCH) == 1  # new filter: the collect only
-    same = {"category": "assistant", "one-select": [{"name": "tool", "value": "search"}]}
-    assert run(["spark", "query"], same) == 1
-    assert run(["data"], same) == 1  # filtered to nothing: the empty result adds no job
-
+    import searchengine_spark.index.engine as E
     from searchengine_spark.api import advanced_search
-
-    def served(**kw):
-        return len(spark_jobs(lambda: advanced_search(ix, "spark query", **kw).collect()))
-
-    user_bash = {"category": "user", "one-select": [{"name": "tool", "value": "bash"}]}
-    assert served(filter_request=user_bash) == 1  # a first-seen filter
-    assert served(sort_field="ts") == 1
-    assert served(sort_field="ts", filter_request=ASSISTANT, from_=10) == 1
     from searchengine_spark.index.engine import search_many
 
+    same = {"category": "assistant", "one-select": [{"name": "tool", "value": "search"}]}
+    user_bash = {"category": "user", "one-select": [{"name": "tool", "value": "bash"}]}
     batch = {"qa": ["spark"], "qb": ["query", "plan", "shuffle"], "qc": ["data", "model"]}
-    assert len(spark_jobs(lambda: search_many(ix, batch).collect())) == 1
+
+    def warm():
+        ix = open_index(spark, catalog)  # fresh handle: nothing resolved yet
+        ix.term_dict()
+        ix.doc_names()
+        return ix
+
+    def budget(ix):
+        def run(terms, filters=None):
+            return len(spark_jobs(lambda: search_index(ix, terms, filters=filters).collect()))
+
+        def served(query="spark query", **kw):
+            return len(spark_jobs(lambda: advanced_search(ix, query, **kw).collect()))
+
+        return {
+            "multi": run(["query", "plan", "shuffle"]),
+            "heavy": run(["data", "model"]),
+            "new filter": run(["spark", "query"], ASSISTANT_SEARCH),
+            "same filter": run(["spark", "query"], same),
+            "filtered to nothing": run(["data"], same),
+            "served filter": served(filter_request=user_bash),
+            "fuzzy": served("serach qurey"),
+            "synonym": served("кепка", synonyms=True),
+            "page 2": served(from_=10),
+            "sorted": served(sort_field="ts"),
+            "sorted page 2": served(sort_field="ts", filter_request=ASSISTANT, from_=10),
+            "search_many": len(spark_jobs(lambda: search_many(ix, batch).collect())),
+        }
+
+    ix = warm()
+    assert len(spark_jobs(lambda: search_index(ix, ["spark"]).collect())) == 1  # the pin
+    assert ix.pinned_postings() is not None
+    got = budget(ix)
+    assert got == dict.fromkeys(got, 0)
     assert ix.postings() is ix.postings() and ix.docmap() is ix.docmap()
+
+    # an index whose posting volume exceeds the cap never pins: every
+    # request stays the one postings collect
+    n_postings = sum(df for df, _ in ix.term_dict().values())
+    monkeypatch.setattr(E, "SERVING_DRIVER_MAX", n_postings - 1)
+    ix = warm()
+
+    def no_pin(self):
+        raise AssertionError("an over-cap index must not pin its postings")
+
+    monkeypatch.setattr(pyspark.sql.DataFrame, "toArrow", no_pin)
+    assert len(spark_jobs(lambda: search_index(ix, ["spark"]).collect())) == 1
+    assert ix.pinned_postings() is None
+    got = budget(ix)
+    assert got == dict.fromkeys(got, 1)
 
 
 def test_artifact_schemas_from_manifest(spark, catalog, spark_jobs):
@@ -480,12 +582,19 @@ def test_handle_pinned_across_republish(spark, transcripts, tmp_path):
     want_old = _pairs(search_direct(transcripts, terms))
     want_old_f = _pairs(search_direct(transcripts, terms, doc_predicate=compile_filters(ASSISTANT)))
     assert _pairs(search_index(old, terms)) == want_old
+    pinned = old.pinned_postings()  # pinned before the swap
+    assert pinned is not None
 
     small = transcripts.orderBy("conv_id", "turn_idx").limit(200)
     build_index(spark, small, cat, n_buckets=4)
     assert _pairs(search_index(old, terms)) == want_old
     # a first filtered query after the swap still reads the old docmap
     assert _pairs(search_index(old, terms, filters=ASSISTANT)) == want_old_f
+    # ... and the old handle keeps serving from its own pinned postings
+    assert old.pinned_postings() is pinned
+    assert _pairs(search_index(old, ["data", "model"])) == _pairs(
+        search_direct(transcripts, ["data", "model"])
+    )
 
     new = open_index(spark, cat)
     assert new.snapshot.snap_id == cat.current_id()
