@@ -86,6 +86,7 @@ from pyspark.sql.types import (
 )
 
 from ..staging import commit_staged, staged_from
+from .events import session_confs
 
 SENTINEL_CONV = "\x00sentinel"
 
@@ -447,20 +448,14 @@ def run_assembly(
             "append",
             GroupStateTimeout.EventTimeTimeout,
         )
-    # both confs bind at query START; set just around start/drain and
-    # restore (queries run sequentially in this process, so the
-    # temporary session-conf change is not observable by other work):
+    # both confs bind at query START, so they are set just around it:
     # - shuffle partitions → state partition count (checkpoint-pinned)
     # - arrow batch size: the WithState serializer bin-packs groups
     #   into shared Arrow batches up to this row count; the default
     #   10k re-pays batch overhead every ~1.4k conversations (measured
     #   12 s → ~9 s at sf0.1 when raised)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_arrow = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1048576")
-    try:
+    arrow_batch = {"spark.sql.execution.arrow.maxRecordsPerBatch": 1_048_576}
+    with session_confs(spark, {"spark.sql.shuffle.partitions": state_partitions, **arrow_batch}):
         q = (
             stream.writeStream.format("memory")
             .queryName(name)
@@ -469,9 +464,6 @@ def run_assembly(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev_arrow)
     # materialize off the memory sink, then drop the temp view: the
     # sink holds emitted rows in driver memory for as long as the view
     # pins it, so repeated calls in one session would otherwise leak

@@ -26,6 +26,8 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,6 +42,21 @@ EVENT_SCHEMA = (
     "event_id LONG, ts TIMESTAMP_NTZ, user_id LONG, event_type STRING, "
     "value DOUBLE, props STRING"
 )
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict) -> Iterator[None]:
+    """Set the session confs ``confs`` (None values skipped) for the body
+    and restore them after, also when it raises. Session confs are global,
+    so this assumes one thread runs one query at a time in the session."""
+    prev = {k: spark.conf.get(k) for k, v in confs.items() if v is not None}
+    try:
+        for k in prev:
+            spark.conf.set(k, str(confs[k]))
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def nats_source(spark: SparkSession, url: str, subject: str) -> DataFrame:
@@ -167,10 +184,7 @@ def events_sessionize_stream(
             F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
         )
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with session_confs(spark, {"spark.sql.shuffle.partitions": state_partitions}):
         q = (
             stream.writeStream.format("memory")
             .queryName(name)
@@ -179,8 +193,6 @@ def events_sessionize_stream(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # materialize off the memory sink, then drop the temp view: the
     # sink accumulates emitted rows in driver memory for as long as the
     # view pins it, so repeated calls in one session would otherwise
@@ -240,10 +252,7 @@ def events_hourly_rollup(
             F.round(F.sum("value"), S.SCORE_DECIMALS).alias("sum_value"),
         )
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with session_confs(spark, {"spark.sql.shuffle.partitions": state_partitions}):
         q = (
             stream.writeStream.format("memory")
             .queryName(name)
@@ -252,8 +261,6 @@ def events_hourly_rollup(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # materialize + drop the sink view (same driver-memory-leak
     # rationale as events_sessionize_stream)
     res = spark.table(name).localCheckpoint(eager=True)

@@ -816,6 +816,40 @@ def test_sessionize_stream_matches_batch(spark):
     assert all(r[0] >= 0 for r in stream)  # sentinel user filtered
 
 
+@pytest.mark.parametrize("drain", ["rollup", "sessionize", "assembly"])
+def test_drain_restores_session_confs(spark, tmp_path, monkeypatch, drain):
+    """A stream drain sets the state partition count (and, for the
+    conversation assembly, the Arrow batch size) only around its query:
+    the prior session values come back when ``start()`` raises."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from searchengine_spark.streaming import assemble, events
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.execution.arrow.maxRecordsPerBatch")
+    before = [spark.conf.get(k) for k in keys]
+    at_start = []
+
+    def failing_start(self, *args, **kwargs):
+        at_start.append([spark.conf.get(k) for k in keys])
+        raise RuntimeError("injected start failure")
+
+    empty = str(tmp_path / "stream")
+    os.makedirs(empty)
+    monkeypatch.setattr(events, "stage_events_dir", lambda sf_dir: empty)
+    monkeypatch.setattr(events, "stage_sessionize_dir", lambda sf_dir, gap: empty)
+    monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+    run = {
+        "rollup": lambda: events.events_hourly_rollup(spark, empty, state_partitions=3),
+        "sessionize": lambda: events.events_sessionize_stream(spark, empty, state_partitions=3),
+        "assembly": lambda: assemble.run_assembly(spark, empty, state_partitions=3),
+    }[drain]
+    with pytest.raises(RuntimeError, match="injected start failure"):
+        run()
+    batch = "1048576" if drain == "assembly" else before[1]
+    assert at_start == [["3", batch]] and before != at_start[0]
+    assert [spark.conf.get(k) for k in keys] == before
+
+
 @pytest.mark.parametrize("shards", [None, 8])
 def test_conv_assembly_merges_state_across_batches(spark, tmp_path, shards):
     """A conversation whose turns arrive in DIFFERENT micro-batches must
