@@ -38,6 +38,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .catalog import Snapshot
 
@@ -197,14 +198,17 @@ class IcebergIndexCatalog:
         """Promote stage-<id> parquet into the artifact tables (atomic
         ``createOrReplace`` each), then land ONE manifests append that
         pins every table's resulting Iceberg snapshot id — the commit
-        point readers switch on."""
+        point readers switch on. Each staged artifact is read with the
+        schema the build recorded in the manifest, which starts no
+        footer-inference job."""
         stage = os.path.join(self.root, f"stage-{snap_id}")
         manifest = dict(manifest)
         manifest.setdefault("snap_id", snap_id)
         manifest.setdefault("published_at", time.time())
         pins: dict[str, int] = {}
         for a in ARTIFACTS:
-            df: DataFrame = self.spark.read.parquet(os.path.join(stage, a))
+            schema = StructType.fromJson(manifest["schemas"][a])
+            df: DataFrame = self.spark.read.schema(schema).parquet(os.path.join(stage, a))
             writer = df.writeTo(self.ident(a)).using("iceberg")
             if a == "postings":
                 writer = writer.partitionedBy(F.col("bucket"))
