@@ -51,8 +51,11 @@ from __future__ import annotations
 import json
 import os
 import time
-import pandas as pd
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -68,6 +71,26 @@ DEFAULT_BUCKETS = 16
 # ints, DELTA_BYTE_ARRAY strings). A per-writer option, not a session
 # conf, so a session the caller builds writes the same bytes
 ARTIFACT_PARQUET = {"compression": "zstd", "parquet.writer.version": "v2"}
+
+
+def write_artifact(table: pa.Table, path: str) -> None:
+    """Write an Arrow table as a one-file parquet dir at ``path`` with the
+    settings of :data:`ARTIFACT_PARQUET`: zstd (parquet-mr's default
+    level 3) and v2 data pages, ``doc_int`` DELTA_BINARY_PACKED as
+    Spark's v2 writer gives the dense sorted column. A driver-written
+    part thus reads and sizes like a Spark-written one."""
+    os.makedirs(path, exist_ok=True)
+    delta = [c for c in table.column_names if c == "doc_int"]
+    pq.write_table(
+        table,
+        os.path.join(path, "part-00000.zstd.parquet"),
+        compression="zstd",
+        compression_level=3,
+        data_page_version="2.0",
+        use_dictionary=[c for c in table.column_names if c not in delta],
+        column_encoding=dict.fromkeys(delta, "DELTA_BINARY_PACKED") or None,
+    )
+
 
 SEGMENT_SCHEMA = T.StructType(
     [
@@ -183,8 +206,6 @@ def partition_offsets(raw_dir: str, expected_rows: int | None = None) -> dict[in
     guards against a commit-protocol mismatch: any discrepancy would
     silently corrupt doc_int assignment, so it is a hard error."""
     import re
-
-    import pyarrow.parquet as pq
 
     counts: dict[int, int] = {}
     for name in os.listdir(raw_dir):
@@ -359,11 +380,13 @@ def _collect_task_metrics(spark, prefix: str = "seng:") -> dict[str, dict]:
         d = d[len("file:"):]
     if not d:
         return {}
-    # a JobEnd event flushes the log writer — run one tiny tagged job so
-    # everything up to here is on disk before we read it
-    _set_stage_group(spark, "_flush")
-    spark.range(1).collect()  # one job (a count runs two under AQE)
-    sc.setLocalProperty("spark.jobGroup.id", None)
+    # the event logger flushes on every JobEnd: once the listener bus has
+    # drained, the build's last JobEnd — and every event before it — is
+    # on disk. Waiting starts no job; a timeout parses what is there
+    try:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    except Py4JJavaError:  # TimeoutException: per-task rows are best effort
+        pass
 
     import glob
 
@@ -394,7 +417,7 @@ def _collect_task_metrics(spark, prefix: str = "seng:") -> dict[str, dict]:
     for e in _events():
         if e.get("Event") == "SparkListenerJobStart":
             g = (e.get("Properties") or {}).get("spark.jobGroup.id") or ""
-            if g.startswith(prefix) and not g.startswith(prefix + "_"):
+            if g.startswith(prefix):
                 for si in e.get("Stage Infos", []):
                     stage2group[int(si["Stage ID"])] = g[len(prefix):]
     groups: dict[str, list[dict]] = {}
@@ -677,6 +700,8 @@ def build_index(
         docmap_thread.join()
         if docmap_err:
             raise docmap_err[0]
+    # later jobs on this thread are not the build's
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
 
     # ---- publish -----------------------------------------------------------
     # build_seconds is pinned BEFORE the lineage parse: per-task metrics

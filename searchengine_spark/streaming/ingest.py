@@ -44,9 +44,11 @@ Spark-native equivalent (merge-on-read, Iceberg-style):
 
 Every artifact this module wrote itself is re-read with its declared
 schema (``DELTA_SCHEMAS``; the corpus with the schema of the frame last
-written), so no read starts a parquet footer-inference job. One CDC
-cycle (``apply_batch`` → live search → ``compact()``) on the offline
-benchmark (4 vCPUs) went from 44 Spark jobs to 25.
+written), so no read starts a parquet footer-inference job. A small
+micro-batch is applied with one Spark job that collects it; the driver
+writes the delta. One CDC cycle on the offline benchmark (4 vCPUs,
+500-message batches) runs 14 Spark jobs: ``apply_batch`` 1, live search
+2, ``compact()`` 11.
 """
 
 from __future__ import annotations
@@ -58,8 +60,14 @@ import threading
 import time
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from .. import semantics as S
 from ..functions.text import doc_id_col, tokens_no_stop
@@ -71,8 +79,9 @@ from ..index.build import (
     build_index,
     partition_offsets,
     with_doc_int,
+    write_artifact,
 )
-from ..index.catalog import IndexCatalog
+from ..index.catalog import IndexCatalog, Snapshot
 from ..index.codec import SEG_SPAN
 from ..index.engine import (
     _SCORED,
@@ -86,10 +95,11 @@ from ..index.engine import (
     term_meta,
 )
 
-# doc-count threshold above which apply_batch switches from the single
-# window doc_int assignment to the two-phase committed-parquet scan
-# (same pattern as the batch build) — spares tiny micro-batches the
-# staged write while large CDC batches never funnel through one task
+# message count up to which apply_batch collects a micro-batch and builds
+# its delta on the driver (one Spark job); a larger batch drops that
+# probe and runs the distributed build, numbering docs with the batch
+# build's two-phase committed-parquet scan, so its per-doc state never
+# crosses the driver or funnels through one task
 LARGE_BATCH_DOCS = 65536
 
 # source helpers tag the DataFrames they return so ingest_stream can
@@ -116,6 +126,35 @@ DELTA_SCHEMAS = {
 # (T = pending tombstones) with one IN list and collects the T
 # tombstones; above this many it keeps the distributed plan
 LIVE_POINT_READ_MAX = 16384
+
+
+def _arrow_schema(schema: str | StructType) -> pa.Schema:
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    return to_arrow_schema(schema)
+
+
+def _encode_postings(
+    tokens: pa.ListArray, buckets: pa.ListArray, doc_int: np.ndarray, dl: pa.Array, avgdl: float
+) -> pa.Table:
+    """Postings of a driver-placed batch: the upserts' token occurrences
+    grouped by (bucket, seg), each group through the base build's segment
+    encoder (skip-bound metadata from the base avgdl), as the distributed
+    placement groups its tf rows."""
+    owner = pc.list_parent_indices(tokens).to_numpy()
+    occ = pd.DataFrame({
+        "term": pc.list_flatten(tokens).to_numpy(zero_copy_only=False),
+        "bucket": pc.list_flatten(buckets).to_numpy(),
+        "doc_int": doc_int[owner],
+        "dl": dl.fill_null(0).to_numpy()[owner],
+    })
+    occ["seg"] = occ["doc_int"] // SEG_SPAN
+    encoder = _make_segment_encoder(avgdl)
+    groups = [encoder(g.reset_index(drop=True)) for _, g in occ.groupby(["bucket", "seg"])]
+    schema = _arrow_schema(SEGMENT_SCHEMA)
+    if not groups:
+        return schema.empty_table()
+    return pa.Table.from_pandas(pd.concat(groups), schema=schema, preserve_index=False)
 
 
 def _union(frames: list[DataFrame]) -> DataFrame:
@@ -384,31 +423,86 @@ class StreamingIndex:
         """One micro-batch → one immutable delta dir (idempotent by name:
         a re-delivered epoch overwrites the same delta).
 
-        No per-doc state crosses the driver: the batch's tombstone set
-        (every touched doc_id — an upsert tombstones the previous
-        version) is written as ``tombstones/`` parquet inside the delta
-        and later consumed via joins (:meth:`current_docs`,
-        :meth:`search`); ``meta.json`` carries only counts. A large CDC
-        batch (10^6+ upserts in one epoch) therefore never builds a
-        driver list or an ``isin`` literal tree. doc_int assignment
-        likewise switches to the batch build's two-phase
-        committed-parquet scan above ``LARGE_BATCH_DOCS`` — below it a
-        single-window row_number numbers the docs with no staged write.
-        A small batch runs 8 Spark jobs: 3 for the tombstones write
-        (its cached last-write-wins window included), 1 for upserts, 2
-        for the docmap (the window's exchange runs as its own job) and
-        2 for the postings. Every part is written as
+        The delta holds the batch's last write per doc_id: its
+        ``tombstones`` (every touched doc_id — an upsert tombstones the
+        previous version, consumed later via joins in
+        :meth:`current_docs` and :meth:`search`), its ``upserts``, their
+        ``docmap`` numbered densely in doc_id order from the
+        :meth:`_next_doc_int` watermark, and a mini posting index built
+        with the base build's segment encoder; ``meta.json`` carries
+        only counts. Every part is written as
         :data:`..index.build.ARTIFACT_PARQUET` (zstd, v2 pages).
+
+        Two placements, split on the message count by
+        ``LARGE_BATCH_DOCS``. One Spark job collects at most
+        ``LARGE_BATCH_DOCS + 1`` messages as Arrow, tokens and buckets
+        computed in the JVM; when they all fit, the driver applies
+        last-write-wins, numbers, encodes and writes the four parts
+        (:meth:`_apply_driver`) — one job per small batch. A larger batch
+        drops that probe and runs the distributed build
+        (:meth:`_apply_distributed`): its per-doc state never crosses
+        the driver, and doc_int comes from the batch build's two-phase
+        committed-parquet scan.
         """
         with self._write_lock:
-            self._apply_batch_locked(batch, epoch_id)
+            t0 = time.perf_counter()
+            base = self.catalog.current()
+            nb = base.manifest["n_buckets"]
+            tokens = tokens_no_stop(F.col("doc.text"))
+            probe = batch.select(
+                "seq", "doc_id", F.coalesce(F.col("delete"), F.lit(False)).alias("delete"),
+                "doc.conv_id", "doc.turn_idx", "doc.role", "doc.text", "doc.tool",
+                # the corpus parquet is TIMESTAMP_NTZ; session TZ is UTC so
+                # this cast is value-preserving for the stream's ISO strings
+                F.col("doc.ts").cast("timestamp_ntz").alias("ts"),
+                doc_id_col("doc.conv_id", "doc.turn_idx").alias("key"),
+                tokens.alias("tokens"),
+                F.transform(tokens, lambda t: bucket_col(t, nb)).alias("buckets"),
+            ).limit(LARGE_BATCH_DOCS + 1).toArrow()
+            if probe.num_rows > LARGE_BATCH_DOCS:
+                self._apply_distributed(batch, epoch_id, t0)
+            else:
+                self._apply_driver(probe, base, epoch_id, t0)
 
-    def _apply_batch_locked(self, batch: DataFrame, epoch_id: int) -> None:
-        t0 = time.perf_counter()
-        ddir = os.path.join(self.delta_root, f"delta-{epoch_id}")
-        tmp = os.path.join(self.delta_root, f".tmp-{epoch_id}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
+    def _apply_driver(self, msgs: pa.Table, base: Snapshot, epoch_id: int, t0: float) -> None:
+        """Driver placement of :meth:`apply_batch` over the collected
+        messages, in pyarrow and numpy; writes no part of an empty batch."""
+        if msgs.num_rows == 0:
+            return  # empty trigger (e.g. socket batch 0): publish no delta
+        # last-write-wins inside the batch (arrival order = seq): the
+        # first row of each doc_id run once sorted by seq descending
+        msgs = msgs.take(pc.sort_indices(msgs, [("doc_id", "ascending"), ("seq", "descending")]))
+        ids = msgs["doc_id"].to_numpy(zero_copy_only=False)
+        first = np.ones(len(ids), dtype=bool)
+        first[1:] = ids[1:] != ids[:-1]
+        last = msgs.filter(pa.array(first))
+        up = last.filter(pc.invert(last["delete"]))
+        up = up.take(pc.sort_indices(up["key"], null_placement="at_start"))
+
+        start = self._next_doc_int()
+        doc_int = np.arange(start, start + up.num_rows, dtype=np.int64)
+        tokens = up["tokens"].combine_chunks()
+        dl = pc.list_value_length(tokens)
+        parts = {
+            "tombstones": last,
+            "upserts": up,
+            "docmap": up.set_column(up.schema.get_field_index("doc_id"), "doc_id", up["key"])
+            .append_column("doc_int", pa.array(doc_int)).append_column("dl", dl),
+            "postings": _encode_postings(
+                tokens, up["buckets"].combine_chunks(), doc_int, dl, base.stats["avgdl"]
+            ),
+        }
+        tmp = self._fresh_tmp(epoch_id)
+        for name, tbl in parts.items():
+            schema = _arrow_schema(DELTA_SCHEMAS[name])
+            write_artifact(tbl.select(schema.names).cast(schema), os.path.join(tmp, name))
+        self._publish(tmp, epoch_id, t0, start, n_docs=up.num_rows,
+                      sum_dl=pc.sum(dl).as_py() or 0, n_tombstones=last.num_rows)
+
+    def _apply_distributed(self, batch: DataFrame, epoch_id: int, t0: float) -> None:
+        """Distributed placement of :meth:`apply_batch`, for batches above
+        ``LARGE_BATCH_DOCS`` messages: no per-doc state on the driver."""
+        tmp = self._fresh_tmp(epoch_id)
 
         # last-write-wins inside the batch (arrival order = seq)
         w = Window.partitionBy("doc_id").orderBy(F.desc("seq"))
@@ -422,20 +516,14 @@ class StreamingIndex:
             last.where(~F.coalesce(F.col("delete"), F.lit(False)))
             .select(
                 "doc.conv_id", "doc.turn_idx", "doc.role", "doc.text", "doc.tool",
-                # the corpus parquet is TIMESTAMP_NTZ; session TZ is UTC so
-                # this cast is value-preserving for the stream's ISO strings
                 F.col("doc.ts").cast("timestamp_ntz").alias("ts"),
             )
         )
-        from pyspark.sql import Observation
-
         tomb_obs = Observation(f"tombstones_{epoch_id}")
         last.select("doc_id").observe(tomb_obs, F.count(F.lit(1)).alias("n")) \
             .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "tombstones"))
         n_tombstones = int(tomb_obs.get["n"])
         if n_tombstones == 0:
-            # empty trigger (e.g. socket batch 0): nothing to apply —
-            # don't publish an empty delta
             last.unpersist()
             shutil.rmtree(tmp, ignore_errors=True)
             return
@@ -451,39 +539,31 @@ class StreamingIndex:
             doc_id_col().alias("doc_id"), "conv_id", "turn_idx", "role", "tool", "ts",
             tokens_no_stop("text").alias("tokens"),
         ).withColumn("dl", F.size("tokens"))
-        if n_up > LARGE_BATCH_DOCS:
-            # two-phase scalable zipWithIndex (same as the batch build):
-            # range-partition by doc_id, stamp (_pid, _rank), commit,
-            # then doc_int = start + offset[_pid] + _rank from the
-            # committed files' parquet footers — no global window
-            p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            raw_dir = os.path.join(tmp, "docmap_raw")
-            ranked = (
-                analyzed.repartitionByRange(p, "doc_id")
-                .sortWithinPartitions("doc_id")
-                .withColumn("_pid", F.spark_partition_id())
-                .withColumn(
-                    "_rank",
-                    F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)),
-                )
+        # two-phase scalable zipWithIndex (same as the batch build):
+        # range-partition by doc_id, stamp (_pid, _rank), commit, then
+        # doc_int = start + offset[_pid] + _rank from the committed
+        # files' parquet footers — no global window
+        p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        raw_dir = os.path.join(tmp, "docmap_raw")
+        ranked = (
+            analyzed.repartitionByRange(p, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .withColumn("_pid", F.spark_partition_id())
+            .withColumn(
+                "_rank",
+                F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)),
             )
-            ranked.write.mode("overwrite").parquet(raw_dir)
-            offsets = partition_offsets(raw_dir, expected_rows=n_up)
-            raw = self.spark.read.schema(ranked.schema).parquet(raw_dir)
-            tok = with_doc_int(raw, offsets).withColumn("doc_int", F.col("doc_int") + F.lit(start))
-        else:
-            tok = analyzed.withColumn(
-                "doc_int",
-                (F.lit(start) + F.row_number().over(Window.orderBy("doc_id")) - F.lit(1))
-                .cast("long"),
-            )
+        )
+        ranked.write.mode("overwrite").parquet(raw_dir)
+        offsets = partition_offsets(raw_dir, expected_rows=n_up)
+        raw = self.spark.read.schema(ranked.schema).parquet(raw_dir)
+        tok = with_doc_int(raw, offsets).withColumn("doc_int", F.col("doc_int") + F.lit(start))
         # N and Σdl are observed during the docmap write — no re-read
         dm_obs = Observation(f"docmap_{epoch_id}")
         tok.select("doc_int", "doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "dl") \
             .observe(dm_obs, F.count(F.lit(1)).alias("n"),
                      F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl")) \
             .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "docmap"))
-        n_docs, sum_dl = int(dm_obs.get["n"]), int(dm_obs.get["sdl"])
 
         base = self.catalog.current()
         nb = base.manifest["n_buckets"]
@@ -498,7 +578,21 @@ class StreamingIndex:
         tf.groupBy("bucket", "seg").applyInPandas(encoder, SEGMENT_SCHEMA) \
             .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "postings"))
 
-        shutil.rmtree(os.path.join(tmp, "docmap_raw"), ignore_errors=True)
+        shutil.rmtree(raw_dir, ignore_errors=True)
+        last.unpersist()
+        self._publish(tmp, epoch_id, t0, start, n_docs=int(dm_obs.get["n"]),
+                      sum_dl=int(dm_obs.get["sdl"]), n_tombstones=n_tombstones)
+
+    def _fresh_tmp(self, epoch_id: int) -> str:
+        tmp = os.path.join(self.delta_root, f".tmp-{epoch_id}")
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        return tmp
+
+    def _publish(self, tmp: str, epoch_id: int, t0: float, start: int, *,
+                 n_docs: int, sum_dl: int, n_tombstones: int) -> None:
+        """Write ``meta.json`` into the staged delta, then swap it in as
+        ``delta-<epoch>`` with one atomic rename."""
         meta = {
             "epoch": int(epoch_id),
             "n_docs": n_docs,
@@ -510,7 +604,7 @@ class StreamingIndex:
         }
         with open(os.path.join(tmp, "meta.json"), "w") as f:
             json.dump(meta, f)
-        last.unpersist()
+        ddir = os.path.join(self.delta_root, f"delta-{epoch_id}")
         shutil.rmtree(ddir, ignore_errors=True)
         os.replace(tmp, ddir)  # atomic publish of the delta
         # a re-delivered epoch overwrote delta-<n>: its old pin is stale
@@ -636,8 +730,6 @@ class StreamingIndex:
         tie-break is not known before step 2. A version is dead when its
         doc_int is below the ``doc_int_start`` of the latest delta that
         tombstoned its doc_id (the rule of the distributed placement)."""
-        import numpy as np
-
         spark = self.spark
         deltas = sorted(metas)
         parts = []

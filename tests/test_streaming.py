@@ -345,20 +345,109 @@ def test_delta_frames_start_no_job(placed, spark_jobs):
 
 
 def test_apply_batch_job_budget(spark, transcripts, tmp_path, spark_jobs):
-    """A small micro-batch lands in eight Spark jobs: N and Σdl come from
-    an Observation on the docmap write, and every delta part is re-read
-    with its declared schema."""
+    """A small micro-batch lands in one Spark job: the probe that collects
+    its messages with their tokens and buckets; the driver numbers,
+    encodes and writes all four delta parts."""
     s = StreamingIndex(spark, str(tmp_path / "store"))
     s.bootstrap(transcripts.limit(50))
     batch = _batch(spark, tmp_path, [_msg(i, "zjb", i, f"budget body tok{i}") for i in range(5)])
-    assert len(spark_jobs(lambda: s.apply_batch(batch, 0))) <= 8
+    assert len(spark_jobs(lambda: s.apply_batch(batch, 0))) == 1
+
+
+def _placement(monkeypatch, placement: str) -> None:
+    """Route ``apply_batch`` to one placement: the other one raises."""
+    from searchengine_spark.streaming import ingest as ing
+
+    def unreachable(*a, **kw):
+        raise AssertionError("wrong placement")
+
+    if placement == "driver":
+        monkeypatch.setattr(StreamingIndex, "_apply_distributed", unreachable)
+    else:
+        monkeypatch.setattr(ing, "LARGE_BATCH_DOCS", 2)
+        monkeypatch.setattr(StreamingIndex, "_apply_driver", unreachable)
+
+
+def test_apply_batch_placements_identical(spark, transcripts, tmp_path, monkeypatch):
+    """The driver and the distributed placement of ``apply_batch`` publish
+    the same delta: every row of all four parts (postings blobs
+    included), ``meta.json`` apart from ``seconds``, live search and
+    ``current_docs()``. The batch holds new docs, a re-upsert and a
+    delete of base docs, an in-batch upsert-then-delete, a doc whose
+    later ``seq`` arrives first, two docs sharing one ``seq``, and
+    upserts whose text analyzes to no token (dl 0)."""
+    from searchengine_spark.streaming.ingest import DELTA_SCHEMAS, message_schema
+
+    base = transcripts.orderBy("conv_id", "turn_idx").limit(60)
+    upd, dele = base.limit(2).collect()
+    msgs = [
+        _msg(1, "zpi", 0, "placement spark query zebraplace"),
+        _msg(2, "zpi", 1, "zebraplace zebraplace tokens again and again"),
+        _msg(3, upd["conv_id"], upd["turn_idx"], "rewritten base zebraplace"),
+        _msg(4, dele["conv_id"], dele["turn_idx"], "", delete=True),
+        _msg(5, "zpi", 2, "ephemeral zebraplace"),
+        _msg(6, "zpi", 2, "", delete=True),
+        _msg(9, "zpi", 3, "newest zebraplace wins"),
+        _msg(8, "zpi", 3, "stale text never visible"),
+        _msg(10, "zpi", 4, "shared seq one zebraplace"),
+        _msg(10, "zpi", 5, "shared seq two"),
+        _msg(11, "zpi", 6, ""),
+        _msg(12, "zpi", 7, "the and of"),
+    ]
+    batch = _batch(spark, tmp_path, msgs)
+    stores = {}
+    for placement in ("driver", "spark"):
+        s = StreamingIndex(spark, str(tmp_path / placement))
+        s.bootstrap(base)
+        with monkeypatch.context() as m:
+            _placement(m, placement)
+            s.apply_batch(batch, 0)
+        stores[placement] = s
+    drv, dist = stores["driver"], stores["spark"]
+
+    for part, ddl in DELTA_SCHEMAS.items():
+        rows = [
+            sorted(spark.read.schema(ddl).parquet(os.path.join(st.delta_root, "delta-0", part))
+                   .collect(), key=str)
+            for st in (drv, dist)
+        ]
+        assert rows[0] == rows[1], part
+        assert rows[0], part
+    dm = {r["doc_id"]: r["dl"] for r in drv._delta_frame(0, "docmap").collect()}
+    assert dm["zpi:0006"] == dm["zpi:0007"] == 0 and "zpi:0002" not in dm
+
+    metas = [st._delta_meta(0) for st in (drv, dist)]
+    for m in metas:
+        m.pop("seconds")
+    assert metas[0] == metas[1]
+    assert (metas[0]["n_docs"], metas[0]["n_tombstones"]) == (8, 10)
+
+    for terms in (["zebraplace"], ["spark", "query", "zebraplace"], ["newest", "stale"]):
+        assert _live_pairs(drv, terms, k=20) == _live_pairs(dist, terms, k=20)
+    live = [sorted(st.current_docs().collect(), key=str) for st in (drv, dist)]
+    assert live[0] == live[1]
+    texts = {(r["conv_id"], r["turn_idx"]): r["text"] for r in live[0]}
+    assert texts[("zpi", 3)] == "newest zebraplace wins" and ("zpi", 2) not in texts
+
+    # an empty batch publishes no delta and leaves no staging dir
+    drv.apply_batch(spark.createDataFrame([], message_schema()), 1)
+    assert drv.delta_ids() == [0]
+    assert sorted(os.listdir(drv.delta_root)) == ["delta-0"]
+    # a delete-only batch publishes tombstones and empty doc parts
+    drv.apply_batch(_batch(spark, tmp_path, [_msg(20, "zpi", 0, "", delete=True)]), 2)
+    meta = drv._delta_meta(2)
+    assert (meta["n_docs"], meta["sum_dl"], meta["n_tombstones"]) == (0, 0, 1)
+    assert meta["doc_int_start"] == meta["doc_int_end"] == metas[0]["doc_int_end"]
+    terms = ["zebraplace", "placement"]
+    assert _live_pairs(drv, terms) == [(d, sc) for d, sc in _live_pairs(dist, terms)
+                                       if d != "zpi:0000"]
 
 
 @pytest.mark.parametrize("large", [False, True])
 def test_apply_batch_meta_stats(spark, transcripts, tmp_path, monkeypatch, large):
-    """``meta.json``'s n_docs / sum_dl (observed during the docmap
-    write) equal the published docmap's row count and Σdl, on the
-    window path and on the two-phase ``LARGE_BATCH_DOCS`` path."""
+    """``meta.json``'s n_docs / sum_dl equal the published docmap's row
+    count and Σdl, on the driver placement and, above
+    ``LARGE_BATCH_DOCS`` messages, on the distributed one."""
     from searchengine_spark.streaming import ingest as ing
 
     if large:
@@ -592,7 +681,8 @@ def test_one_stream_per_index_contract(spark, transcripts):
 
 
 def test_large_batch_ingest(spark, transcripts):
-    """A large CDC batch (100k+ messages in ONE micro-batch) must land
+    """A large CDC batch (100k+ messages in ONE micro-batch, more than
+    ``LARGE_BATCH_DOCS``) drops the driver placement's probe and lands
     without any driver-side per-doc state: tombstones go to parquet
     (meta.json carries counts only) and doc_int assignment uses the
     two-phase committed-parquet scan — no single-partition window, no
@@ -656,23 +746,30 @@ def test_large_batch_ingest(spark, transcripts):
 @pytest.mark.parametrize("at_boundary", [True, False])
 def test_large_batch_boundary_delete_heavy(spark, transcripts, monkeypatch,
                                            at_boundary):
-    """The ``n_up > LARGE_BATCH_DOCS`` switch (window row_number vs
+    """The ``LARGE_BATCH_DOCS`` switch (driver placement vs distributed
     two-phase committed-parquet scan) exactly AT the boundary, with a
     delete-heavy batch (round-4 verdict item 7). The boundary operand
-    is the POST-LWW surviving-upsert count: deletes of base docs and
-    in-batch upsert-then-delete pairs inflate n_tombstones but must
-    not move n_up across the threshold. Both paths must agree on the
-    full observable contract: meta counts, dense unique doc_ints
-    assigned in doc_id order from the watermark, and merge-on-read
-    visibility. Threshold is monkeypatched small so the test pins the
-    boundary itself, not a 65k-row ingest (the real-size two-phase
-    path is covered by test_large_batch_ingest)."""
+    is the batch's MESSAGE count: deletes of base docs and in-batch
+    upsert-then-delete pairs count toward it although they publish no
+    doc. Both placements must agree on the full observable contract:
+    meta counts, dense unique doc_ints assigned in doc_id order from
+    the watermark, and merge-on-read visibility. Threshold is
+    monkeypatched small so the test pins the boundary itself, not a
+    65k-row ingest (the real-size distributed path is covered by
+    test_large_batch_ingest)."""
     from searchengine_spark.streaming import ingest as ing
 
     thr = 512
     monkeypatch.setattr(ing, "LARGE_BATCH_DOCS", thr)
-    # n_up == thr → window path; thr+1 → two-phase path
-    n_up = thr if at_boundary else thr + 1
+    ran = []
+    for name in ("_apply_driver", "_apply_distributed"):
+        def spy(self, *a, _orig=getattr(StreamingIndex, name), _name=name):
+            ran.append(_name)
+            return _orig(self, *a)
+        monkeypatch.setattr(StreamingIndex, name, spy)
+    # 40 base deletes + 30 upsert-then-delete pairs = 100 messages that
+    # publish no doc; thr messages → driver placement, thr+1 → distributed
+    n_up = thr - 100 if at_boundary else thr - 99
 
     root = f"/tmp/seng_boundary_{int(at_boundary)}"
     shutil.rmtree(root, ignore_errors=True)
@@ -684,7 +781,7 @@ def test_large_batch_boundary_delete_heavy(spark, transcripts, monkeypatch,
 
     seq = 0
     lines = []
-    for i in range(n_up):  # surviving upserts — exactly the boundary operand
+    for i in range(n_up):  # surviving upserts
         lines.append(json.dumps(_msg(seq, f"bnd{i:05d}", 0,
                                      f"boundary body tok{i % 97} zebraboundary")))
         seq += 1
@@ -695,6 +792,7 @@ def test_large_batch_boundary_delete_heavy(spark, transcripts, monkeypatch,
         lines.append(json.dumps(_msg(seq, f"bdead{j:04d}", 0, "ephemeral zebraboundary")))
         lines.append(json.dumps(_msg(seq + 1, f"bdead{j:04d}", 0, "", delete=True)))
         seq += 2
+    assert len(lines) == (thr if at_boundary else thr + 1)
     with open(os.path.join(src, "batch.json"), "w") as f:
         f.write("\n".join(lines) + "\n")
 
@@ -704,6 +802,7 @@ def test_large_batch_boundary_delete_heavy(spark, transcripts, monkeypatch,
         watermark = s._next_doc_int()
         s.ingest_files(src)
         (did,) = s.delta_ids()
+        assert ran == ["_apply_driver" if at_boundary else "_apply_distributed"]
         meta = s._delta_meta(did)
         assert meta["n_docs"] == n_up          # post-LWW survivors only
         assert meta["n_tombstones"] == n_up + 40 + 30
