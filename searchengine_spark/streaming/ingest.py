@@ -460,7 +460,7 @@ class StreamingIndex:
                 F.transform(tokens, lambda t: bucket_col(t, nb)).alias("buckets"),
             ).limit(LARGE_BATCH_DOCS + 1).toArrow()
             if probe.num_rows > LARGE_BATCH_DOCS:
-                self._apply_distributed(batch, epoch_id, t0)
+                self._apply_distributed(batch, base, epoch_id, t0)
             else:
                 self._apply_driver(probe, base, epoch_id, t0)
 
@@ -499,7 +499,9 @@ class StreamingIndex:
         self._publish(tmp, epoch_id, t0, start, n_docs=up.num_rows,
                       sum_dl=pc.sum(dl).as_py() or 0, n_tombstones=last.num_rows)
 
-    def _apply_distributed(self, batch: DataFrame, epoch_id: int, t0: float) -> None:
+    def _apply_distributed(
+        self, batch: DataFrame, base: Snapshot, epoch_id: int, t0: float
+    ) -> None:
         """Distributed placement of :meth:`apply_batch`, for batches above
         ``LARGE_BATCH_DOCS`` messages: no per-doc state on the driver."""
         tmp = self._fresh_tmp(epoch_id)
@@ -523,10 +525,6 @@ class StreamingIndex:
         last.select("doc_id").observe(tomb_obs, F.count(F.lit(1)).alias("n")) \
             .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "tombstones"))
         n_tombstones = int(tomb_obs.get["n"])
-        if n_tombstones == 0:
-            last.unpersist()
-            shutil.rmtree(tmp, ignore_errors=True)
-            return
         up_obs = Observation(f"upserts_{epoch_id}")
         upserts.observe(up_obs, F.count(F.lit(1)).alias("n")) \
             .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "upserts"))
@@ -565,7 +563,6 @@ class StreamingIndex:
                      F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl")) \
             .write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(os.path.join(tmp, "docmap"))
 
-        base = self.catalog.current()
         nb = base.manifest["n_buckets"]
         encoder = _make_segment_encoder(base.stats["avgdl"])  # skip-bound metadata only
         tf = (
