@@ -39,16 +39,17 @@ order (Bleve's DocValues): doc names, MUST filter sets (the
 sort keys all read it. The postings are one Arrow table of (term,
 postings) rows that the driver placement slices. So a warm query on the
 driver placement of a pinned handle runs no Spark job, filtered or not;
-the first one pins the postings (one ``toArrow`` job), and an index too
-large to pin them runs one (the Σdf-bounded postings collect). Measured
-on the sf0.01 serve benchmark (4 vCPUs): pinning the frames took
-``search_index`` from 2 jobs to 1 (re-reading an artifact cost a
-parquet schema-inference job each time), evaluating filters on the
-pinned doc values took a first-seen filter set from 1 job to 0, and
-pinning the postings took a warm request from 1 job to 0. Resolving an
-artifact starts no job either: the build records each artifact's
-schema in the manifest. A published snapshot never changes; a new
-snapshot gets a new handle (:func:`open_index`).
+the first one pins the postings (a driver-side pyarrow read of the
+snapshot's parquet files, no job; one ``toArrow`` job on an Iceberg
+snapshot), and an index too large to pin them runs one (the Σdf-bounded
+postings collect). Measured on the sf0.01 serve benchmark (4 vCPUs):
+pinning the frames took ``search_index`` from 2 jobs to 1 (re-reading
+an artifact cost a parquet schema-inference job each time), evaluating
+filters on the pinned doc values took a first-seen filter set from 1
+job to 0, and pinning the postings took a warm request from 1 job to
+0. Resolving an artifact starts no job either: the build records each
+artifact's schema in the manifest. A published snapshot never changes;
+a new snapshot gets a new handle (:func:`open_index`).
 
 The result is rank-identical to :func:`..query.bm25.search_direct`
 (tested in tests/test_index_engine.py): same float64 expression shape,
@@ -65,6 +66,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -236,17 +238,23 @@ class IndexHandle:
         exceeds SERVING_DRIVER_MAX, or the vocabulary itself is too large
         to pin (TERM_CACHE_MAX). Pinned lazily by the first
         driver-placement postings read (:func:`_driver_postings`), with
-        one Arrow-native transfer (``toArrow``)."""
+        no Spark job: a parquet-dir snapshot's postings files are read
+        straight into Arrow on the driver, as the SQL table function reads
+        them; an Iceberg snapshot's pinned table is one ``toArrow``."""
         cached = getattr(self, "_pinned_postings", False)
         if cached is not False:
             return cached
         td = self.term_dict()
         if td is None or sum(df for df, _ in td.values()) > SERVING_DRIVER_MAX:
             self._pinned_postings = None
-        else:
+        elif "postings" in (self.snapshot.tables or {}):
             self._pinned_postings = (
                 self.postings().select("term", "postings").toArrow().combine_chunks()
             )
+        else:
+            self._pinned_postings = pq.read_table(
+                self.snapshot.postings_dir, columns=["term", "postings"]
+            ).combine_chunks()
         return self._pinned_postings
 
     def term_dict(self) -> dict[str, tuple[int, int]] | None:

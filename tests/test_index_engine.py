@@ -267,7 +267,13 @@ def test_pinned_postings_parity(spark, catalog, monkeypatch):
 
     ix = open_index(spark, catalog)
     pinned = answers(ix)
-    assert ix.pinned_postings() is not None
+    pp = ix.pinned_postings()
+    assert pp is not None
+    # the driver-side read pins exactly the rows the Spark reader sees
+    rows = ix.postings().select("term", "postings").collect()
+    assert sorted((r["term"], r["postings"]) for r in pp.to_pylist()) == sorted(
+        (r["term"], bytes(r["postings"])) for r in rows
+    )
     singles, many, served = pinned
     assert all(singles[i] for i in (0, 1, 3, 5, 7)) and singles[6] == []  # non-vacuous
     assert many and all(served)
@@ -482,9 +488,10 @@ def test_warm_serving_job_budget(spark, catalog, spark_jobs, monkeypatch):
     """A warm handle serves from its pinned artifact frames, doc values
     and postings. On an index whose whole posting volume fits
     SERVING_DRIVER_MAX the first driver-placement read pins the postings
-    (one job); after that no request runs a Spark job — single,
-    multi-term, filtered (first seen, repeated, or matching nothing),
-    fuzzy, synonym, sorted, page-2 and batched alike. A handle that
+    with a driver-side read of the parquet files (no job), and no
+    request runs a Spark job — single, multi-term, filtered (first
+    seen, repeated, or matching nothing), fuzzy, synonym, sorted, page-2
+    and batched alike. A handle that
     cannot pin its postings runs ONE job per request (the Σdf-bounded
     postings collect), and a MUST filter adds none: its doc set is
     evaluated on the pinned doc values."""
@@ -527,7 +534,7 @@ def test_warm_serving_job_budget(spark, catalog, spark_jobs, monkeypatch):
         }
 
     ix = warm()
-    assert len(spark_jobs(lambda: search_index(ix, ["spark"]).collect())) == 1  # the pin
+    assert spark_jobs(lambda: search_index(ix, ["spark"]).collect()) == []  # pins, no job
     assert ix.pinned_postings() is not None
     got = budget(ix)
     assert got == dict.fromkeys(got, 0)
@@ -539,10 +546,11 @@ def test_warm_serving_job_budget(spark, catalog, spark_jobs, monkeypatch):
     monkeypatch.setattr(E, "SERVING_DRIVER_MAX", n_postings - 1)
     ix = warm()
 
-    def no_pin(self):
+    def no_pin(*_args, **_kwargs):
         raise AssertionError("an over-cap index must not pin its postings")
 
     monkeypatch.setattr(pyspark.sql.DataFrame, "toArrow", no_pin)
+    monkeypatch.setattr(E.pq, "read_table", no_pin)
     assert len(spark_jobs(lambda: search_index(ix, ["spark"]).collect())) == 1
     assert ix.pinned_postings() is None
     got = budget(ix)
