@@ -36,6 +36,11 @@ skew ratio, bytes written); re-running `build_index` with the same
 staging snapshot skips completed stages — kill/rerun resumes, never
 duplicates work.
 
+A corpus small enough to collect (a compacted stream store, see
+``streaming/ingest.py``) is built on the driver instead by
+:func:`stage_index_driver`: the same numbering, segment encoder and
+artifacts, written with :func:`write_artifact`, with no Spark job.
+
 At rest, every serving artifact (``postings``, ``docmap``, ``terms``,
 and each CDC delta's parts in ``streaming/ingest.py``) is zstd Parquet
 with v2 data pages (:data:`ARTIFACT_PARQUET`): ints take
@@ -50,15 +55,20 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import semantics as S
 from .catalog import IndexCatalog, Snapshot
@@ -75,21 +85,50 @@ ARTIFACT_PARQUET = {"compression": "zstd", "parquet.writer.version": "v2"}
 
 def write_artifact(table: pa.Table, path: str) -> None:
     """Write an Arrow table as a one-file parquet dir at ``path`` with the
-    settings of :data:`ARTIFACT_PARQUET`: zstd (parquet-mr's default
-    level 3) and v2 data pages, ``doc_int`` DELTA_BINARY_PACKED as
-    Spark's v2 writer gives the dense sorted column. A driver-written
-    part thus reads and sizes like a Spark-written one."""
+    settings of :data:`ARTIFACT_PARQUET` — zstd (parquet-mr's default
+    level 3) and v2 data pages — and each column in the encoding Spark's
+    v2 writer gives it: DELTA_BYTE_ARRAY for the sorted or unique
+    strings and blobs (``doc_id``, ``term``, ``postings``),
+    DELTA_BINARY_PACKED for the ascending ints and timestamps
+    (``doc_int``, ``ts``, ``first_doc``, ``last_doc``,
+    ``block_last_doc``), a dictionary for the rest. The footer carries
+    no Arrow schema blob, as a Spark-written footer does not. A
+    driver-written part thus reads like a Spark-written one and is no
+    larger."""
+    delta = {"doc_id": "DELTA_BYTE_ARRAY", "term": "DELTA_BYTE_ARRAY",
+             "postings": "DELTA_BYTE_ARRAY", "doc_int": "DELTA_BINARY_PACKED",
+             "ts": "DELTA_BINARY_PACKED", "first_doc": "DELTA_BINARY_PACKED",
+             "last_doc": "DELTA_BINARY_PACKED", "block_last_doc": "DELTA_BINARY_PACKED"}
+    # encodings name leaf columns: a list's values are <name>.list.element
+    leaf = {f.name: f"{f.name}.list.element" if pa.types.is_list(f.type) else f.name
+            for f in table.schema}
     os.makedirs(path, exist_ok=True)
-    delta = [c for c in table.column_names if c == "doc_int"]
     pq.write_table(
         table,
         os.path.join(path, "part-00000.zstd.parquet"),
         compression="zstd",
         compression_level=3,
         data_page_version="2.0",
-        use_dictionary=[c for c in table.column_names if c not in delta],
-        column_encoding=dict.fromkeys(delta, "DELTA_BINARY_PACKED") or None,
+        use_dictionary=[leaf[c] for c in leaf if c not in delta],
+        column_encoding={leaf[c]: delta[c] for c in leaf if c in delta} or None,
+        store_schema=False,
     )
+
+
+def read_artifact(path: str, columns: list[str], max_rows: int | None = None) -> pa.Table | None:
+    """The parquet part files directly under ``path`` (one unpartitioned
+    artifact dir, Spark- or driver-written) read into one Arrow table on
+    the driver, file by file with pyarrow's file reader: no Spark job,
+    and no dataset discovery, whose module the driver need not load.
+    With ``max_rows``, None when the footers count more rows than that,
+    before any data is read."""
+    files = sorted(
+        os.path.join(path, f) for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    if max_rows is not None and sum(pq.read_metadata(f).num_rows for f in files) > max_rows:
+        return None
+    return pa.concat_tables([pq.ParquetFile(f).read(columns=columns) for f in files])
 
 
 SEGMENT_SCHEMA = T.StructType(
@@ -335,6 +374,43 @@ def bucket_col(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
 
 
+def _encode_postings(
+    tokens: pa.ListArray, buckets: pa.ListArray, doc_int: np.ndarray, dl: pa.Array, avgdl: float
+) -> pa.Table:
+    """Segment rows of a driver-placed build: the docs' token occurrences
+    (``tokens`` and their ``buckets``, one list per doc, as
+    :func:`bucket_col` hashes them) grouped by (bucket, seg), each group
+    through :func:`_make_segment_encoder` — the fused path's input, so
+    the rows equal the distributed placement's. The encoder sees each
+    term as its rank in the sorted vocabulary, an int that orders as the
+    term does, so no Python string is made per occurrence; the rows get
+    their term strings back in one Arrow ``take``."""
+    words = pc.dictionary_encode(pc.list_flatten(tokens))
+    by_term = pc.sort_indices(words.dictionary)
+    rank = np.empty(len(by_term), dtype=np.int64)
+    rank[by_term.to_numpy()] = np.arange(len(by_term))
+    owner = pc.list_parent_indices(tokens).to_numpy()
+    occ = {
+        "term": rank[words.indices.to_numpy()],
+        "bucket": pc.list_flatten(buckets).to_numpy(),
+        "doc_int": doc_int[owner],
+        "dl": dl.fill_null(0).to_numpy()[owner],
+    }
+    occ["seg"] = occ["doc_int"] // SEG_SPAN
+    schema = to_arrow_schema(SEGMENT_SCHEMA)
+    if not len(owner):
+        return schema.empty_table()
+    order = np.lexsort((occ["seg"], occ["bucket"]))
+    cut = np.flatnonzero(np.diff(occ["bucket"][order]) | np.diff(occ["seg"][order])) + 1
+    encoder = _make_segment_encoder(avgdl)
+    segs = pd.concat(
+        [encoder(pd.DataFrame({c: v[idx] for c, v in occ.items()})) for idx in np.split(order, cut)],
+        ignore_index=True,
+    )
+    term = words.dictionary.take(by_term.take(pa.array(segs.pop("term").to_numpy())))
+    return pa.Table.from_pandas(segs, preserve_index=False).add_column(1, "term", term).cast(schema)
+
+
 def _dir_bytes(path: str) -> int:
     """Total bytes under a staging dir — the stage's materialized output
     size, recorded in the ledger (north_star: per-stage bytes metric)."""
@@ -355,17 +431,20 @@ def _dir_bytes(path: str) -> int:
 TASK_ROWS_CAP = 512  # per-task rows kept per stage; aggregates always kept
 
 
-def _set_stage_group(spark, stage: str) -> None:
+def _set_stage_group(spark, build: str, stage: str) -> None:
     """Tag all jobs of a build stage with a job group so the event-log
-    parser can attribute their tasks. Thread-local (PySpark pinned
-    threads), so the overlapped docmap stage tags independently."""
-    spark.sparkContext.setJobGroup(f"seng:{stage}", f"searchengine build stage {stage}")
+    parser can attribute their tasks: ``seng:<build>:<stage>``, where
+    ``build`` names this one build call, so builds earlier in the same
+    application are never counted as its own. Thread-local (PySpark
+    pinned threads), so the overlapped docmap stage tags independently."""
+    spark.sparkContext.setJobGroup(f"seng:{build}:{stage}", f"searchengine build stage {stage}")
 
 
-def _collect_task_metrics(spark, prefix: str = "seng:") -> dict[str, dict]:
+def _collect_task_metrics(spark, build: str) -> dict[str, dict]:
     """Parse this application's Spark event log into per-stage task
-    rows + aggregates: duration, executor run time, records read,
-    shuffle read/write bytes, output bytes, skew ratio. Returns {} when
+    rows + aggregates for the jobs :func:`_set_stage_group` tagged with
+    ``build``: duration, executor run time, records read, shuffle
+    read/write bytes, output bytes, skew ratio. Returns {} when
     event logging is off (the build still records per-stage metrics).
 
     O(events) driver work on a local JSON file — the same parse a
@@ -413,6 +492,7 @@ def _collect_task_metrics(spark, prefix: str = "seng:") -> dict[str, dict]:
 
     # two passes: JobStart→stage mapping first (rolling files don't
     # guarantee a TaskEnd lands in the same file as its JobStart)
+    prefix = f"seng:{build}:"
     stage2group: dict[int, str] = {}
     for e in _events():
         if e.get("Event") == "SparkListenerJobStart":
@@ -494,6 +574,7 @@ def build_index(
     snap_id = snap_id if snap_id is not None else catalog.next_id()
     stage_dir = catalog.staging_dir(snap_id)
     ledger = Ledger(stage_dir)
+    build = f"{snap_id}-{uuid.uuid4().hex[:8]}"  # this call's job-group tag
 
     raw_dir = os.path.join(stage_dir, "docmap_raw")
     docmap_dir = os.path.join(stage_dir, "docmap")
@@ -515,7 +596,7 @@ def build_index(
     if not ledger.done("docmap_raw"):
         from pyspark.sql import Observation
 
-        _set_stage_group(spark, "docmap_raw")
+        _set_stage_group(spark, build, "docmap_raw")
         t0 = time.perf_counter()
         obs = Observation("docmap_raw_stats")
         ranked.observe(
@@ -569,7 +650,7 @@ def build_index(
     if not ledger.done("docmap"):
         def _docmap_stage() -> None:
             try:
-                _set_stage_group(spark, "docmap")
+                _set_stage_group(spark, build, "docmap")
                 t0 = time.perf_counter()
                 docmap.write.options(**ARTIFACT_PARQUET).mode("overwrite").parquet(docmap_dir)
                 dt = time.perf_counter() - t0
@@ -610,7 +691,7 @@ def build_index(
         if not ledger.done("tf"):
             from pyspark.sql import Observation
 
-            _set_stage_group(spark, "tf")
+            _set_stage_group(spark, build, "tf")
             t0 = time.perf_counter()
             obs = Observation("tf_rows")
             # plain (non-dynamic-partition) write: one file per task, ~16×
@@ -644,7 +725,7 @@ def build_index(
             continue
         from pyspark.sql import Observation
 
-        _set_stage_group(spark, stage_name)
+        _set_stage_group(spark, build, stage_name)
         t0 = time.perf_counter()
         part = tf_staged if bucket_jobs == 1 else tf_staged.where(F.col("bucket").isin(buckets))
         obs = Observation(f"postings_{gi}")
@@ -681,7 +762,7 @@ def build_index(
     if not ledger.done("terms"):
         from pyspark.sql import Observation
 
-        _set_stage_group(spark, "terms")
+        _set_stage_group(spark, build, "terms")
         t0 = time.perf_counter()
         obs = Observation("terms_rows")
         terms.observe(
@@ -709,8 +790,24 @@ def build_index(
     # manifest rows is post-processing, the same work a history server
     # does after a job — it must not count against build throughput
     elapsed = time.perf_counter() - t_start
-    task_metrics = _collect_task_metrics(spark)
-    manifest = {
+    manifest = _manifest(
+        stage_dir, stats, synonyms=synonyms, n_buckets=n_buckets,
+        task_metrics=_collect_task_metrics(spark, build), elapsed=elapsed,
+        docmap=docmap.schema, terms=terms.schema,
+    )
+    # drop staging intermediates (tokens + tf — the large artifacts) from
+    # the published snapshot; keep ledger + final tables
+    shutil.rmtree(tf_dir, ignore_errors=True)
+    shutil.rmtree(raw_dir, ignore_errors=True)
+    return catalog.publish(snap_id, manifest)
+
+
+def _manifest(
+    stage_dir: str, stats: dict, *, synonyms: bool, n_buckets: int, task_metrics: dict,
+    elapsed: float, docmap: T.StructType, terms: T.StructType,
+) -> dict:
+    """The manifest a build publishes, on either placement."""
+    return {
         "stats": stats,
         "synonyms": synonyms,
         "n_buckets": n_buckets,
@@ -726,14 +823,107 @@ def build_index(
         # footer-inference job (engine.IndexHandle._artifact)
         "schemas": {
             "postings": SEGMENT_SCHEMA.jsonValue(),
-            "docmap": docmap.schema.jsonValue(),
-            "terms": terms.schema.jsonValue(),
+            "docmap": docmap.jsonValue(),
+            "terms": terms.jsonValue(),
         },
     }
-    # drop staging intermediates (tokens + tf — the large artifacts) from
-    # the published snapshot; keep ledger + final tables
-    import shutil
 
-    shutil.rmtree(tf_dir, ignore_errors=True)
-    shutil.rmtree(raw_dir, ignore_errors=True)
-    return catalog.publish(snap_id, manifest)
+
+def stage_index_driver(
+    docs: pa.Table,
+    docs_schema: T.StructType,
+    catalog: IndexCatalog,
+    snap_id: int,
+    *,
+    n_buckets: int = DEFAULT_BUCKETS,
+) -> dict:
+    """Driver placement of :func:`build_index` for a corpus small enough
+    to collect: stage snapshot ``snap_id`` from ``docs`` and return the
+    manifest to publish with ``catalog.publish`` (the caller publishes,
+    so it can swap its own state in first).
+
+    ``docs`` is an Arrow table of the corpus columns of ``docs_schema``
+    plus, per doc, ``doc_id`` (:func:`..functions.text.doc_id_col`),
+    ``tokens`` (the analyzer's output) and ``buckets`` (their
+    :func:`bucket_col` over ``n_buckets``), all computed in the JVM.
+    The driver numbers the docs 0..n-1 in doc_id byte order (the order
+    the range-partitioned build gives), takes N and Σdl from the arrays,
+    encodes the postings with :func:`_encode_postings` under the new
+    avgdl, and writes each artifact with :func:`write_artifact` into a
+    fresh staging dir: ``docmap``, ``postings`` (one ``bucket=<b>/`` dir
+    per bucket, as the partitioned write lays them out) and ``terms``
+    (df = Σn, cf = Σsum_tf, bucket). Rows, schemas and manifest keys
+    equal :func:`build_index`'s for the same corpus (no synonyms); the
+    ledger times the three writes and ``task_metrics`` is empty, since
+    no Spark task runs."""
+    t_start = time.perf_counter()
+    stage_dir = catalog.staging_dir(snap_id)
+    shutil.rmtree(stage_dir)  # a failed attempt at this id left files
+    os.makedirs(stage_dir)
+    ledger = Ledger(stage_dir)
+
+    order = pc.sort_indices(docs["doc_id"], null_placement="at_start")
+    docs = docs.select(["doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "tokens",
+                        "buckets"]).take(order)
+    n = docs.num_rows
+    doc_int = np.arange(n, dtype=np.int64)
+    tokens = docs["tokens"].combine_chunks()
+    dl = pc.list_value_length(tokens)
+    sum_dl = pc.sum(dl).as_py() or 0
+    stats = {"n_docs": n, "sum_dl": sum_dl, "avgdl": float(sum_dl) / float(n)}
+
+    t0 = time.perf_counter()
+    docmap_dir = os.path.join(stage_dir, "docmap")
+    docmap_schema = T.StructType(
+        [T.StructField("doc_int", T.LongType()), T.StructField("doc_id", T.StringType())]
+        + [T.StructField(c, docs_schema[c].dataType)
+           for c in ("conv_id", "turn_idx", "role", "tool", "ts")]
+        + [T.StructField("dl", T.IntegerType())]
+    )
+    docmap = (docs.select(docmap_schema.names[1:-1])
+              .add_column(0, "doc_int", pa.array(doc_int)).append_column("dl", dl))
+    write_artifact(docmap.cast(to_arrow_schema(docmap_schema)), docmap_dir)
+    dt = time.perf_counter() - t0
+    ledger.commit("docmap", rows=n, seconds=round(dt, 3),
+                  turns_per_sec=round(n / max(dt, 1e-9), 1),
+                  bytes_written=_dir_bytes(docmap_dir))
+
+    t0 = time.perf_counter()
+    postings_dir = os.path.join(stage_dir, "postings")
+    segs = _encode_postings(tokens, docs["buckets"].combine_chunks(), doc_int, dl, stats["avgdl"])
+    for b in pc.unique(segs["bucket"]).to_pylist():
+        write_artifact(segs.filter(pc.equal(segs["bucket"], b)).drop_columns("bucket"),
+                       os.path.join(postings_dir, f"bucket={b}"))
+    dt = time.perf_counter() - t0
+    n_post = pc.sum(segs["n"]).as_py() or 0
+    ledger.commit("postings-0", segments=segs.num_rows, postings=n_post, seconds=round(dt, 3),
+                  postings_per_sec=round(n_post / max(dt, 1e-9), 1),
+                  bytes_written=_dir_bytes(postings_dir))
+
+    t0 = time.perf_counter()
+    terms_dir = os.path.join(stage_dir, "terms")
+    terms_schema = T.StructType([
+        T.StructField("term", T.StringType()), T.StructField("df", T.LongType()),
+        T.StructField("cf", T.LongType()), T.StructField("bucket", T.IntegerType()),
+    ])
+    words = pc.dictionary_encode(segs["term"]).combine_chunks()
+    code, n_terms = words.indices.to_numpy(), len(words.dictionary)
+    bucket = np.zeros(n_terms, dtype=np.int32)
+    bucket[code] = segs["bucket"].to_numpy()  # a term hashes to one bucket
+    terms = pa.table({
+        "term": words.dictionary,
+        "df": np.bincount(code, segs["n"].to_numpy(), n_terms).astype(np.int64),
+        "cf": np.bincount(code, segs["sum_tf"].to_numpy(), n_terms).astype(np.int64),
+        "bucket": bucket,
+    }).sort_by("term")
+    write_artifact(terms.cast(to_arrow_schema(terms_schema)), terms_dir)
+    max_df = pc.max(terms["df"]).as_py() or 0
+    mean_df = sum_dl / max(terms.num_rows, 1)
+    ledger.commit("terms", rows=terms.num_rows, seconds=round(time.perf_counter() - t0, 3),
+                  max_df=max_df, skew_ratio=round(max_df / max(mean_df, 1e-9), 2),
+                  bytes_written=_dir_bytes(terms_dir))
+
+    return _manifest(
+        stage_dir, stats, synonyms=False, n_buckets=n_buckets, task_metrics={},
+        elapsed=time.perf_counter() - t_start, docmap=docmap_schema, terms=terms_schema,
+    )

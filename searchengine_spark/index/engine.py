@@ -75,6 +75,7 @@ from pyspark.sql.types import StructType
 from .. import semantics as S
 from ..filters import ARROW, compile_filters
 from ..metrics import timed
+from .build import read_artifact
 from .catalog import IndexCatalog, Snapshot
 from .codec import BLOCK, SEG_SPAN, decode_postings
 
@@ -259,15 +260,28 @@ class IndexHandle:
 
     def term_dict(self) -> dict[str, tuple[int, int]] | None:
         """Driver-cached term → (df, bucket), or None if the vocabulary
-        is too large to pin (callers fall back to point-reads)."""
+        is too large to pin (callers fall back to point-reads). A
+        parquet-dir snapshot is pinned with no Spark job: the row count
+        comes from the ``terms`` files' footers, checked against
+        TERM_CACHE_MAX before a driver-side pyarrow read of the three
+        columns (:func:`..build.read_artifact`), as
+        :meth:`pinned_postings` reads its postings; an Iceberg snapshot's
+        pinned table is one bounded collect."""
         cached = getattr(self, "_term_dict", False)
         if cached is not False:
             return cached
-        rows = self.terms().select("term", "df", "bucket").limit(TERM_CACHE_MAX + 1).collect()
-        if len(rows) > TERM_CACHE_MAX:
+        cols = ["term", "df", "bucket"]
+        if "terms" in (self.snapshot.tables or {}):
+            rows = self.terms().select(*cols).limit(TERM_CACHE_MAX + 1).toArrow()
+        else:
+            rows = read_artifact(self.snapshot.terms_dir, cols, max_rows=TERM_CACHE_MAX)
+        if rows is None or rows.num_rows > TERM_CACHE_MAX:
             self._term_dict = None
         else:
-            self._term_dict = {r["term"]: (int(r["df"]), int(r["bucket"])) for r in rows}
+            self._term_dict = dict(zip(
+                rows["term"].to_pylist(),
+                zip(rows["df"].to_pylist(), rows["bucket"].to_pylist()),
+            ))
         return self._term_dict
 
 

@@ -37,18 +37,23 @@ Spark-native equivalent (merge-on-read, Iceberg-style):
   pending tombstones, an upper bound on dead matched versions) to
   doc_ids and drops the dead ones — two Spark jobs; heavier queries
   keep the ``mapInPandas`` + join plan;
-- ``compact()`` rebuilds the base snapshot from ``current_docs()`` via
-  the batch build job (two-phase merge of the north rule) and clears
-  deltas — the analogue of a scorch segment merge, after which results
-  are rank-identical to the direct path (tested).
+- ``compact()`` folds the deltas into a new ``docs/base`` and base
+  snapshot and clears them — the analogue of a scorch segment merge,
+  after which results are rank-identical to the direct path (tested).
+  A small live corpus is collected in one Spark job and folded and
+  rebuilt on the driver, as Bleve merges its segments in-process; a
+  larger one keeps the distributed fold and the batch build job
+  (two-phase merge of the north rule).
 
 Every artifact this module wrote itself is re-read with its declared
 schema (``DELTA_SCHEMAS``; the corpus with the schema of the frame last
 written), so no read starts a parquet footer-inference job. A small
 micro-batch is applied with one Spark job that collects it; the driver
-writes the delta. One CDC cycle on the offline benchmark (4 vCPUs,
-500-message batches) runs 14 Spark jobs: ``apply_batch`` 1, live search
-2, ``compact()`` 11.
+writes the delta. A small store is compacted the same way. One CDC
+cycle on the offline benchmark (4 vCPUs, 500-message batches over a
+~10k-doc corpus) runs 4 Spark jobs: ``apply_batch`` 1, live search 2,
+``compact()`` 1 (14 while compaction ran the distributed fold and
+build: 11 jobs).
 """
 
 from __future__ import annotations
@@ -61,7 +66,6 @@ import time
 import weakref
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -73,11 +77,15 @@ from .. import semantics as S
 from ..functions.text import doc_id_col, tokens_no_stop
 from ..index.build import (
     ARTIFACT_PARQUET,
+    DEFAULT_BUCKETS,
     SEGMENT_SCHEMA,
+    _encode_postings,
     _make_segment_encoder,
     bucket_col,
     build_index,
     partition_offsets,
+    read_artifact,
+    stage_index_driver,
     with_doc_int,
     write_artifact,
 )
@@ -99,7 +107,10 @@ from ..index.engine import (
 # its delta on the driver (one Spark job); a larger batch drops that
 # probe and runs the distributed build, numbering docs with the batch
 # build's two-phase committed-parquet scan, so its per-doc state never
-# crosses the driver or funnels through one task
+# crosses the driver or funnels through one task. It also bounds the
+# stored versions (base docs + pending delta upserts) one compact()
+# collects to fold and rebuild on the driver; a larger store keeps the
+# distributed fold and build
 LARGE_BATCH_DOCS = 65536
 
 # source helpers tag the DataFrames they return so ingest_stream can
@@ -132,29 +143,6 @@ def _arrow_schema(schema: str | StructType) -> pa.Schema:
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
     return to_arrow_schema(schema)
-
-
-def _encode_postings(
-    tokens: pa.ListArray, buckets: pa.ListArray, doc_int: np.ndarray, dl: pa.Array, avgdl: float
-) -> pa.Table:
-    """Postings of a driver-placed batch: the upserts' token occurrences
-    grouped by (bucket, seg), each group through the base build's segment
-    encoder (skip-bound metadata from the base avgdl), as the distributed
-    placement groups its tf rows."""
-    owner = pc.list_parent_indices(tokens).to_numpy()
-    occ = pd.DataFrame({
-        "term": pc.list_flatten(tokens).to_numpy(zero_copy_only=False),
-        "bucket": pc.list_flatten(buckets).to_numpy(),
-        "doc_int": doc_int[owner],
-        "dl": dl.fill_null(0).to_numpy()[owner],
-    })
-    occ["seg"] = occ["doc_int"] // SEG_SPAN
-    encoder = _make_segment_encoder(avgdl)
-    groups = [encoder(g.reset_index(drop=True)) for _, g in occ.groupby(["bucket", "seg"])]
-    schema = _arrow_schema(SEGMENT_SCHEMA)
-    if not groups:
-        return schema.empty_table()
-    return pa.Table.from_pandas(pd.concat(groups), schema=schema, preserve_index=False)
 
 
 def _union(frames: list[DataFrame]) -> DataFrame:
@@ -624,6 +612,15 @@ class StreamingIndex:
         )
         return allt.groupBy("doc_id").agg(F.max("_td").alias("_tomb_v"))
 
+    def _versions(self, deltas: list[int]) -> DataFrame:
+        """Every stored version of every doc: the ``docs/base`` rows with
+        version ``_v`` = -1 and each pending delta's upserts with its
+        delta id."""
+        return _union(
+            [self._docs_frame().withColumn("_v", F.lit(-1))]
+            + [self._delta_frame(did, "upserts").withColumn("_v", F.lit(did)) for did in deltas]
+        )
+
     def current_docs(self) -> DataFrame:
         """Live corpus view: base ∖ tombstones ∪ latest upsert per doc
         (merge-on-read; prod = Iceberg MERGE with positional deletes).
@@ -631,10 +628,7 @@ class StreamingIndex:
         tombstone parquet — scale-safe for arbitrarily large CDC
         batches (no driver lists, no ``isin`` literal trees)."""
         deltas = self.delta_ids()
-        allv = _union(
-            [self._docs_frame().withColumn("_v", F.lit(-1))]
-            + [self._delta_frame(did, "upserts").withColumn("_v", F.lit(did)) for did in deltas]
-        )
+        allv = self._versions(deltas)
         tomb = self._tombstone_frame(deltas)
         if tomb is None:
             return allv.drop("_v")
@@ -667,8 +661,9 @@ class StreamingIndex:
           plus each delta's ``n_docs`` per term (a term's df in a delta
           is at most its doc count) fits ``SERVING_DRIVER_MAX`` — and
           ``k + T`` fits ``LIVE_POINT_READ_MAX``, where T is the pending
-          deltas' summed ``n_tombstones``. Budget: 2 jobs, plus 1 for the
-          term dictionary on the first search after a compaction;
+          deltas' summed ``n_tombstones``. Budget: 2 jobs, the first
+          search after a compaction included (the new base's term
+          dictionary is pinned with a driver-side read, no job);
         - **distributed** (:meth:`_search_distributed`) otherwise: a
           ``mapInPandas`` scorer, per-doc aggregation, and joins against
           the delta docmaps and tombstones.
@@ -850,9 +845,30 @@ class StreamingIndex:
     # ------------------------------------------------------------------
 
     def compact(self) -> None:
-        """Fold deltas into a new base: materialize ``current_docs()``,
-        rebuild the index snapshot (atomic publish), drop the delta log.
-        After this, ``search()`` is rank-identical to the direct path.
+        """Fold deltas into a new base: materialize the live corpus
+        (``current_docs()``) as ``docs/base``, rebuild the index snapshot
+        (atomic publish), drop the delta log. After this, ``search()``
+        is rank-identical to the direct path.
+
+        Two placements, chosen with no Spark job on a bound of the live
+        corpus: the base ``n_docs`` from the manifest plus each pending
+        delta's ``n_docs`` from ``meta.json`` (every live doc is one of
+        those rows):
+
+        - **driver** (:meth:`_compact_driver`) when the bound fits
+          ``LARGE_BATCH_DOCS``: one Spark job collects every version with
+          its tokens and buckets; the driver drops the dead ones, writes
+          ``docs/base`` and builds the snapshot
+          (:func:`..index.build.stage_index_driver`) — one job in all;
+        - **distributed** (:meth:`_compact_distributed`) otherwise: the
+          ``current_docs()`` write and the batch build job
+          (:func:`..index.build.build_index`).
+
+        Either way the new ``docs/base`` is swapped in before the new
+        snapshot is published, and the deltas are dropped last: a crash
+        in between leaves the old CURRENT with its deltas (live search
+        unchanged) over a ``docs/base`` that already holds their effect,
+        which ``current_docs()`` and a rerun fold to the same corpus.
 
         Safe to call while a continuous (``drain=False``) query is
         attached: the write lock serializes the whole fold against
@@ -864,19 +880,67 @@ class StreamingIndex:
             deltas = self.delta_ids()
             if not deltas:
                 return
-            tmp_docs = self.docs_base + ".compact"
-            live = self.current_docs()
-            live.write.mode("overwrite").parquet(tmp_docs)
-            # swap corpus, then rebuild + publish index from the new base
-            old = self.docs_base + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.replace(self.docs_base, old)
-            os.replace(tmp_docs, self.docs_base)
-            shutil.rmtree(old, ignore_errors=True)
-            self._docs_schema = live.schema
-            build_index(self.spark, self._docs_frame(), self.catalog)
+            bound = self.catalog.current().stats["n_docs"] + sum(
+                self._delta_meta(did)["n_docs"] for did in deltas
+            )
+            if bound <= LARGE_BATCH_DOCS:
+                self._compact_driver(deltas)
+            else:
+                self._compact_distributed()
             for did in deltas:
                 shutil.rmtree(
                     os.path.join(self.delta_root, f"delta-{did}"), ignore_errors=True
                 )
             self._delta_pins = {}
+
+    def _compact_driver(self, deltas: list[int]) -> None:
+        """Driver placement of :meth:`compact`. One ``toArrow`` collects
+        ``docs/base`` ∪ every pending delta's upserts with each row's
+        version ``_v``, ``doc_id``, tokens and buckets, computed in the
+        JVM as :meth:`apply_batch`'s probe does. The delta tombstones are
+        read with pyarrow; a version is dead iff ``_v`` is below the
+        latest delta that tombstoned its doc_id (the rule of
+        :meth:`current_docs`). Nothing is swapped or published until
+        every file is written."""
+        allv = self._versions(deltas)
+        docs_schema = allv.drop("_v").schema
+        tokens = tokens_no_stop("text")
+        rows = allv.select(
+            *docs_schema.names, "_v", doc_id_col().alias("doc_id"), tokens.alias("tokens"),
+            F.transform(tokens, lambda t: bucket_col(t, DEFAULT_BUCKETS)).alias("buckets"),
+        ).toArrow()
+
+        tomb_v = np.full(rows.num_rows, -1, dtype=np.int64)  # latest tombstoning delta
+        for did in deltas:  # ascending: a later delta overwrites
+            ids = read_artifact(os.path.join(self.delta_root, f"delta-{did}", "tombstones"),
+                                ["doc_id"])["doc_id"].combine_chunks()
+            hit = pc.is_in(rows["doc_id"], value_set=ids, skip_nulls=True)
+            tomb_v[hit.to_numpy(zero_copy_only=False)] = did
+        live = rows.filter(pa.array(rows["_v"].to_numpy() >= tomb_v))
+
+        snap_id = self.catalog.next_id()
+        manifest = stage_index_driver(live, docs_schema, self.catalog, snap_id)
+        tmp_docs = self.docs_base + ".compact"
+        shutil.rmtree(tmp_docs, ignore_errors=True)
+        write_artifact(live.select(docs_schema.names).cast(_arrow_schema(docs_schema)), tmp_docs)
+        self._swap_docs(tmp_docs, docs_schema)
+        self.catalog.publish(snap_id, manifest)
+
+    def _compact_distributed(self) -> None:
+        """Distributed placement of :meth:`compact`, for a store above
+        ``LARGE_BATCH_DOCS`` stored versions: no per-doc state on the
+        driver."""
+        tmp_docs = self.docs_base + ".compact"
+        live = self.current_docs()
+        live.write.mode("overwrite").parquet(tmp_docs)
+        self._swap_docs(tmp_docs, live.schema)
+        build_index(self.spark, self._docs_frame(), self.catalog)
+
+    def _swap_docs(self, tmp_docs: str, schema: StructType) -> None:
+        """Swap the corpus staged at ``tmp_docs`` in as ``docs/base``."""
+        old = self.docs_base + ".old"
+        shutil.rmtree(old, ignore_errors=True)
+        os.replace(self.docs_base, old)
+        os.replace(tmp_docs, self.docs_base)
+        shutil.rmtree(old, ignore_errors=True)
+        self._docs_schema = schema

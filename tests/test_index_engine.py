@@ -978,6 +978,23 @@ def test_artifacts_zstd_v2_and_old_snapshots_read(spark, transcripts, tmp_path):
     for path in (snap.docmap_dir, os.path.join(s.delta_root, "delta-0", "docmap")):
         doc_int = [c[3] for c in _chunks(path) if c[1] == "doc_int"]
         assert doc_int and all("DELTA_BINARY_PACKED" in e for e in doc_int), path
+    # the delta's parts are driver-written: each column takes the encoding
+    # Spark's v2 writer gives it, and no footer carries an Arrow schema blob
+    want = {
+        "doc_id": "DELTA_BYTE_ARRAY", "term": "DELTA_BYTE_ARRAY",
+        "postings": "DELTA_BYTE_ARRAY", "ts": "DELTA_BINARY_PACKED",
+        "first_doc": "DELTA_BINARY_PACKED", "last_doc": "DELTA_BINARY_PACKED",
+        "block_last_doc.list.element": "DELTA_BINARY_PACKED", "role": "RLE_DICTIONARY",
+        "n": "RLE_DICTIONARY", "block_max_tfnorm.list.element": "RLE_DICTIONARY",
+    }
+    seen = set()
+    for p in ("tombstones", "upserts", "docmap", "postings"):
+        for f, col, _, enc in _chunks(os.path.join(s.delta_root, "delta-0", p)):
+            assert b"ARROW:schema" not in (pq.ParquetFile(f).metadata.metadata or {}), f
+            if col in want:
+                assert want[col] in enc, (p, col, enc)
+                seen.add(col)
+    assert seen == set(want)
 
     multi, filtered = ["spark", "query", "plan"], dict(ASSISTANT_SEARCH)
 

@@ -78,15 +78,21 @@ def test_timed_decorator_ok_and_error_paths():
 def test_build_manifest_has_per_task_lineage(spark, transcripts, tmp_path_factory):
     """north_star: 'lineage and metrics … recorded per task' — the
     published manifest carries event-log-derived per-task rows for
-    every big build stage, incl. the thread-overlapped docmap."""
+    every big build stage, incl. the thread-overlapped docmap, and only
+    for the stages this build ran: an earlier build in the same
+    application (here one with a third postings group) is not counted."""
     from searchengine_spark.index.build import build_index
     from searchengine_spark.index.catalog import IndexCatalog
 
-    cat = IndexCatalog(str(tmp_path_factory.mktemp("index_tasks") / "t"))
-    snap = build_index(spark, transcripts, cat, n_buckets=8)
+    root = tmp_path_factory.mktemp("index_tasks")
+    build_index(spark, transcripts, IndexCatalog(str(root / "earlier")), n_buckets=8,
+                bucket_jobs=3)
+    snap = build_index(spark, transcripts, IndexCatalog(str(root / "t")), n_buckets=8,
+                       bucket_jobs=2)
     tm = snap.manifest.get("task_metrics", {})
     if not tm:
         pytest.skip("event log disabled in this session")
+    assert set(tm) == {"docmap_raw", "docmap", "tf", "postings-0", "postings-1", "terms"}
     for stage in ("docmap_raw", "docmap", "tf", "postings-0", "terms"):
         assert stage in tm, f"missing per-task rows for stage {stage}"
         agg = tm[stage]

@@ -470,6 +470,202 @@ def test_apply_batch_meta_stats(spark, transcripts, tmp_path, monkeypatch, large
     assert dict(dm.dtypes)["doc_int"] == "bigint"
 
 
+def _compaction_store(spark, transcripts, tmp_path, name: str) -> StreamingIndex:
+    """A store of 60 corpus docs with two pending deltas: a base doc
+    re-upserted in both, another deleted, ``zcp:0000`` added in delta 0
+    and re-upserted in delta 1, and ``zcp:0001`` upserted with a text
+    that analyzes to no token (dl 0)."""
+    base = transcripts.orderBy("conv_id", "turn_idx").limit(60)
+    upd, dele = base.limit(2).collect()
+    s = StreamingIndex(spark, str(tmp_path / name))
+    s.bootstrap(base)
+    s.apply_batch(_batch(spark, tmp_path, [
+        _msg(1, upd["conv_id"], upd["turn_idx"], "rewritten zebracomp spark"),
+        _msg(2, dele["conv_id"], dele["turn_idx"], "", delete=True),
+        _msg(3, "zcp", 0, "first zebracomp query text"),
+        _msg(4, "zcp", 1, "the and of"),
+        _msg(5, "zcp", 2, "zebracomp zebracomp spark plan"),
+    ]), 0)
+    s.apply_batch(_batch(spark, tmp_path, [
+        _msg(6, "zcp", 0, "second zebracomp text"),
+        _msg(7, upd["conv_id"], upd["turn_idx"], "rewritten again zebracomp"),
+        _msg(8, "zcp", 3, "query plan zebracomp"),
+    ]), 1)
+    return s
+
+
+def _compact_on(monkeypatch, s: StreamingIndex, placement: str) -> None:
+    """``s.compact()`` routed to one placement: the other one raises."""
+    from searchengine_spark.streaming import ingest as ing
+
+    def unreachable(*a, **kw):
+        raise AssertionError("wrong placement")
+
+    with monkeypatch.context() as m:
+        if placement == "driver":
+            m.setattr(StreamingIndex, "_compact_distributed", unreachable)
+        else:
+            m.setattr(ing, "LARGE_BATCH_DOCS", 0)
+            m.setattr(StreamingIndex, "_compact_driver", unreachable)
+        s.compact()
+
+
+def test_compact_placements_identical(spark, transcripts, tmp_path, monkeypatch):
+    """The driver and the distributed placement of ``compact()`` publish
+    the same snapshot over the same ``docs/base``: every row of docmap,
+    postings (blobs and block metadata included) and terms, the manifest
+    keys and the build settings and stats in them, the corpus rows and
+    schema; live search afterwards equals the direct path on both."""
+    from pyspark.sql.types import StructType
+
+    stores = {}
+    for placement in ("driver", "spark"):
+        s = _compaction_store(spark, transcripts, tmp_path, placement)
+        _compact_on(monkeypatch, s, placement)
+        assert s.delta_ids() == []
+        stores[placement] = s
+    drv, dist = stores["driver"], stores["spark"]
+    snaps = [st.catalog.current() for st in (drv, dist)]
+
+    for part in ("docmap", "postings", "terms"):
+        rows = [
+            sorted(spark.read.schema(StructType.fromJson(sn.manifest["schemas"][part]))
+                   .parquet(os.path.join(sn.path, part)).collect(), key=str)
+            for sn in snaps
+        ]
+        assert rows[0] == rows[1], part
+        assert rows[0], part
+    dm = {r["doc_id"]: r["dl"] for r in spark.read.parquet(snaps[0].docmap_dir).collect()}
+    assert dm["zcp:0001"] == 0 and dm["zcp:0000"] == 3
+
+    m_drv, m_dist = (sn.manifest for sn in snaps)
+    assert set(m_drv) == set(m_dist)
+    for key in ("stats", "schemas", "n_buckets", "seg_span", "block", "k1", "b", "synonyms"):
+        assert m_drv[key] == m_dist[key], key
+    assert {"docmap", "postings-0", "terms"} <= set(m_drv["ledger"])
+    assert all("seconds" in e for e in m_drv["ledger"].values())
+    assert m_drv["task_metrics"] == {}
+
+    assert drv._docs_frame().schema == dist._docs_frame().schema
+    docs = [sorted(st._docs_frame().collect(), key=str) for st in (drv, dist)]
+    assert docs[0] == docs[1]
+    assert len(docs[0]) == 60 - 1 + 4  # one base doc deleted, zcp:0000-0003 added
+
+    for terms in (["zebracomp"], ["spark", "query", "zebracomp"], ["plan", "text"]):
+        direct = [(r["doc_id"], r["score"])
+                  for r in search_direct(drv.current_docs(), terms, k=20).collect()]
+        assert direct
+        assert _live_pairs(drv, terms, k=20) == _live_pairs(dist, terms, k=20) == direct
+
+
+def test_compact_job_budget(spark, transcripts, tmp_path, spark_jobs):
+    """A small store compacts with one Spark job, the collect of every
+    stored version; the first live search on the new base then runs two
+    (its postings and its candidates): the term dictionary is pinned
+    from the ``terms`` files with no job."""
+    s = _compaction_store(spark, transcripts, tmp_path, "store")
+    assert len(spark_jobs(s.compact)) == 1
+    result = []
+    assert len(spark_jobs(lambda: result.append(s.search(["zebracomp", "spark"])))) == 2
+    assert {"zcp:0000", "zcp:0002"} <= {d for d, _ in _live_pairs(s, ["zebracomp"])}
+
+
+def test_term_dict_over_cap_reads_footers_only(spark, transcripts, tmp_path, monkeypatch,
+                                               spark_jobs):
+    """A vocabulary above ``TERM_CACHE_MAX`` is not pinned: the row count
+    from the ``terms`` footers decides before any data is read, with no
+    Spark job, and live search falls back to the term point-read."""
+    import pyarrow.parquet as pq
+
+    import searchengine_spark.index.engine as E
+    from searchengine_spark.index.engine import IndexHandle
+
+    s = _compaction_store(spark, transcripts, tmp_path, "store")
+    s.compact()
+    under = IndexHandle(spark, s.catalog.current()).term_dict()
+    assert under is not None and "zebracomp" in under
+
+    def no_read(*a, **kw):
+        raise AssertionError("an over-cap vocabulary must not be read")
+
+    monkeypatch.setattr(E, "TERM_CACHE_MAX", len(under) - 1)
+    monkeypatch.setattr(pq, "read_table", no_read)
+    monkeypatch.setattr(pq.ParquetFile, "read", no_read)
+    ix = IndexHandle(spark, s.catalog.current())
+    got = []
+    assert spark_jobs(lambda: got.append(ix.term_dict())) == []
+    assert got == [None]
+    assert {"zcp:0000", "zcp:0002"} <= {d for d, _ in _live_pairs(s, ["zebracomp"])}
+
+
+@pytest.mark.parametrize("at_bound", [True, False])
+def test_compact_gate_bound(spark, transcripts, tmp_path, monkeypatch, at_bound):
+    """``compact()`` takes the driver placement iff the base ``n_docs``
+    plus the pending deltas' ``n_docs`` is at most ``LARGE_BATCH_DOCS``.
+    The bound counts stored versions, not live docs: here 60 + 4 + 3 =
+    67 versions hold 63 live docs, so a threshold of 66 already takes the
+    distributed placement."""
+    from searchengine_spark.streaming import ingest as ing
+
+    s = _compaction_store(spark, transcripts, tmp_path, "store")
+    bound = s.catalog.current().stats["n_docs"] + sum(
+        s._delta_meta(did)["n_docs"] for did in s.delta_ids()
+    )
+    assert bound == 60 + 4 + 3
+    ran = []
+    for name in ("_compact_driver", "_compact_distributed"):
+        def spy(self, *a, _orig=getattr(StreamingIndex, name), _name=name):
+            ran.append(_name)
+            return _orig(self, *a)
+        monkeypatch.setattr(StreamingIndex, name, spy)
+    monkeypatch.setattr(ing, "LARGE_BATCH_DOCS", bound if at_bound else bound - 1)
+    s.compact()
+    assert ran == ["_compact_driver" if at_bound else "_compact_distributed"]
+    assert s.catalog.current().stats["n_docs"] == 63
+
+
+def test_compact_driver_failure_leaves_store(spark, transcripts, tmp_path, monkeypatch):
+    """A write that raises in the middle of the driver placement's build
+    leaves CURRENT, ``docs/base`` and the deltas as they were; a rerun
+    then publishes cleanly: one file per artifact dir and one ledger
+    entry per stage, nothing left from the failed attempt."""
+    from searchengine_spark.index import build as B
+
+    s = _compaction_store(spark, transcripts, tmp_path, "store")
+    cur, deltas = s.catalog.current_id(), s.delta_ids()
+    docs_files = sorted(os.listdir(s.docs_base))
+    docs_rows = sorted(s._docs_frame().collect(), key=str)
+    write = B.write_artifact
+
+    def failing(table, path):
+        if "postings" in path:
+            raise OSError("disk full")
+        write(table, path)
+
+    with monkeypatch.context() as m:
+        m.setattr(B, "write_artifact", failing)
+        with pytest.raises(OSError, match="disk full"):
+            s.compact()
+    assert s.catalog.current_id() == cur and s.delta_ids() == deltas
+    assert sorted(os.listdir(s.docs_base)) == docs_files
+    assert sorted(s._docs_frame().collect(), key=str) == docs_rows
+    assert _live_pairs(s, ["zebracomp"])
+
+    s.compact()
+    snap = s.catalog.current()
+    assert snap.snap_id != cur and s.delta_ids() == []
+    assert not [n for n in os.listdir(s.catalog.root) if n.startswith("stage-")]
+    with open(os.path.join(snap.path, "ledger.jsonl")) as f:
+        assert sorted(json.loads(line)["stage"] for line in f) == ["docmap", "postings-0", "terms"]
+    for root, dirs, files in os.walk(snap.path):
+        if root != snap.path and not dirs:
+            assert [f for f in files if f.endswith(".parquet")] == ["part-00000.zstd.parquet"]
+    assert sorted(os.listdir(os.path.dirname(s.docs_base))) == ["base"]
+    direct = [(r["doc_id"], r["score"])
+              for r in search_direct(s.current_docs(), ["zebracomp"]).collect()]
+    assert _live_pairs(s, ["zebracomp"]) == direct
+
+
 def test_parse_messages_kafka_shape(spark):
     """The Kafka value-bytes → typed message transform (S9/S10) on a
     static frame (the streaming plan uses the identical expression)."""
