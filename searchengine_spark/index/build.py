@@ -834,8 +834,6 @@ def stage_index_driver(
     docs_schema: T.StructType,
     catalog: IndexCatalog,
     snap_id: int,
-    *,
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> dict:
     """Driver placement of :func:`build_index` for a corpus small enough
     to collect: stage snapshot ``snap_id`` from ``docs`` and return the
@@ -845,7 +843,8 @@ def stage_index_driver(
     ``docs`` is an Arrow table of the corpus columns of ``docs_schema``
     plus, per doc, ``doc_id`` (:func:`..functions.text.doc_id_col`),
     ``tokens`` (the analyzer's output) and ``buckets`` (their
-    :func:`bucket_col` over ``n_buckets``), all computed in the JVM.
+    :func:`bucket_col` over ``DEFAULT_BUCKETS``, the bucket count
+    :func:`build_index` defaults to), all computed in the JVM.
     The driver numbers the docs 0..n-1 in doc_id byte order (the order
     the range-partitioned build gives), takes N and Σdl from the arrays,
     encodes the postings with :func:`_encode_postings` under the new
@@ -862,9 +861,15 @@ def stage_index_driver(
     os.makedirs(stage_dir)
     ledger = Ledger(stage_dir)
 
+    docmap_schema = T.StructType(
+        [T.StructField("doc_int", T.LongType()), T.StructField("doc_id", T.StringType())]
+        + [T.StructField(c, docs_schema[c].dataType)
+           for c in ("conv_id", "turn_idx", "role", "tool", "ts")]
+        + [T.StructField("dl", T.IntegerType())]
+    )
+    meta_cols = docmap_schema.names[1:-1]  # doc_id .. ts, as collected
     order = pc.sort_indices(docs["doc_id"], null_placement="at_start")
-    docs = docs.select(["doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "tokens",
-                        "buckets"]).take(order)
+    docs = docs.select(meta_cols + ["tokens", "buckets"]).take(order)
     n = docs.num_rows
     doc_int = np.arange(n, dtype=np.int64)
     tokens = docs["tokens"].combine_chunks()
@@ -874,13 +879,7 @@ def stage_index_driver(
 
     t0 = time.perf_counter()
     docmap_dir = os.path.join(stage_dir, "docmap")
-    docmap_schema = T.StructType(
-        [T.StructField("doc_int", T.LongType()), T.StructField("doc_id", T.StringType())]
-        + [T.StructField(c, docs_schema[c].dataType)
-           for c in ("conv_id", "turn_idx", "role", "tool", "ts")]
-        + [T.StructField("dl", T.IntegerType())]
-    )
-    docmap = (docs.select(docmap_schema.names[1:-1])
+    docmap = (docs.select(meta_cols)
               .add_column(0, "doc_int", pa.array(doc_int)).append_column("dl", dl))
     write_artifact(docmap.cast(to_arrow_schema(docmap_schema)), docmap_dir)
     dt = time.perf_counter() - t0
@@ -924,6 +923,6 @@ def stage_index_driver(
                   bytes_written=_dir_bytes(terms_dir))
 
     return _manifest(
-        stage_dir, stats, synonyms=False, n_buckets=n_buckets, task_metrics={},
+        stage_dir, stats, synonyms=False, n_buckets=DEFAULT_BUCKETS, task_metrics={},
         elapsed=time.perf_counter() - t_start, docmap=docmap_schema, terms=terms_schema,
     )
