@@ -59,6 +59,7 @@ same score-desc/doc_id-asc tie-break.
 from __future__ import annotations
 
 import math
+import os
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -66,7 +67,6 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -196,19 +196,25 @@ class IndexHandle:
         construction), or None when the corpus is too large to pin
         (DOC_VALUES_MAX; callers fall back to docmap reads). Doc names,
         MUST filter sets and explicit sort keys all read it — the
-        serving analogue of Bleve's DocValues. One Arrow-native
-        transfer (``toArrow``), never row objects; timestamps are held
-        as UTC wall time, the form the filters' bounds take."""
+        serving analogue of Bleve's DocValues. A parquet-dir snapshot's
+        ``docmap`` files are read on the driver with no Spark job
+        (:func:`..build.read_artifact`); an Iceberg snapshot's pinned
+        table is one ``toArrow``. Timestamps are held as UTC wall time in
+        microseconds, the form the filters' bounds and ``toArrow`` take."""
         cached = getattr(self, "_doc_values", False)
         if cached is not False:
             return cached
         if self.stats["n_docs"] > DOC_VALUES_MAX:
             self._doc_values = None
         else:
-            tbl = self.docmap().toArrow().sort_by("doc_int").combine_chunks()
+            if "docmap" in (self.snapshot.tables or {}):
+                tbl = self.docmap().toArrow()
+            else:
+                tbl = read_artifact(self.snapshot.docmap_dir, self.docmap().columns)
+            tbl = tbl.sort_by("doc_int").combine_chunks()
             for i, f in enumerate(tbl.schema):
-                if pa.types.is_timestamp(f.type) and f.type.tz is not None:
-                    tbl = tbl.set_column(i, f.name, tbl.column(i).cast(pa.timestamp(f.type.unit)))
+                if pa.types.is_timestamp(f.type) and f.type != pa.timestamp("us"):
+                    tbl = tbl.set_column(i, f.name, tbl.column(i).cast(pa.timestamp("us")))
             self._doc_values = tbl
         return self._doc_values
 
@@ -239,9 +245,11 @@ class IndexHandle:
         exceeds SERVING_DRIVER_MAX, or the vocabulary itself is too large
         to pin (TERM_CACHE_MAX). Pinned lazily by the first
         driver-placement postings read (:func:`_driver_postings`), with
-        no Spark job: a parquet-dir snapshot's postings files are read
-        straight into Arrow on the driver, as the SQL table function reads
-        them; an Iceberg snapshot's pinned table is one ``toArrow``."""
+        no Spark job: a parquet-dir snapshot's ``bucket=<b>/`` dirs are
+        read file by file into Arrow on the driver
+        (:func:`..build.read_artifact`, which needs no dataset
+        discovery); an Iceberg snapshot's pinned table is one
+        ``toArrow``."""
         cached = getattr(self, "_pinned_postings", False)
         if cached is not False:
             return cached
@@ -253,9 +261,11 @@ class IndexHandle:
                 self.postings().select("term", "postings").toArrow().combine_chunks()
             )
         else:
-            self._pinned_postings = pq.read_table(
-                self.snapshot.postings_dir, columns=["term", "postings"]
-            ).combine_chunks()
+            root = self.snapshot.postings_dir
+            self._pinned_postings = pa.concat_tables([
+                read_artifact(os.path.join(root, b), ["term", "postings"])
+                for b in sorted(os.listdir(root)) if b.startswith("bucket=")
+            ]).combine_chunks()
         return self._pinned_postings
 
     def term_dict(self) -> dict[str, tuple[int, int]] | None:

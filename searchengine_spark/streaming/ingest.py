@@ -29,14 +29,15 @@ Spark-native equivalent (merge-on-read, Iceberg-style):
   live semantics**: N and df still count tombstoned-but-unmerged docs
   (Lucene's ``maxDoc``/``docFreq`` do the same until segments merge),
   so scores drift slightly between compactions and snap to exact on
-  ``compact()``. Like the serving engine, it has a driver and a
-  distributed placement of one scorer: a query whose posting volume
-  and pending tombstone count are bounded (known from the term
-  dictionary and ``meta.json``, no job) collects its postings and
-  scores them on the driver, then maps its top k + T candidates (T =
-  pending tombstones, an upper bound on dead matched versions) to
-  doc_ids and drops the dead ones — two Spark jobs; heavier queries
-  keep the ``mapInPandas`` + join plan;
+  ``compact()``. Like Bleve's in-memory segments with their deleted-doc
+  bitmaps, the live index is held as pinned Arrow segments: the base
+  snapshot's term dictionary, postings and doc values, each small
+  delta's doc_ids, postings and tombstones, and one sorted array of
+  the doc_ints of dead versions, updated at each publish. A query
+  whose posting volume is bounded (known from the term dictionary and
+  ``meta.json``, no job) is scored on them in driver numpy with the
+  dead versions masked before ranking — no Spark job; heavier queries
+  and larger deltas keep the ``mapInPandas`` + join plan;
 - ``compact()`` folds the deltas into a new ``docs/base`` and base
   snapshot and clears them — the analogue of a scorch segment merge,
   after which results are rank-identical to the direct path (tested).
@@ -51,9 +52,15 @@ written), so no read starts a parquet footer-inference job. A small
 micro-batch is applied with one Spark job that collects it; the driver
 writes the delta. A small store is compacted the same way. One CDC
 cycle on the offline benchmark (4 vCPUs, 500-message batches over a
-~10k-doc corpus) runs 4 Spark jobs: ``apply_batch`` 1, live search 2,
-``compact()`` 1 (14 while compaction ran the distributed fold and
-build: 11 jobs).
+~10k-doc corpus) runs 2 Spark jobs: ``apply_batch`` 1, ``compact()``
+1, and none for live search (4 while live search collected its
+postings and its candidates' doc_ids: 2 jobs).
+
+Versions are ordered by arrival, the reference's last-write-wins
+order: each delta's doc_ints start at the high watermark of every
+delta published before it, so its ``doc_int_start`` in ``meta.json``
+(not its epoch id, which a source may re-deliver or number out of
+order) places it after them.
 """
 
 from __future__ import annotations
@@ -64,6 +71,7 @@ import shutil
 import threading
 import time
 import weakref
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -95,11 +103,12 @@ from ..index.engine import (
     _SCORED,
     SERVING_DRIVER_MAX,
     IndexHandle,
+    _driver_postings,
     _idf,
+    _in_sorted,
     _make_scorer,
     _result_df,
     _score_rows,
-    _term_postings,
     term_meta,
 )
 
@@ -133,10 +142,89 @@ DELTA_SCHEMAS = {
     "tombstones": "doc_id STRING",
 }
 
-# the live search's driver placement point-reads its k + T candidates
-# (T = pending tombstones) with one IN list and collects the T
-# tombstones; above this many it keeps the distributed plan
-LIVE_POINT_READ_MAX = 16384
+_NO_DEAD = np.zeros(0, dtype=np.int64)
+
+
+@dataclass(frozen=True)
+class _Delta:
+    """One published delta as live search holds it: its parsed
+    ``meta.json`` and, for a delta of at most ``LARGE_BATCH_DOCS`` docs,
+    its pinned parts — the docmap's ``doc_id`` column in doc_int order,
+    the (term, n, postings) rows and the tombstoned doc_ids. The upserts,
+    which carry the text, are never pinned."""
+
+    meta: dict
+    doc_id: pa.Array | None = None
+    postings: pa.Table | None = None
+    tombstones: pa.Array | None = None
+
+    @property
+    def arrival(self) -> tuple[int, int]:
+        """Sort key of arrival order: a delete-only delta (no doc_ints)
+        shares its start with the next delta and comes before it."""
+        return self.meta["doc_int_start"], self.meta["doc_int_end"]
+
+
+@dataclass(frozen=True)
+class _LiveState:
+    """Everything one live search reads, read once: the base snapshot's
+    handle, the pending deltas by id, and the sorted doc_ints of every
+    dead version — None when a delta or the base doc values are too
+    large to pin. Never mutated: a publish or a compaction installs a
+    new one under the write lock, so a search never reads a delta file
+    that a compaction may delete."""
+
+    base: IndexHandle
+    deltas: dict[int, _Delta]
+    dead: np.ndarray | None
+
+    @classmethod
+    def on(cls, base: IndexHandle) -> "_LiveState":
+        return cls(base, {}, _NO_DEAD if base.doc_values() is not None else None)
+
+    def segments(self) -> list[tuple[int, pa.Array]]:
+        """(doc_int start, doc_id column in doc_int order) of the base and
+        of each delta holding docs, in arrival order, which is ascending
+        doc_int order."""
+        deltas = sorted(self.deltas.values(), key=lambda d: d.arrival)
+        return [(0, self.base.doc_values().column("doc_id"))] + [
+            (d.meta["doc_int_start"], d.doc_id) for d in deltas if d.meta["n_docs"]
+        ]
+
+    def add(self, did: int, delta: _Delta) -> "_LiveState":
+        """This state with ``delta`` published as delta ``did``, the
+        newest by arrival. Its tombstones kill every older version of
+        their doc_ids: in each older segment, the rows whose doc_id is
+        tombstoned. A re-delivered id replaces its old delta, whose
+        kills are undone by folding the other deltas again."""
+        if did in self.deltas:
+            live = _LiveState.on(self.base)
+            rest = sorted((d for d in self.deltas.items() if d[0] != did), key=lambda d: d[1].arrival)
+            for d_id, d in rest:
+                live = live.add(d_id, d)
+            return live.add(did, delta)
+        dead = None
+        if self.dead is not None and delta.doc_id is not None:
+            kills = [
+                start + np.flatnonzero(
+                    pc.is_in(ids, value_set=delta.tombstones).to_numpy(zero_copy_only=False)
+                )
+                for start, ids in self.segments()
+            ]
+            dead = np.union1d(self.dead, np.concatenate(kills))
+        return _LiveState(self.base, {**self.deltas, did: delta}, dead)
+
+    def names(self, doc_ints: np.ndarray) -> list[str]:
+        """The doc_ids of live versions ``doc_ints``, from the pinned
+        doc_id columns (each segment is numbered densely from its start)."""
+        segs = self.segments()
+        starts = np.array([start for start, _ in segs])
+        at = np.searchsorted(starts, doc_ints, side="right") - 1
+        out = np.empty(len(doc_ints), dtype=object)
+        for i in np.unique(at):
+            m = at == i
+            out[m] = segs[i][1].take(doc_ints[m] - starts[i]).to_pylist()
+        return out.tolist()
 
 
 def _arrow_schema(schema: str | StructType) -> pa.Schema:
@@ -238,10 +326,11 @@ class StreamingIndex:
         # base snapshot + delta log; the lock makes each micro-batch
         # land entirely before or entirely after a base swap
         self._write_lock = threading.RLock()
-        # serving pins (see :meth:`_delta_frame` and :meth:`search`): the
-        # base snapshot's handle, and each published delta's frames by
-        # delta id — dropped when an epoch republishes or compact() folds
-        self._base_ix: IndexHandle | None = None
+        # what live search reads (:class:`_LiveState`), replaced whole
+        # under the write lock; None until first needed (:meth:`_live_state`)
+        self._live: _LiveState | None = None
+        # each published delta's frames by delta id (:meth:`_delta_frame`)
+        # — dropped when an epoch republishes or compact() folds
         self._delta_pins: dict[int, dict[str, DataFrame]] = {}
         # schema of the frame last written to docs/base (None until this
         # object writes or first reads it — see :meth:`_docs_frame`)
@@ -256,6 +345,7 @@ class StreamingIndex:
         transcripts.write.mode("overwrite").parquet(self.docs_base)
         self._docs_schema = transcripts.schema
         build_index(self.spark, self._docs_frame(), self.catalog)
+        self._live = None
 
     def delta_ids(self) -> list[int]:
         out = []
@@ -293,6 +383,11 @@ class StreamingIndex:
     def _delta_meta(self, did: int) -> dict:
         with open(os.path.join(self.delta_root, f"delta-{did}", "meta.json")) as f:
             return json.load(f)
+
+    def _delta_starts(self) -> dict[int, int]:
+        """Each pending delta's ``doc_int_start``: its place in arrival
+        order, the version order of every merge-on-read view."""
+        return {did: self._delta_meta(did)["doc_int_start"] for did in self.delta_ids()}
 
     def _next_doc_int(self) -> int:
         """High watermark for delta doc_int assignment."""
@@ -483,9 +578,10 @@ class StreamingIndex:
         tmp = self._fresh_tmp(epoch_id)
         for name, tbl in parts.items():
             schema = _arrow_schema(DELTA_SCHEMAS[name])
-            write_artifact(tbl.select(schema.names).cast(schema), os.path.join(tmp, name))
+            parts[name] = tbl.select(schema.names).cast(schema)
+            write_artifact(parts[name], os.path.join(tmp, name))
         self._publish(tmp, epoch_id, t0, start, n_docs=up.num_rows,
-                      sum_dl=pc.sum(dl).as_py() or 0, n_tombstones=last.num_rows)
+                      sum_dl=pc.sum(dl).as_py() or 0, n_tombstones=last.num_rows, parts=parts)
 
     def _apply_distributed(
         self, batch: DataFrame, base: Snapshot, epoch_id: int, t0: float
@@ -575,9 +671,12 @@ class StreamingIndex:
         return tmp
 
     def _publish(self, tmp: str, epoch_id: int, t0: float, start: int, *,
-                 n_docs: int, sum_dl: int, n_tombstones: int) -> None:
-        """Write ``meta.json`` into the staged delta, then swap it in as
-        ``delta-<epoch>`` with one atomic rename."""
+                 n_docs: int, sum_dl: int, n_tombstones: int,
+                 parts: dict[str, pa.Table] | None = None) -> None:
+        """Write ``meta.json`` into the staged delta, swap it in as
+        ``delta-<epoch>`` with one atomic rename, then install the live
+        state with it. ``parts`` are the delta's tables as written, when
+        the driver holds them; otherwise they are read back."""
         meta = {
             "epoch": int(epoch_id),
             "n_docs": n_docs,
@@ -594,31 +693,81 @@ class StreamingIndex:
         os.replace(tmp, ddir)  # atomic publish of the delta
         # a re-delivered epoch overwrote delta-<n>: its old pin is stale
         self._delta_pins.pop(int(epoch_id), None)
+        live = self._live
+        if live is None:
+            self._live = self._load_live()
+        else:
+            self._live = live.add(int(epoch_id), self._pin_delta(int(epoch_id), meta, parts))
+
+    def _pin_delta(self, did: int, meta: dict, parts: dict[str, pa.Table] | None = None) -> _Delta:
+        """Delta ``did`` as live search holds it (:class:`_Delta`): its
+        parts pinned from ``parts`` or read back with
+        :func:`..index.build.read_artifact` (no job), unless it holds
+        more than ``LARGE_BATCH_DOCS`` docs."""
+        if meta["n_docs"] > LARGE_BATCH_DOCS:
+            return _Delta(meta)
+        if parts is None:
+            ddir = os.path.join(self.delta_root, f"delta-{did}")
+            parts = {
+                "docmap": read_artifact(os.path.join(ddir, "docmap"), ["doc_int", "doc_id"]),
+                "postings": read_artifact(os.path.join(ddir, "postings"), ["term", "n", "postings"]),
+                "tombstones": read_artifact(os.path.join(ddir, "tombstones"), ["doc_id"]),
+            }
+        return _Delta(
+            meta,
+            parts["docmap"].sort_by("doc_int")["doc_id"].combine_chunks(),
+            parts["postings"].select(["term", "n", "postings"]).combine_chunks(),
+            parts["tombstones"]["doc_id"].combine_chunks(),
+        )
+
+    def _load_live(self) -> _LiveState:
+        """The live state of the store on disk: CURRENT's snapshot and
+        every published delta, folded in arrival order."""
+        with self._write_lock:
+            live = _LiveState.on(IndexHandle(self.spark, self.catalog.current()))
+            metas = {did: self._delta_meta(did) for did in self.delta_ids()}
+            for did in sorted(metas, key=lambda d: _Delta(metas[d]).arrival):
+                live = live.add(did, self._pin_delta(did, metas[did]))
+            return live
+
+    def _live_state(self) -> _LiveState:
+        """The installed live state, loaded from disk on first use."""
+        live = self._live
+        if live is None:
+            with self._write_lock:
+                if self._live is None:
+                    self._live = self._load_live()
+                live = self._live
+        return live
 
     # ------------------------------------------------------------------
     # merge-on-read views
     # ------------------------------------------------------------------
 
-    def _tombstone_frame(self, deltas: list[int]) -> DataFrame | None:
-        """(doc_id, _tomb_v) — the LATEST delta that tombstoned each
-        doc_id, read from the per-delta ``tombstones/`` parquet (never
-        the driver). Delta version ids strictly increase with doc_int
-        ranges, so "dead" checks reduce to comparing a row's version
-        (or doc_int) against its doc's max tombstoning delta."""
-        if not deltas:
+    def _tombstone_frame(self, starts: dict[int, int]) -> DataFrame | None:
+        """(doc_id, _tomb_v) — the ``doc_int_start`` of the LATEST delta
+        by arrival that tombstoned each doc_id, read from the per-delta
+        ``tombstones/`` parquet (never the driver), for the deltas
+        ``starts`` (delta id → ``doc_int_start``). Deltas number their
+        docs from ascending starts, so "dead" checks reduce to comparing
+        a row's version (its delta's start, or its doc_int) against its
+        doc's ``_tomb_v``."""
+        if not starts:
             return None
-        allt = _union(
-            [self._delta_frame(did, "tombstones").withColumn("_td", F.lit(did)) for did in deltas]
-        )
+        allt = _union([
+            self._delta_frame(did, "tombstones").withColumn("_td", F.lit(start).cast("long"))
+            for did, start in starts.items()
+        ])
         return allt.groupBy("doc_id").agg(F.max("_td").alias("_tomb_v"))
 
-    def _versions(self, deltas: list[int]) -> DataFrame:
+    def _versions(self, starts: dict[int, int]) -> DataFrame:
         """Every stored version of every doc: the ``docs/base`` rows with
         version ``_v`` = -1 and each pending delta's upserts with its
-        delta id."""
+        ``doc_int_start``."""
         return _union(
-            [self._docs_frame().withColumn("_v", F.lit(-1))]
-            + [self._delta_frame(did, "upserts").withColumn("_v", F.lit(did)) for did in deltas]
+            [self._docs_frame().withColumn("_v", F.lit(-1).cast("long"))]
+            + [self._delta_frame(did, "upserts").withColumn("_v", F.lit(start).cast("long"))
+               for did, start in starts.items()]
         )
 
     def current_docs(self) -> DataFrame:
@@ -627,14 +776,14 @@ class StreamingIndex:
         Tombstones are applied with a left join against the delta
         tombstone parquet — scale-safe for arbitrarily large CDC
         batches (no driver lists, no ``isin`` literal trees)."""
-        deltas = self.delta_ids()
-        allv = self._versions(deltas)
-        tomb = self._tombstone_frame(deltas)
+        starts = self._delta_starts()
+        allv = self._versions(starts)
+        tomb = self._tombstone_frame(starts)
         if tomb is None:
             return allv.drop("_v")
         keep = allv.withColumn("doc_id", doc_id_col())
-        # a row of version v is dead iff some delta > v tombstones its
-        # doc_id ⇔ v < max tombstoning delta (AQE broadcasts when small)
+        # a row of version v is dead iff a delta arriving after it
+        # tombstones its doc_id ⇔ v < _tomb_v (AQE broadcasts when small)
         return (
             keep.join(tomb, "doc_id", "left")
             .where(F.col("_tomb_v").isNull() | (F.col("_v") >= F.col("_tomb_v")))
@@ -654,142 +803,96 @@ class StreamingIndex:
         path (delta skip bounds were built with the stale base avgdl);
         ``compact()`` restores the pruned, exact base path.
 
-        Two placements of one scorer, chosen with no Spark job:
+        Reads the installed :class:`_LiveState` once, and has two
+        placements of one scorer, chosen with no Spark job:
 
-        - **driver** (:meth:`_search_driver`) when the query's posting
-          volume is bounded — base df from the pinned term dictionary
-          plus each delta's ``n_docs`` per term (a term's df in a delta
-          is at most its doc count) fits ``SERVING_DRIVER_MAX`` — and
-          ``k + T`` fits ``LIVE_POINT_READ_MAX``, where T is the pending
-          deltas' summed ``n_tombstones``. Budget: 2 jobs, the first
+        - **driver** (:meth:`_search_pinned`) when the state is pinned
+          (base doc values and every pending delta) and the query's
+          posting volume is bounded: base df from the pinned term
+          dictionary plus each delta's ``n_docs`` per term (a term's df
+          in a delta is at most its doc count) fits
+          ``SERVING_DRIVER_MAX``. It scores the pinned segments and masks
+          the dead versions before ranking: no Spark job, the first
           search after a compaction included (the new base's term
-          dictionary is pinned with a driver-side read, no job);
+          dictionary, postings and doc values are read on the driver);
         - **distributed** (:meth:`_search_distributed`) otherwise: a
           ``mapInPandas`` scorer, per-doc aggregation, and joins against
           the delta docmaps and tombstones.
 
-        The driver placement's result is a local frame: collecting it
-        runs no job. The base snapshot's :class:`IndexHandle` is kept
-        while CURRENT names the same snapshot (a compaction publishes a
-        new one), and delta frames come pinned from :meth:`_delta_frame`.
+        Either placement's result is a local frame or a lazy plan;
+        collecting the driver placement's runs no job.
         """
         terms = list(dict.fromkeys(terms))
-        base = self.catalog.current()
-        ix = self._base_ix
-        if ix is None or ix.snapshot.snap_id != base.snap_id:
-            ix = self._base_ix = IndexHandle(self.spark, base)
-        metas = {did: self._delta_meta(did) for did in self.delta_ids()}
+        live = self._live_state()
+        ix, metas = live.base, [d.meta for d in live.deltas.values()]
 
         # merged live stats
-        n_docs = base.stats["n_docs"] + sum(m["n_docs"] for m in metas.values())
-        sum_dl = base.stats["sum_dl"] + sum(m["sum_dl"] for m in metas.values())
+        n_docs = ix.stats["n_docs"] + sum(m["n_docs"] for m in metas)
+        sum_dl = ix.stats["sum_dl"] + sum(m["sum_dl"] for m in metas)
         avgdl = float(sum_dl) / float(max(n_docs, 1))
 
         base_meta = term_meta(ix, terms)
         bound = sum(df for df, _ in base_meta.values()) + len(terms) * sum(
-            m["n_docs"] for m in metas.values()
+            m["n_docs"] for m in metas
         )
-        n_tomb = sum(m["n_tombstones"] for m in metas.values())
-        if bound <= SERVING_DRIVER_MAX and k + n_tomb <= LIVE_POINT_READ_MAX:
-            return self._search_driver(ix, metas, terms, base_meta, n_docs, avgdl, k, n_tomb)
-        return self._search_distributed(ix, metas, terms, n_docs, avgdl, k)
+        if live.dead is not None and bound <= SERVING_DRIVER_MAX:
+            return self._search_pinned(live, terms, base_meta, n_docs, avgdl, k)
+        return self._search_distributed(live, terms, n_docs, avgdl, k)
 
-    def _search_driver(
+    def _search_pinned(
         self,
-        ix: IndexHandle,
-        metas: dict[int, dict],
+        live: _LiveState,
         terms: list[str],
         base_meta: dict[str, tuple[int, int]],
         n_docs: int,
         avgdl: float,
         k: int,
-        n_tomb: int,
     ) -> DataFrame:
-        """Driver placement of :meth:`search`: two bounded collects.
-
-        1. The query terms' posting rows — base pruned by bucket and
-           term, as ``search_index`` does, each delta by term. Live df is
-           Σ ``n`` over them (maxDoc semantics) and the rows are scored
-           with ``_score_rows``, the float64 expression of the
-           serving engine.
-        2. The candidates' doc_ids (an IN point-read of base and delta
-           docmaps) together with every pending tombstone record.
-
-        Candidates: each dead matched version maps to a distinct later
-        tombstone record, so at most T of them exist and the live top-k
-        lies within the top k + T versions by raw score. Every version
-        tied with the (k + T)-th score is kept too, since the doc_id
-        tie-break is not known before step 2. A version is dead when its
-        doc_int is below the ``doc_int_start`` of the latest delta that
-        tombstoned its doc_id (the rule of the distributed placement)."""
-        spark = self.spark
-        deltas = sorted(metas)
-        parts = []
-        if base_meta:
-            parts.append(_term_postings(ix, base_meta))
-        for did in deltas:
-            parts.append(self._delta_frame(did, "postings").where(F.col("term").isin(terms)))
-        rows = _union([p.select("term", "n", "postings") for p in parts]).collect() if parts else []
+        """Driver placement of :meth:`search` over the pinned segments:
+        the query terms' base postings (:func:`..index.engine._driver_postings`:
+        the handle's pinned postings, or one bounded collect on an index
+        too large to pin them) and each delta's pinned rows. Live df is
+        the base df plus Σ ``n`` over the delta rows (maxDoc semantics),
+        and the rows are scored with ``_score_rows``, the float64
+        expression of the serving engine. Dead versions are masked
+        before ranking, the survivors named from the pinned doc_id
+        columns and cut to top-k by (score desc, doc_id asc)."""
+        rows = _driver_postings(live.base, base_meta) if base_meta else []
+        dfs = {t: df for t, (df, _) in base_meta.items()}
+        for delta in live.deltas.values():
+            hit = delta.postings.filter(pc.field("term").isin(terms))
+            for r in hit.to_pylist():
+                rows.append(r)
+                dfs[r["term"]] = dfs.get(r["term"], 0) + r["n"]
         if not rows:
-            return _result_df(spark, [])
-        dfs: dict[str, int] = {}
-        for r in rows:
-            dfs[r["term"]] = dfs.get(r["term"], 0) + int(r["n"])
+            return _result_df(self.spark, [])
         idfs = {t: _idf(n_docs, df) for t, df in dfs.items()}
         uniq, sums, _ = _score_rows(rows, [idfs], avgdl)[0]
-
-        if len(sums) > k + n_tomb:
-            keep = sums >= np.sort(sums)[-(k + n_tomb)]  # ties at the cut stay
+        alive = ~_in_sorted(uniq, live.dead)
+        uniq, sums = uniq[alive], sums[alive]
+        if len(sums) > k:
+            keep = sums >= np.partition(sums, len(sums) - k)[len(sums) - k]  # ties at the cut stay
             uniq, sums = uniq[keep], sums[keep]
-
-        # one SQL IN expression: Column.isin costs a Py4J call per literal
-        in_cands = F.expr(f"doc_int IN ({','.join(map(str, uniq.tolist()))})")
-        no_long = F.lit(None).cast("long")
-        found = [ix.docmap().where(in_cands).select("doc_int", "doc_id", no_long.alias("_td"))]
-        for did in deltas:
-            found.append(
-                self._delta_frame(did, "docmap").where(in_cands)
-                .select("doc_int", "doc_id", no_long.alias("_td"))
-            )
-            found.append(
-                self._delta_frame(did, "tombstones")
-                .select(no_long.alias("doc_int"), "doc_id", F.lit(did).cast("long").alias("_td"))
-            )
-        names: dict[int, str] = {}
-        tomb_v: dict[str, int] = {}
-        for r in _union(found).collect():
-            if r["_td"] is None:
-                names[int(r["doc_int"])] = r["doc_id"]
-            else:
-                tomb_v[r["doc_id"]] = max(tomb_v.get(r["doc_id"], -1), int(r["_td"]))
-
-        live = []
-        for d, sc in zip(uniq.tolist(), sums.tolist()):
-            doc_id = names[d]
-            v = tomb_v.get(doc_id)
-            if v is None or d >= metas[v]["doc_int_start"]:
-                live.append((doc_id, sc))
-        live.sort(key=lambda x: (-x[1], x[0]))
-        return _result_df(spark, [(d, S.round_score(sc)) for d, sc in live[:k]])
+        top = sorted(zip(live.names(uniq), sums.tolist()), key=lambda x: (-x[1], x[0]))[:k]
+        return _result_df(self.spark, [(d, S.round_score(sc)) for d, sc in top])
 
     def _search_distributed(
         self,
-        ix: IndexHandle,
-        metas: dict[int, dict],
+        live: _LiveState,
         terms: list[str],
         n_docs: int,
         avgdl: float,
         k: int,
     ) -> DataFrame:
-        """Distributed placement of :meth:`search`, for queries whose
-        posting volume or pending tombstone count is above the driver
+        """Distributed placement of :meth:`search`, for a state that is
+        not pinned or a query whose posting volume is above the driver
         gate."""
-        spark = self.spark
-        deltas = sorted(metas)
-        postings = _union([ix.postings()] + [self._delta_frame(did, "postings") for did in deltas])
+        spark, ix = self.spark, live.base
+        starts = {did: d.meta["doc_int_start"] for did, d in live.deltas.items()}
+        postings = _union([ix.postings()] + [self._delta_frame(did, "postings") for did in starts])
         docmap = _union(
             [ix.docmap().select("doc_int", "doc_id")]
-            + [self._delta_frame(did, "docmap").select("doc_int", "doc_id") for did in deltas]
+            + [self._delta_frame(did, "docmap").select("doc_int", "doc_id") for did in starts]
         )
 
         hit = postings.where(F.col("term").isin(terms))
@@ -809,29 +912,18 @@ class StreamingIndex:
             .groupBy("doc_int")
             .agg(F.sum("contrib").alias("score_raw"))
         )
-        # exclude dead versions: doc_int belongs to base (v=-1) or the
-        # delta that minted it; dead iff a later delta tombstoned the
-        # id ⇔ doc_int < doc_int_start of the max tombstoning delta
-        # (delta doc_int ranges are disjoint and ascending). The
-        # tombstone set stays distributed: a left join against the
-        # delta tombstone parquet, with the tiny delta→start map as a
-        # literal MAP expression (O(#deltas), not O(#docs)).
+        # exclude dead versions: doc_int belongs to base or to the delta
+        # that minted it; dead iff a delta arriving later tombstoned the
+        # id ⇔ doc_int < _tomb_v, the latest tombstoning delta's
+        # doc_int_start (delta doc_int ranges are disjoint and ascend in
+        # arrival order). The tombstone set stays distributed: a left
+        # join against the delta tombstone parquet.
         hydrated = scored.join(docmap, "doc_int")
-        tomb = self._tombstone_frame(deltas)
+        tomb = self._tombstone_frame(starts)
         if tomb is not None:
-            start_map = F.create_map(
-                *[
-                    x
-                    for did in deltas
-                    for x in (F.lit(did), F.lit(metas[did]["doc_int_start"]))
-                ]
-            )
             hydrated = (
                 hydrated.join(tomb, "doc_id", "left")
-                .where(
-                    F.col("_tomb_v").isNull()
-                    | (F.col("doc_int") >= start_map[F.col("_tomb_v")])
-                )
+                .where(F.col("_tomb_v").isNull() | (F.col("doc_int") >= F.col("_tomb_v")))
                 .drop("_tomb_v")
             )
         return (
@@ -877,32 +969,36 @@ class StreamingIndex:
         entirely after it (and becomes the first delta on the new
         base, numbered from the new high watermark)."""
         with self._write_lock:
-            deltas = self.delta_ids()
-            if not deltas:
+            metas = {did: self._delta_meta(did) for did in self.delta_ids()}
+            if not metas:
                 return
             bound = self.catalog.current().stats["n_docs"] + sum(
-                self._delta_meta(did)["n_docs"] for did in deltas
+                m["n_docs"] for m in metas.values()
             )
             if bound <= LARGE_BATCH_DOCS:
-                self._compact_driver(deltas)
+                self._compact_driver({did: m["doc_int_start"] for did, m in metas.items()})
             else:
                 self._compact_distributed()
-            for did in deltas:
+            # searches from here on read the new base; one still holding
+            # the old state reads only pins and the old snapshot's files
+            self._live = _LiveState.on(IndexHandle(self.spark, self.catalog.current()))
+            for did in metas:
                 shutil.rmtree(
                     os.path.join(self.delta_root, f"delta-{did}"), ignore_errors=True
                 )
             self._delta_pins = {}
 
-    def _compact_driver(self, deltas: list[int]) -> None:
-        """Driver placement of :meth:`compact`. One ``toArrow`` collects
+    def _compact_driver(self, starts: dict[int, int]) -> None:
+        """Driver placement of :meth:`compact` over the deltas ``starts``
+        (delta id → ``doc_int_start``). One ``toArrow`` collects
         ``docs/base`` ∪ every pending delta's upserts with each row's
         version ``_v``, ``doc_id``, tokens and buckets, computed in the
         JVM as :meth:`apply_batch`'s probe does. The delta tombstones are
         read with pyarrow; a version is dead iff ``_v`` is below the
-        latest delta that tombstoned its doc_id (the rule of
-        :meth:`current_docs`). Nothing is swapped or published until
-        every file is written."""
-        allv = self._versions(deltas)
+        start of the latest delta by arrival that tombstoned its doc_id
+        (the rule of :meth:`current_docs`). Nothing is swapped or
+        published until every file is written."""
+        allv = self._versions(starts)
         docs_schema = allv.drop("_v").schema
         tokens = tokens_no_stop("text")
         rows = allv.select(
@@ -910,12 +1006,13 @@ class StreamingIndex:
             F.transform(tokens, lambda t: bucket_col(t, DEFAULT_BUCKETS)).alias("buckets"),
         ).toArrow()
 
-        tomb_v = np.full(rows.num_rows, -1, dtype=np.int64)  # latest tombstoning delta
-        for did in deltas:  # ascending: a later delta overwrites
+        tomb_v = np.full(rows.num_rows, -1, dtype=np.int64)  # latest tombstoning start
+        for did, start in starts.items():
             ids = read_artifact(os.path.join(self.delta_root, f"delta-{did}", "tombstones"),
                                 ["doc_id"])["doc_id"].combine_chunks()
             hit = pc.is_in(rows["doc_id"], value_set=ids, skip_nulls=True)
-            tomb_v[hit.to_numpy(zero_copy_only=False)] = did
+            hit = hit.to_numpy(zero_copy_only=False)
+            tomb_v[hit] = np.maximum(tomb_v[hit], start)
         live = rows.filter(pa.array(rows["_v"].to_numpy() >= tomb_v))
 
         snap_id = self.catalog.next_id()

@@ -287,6 +287,29 @@ def test_pinned_postings_parity(spark, catalog, monkeypatch):
         assert answers(ix, driver=False) == pinned
 
 
+def test_pinned_postings_read_per_file(spark, catalog, monkeypatch, spark_jobs):
+    """A parquet-dir snapshot pins its postings file by file from the
+    ``bucket=<b>/`` dirs, with no Spark job and without
+    ``pq.read_table``, which loads ``pyarrow.dataset`` into the driver;
+    the pinned rows equal the Spark read's (term, postings) rows."""
+    import pyarrow.parquet as pq
+
+    from searchengine_spark.index.engine import IndexHandle
+
+    def no_dataset(*a, **kw):
+        raise AssertionError("pq.read_table loads pyarrow.dataset")
+
+    monkeypatch.setattr(pq, "read_table", no_dataset)
+    ix = IndexHandle(spark, catalog.current())
+    got = []
+    assert spark_jobs(lambda: got.append(ix.pinned_postings())) == []
+    assert got[0] is not None and got[0].column_names == ["term", "postings"]
+    rows = ix.postings().select("term", "postings").collect()
+    assert sorted((r["term"], r["postings"]) for r in got[0].to_pylist()) == sorted(
+        (r["term"], bytes(r["postings"])) for r in rows
+    )
+
+
 def test_filtered_prune_expansion(spark, tmp_path_factory, monkeypatch):
     """Under a highly selective MUST filter (0.6 % of docs) the θ pick
     set expands geometrically until θ is established among ALLOWED docs
@@ -550,7 +573,7 @@ def test_warm_serving_job_budget(spark, catalog, spark_jobs, monkeypatch):
         raise AssertionError("an over-cap index must not pin its postings")
 
     monkeypatch.setattr(pyspark.sql.DataFrame, "toArrow", no_pin)
-    monkeypatch.setattr(E.pq, "read_table", no_pin)
+    monkeypatch.setattr(E, "read_artifact", no_pin)
     assert len(spark_jobs(lambda: search_index(ix, ["spark"]).collect())) == 1
     assert ix.pinned_postings() is None
     got = budget(ix)

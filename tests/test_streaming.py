@@ -250,8 +250,8 @@ def placed(spark, transcripts, tmp_path_factory):
     re-upserted in delta 1, ``zb:0000`` re-upserted in delta 1 (both
     leave a dead version tied with live ones); ``aaa:0000`` added in
     delta 1 with the ``TIE`` text — the highest doc_int but the lowest
-    doc_id of the tie group, which outnumbers k + T, so the driver
-    placement's candidate cut falls inside it."""
+    doc_id of the tie group, which outnumbers k, so the top-k cut falls
+    inside it."""
     tmp = tmp_path_factory.mktemp("placed")
     corpus = transcripts.orderBy("conv_id", "turn_idx").limit(200)
     first = corpus.first()
@@ -302,7 +302,7 @@ def test_live_placements_identical(placed, monkeypatch):
         driver = answers()
     with monkeypatch.context() as m:
         m.setattr(ing, "SERVING_DRIVER_MAX", 0)
-        m.setattr(StreamingIndex, "_search_driver", unreachable)
+        m.setattr(StreamingIndex, "_search_pinned", unreachable)
         distributed = answers()
     assert driver == distributed
     dead_id = f"{dele['conv_id']}:{dele['turn_idx']:04d}"
@@ -316,15 +316,14 @@ def test_live_placements_identical(placed, monkeypatch):
 
 
 def test_live_search_job_budget(placed, spark_jobs):
-    """On a warm base (term dictionary pinned) with pending deltas the
-    live search's driver placement runs two Spark jobs: the postings
-    collect and the candidates' doc_id + tombstone collect. Collecting
-    the result runs none."""
+    """With pending deltas the live search's driver placement scores the
+    pinned base and delta segments: it runs no Spark job, and neither
+    does collecting the result."""
     s, _ = placed
-    s.search(["spark"]).collect()  # pins the base term dictionary
     result = []
-    assert len(spark_jobs(lambda: result.append(s.search(["zebratie", "spark"], k=3)))) == 2
+    assert spark_jobs(lambda: result.append(s.search(["zebratie", "spark"], k=3))) == []
     assert spark_jobs(lambda: result[0].collect()) == []
+    assert result[0].count() == 3
 
 
 def test_delta_frames_start_no_job(placed, spark_jobs):
@@ -560,13 +559,13 @@ def test_compact_placements_identical(spark, transcripts, tmp_path, monkeypatch)
 
 def test_compact_job_budget(spark, transcripts, tmp_path, spark_jobs):
     """A small store compacts with one Spark job, the collect of every
-    stored version; the first live search on the new base then runs two
-    (its postings and its candidates): the term dictionary is pinned
-    from the ``terms`` files with no job."""
+    stored version; the first live search on the new base then runs
+    none: its term dictionary, postings and doc values are read from the
+    snapshot's files on the driver."""
     s = _compaction_store(spark, transcripts, tmp_path, "store")
     assert len(spark_jobs(s.compact)) == 1
     result = []
-    assert len(spark_jobs(lambda: result.append(s.search(["zebracomp", "spark"])))) == 2
+    assert spark_jobs(lambda: result.append(s.search(["zebracomp", "spark"]).collect())) == []
     assert {"zcp:0000", "zcp:0002"} <= {d for d, _ in _live_pairs(s, ["zebracomp"])}
 
 
@@ -574,7 +573,9 @@ def test_term_dict_over_cap_reads_footers_only(spark, transcripts, tmp_path, mon
                                                spark_jobs):
     """A vocabulary above ``TERM_CACHE_MAX`` is not pinned: the row count
     from the ``terms`` footers decides before any data is read, with no
-    Spark job, and live search falls back to the term point-read."""
+    Spark job, and live search falls back to the term point-read. Only
+    reads of ``terms`` files are refused: live search still pins the
+    doc values from the ``docmap`` files with the same reader."""
     import pyarrow.parquet as pq
 
     import searchengine_spark.index.engine as E
@@ -589,8 +590,18 @@ def test_term_dict_over_cap_reads_footers_only(spark, transcripts, tmp_path, mon
         raise AssertionError("an over-cap vocabulary must not be read")
 
     monkeypatch.setattr(E, "TERM_CACHE_MAX", len(under) - 1)
+    class TermsUnread(pq.ParquetFile):
+        def __init__(self, source, *a, **kw):
+            self.source = str(source)
+            super().__init__(source, *a, **kw)
+
+        def read(self, *a, **kw):
+            if f"{os.sep}terms{os.sep}" in self.source:
+                no_read()
+            return super().read(*a, **kw)
+
     monkeypatch.setattr(pq, "read_table", no_read)
-    monkeypatch.setattr(pq.ParquetFile, "read", no_read)
+    monkeypatch.setattr(pq, "ParquetFile", TermsUnread)
     ix = IndexHandle(spark, s.catalog.current())
     got = []
     assert spark_jobs(lambda: got.append(ix.term_dict())) == []
@@ -664,6 +675,177 @@ def test_compact_driver_failure_leaves_store(spark, transcripts, tmp_path, monke
     direct = [(r["doc_id"], r["score"])
               for r in search_direct(s.current_docs(), ["zebracomp"]).collect()]
     assert _live_pairs(s, ["zebracomp"]) == direct
+
+
+def test_out_of_order_epochs_follow_arrival(spark, transcripts, tmp_path, monkeypatch):
+    """Versions are ordered by arrival, the reference's last-write-wins
+    order, not by epoch id: epoch 5 applied before epoch 2 is the older
+    one. Epoch 5 edits base docs x and y and deletes z; epoch 2 edits x
+    again, deletes y and re-adds z. Live search returns one version per
+    doc_id, epoch 2's, on both placements; ``current_docs()`` and the
+    compacted corpus of either ``compact()`` placement hold epoch 2's
+    text with its delete applied."""
+    from searchengine_spark.streaming import ingest as ing
+
+    base = transcripts.orderBy("conv_id", "turn_idx").limit(60)
+    x, y, z = base.limit(3).collect()
+    five = [
+        _msg(1, x["conv_id"], x["turn_idx"], "epoch five zebraorder"),
+        _msg(2, y["conv_id"], y["turn_idx"], "epoch five zebraorder kept"),
+        _msg(3, z["conv_id"], z["turn_idx"], "", delete=True),
+    ]
+    two = [
+        _msg(4, x["conv_id"], x["turn_idx"], "epoch two zebraorder"),
+        _msg(5, y["conv_id"], y["turn_idx"], "", delete=True),
+        _msg(6, z["conv_id"], z["turn_idx"], "epoch two zebraorder back"),
+    ]
+    want = {(x["conv_id"], x["turn_idx"]): "epoch two zebraorder",
+            (z["conv_id"], z["turn_idx"]): "epoch two zebraorder back"}
+    ids = sorted(f"{c}:{t:04d}" for c, t in want)
+
+    def unreachable(*a, **kw):
+        raise AssertionError("wrong placement")
+
+    stores = {}
+    for placement in ("driver", "spark"):
+        s = StreamingIndex(spark, str(tmp_path / placement))
+        s.bootstrap(base)
+        s.apply_batch(_batch(spark, tmp_path, five), 5)
+        s.apply_batch(_batch(spark, tmp_path, two), 2)
+        stores[placement] = s
+        for terms in (["zebraorder"], ["epoch", "zebraorder"]):
+            with monkeypatch.context() as m:
+                m.setattr(StreamingIndex, "_search_distributed", unreachable)
+                pinned = _live_pairs(s, terms, k=1000)
+            with monkeypatch.context() as m:
+                m.setattr(ing, "SERVING_DRIVER_MAX", 0)
+                m.setattr(StreamingIndex, "_search_pinned", unreachable)
+                distributed = _live_pairs(s, terms, k=1000)
+            assert pinned == distributed
+            assert sorted(d for d, _ in pinned) == ids
+        cur = s.current_docs().collect()
+        assert len(cur) == 60 - 1
+        texts = {(r["conv_id"], r["turn_idx"]): r["text"] for r in cur}
+        assert {key: texts.get(key) for key in want} == want
+        assert (y["conv_id"], y["turn_idx"]) not in texts
+        _compact_on(monkeypatch, s, placement)
+        docs = {(r["conv_id"], r["turn_idx"]): r["text"] for r in s._docs_frame().collect()}
+        assert docs == texts
+    drv, dist = stores["driver"], stores["spark"]
+    direct = [(r["doc_id"], r["score"])
+              for r in search_direct(drv.current_docs(), ["zebraorder"], k=1000).collect()]
+    assert sorted(d for d, _ in direct) == ids
+    assert _live_pairs(drv, ["zebraorder"], k=1000) == _live_pairs(dist, ["zebraorder"], k=1000) \
+        == direct
+
+
+def test_doc_values_read_without_job(spark, transcripts, tmp_path, spark_jobs):
+    """A parquet-dir snapshot pins its doc values with a driver-side read
+    of the ``docmap`` files and no Spark job, and the table equals the
+    Spark read's after the same sort and timestamp cast: schema and
+    values, ``ts`` included. Checked on a ``build_index`` snapshot and on
+    a driver-compacted one, with a ``ts``-range MUST filter that
+    resolves to the same doc_ints as on the Spark plan."""
+    import pyarrow as pa
+
+    from searchengine_spark.filters import ARROW, compile_filters
+    from searchengine_spark.index.engine import IndexHandle
+
+    s = _compaction_store(spark, transcripts, tmp_path, "store")
+    snaps = [s.catalog.current()]
+    s.compact()
+    snaps.append(s.catalog.current())
+    assert snaps[1].manifest["task_metrics"] == {}  # the driver placement built it
+    for snap in snaps:
+        ix = IndexHandle(spark, snap)
+        got = []
+        assert spark_jobs(lambda: got.append(ix.doc_values())) == []
+        dv = got[0]
+        want = ix.docmap().toArrow().sort_by("doc_int").combine_chunks()
+        for i, f in enumerate(want.schema):
+            if pa.types.is_timestamp(f.type):
+                want = want.set_column(i, f.name, want.column(i).cast(pa.timestamp("us")))
+        assert dv.schema == want.schema
+        assert dv.equals(want)
+        assert dv.column("doc_int").to_pylist() == list(range(snap.stats["n_docs"]))
+
+        ts = sorted(dv.column("ts").to_pylist())
+        lo, hi = ts[len(ts) // 4], ts[3 * len(ts) // 4]
+        fmt = "%Y-%m-%dT%H:%M:%SZ"
+        req = {"range": [{"name": "ts", "type": "timestamp",
+                          "from_value": lo.strftime(fmt), "to_value": hi.strftime(fmt)}]}
+        allowed = ix.filter_doc_ints(req)
+        spark_side = sorted(r["doc_int"] for r in
+                            ix.docmap().where(compile_filters(req)).select("doc_int").collect())
+        assert allowed.tolist() == spark_side
+        assert 0 < len(spark_side) < snap.stats["n_docs"]
+        assert compile_filters(req, **ARROW) is not None
+
+
+def test_live_search_races_redelivery_and_compaction(spark, transcripts, tmp_path):
+    """Searches on other threads while the main thread re-delivers an
+    epoch through ``apply_batch`` and then compacts: every search returns
+    the answer of one consistent state (before the re-delivery, after
+    it, after the compaction), and none raises — in particular none
+    reads a delta dir that ``compact()`` deleted. More reader threads
+    than cores, with a short switch interval, so the swaps interleave
+    with searches."""
+    import sys
+    import threading
+    import time
+
+    s = StreamingIndex(spark, str(tmp_path / "store"))
+    s.bootstrap(transcripts.orderBy("conv_id", "turn_idx").limit(200))
+    s.apply_batch(_batch(spark, tmp_path, [
+        _msg(1, "zrace", 0, "race zebrarace spark"),
+        _msg(2, "zrace", 1, "zebrarace zebrarace"),
+    ]), 0)
+    again = _batch(spark, tmp_path, [
+        _msg(3, "zrace", 0, "race again zebrarace"),
+        _msg(4, "zrace", 2, "zebrarace query spark"),
+    ])
+    terms = ["zebrarace", "spark"]
+    answers = [tuple(_live_pairs(s, terms))]
+    results: list[tuple] = []
+    errors: list[BaseException] = []
+    stop = threading.Event()
+
+    def reader():
+        try:
+            while not stop.is_set():
+                results.append(tuple(_live_pairs(s, terms)))
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader) for _ in range((os.cpu_count() or 1) + 2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    for t in threads:
+        t.start()
+    try:
+        s.apply_batch(again, 0)  # re-delivered epoch 0
+        answers.append(tuple(_live_pairs(s, terms)))
+        s.compact()
+        answers.append(tuple(_live_pairs(s, terms)))
+        seen = len(results)
+        deadline = time.monotonic() + 60
+        while len(results) < seen + 6 and not errors and time.monotonic() < deadline:
+            time.sleep(0.05)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=60)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert answers[0] != answers[1]
+    assert "zrace:0001" in {d for d, _ in answers[0]}
+    assert {d for d, _ in answers[1]} >= {"zrace:0000", "zrace:0002"}
+    assert "zrace:0001" not in {d for d, _ in answers[1] + answers[2]}
+    assert set(results) <= set(answers)
+    assert results[-1] == answers[2]
+    direct = search_direct(s.current_docs(), terms).collect()
+    assert list(answers[2]) == [(r["doc_id"], r["score"]) for r in direct]
 
 
 def test_parse_messages_kafka_shape(spark):
