@@ -108,6 +108,7 @@ from ..index.engine import (
     _in_sorted,
     _make_scorer,
     _result_df,
+    _rows_of,
     _score_rows,
     term_meta,
 )
@@ -179,8 +180,12 @@ class _LiveState:
     dead: np.ndarray | None
 
     @classmethod
-    def on(cls, base: IndexHandle) -> "_LiveState":
-        return cls(base, {}, _NO_DEAD if base.doc_values() is not None else None)
+    def fold(cls, base: IndexHandle, deltas: dict[int, _Delta]) -> "_LiveState":
+        """The state of ``base`` with ``deltas`` published in arrival order."""
+        live = cls(base, {}, _NO_DEAD if base.doc_values() is not None else None)
+        for did, delta in sorted(deltas.items(), key=lambda d: d[1].arrival):
+            live = live.add(did, delta)
+        return live
 
     def segments(self) -> list[tuple[int, pa.Array]]:
         """(doc_int start, doc_id column in doc_int order) of the base and
@@ -198,11 +203,8 @@ class _LiveState:
         tombstoned. A re-delivered id replaces its old delta, whose
         kills are undone by folding the other deltas again."""
         if did in self.deltas:
-            live = _LiveState.on(self.base)
-            rest = sorted((d for d in self.deltas.items() if d[0] != did), key=lambda d: d[1].arrival)
-            for d_id, d in rest:
-                live = live.add(d_id, d)
-            return live.add(did, delta)
+            rest = {d: x for d, x in self.deltas.items() if d != did}
+            return _LiveState.fold(self.base, rest).add(did, delta)
         dead = None
         if self.dead is not None and delta.doc_id is not None:
             kills = [
@@ -508,8 +510,8 @@ class StreamingIndex:
 
         The delta holds the batch's last write per doc_id: its
         ``tombstones`` (every touched doc_id — an upsert tombstones the
-        previous version, consumed later via joins in
-        :meth:`current_docs` and :meth:`search`), its ``upserts``, their
+        previous version, consumed later by :meth:`current_docs` and
+        :meth:`search`), its ``upserts``, their
         ``docmap`` numbered densely in doc_id order from the
         :meth:`_next_doc_int` watermark, and a mini posting index built
         with the base build's segment encoder; ``meta.json`` carries
@@ -694,10 +696,9 @@ class StreamingIndex:
         # a re-delivered epoch overwrote delta-<n>: its old pin is stale
         self._delta_pins.pop(int(epoch_id), None)
         live = self._live
-        if live is None:
-            self._live = self._load_live()
-        else:
-            self._live = live.add(int(epoch_id), self._pin_delta(int(epoch_id), meta, parts))
+        self._live = self._load_live() if live is None else live.add(
+            int(epoch_id), self._pin_delta(int(epoch_id), meta, parts)
+        )
 
     def _pin_delta(self, did: int, meta: dict, parts: dict[str, pa.Table] | None = None) -> _Delta:
         """Delta ``did`` as live search holds it (:class:`_Delta`): its
@@ -722,13 +723,11 @@ class StreamingIndex:
 
     def _load_live(self) -> _LiveState:
         """The live state of the store on disk: CURRENT's snapshot and
-        every published delta, folded in arrival order."""
-        with self._write_lock:
-            live = _LiveState.on(IndexHandle(self.spark, self.catalog.current()))
-            metas = {did: self._delta_meta(did) for did in self.delta_ids()}
-            for did in sorted(metas, key=lambda d: _Delta(metas[d]).arrival):
-                live = live.add(did, self._pin_delta(did, metas[did]))
-            return live
+        every published delta. The caller holds the write lock."""
+        return _LiveState.fold(
+            IndexHandle(self.spark, self.catalog.current()),
+            {did: self._pin_delta(did, self._delta_meta(did)) for did in self.delta_ids()},
+        )
 
     def _live_state(self) -> _LiveState:
         """The installed live state, loaded from disk on first use."""
@@ -819,8 +818,8 @@ class StreamingIndex:
           ``mapInPandas`` scorer, per-doc aggregation, and joins against
           the delta docmaps and tombstones.
 
-        Either placement's result is a local frame or a lazy plan;
-        collecting the driver placement's runs no job.
+        The driver placement's result is a local frame: collecting it
+        runs no job.
         """
         terms = list(dict.fromkeys(terms))
         live = self._live_state()
@@ -860,8 +859,7 @@ class StreamingIndex:
         rows = _driver_postings(live.base, base_meta) if base_meta else []
         dfs = {t: df for t, (df, _) in base_meta.items()}
         for delta in live.deltas.values():
-            hit = delta.postings.filter(pc.field("term").isin(terms))
-            for r in hit.to_pylist():
+            for r in _rows_of(delta.postings, terms):
                 rows.append(r)
                 dfs[r["term"]] = dfs.get(r["term"], 0) + r["n"]
         if not rows:
@@ -981,7 +979,7 @@ class StreamingIndex:
                 self._compact_distributed()
             # searches from here on read the new base; one still holding
             # the old state reads only pins and the old snapshot's files
-            self._live = _LiveState.on(IndexHandle(self.spark, self.catalog.current()))
+            self._live = _LiveState.fold(IndexHandle(self.spark, self.catalog.current()), {})
             for did in metas:
                 shutil.rmtree(
                     os.path.join(self.delta_root, f"delta-{did}"), ignore_errors=True
