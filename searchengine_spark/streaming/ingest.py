@@ -386,11 +386,6 @@ class StreamingIndex:
         with open(os.path.join(self.delta_root, f"delta-{did}", "meta.json")) as f:
             return json.load(f)
 
-    def _delta_starts(self) -> dict[int, int]:
-        """Each pending delta's ``doc_int_start``: its place in arrival
-        order, the version order of every merge-on-read view."""
-        return {did: self._delta_meta(did)["doc_int_start"] for did in self.delta_ids()}
-
     def _next_doc_int(self) -> int:
         """High watermark for delta doc_int assignment."""
         base = self.catalog.current()
@@ -775,7 +770,7 @@ class StreamingIndex:
         Tombstones are applied with a left join against the delta
         tombstone parquet — scale-safe for arbitrarily large CDC
         batches (no driver lists, no ``isin`` literal trees)."""
-        starts = self._delta_starts()
+        starts = {did: self._delta_meta(did)["doc_int_start"] for did in self.delta_ids()}
         allv = self._versions(starts)
         tomb = self._tombstone_frame(starts)
         if tomb is None:
