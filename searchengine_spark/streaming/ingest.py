@@ -143,9 +143,6 @@ DELTA_SCHEMAS = {
     "tombstones": "doc_id STRING",
 }
 
-_NO_DEAD = np.zeros(0, dtype=np.int64)
-
-
 @dataclass(frozen=True)
 class _Delta:
     """One published delta as live search holds it: its parsed
@@ -182,7 +179,8 @@ class _LiveState:
     @classmethod
     def fold(cls, base: IndexHandle, deltas: dict[int, _Delta]) -> "_LiveState":
         """The state of ``base`` with ``deltas`` published in arrival order."""
-        live = cls(base, {}, _NO_DEAD if base.doc_values() is not None else None)
+        dead = np.zeros(0, dtype=np.int64) if base.doc_values() is not None else None
+        live = cls(base, {}, dead)
         for did, delta in sorted(deltas.items(), key=lambda d: d[1].arrival):
             live = live.add(did, delta)
         return live
