@@ -143,6 +143,7 @@ DELTA_SCHEMAS = {
     "tombstones": "doc_id STRING",
 }
 
+
 @dataclass(frozen=True)
 class _Delta:
     """One published delta as live search holds it: its parsed
