@@ -223,13 +223,25 @@ def test_live_search_follows_compaction(spark, transcripts, tmp_path):
 def test_reapplied_epoch_replaces_delta_pin(spark, transcripts, tmp_path):
     """A re-delivered epoch overwrites ``delta-<n>``: the next search and
     ``current_docs()`` must see the new content, never the frames pinned
-    for the overwritten delta."""
+    for the overwritten delta. A base doc the first delivery deleted and
+    the second does not touch is live again, and live search over it
+    equals the direct path."""
+    from searchengine_spark.oracle import tokenize
+
     s = StreamingIndex(spark, str(tmp_path / "store"))
     s.bootstrap(transcripts.limit(200))
-    s.apply_batch(_batch(spark, tmp_path, [_msg(1, "zre", 0, "first zebraone")]), 0)
+    victim = next(r for r in s._docs_frame().orderBy("conv_id", "turn_idx").collect()
+                  if tokenize(r["text"]))
+    vid = f"{victim['conv_id']}:{victim['turn_idx']:04d}"
+    terms = list(dict.fromkeys(tokenize(victim["text"])))[:3]
+    s.apply_batch(_batch(spark, tmp_path, [
+        _msg(1, "zre", 0, "first zebraone"),
+        _msg(2, victim["conv_id"], victim["turn_idx"], "", delete=True),
+    ]), 0)
     assert [d for d, _ in _live_pairs(s, ["zebraone"])] == ["zre:0000"]
     assert _live_pairs(s, ["zebratwo"]) == []
     assert s.current_docs().where(F.col("conv_id") == "zre").count() == 1
+    assert vid not in {d for d, _ in _live_pairs(s, terms, k=1000)}
 
     s.apply_batch(_batch(spark, tmp_path, [_msg(5, "zre", 1, "second zebratwo")]), 0)
     assert s.delta_ids() == [0]
@@ -237,6 +249,9 @@ def test_reapplied_epoch_replaces_delta_pin(spark, transcripts, tmp_path):
     assert [d for d, _ in _live_pairs(s, ["zebratwo"])] == ["zre:0001"]
     live = s.current_docs().where(F.col("conv_id") == "zre").collect()
     assert [(r["turn_idx"], r["text"]) for r in live] == [(1, "second zebratwo")]
+    assert vid in {d for d, _ in _live_pairs(s, terms, k=1000)}
+    direct = search_direct(s.current_docs(), terms).collect()
+    assert _live_pairs(s, terms) == [(r["doc_id"], r["score"]) for r in direct]
 
 
 TIE = "zebratie tie spark query"
