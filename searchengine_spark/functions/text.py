@@ -12,6 +12,8 @@ tokenizer is property-tested in tests/test_tokenize.py.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -66,3 +68,12 @@ def doc_id_col(conv_id: Column | str = "conv_id", turn_idx: Column | str = "turn
     c = F.col(conv_id) if isinstance(conv_id, str) else conv_id
     t = F.col(turn_idx) if isinstance(turn_idx, str) else turn_idx
     return F.concat(c, F.lit(":"), F.lpad(t.cast("string"), 4, "0"))
+
+
+def doc_id_arrow(conv_id: pa.Array | pa.ChunkedArray, turn_idx: pa.Array | pa.ChunkedArray):
+    """:func:`doc_id_col` over Arrow columns, value for value, null for a
+    null ``conv_id`` or ``turn_idx``. Spark's ``lpad`` cuts a longer
+    string to 4 characters (``10000`` → ``1000``) and ``utf8_lpad``
+    does not, so the padded string is sliced after padding."""
+    turn = pc.utf8_slice_codeunits(pc.utf8_lpad(pc.cast(turn_idx, pa.string()), 4, "0"), 0, 4)
+    return pc.binary_join_element_wise(conv_id, turn, ":")

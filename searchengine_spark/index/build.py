@@ -36,10 +36,11 @@ skew ratio, bytes written); re-running `build_index` with the same
 staging snapshot skips completed stages — kill/rerun resumes, never
 duplicates work.
 
-A corpus small enough to collect (a compacted stream store, see
-``streaming/ingest.py``) is built on the driver instead by
-:func:`stage_index_driver`: the same numbering, segment encoder and
-artifacts, written with :func:`write_artifact`, with no Spark job.
+A small compacted stream store (see ``streaming/ingest.py``) is built
+on the driver instead by :func:`stage_index_driver`, from the term
+occurrences its segment merge decoded: the same numbering, segment
+encoder and artifacts, written with :func:`write_artifact`, with no
+Spark job.
 
 At rest, every serving artifact (``postings``, ``docmap``, ``terms``,
 and each CDC delta's parts in ``streaming/ingest.py``) is zstd Parquet
@@ -121,14 +122,19 @@ def read_artifact(path: str, columns: list[str], max_rows: int | None = None) ->
     the driver, file by file with pyarrow's file reader: no Spark job,
     and no dataset discovery, whose module the driver need not load.
     With ``max_rows``, None when the footers count more rows than that,
-    before any data is read."""
+    before any data is read. Each file is decoded on the calling thread:
+    decoding on the reader's thread pool left the driver 6-8 MB more
+    resident memory after each compaction of the offline benchmark's
+    ~10k-doc store (4 vCPUs), which reads its corpus this way."""
     files = sorted(
         os.path.join(path, f) for f in os.listdir(path)
         if f.endswith(".parquet") and not f.startswith((".", "_"))
     )
     if max_rows is not None and sum(pq.read_metadata(f).num_rows for f in files) > max_rows:
         return None
-    return pa.concat_tables([pq.ParquetFile(f).read(columns=columns) for f in files])
+    return pa.concat_tables(
+        [pq.ParquetFile(f).read(columns=columns, use_threads=False) for f in files]
+    )
 
 
 SEGMENT_SCHEMA = T.StructType(
@@ -377,29 +383,46 @@ def bucket_col(term_col, n_buckets: int):
 def _encode_postings(
     tokens: pa.ListArray, buckets: pa.ListArray, doc_int: np.ndarray, dl: pa.Array, avgdl: float
 ) -> pa.Table:
-    """Segment rows of a driver-placed build: the docs' token occurrences
+    """Segment rows of a driver-placed delta: the docs' token occurrences
     (``tokens`` and their ``buckets``, one list per doc, as
-    :func:`bucket_col` hashes them) grouped by (bucket, seg), each group
-    through :func:`_make_segment_encoder` — the fused path's input, so
-    the rows equal the distributed placement's. The encoder sees each
-    term as its rank in the sorted vocabulary, an int that orders as the
-    term does, so no Python string is made per occurrence; the rows get
-    their term strings back in one Arrow ``take``."""
-    words = pc.dictionary_encode(pc.list_flatten(tokens))
-    by_term = pc.sort_indices(words.dictionary)
-    rank = np.empty(len(by_term), dtype=np.int64)
-    rank[by_term.to_numpy()] = np.arange(len(by_term))
+    :func:`bucket_col` hashes them) through :func:`_encode_segments`,
+    each term as its :func:`term_ranks` rank — the fused path's input,
+    so the rows equal the distributed placement's."""
+    term, vocab = term_ranks(pc.list_flatten(tokens))
     owner = pc.list_parent_indices(tokens).to_numpy()
     occ = {
-        "term": rank[words.indices.to_numpy()],
+        "term": term,
         "bucket": pc.list_flatten(buckets).to_numpy(),
         "doc_int": doc_int[owner],
         "dl": dl.fill_null(0).to_numpy()[owner],
     }
-    occ["seg"] = occ["doc_int"] // SEG_SPAN
+    return _encode_segments(occ, vocab, avgdl)
+
+
+def term_ranks(terms: pa.Array) -> tuple[np.ndarray, pa.Array]:
+    """Each of ``terms`` as its rank in their sorted vocabulary (an int
+    that orders as the term does), and that vocabulary."""
+    words = pc.dictionary_encode(terms)
+    by_term = pc.sort_indices(words.dictionary)
+    rank = np.empty(len(by_term), dtype=np.int64)
+    rank[by_term.to_numpy()] = np.arange(len(by_term))
+    return rank[words.indices.to_numpy()], words.dictionary.take(by_term)
+
+
+def _encode_segments(occ: dict[str, np.ndarray], vocab: pa.Array, avgdl: float) -> pa.Table:
+    """Segment rows of a driver-placed build from its occurrence arrays:
+    ``term`` (the rank of the term in the sorted ``vocab``), ``bucket``,
+    ``doc_int``, ``dl`` and, when the occurrences are already counted
+    per (term, doc), ``tf``. They are grouped by (bucket, seg), each
+    group through :func:`_make_segment_encoder`, so the rows equal the
+    distributed placement's. The encoder sees each term as its rank, an
+    int that orders as the term does, so no Python string is made per
+    occurrence; the rows get their term strings back in one Arrow
+    ``take``."""
     schema = to_arrow_schema(SEGMENT_SCHEMA)
-    if not len(owner):
+    if not len(occ["doc_int"]):
         return schema.empty_table()
+    occ = {**occ, "seg": occ["doc_int"] // SEG_SPAN}
     order = np.lexsort((occ["seg"], occ["bucket"]))
     cut = np.flatnonzero(np.diff(occ["bucket"][order]) | np.diff(occ["seg"][order])) + 1
     encoder = _make_segment_encoder(avgdl)
@@ -407,7 +430,7 @@ def _encode_postings(
         [encoder(pd.DataFrame({c: v[idx] for c, v in occ.items()})) for idx in np.split(order, cut)],
         ignore_index=True,
     )
-    term = words.dictionary.take(by_term.take(pa.array(segs.pop("term").to_numpy())))
+    term = vocab.take(pa.array(segs.pop("term").to_numpy()))
     return pa.Table.from_pandas(segs, preserve_index=False).add_column(1, "term", term).cast(schema)
 
 
@@ -830,31 +853,33 @@ def _manifest(
 
 
 def stage_index_driver(
-    docs: pa.Table,
+    docmap: pa.Table,
+    occ: dict[str, np.ndarray],
+    vocab: pa.Array,
     docs_schema: T.StructType,
     catalog: IndexCatalog,
     snap_id: int,
 ) -> dict:
     """Driver placement of :func:`build_index` for a corpus small enough
-    to collect: stage snapshot ``snap_id`` from ``docs`` and return the
+    to hold on the driver: stage snapshot ``snap_id`` and return the
     manifest to publish with ``catalog.publish`` (the caller publishes,
     so it can swap its own state in first).
 
-    ``docs`` is an Arrow table of the corpus columns of ``docs_schema``
-    plus, per doc, ``doc_id`` (:func:`..functions.text.doc_id_col`),
-    ``tokens`` (the analyzer's output) and ``buckets`` (their
-    :func:`bucket_col` over ``DEFAULT_BUCKETS``, the bucket count
-    :func:`build_index` defaults to), all computed in the JVM.
-    The driver numbers the docs 0..n-1 in doc_id byte order (the order
-    the range-partitioned build gives), takes N and Σdl from the arrays,
-    encodes the postings with :func:`_encode_postings` under the new
-    avgdl, and writes each artifact with :func:`write_artifact` into a
-    fresh staging dir: ``docmap``, ``postings`` (one ``bucket=<b>/`` dir
-    per bucket, as the partitioned write lays them out) and ``terms``
-    (df = Σn, cf = Σsum_tf, bucket). Rows, schemas and manifest keys
-    equal :func:`build_index`'s for the same corpus (no synonyms); the
-    ledger times the three writes and ``task_metrics`` is empty, since
-    no Spark task runs."""
+    ``docmap`` holds the docs' doc values numbered 0..n-1 in doc_id
+    byte order, the order the range-partitioned build gives:
+    ``doc_int``, ``doc_id``, the ``conv_id`` .. ``ts`` columns of
+    ``docs_schema`` and ``dl``. ``occ`` and ``vocab`` are the docs'
+    term occurrences as :func:`_encode_segments` takes them, bucketed
+    over ``DEFAULT_BUCKETS`` (the bucket count :func:`build_index`
+    defaults to). N and Σdl come from the docmap; the postings are
+    encoded under the new avgdl, and each artifact is written with
+    :func:`write_artifact` into a fresh staging dir: ``docmap``,
+    ``postings`` (one ``bucket=<b>/`` dir per bucket, as the
+    partitioned write lays them out) and ``terms`` (df = Σn, cf =
+    Σsum_tf, bucket). Rows, schemas and manifest keys equal
+    :func:`build_index`'s for the same corpus (no synonyms); the ledger
+    times the three writes and ``task_metrics`` is empty, since no
+    Spark task runs."""
     t_start = time.perf_counter()
     stage_dir = catalog.staging_dir(snap_id)
     shutil.rmtree(stage_dir)  # a failed attempt at this id left files
@@ -867,21 +892,14 @@ def stage_index_driver(
            for c in ("conv_id", "turn_idx", "role", "tool", "ts")]
         + [T.StructField("dl", T.IntegerType())]
     )
-    meta_cols = docmap_schema.names[1:-1]  # doc_id .. ts, as collected
-    order = pc.sort_indices(docs["doc_id"], null_placement="at_start")
-    docs = docs.select(meta_cols + ["tokens", "buckets"]).take(order)
-    n = docs.num_rows
-    doc_int = np.arange(n, dtype=np.int64)
-    tokens = docs["tokens"].combine_chunks()
-    dl = pc.list_value_length(tokens)
-    sum_dl = pc.sum(dl).as_py() or 0
+    n = docmap.num_rows
+    sum_dl = pc.sum(docmap["dl"]).as_py() or 0
     stats = {"n_docs": n, "sum_dl": sum_dl, "avgdl": float(sum_dl) / float(n)}
 
     t0 = time.perf_counter()
     docmap_dir = os.path.join(stage_dir, "docmap")
-    docmap = (docs.select(meta_cols)
-              .add_column(0, "doc_int", pa.array(doc_int)).append_column("dl", dl))
-    write_artifact(docmap.cast(to_arrow_schema(docmap_schema)), docmap_dir)
+    write_artifact(docmap.select(docmap_schema.names).cast(to_arrow_schema(docmap_schema)),
+                   docmap_dir)
     dt = time.perf_counter() - t0
     ledger.commit("docmap", rows=n, seconds=round(dt, 3),
                   turns_per_sec=round(n / max(dt, 1e-9), 1),
@@ -889,7 +907,7 @@ def stage_index_driver(
 
     t0 = time.perf_counter()
     postings_dir = os.path.join(stage_dir, "postings")
-    segs = _encode_postings(tokens, docs["buckets"].combine_chunks(), doc_int, dl, stats["avgdl"])
+    segs = _encode_segments(occ, vocab, stats["avgdl"])
     for b in pc.unique(segs["bucket"]).to_pylist():
         write_artifact(segs.filter(pc.equal(segs["bucket"], b)).drop_columns("bucket"),
                        os.path.join(postings_dir, f"bucket={b}"))

@@ -28,6 +28,7 @@ pandas UDFs (one call per segment group, vectorized inside).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK = 128
 # Segment span in doc-number space: one segment covers doc_ints in
@@ -73,22 +74,29 @@ def encode_varints(vals: np.ndarray) -> np.ndarray:
     return encode_varints_with_offsets(vals)[0]
 
 
+def _varints(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128-decode a uint8 buffer → (uint64 values, and for each byte
+    position 0..len(b) the number of values that end before it)."""
+    is_end = (b & 0x80) == 0
+    before = np.zeros(len(b) + 1, dtype=np.int64)
+    if len(b) == 0:
+        return np.empty(0, dtype=np.uint64), before
+    if not is_end[-1]:
+        raise ValueError("corrupt varint stream: last value is truncated")
+    np.cumsum(is_end, out=before[1:])
+    starts = np.empty(before[-1], dtype=np.int64)
+    starts[0] = 0
+    starts[1:] = np.flatnonzero(is_end)[:-1] + 1
+    shift = 7 * (np.arange(len(b), dtype=np.int64) - starts[before[:-1]])
+    # each value's bytes hold disjoint bit ranges: their sum is the value
+    vals = np.add.reduceat((b & 0x7F).astype(np.uint64) << shift.astype(np.uint64), starts)
+    return vals, before
+
+
 def decode_varints(buf: bytes | np.ndarray) -> np.ndarray:
     """Inverse of :func:`encode_varints` → uint64 array."""
     b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
-    if len(b) == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_end = (b & 0x80) == 0
-    val_idx = np.zeros(len(b), dtype=np.int64)
-    np.cumsum(is_end[:-1], out=val_idx[1:])
-    ends = np.nonzero(is_end)[0]
-    starts = np.empty(len(ends), dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    pos = np.arange(len(b), dtype=np.int64) - starts[val_idx]
-    vals = np.zeros(len(ends), dtype=np.uint64)
-    np.add.at(vals, val_idx, (b & np.uint64(0x7F)).astype(np.uint64) << (7 * pos).astype(np.uint64))
-    return vals
+    return _varints(b)[0]
 
 
 def encode_postings(doc_ints: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> bytes:
@@ -109,18 +117,52 @@ def encode_postings(doc_ints: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> b
     return encode_varints(inter).tobytes()
 
 
-def decode_postings(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """→ (doc_ints ascending int64, tf int64, dl int64)."""
-    if not blob:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e
-    inter = decode_varints(blob)
-    if len(inter) % 3:
+def decode_postings_batch(
+    offsets: np.ndarray, data: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Decode a whole column of posting blobs at once: blob ``i`` is
+    ``data[offsets[i]:offsets[i + 1]]`` (an Arrow binary array's offsets
+    and data buffers, see :func:`blob_buffers`). One varint pass covers
+    every blob, since each blob is a whole number of values, and one
+    cumulative sum restarted at each blob's first entry undoes the gaps.
+    → (doc_ints int64, tf int64, dl int64, row offsets): blob ``i``'s
+    entries are ``[row[i], row[i + 1])``, ascending doc_ints."""
+    offsets = np.asarray(offsets, dtype=np.int64)
+    lo = offsets[0]
+    b = data[lo : offsets[-1]]
+    vals, before = _varints(b)
+    if len(offsets) > 2:  # _varints checks the last blob's end
+        inner = offsets[1:-1] - lo
+        if (b[inner[inner > 0] - 1] & 0x80).any():
+            raise ValueError("corrupt posting blob: a varint crosses the blob's end")
+    counts = before[offsets - lo]
+    if (counts % 3).any():
         raise ValueError("corrupt posting blob: length not a multiple of 3")
-    gaps = inter[0::3].astype(np.int64)
-    tfs = inter[1::3].astype(np.int64)
-    dls = inter[2::3].astype(np.int64)
-    return np.cumsum(gaps), tfs, dls
+    row = counts // 3
+    docs = np.cumsum(vals[0::3])
+    if len(row) > 2:
+        # unsigned, so the running sum may wrap: each blob's difference is exact
+        first = np.concatenate((np.zeros(1, dtype=np.uint64), docs))[row[:-1]]
+        docs -= np.repeat(first, np.diff(row))
+    return docs.astype(np.int64), vals[1::3].astype(np.int64), vals[2::3].astype(np.int64), row
+
+
+def decode_postings(blob: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """→ (doc_ints ascending int64, tf int64, dl int64): the one-blob
+    case of :func:`decode_postings_batch`."""
+    data = np.frombuffer(blob, dtype=np.uint8)
+    return decode_postings_batch(np.array([0, len(data)]), data)[:3]
+
+
+def blob_buffers(col: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, data) of a binary Arrow column, chunked or sliced, as
+    :func:`decode_postings_batch` takes them; zero-copy for one chunk."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks() if col.num_chunks != 1 else col.chunk(0)
+    width = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    _, offs, data = col.buffers()
+    offsets = np.frombuffer(offs, dtype=width)[col.offset : col.offset + len(col) + 1]
+    return offsets, np.frombuffer(data, dtype=np.uint8)
 
 
 def block_metadata(

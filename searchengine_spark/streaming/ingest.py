@@ -41,8 +41,10 @@ Spark-native equivalent (merge-on-read, Iceberg-style):
 - ``compact()`` folds the deltas into a new ``docs/base`` and base
   snapshot and clears them — the analogue of a scorch segment merge,
   after which results are rank-identical to the direct path (tested).
-  A small live corpus is collected in one Spark job and folded and
-  rebuilt on the driver, as Bleve merges its segments in-process; a
+  A small store is merged on the driver from its pinned segments, as
+  Bleve merges its segments in-process: the base and delta postings
+  are decoded, the dead versions dropped and the live ones renumbered
+  and re-encoded, with no document analysed again and no Spark job; a
   larger one keeps the distributed fold and the batch build job
   (two-phase merge of the north rule).
 
@@ -50,11 +52,11 @@ Every artifact this module wrote itself is re-read with its declared
 schema (``DELTA_SCHEMAS``; the corpus with the schema of the frame last
 written), so no read starts a parquet footer-inference job. A small
 micro-batch is applied with one Spark job that collects it; the driver
-writes the delta. A small store is compacted the same way. One CDC
-cycle on the offline benchmark (4 vCPUs, 500-message batches over a
-~10k-doc corpus) runs 2 Spark jobs: ``apply_batch`` 1, ``compact()``
-1, and none for live search (4 while live search collected its
-postings and its candidates' doc_ids: 2 jobs).
+writes the delta. One CDC cycle on the offline benchmark (4 vCPUs,
+500-message batches over a ~10k-doc corpus) runs 1 Spark job:
+``apply_batch`` 1, live search 0 and ``compact()`` 0 (2 while
+``compact()`` collected every stored version to analyse it again: 1
+job).
 
 Versions are ordered by arrival, the reference's last-write-wins
 order: each delta's doc_ints start at the high watermark of every
@@ -82,7 +84,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, _parse_datatype_string
 
 from .. import semantics as S
-from ..functions.text import doc_id_col, tokens_no_stop
+from ..functions.text import doc_id_arrow, doc_id_col, tokens_no_stop
 from ..index.build import (
     ARTIFACT_PARQUET,
     DEFAULT_BUCKETS,
@@ -94,11 +96,12 @@ from ..index.build import (
     partition_offsets,
     read_artifact,
     stage_index_driver,
+    term_ranks,
     with_doc_int,
     write_artifact,
 )
 from ..index.catalog import IndexCatalog, Snapshot
-from ..index.codec import SEG_SPAN
+from ..index.codec import SEG_SPAN, blob_buffers, decode_postings_batch
 from ..index.engine import (
     _SCORED,
     SERVING_DRIVER_MAX,
@@ -118,9 +121,8 @@ from ..index.engine import (
 # probe and runs the distributed build, numbering docs with the batch
 # build's two-phase committed-parquet scan, so its per-doc state never
 # crosses the driver or funnels through one task. It also bounds the
-# stored versions (base docs + pending delta upserts) one compact()
-# collects to fold and rebuild on the driver; a larger store keeps the
-# distributed fold and build
+# stored versions (base docs + pending delta upserts) compact() merges
+# on the driver; a larger store keeps the distributed fold and build
 LARGE_BATCH_DOCS = 65536
 
 # source helpers tag the DataFrames they return so ingest_stream can
@@ -940,10 +942,11 @@ class StreamingIndex:
         those rows):
 
         - **driver** (:meth:`_compact_driver`) when the bound fits
-          ``LARGE_BATCH_DOCS``: one Spark job collects every version with
-          its tokens and buckets; the driver drops the dead ones, writes
-          ``docs/base`` and builds the snapshot
-          (:func:`..index.build.stage_index_driver`) — one job in all;
+          ``LARGE_BATCH_DOCS``, which pins every segment of the live
+          state: a merge of the pinned segments that drops the dead
+          versions, renumbers and re-encodes the live ones and writes
+          ``docs/base`` and the snapshot
+          (:func:`..index.build.stage_index_driver`) — no Spark job;
         - **distributed** (:meth:`_compact_distributed`) otherwise: the
           ``current_docs()`` write and the batch build job
           (:func:`..index.build.build_index`).
@@ -968,7 +971,7 @@ class StreamingIndex:
                 m["n_docs"] for m in metas.values()
             )
             if bound <= LARGE_BATCH_DOCS:
-                self._compact_driver({did: m["doc_int_start"] for did, m in metas.items()})
+                self._compact_driver(self._live_state())
             else:
                 self._compact_distributed()
             # searches from here on read the new base; one still holding
@@ -980,38 +983,96 @@ class StreamingIndex:
                 )
             self._delta_pins = {}
 
-    def _compact_driver(self, starts: dict[int, int]) -> None:
-        """Driver placement of :meth:`compact` over the deltas ``starts``
-        (delta id → ``doc_int_start``). One ``toArrow`` collects
-        ``docs/base`` ∪ every pending delta's upserts with each row's
-        version ``_v``, ``doc_id``, tokens and buckets, computed in the
-        JVM as :meth:`apply_batch`'s probe does. The delta tombstones are
-        read with pyarrow; a version is dead iff ``_v`` is below the
-        start of the latest delta by arrival that tombstoned its doc_id
-        (the rule of :meth:`current_docs`). Nothing is swapped or
-        published until every file is written."""
-        allv = self._versions(starts)
-        docs_schema = allv.drop("_v").schema
-        tokens = tokens_no_stop("text")
-        rows = allv.select(
-            *docs_schema.names, "_v", doc_id_col().alias("doc_id"), tokens.alias("tokens"),
-            F.transform(tokens, lambda t: bucket_col(t, DEFAULT_BUCKETS)).alias("buckets"),
-        ).toArrow()
+    def _compact_driver(self, live: _LiveState) -> None:
+        """Driver placement of :meth:`compact`: a merge of the installed
+        live state's segments, as scorch merges its segments, with no
+        Spark job and no document analysed again. The gate pins the
+        base doc values and every delta, so ``live.dead`` holds every
+        dead version.
 
-        tomb_v = np.full(rows.num_rows, -1, dtype=np.int64)  # latest tombstoning start
-        for did, start in starts.items():
-            ids = read_artifact(os.path.join(self.delta_root, f"delta-{did}", "tombstones"),
-                                ["doc_id"])["doc_id"].combine_chunks()
-            hit = pc.is_in(rows["doc_id"], value_set=ids, skip_nulls=True)
-            hit = hit.to_numpy(zero_copy_only=False)
-            tomb_v[hit] = np.maximum(tomb_v[hit], start)
-        live = rows.filter(pa.array(rows["_v"].to_numpy() >= tomb_v))
+        - **postings**: the base ``bucket=<b>/`` dirs and each delta's
+          ``postings`` are read with :func:`..index.build.read_artifact`
+          and their blobs decoded as one column
+          (:func:`..index.codec.decode_postings_batch`);
+        - **docmap**: the versions not in ``live.dead`` — rows of the
+          pinned base doc values and of the delta docmaps — are
+          renumbered 0..n-1 in doc_id byte order, the order of a build;
+        - the live versions' (term, doc, tf, dl) are re-encoded under the
+          new avgdl with their doc_ints mapped, each term as its
+          :func:`..index.build.term_ranks` rank
+          (:func:`..index.build.stage_index_driver`);
+        - **docs/base**: the rows of ``docs/base`` and the delta upserts
+          whose version is live, each matched to its version by doc_id
+          (:func:`..functions.text.doc_id_arrow`), in new doc_int order.
+
+        Nothing is swapped or published until every file is written."""
+        base = live.base
+        assert live.dead is not None and base.snapshot.manifest["n_buckets"] == DEFAULT_BUCKETS
+        deltas = sorted(live.deltas.items(), key=lambda d: d[1].arrival)
+        ddirs = [os.path.join(self.delta_root, f"delta-{did}") for did, _ in deltas]
+        dv = base.doc_values()
+        cols = dv.column_names
+
+        # every version's doc values; the live ones renumbered by doc_id
+        versions = pa.concat_tables(
+            [dv] + [read_artifact(os.path.join(d, "docmap"), cols).select(cols).cast(dv.schema)
+                    for d in ddirs]
+        )
+        old = versions["doc_int"].to_numpy()
+        versions = versions.filter(pa.array(~_in_sorted(old, live.dead)))
+        versions = versions.take(pc.sort_indices(versions["doc_id"], null_placement="at_start"))
+        n = versions.num_rows
+        remap = np.full(int(old.max()) + 1, -1, dtype=np.int64)
+        remap[versions["doc_int"].to_numpy()] = np.arange(n)
+        docmap = versions.set_column(0, "doc_int", pa.array(np.arange(n)))
+
+        # every (term, doc) of a live version, doc_int remapped
+        root, parts = base.snapshot.postings_dir, []
+        for b in sorted(os.listdir(root)):
+            if b.startswith("bucket="):
+                t = read_artifact(os.path.join(root, b), ["term", "postings"])
+                parts.append(t.append_column(
+                    "bucket", pa.array(np.full(t.num_rows, int(b[len("bucket="):]), np.int32))))
+        rows = pa.concat_tables(parts + [
+            read_artifact(os.path.join(d, "postings"), ["term", "postings", "bucket"])
+            .select(["term", "postings", "bucket"]) for d in ddirs
+        ]).combine_chunks()
+        doc, tf, dl, row = decode_postings_batch(*blob_buffers(rows["postings"]))
+        per_row = np.diff(row)
+        doc = remap[doc]
+        keep = doc >= 0
+        term, vocab = term_ranks(rows["term"].combine_chunks())
+        occ = {
+            "term": np.repeat(term, per_row)[keep],
+            "bucket": np.repeat(rows["bucket"].to_numpy(), per_row)[keep],
+            "doc_int": doc[keep],
+            "dl": dl[keep],
+            "tf": tf[keep],
+        }
+
+        # the text row of each live version, in new doc_int order
+        docs_schema = self._docs_schema or self._docs_frame().schema
+        names, arrow = docs_schema.names, _arrow_schema(docs_schema)
+        texts = [read_artifact(self.docs_base, names)] + [
+            read_artifact(os.path.join(d, "upserts"), names)
+            for d, (_, delta) in zip(ddirs, deltas) if delta.meta["n_docs"]
+        ]
+        new = []
+        for (start, ids), text in zip(live.segments(), texts):
+            at = pc.index_in(doc_id_arrow(text["conv_id"], text["turn_idx"]), value_set=ids)
+            at = pc.fill_null(at, -1).to_numpy()
+            new.append(np.where(at >= 0, remap[start + at], -1))
+        new = np.concatenate(new)
+        kept = np.flatnonzero(new >= 0)
+        assert np.array_equal(np.sort(new[kept]), np.arange(n)), "one text row per live version"
+        docs = pa.concat_tables([t.select(names).cast(arrow) for t in texts])
+        docs = docs.take(pa.array(kept[np.argsort(new[kept])]))
 
         snap_id = self.catalog.next_id()
-        manifest = stage_index_driver(live, docs_schema, self.catalog, snap_id)
+        manifest = stage_index_driver(docmap, occ, vocab, docs_schema, self.catalog, snap_id)
         tmp_docs = self.docs_base + ".compact"
         shutil.rmtree(tmp_docs, ignore_errors=True)
-        write_artifact(live.select(docs_schema.names).cast(_arrow_schema(docs_schema)), tmp_docs)
+        write_artifact(docs, tmp_docs)
         self._swap_docs(tmp_docs, docs_schema)
         self.catalog.publish(snap_id, manifest)
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -10,7 +11,9 @@ from hypothesis import strategies as st
 from searchengine_spark.index.codec import (
     BLOCK,
     block_metadata,
+    blob_buffers,
     decode_postings,
+    decode_postings_batch,
     decode_varints,
     encode_postings,
     encode_varints,
@@ -71,3 +74,56 @@ def test_block_metadata_shapes():
     assert mx[0] == scores[:BLOCK].max() and mx[-1] == scores[BLOCK * 2 :].max()
     # padding must not inflate the last block's bound
     assert mx[-1] <= scores[BLOCK * 2]
+
+
+def _blobs() -> list[bytes]:
+    """Posting blobs with one-byte and multi-byte varints: gaps of 2^14
+    and more (three bytes), tf and dl of 128 and more (two bytes), and
+    empty blobs between them."""
+    rng = np.random.default_rng(7)
+    out = []
+    for i in range(24):
+        if i % 5 == 0:
+            out.append(b"")
+            continue
+        n = int(rng.integers(1, 300))
+        step = 1 << 14 if i % 3 == 0 else 1
+        docs = np.cumsum(rng.integers(step, 3 * step, n)) + int(rng.integers(0, 1 << 20))
+        tfs = rng.integers(1, 400, n)
+        dls = rng.integers(1, 5000, n) if i % 2 else np.full(n, 128)
+        out.append(encode_postings(docs, tfs, dls))
+    return out
+
+
+@pytest.mark.parametrize("shape", ["array", "sliced", "chunked"])
+def test_decode_postings_batch_equals_per_row(shape):
+    """The column decoder returns, for each row, what the one-blob
+    decoder returns for that row's blob: on a plain binary array, on a
+    slice of one (non-zero offset) and on a chunked column."""
+    blobs = _blobs()
+    arr = pa.array(blobs, pa.binary())
+    col = {
+        "array": arr,
+        "sliced": arr.slice(3, 17),
+        "chunked": pa.chunked_array([arr.slice(0, 6), arr.slice(6, 1), arr.slice(7)]),
+    }[shape]
+    want = col.to_pylist()
+    assert b"" in want and max(len(b) for b in want) > 0
+    docs, tfs, dls, row = decode_postings_batch(*blob_buffers(col))
+    assert len(row) == len(want) + 1 and row[0] == 0 and row[-1] == len(docs)
+    for i, blob in enumerate(want):
+        d, t, l = decode_postings(blob)
+        got = slice(row[i], row[i + 1])
+        assert d.tolist() == docs[got].tolist()
+        assert t.tolist() == tfs[got].tolist() and l.tolist() == dls[got].tolist()
+    assert docs.dtype == tfs.dtype == dls.dtype == np.int64
+    assert any((np.diff(decode_postings(b)[0]) >= 1 << 14).any() for b in want)
+    assert (dls >= 128).any()
+
+
+def test_decode_postings_batch_rejects_split_varint():
+    """A varint whose bytes cross from one blob into the next is corrupt."""
+    blob = encode_postings(np.array([300]), np.array([1]), np.array([1]))
+    data = np.frombuffer(blob + blob, dtype=np.uint8)
+    with pytest.raises(ValueError):
+        decode_postings_batch(np.array([0, 1, len(data)]), data)

@@ -572,13 +572,86 @@ def test_compact_placements_identical(spark, transcripts, tmp_path, monkeypatch)
         assert _live_pairs(drv, terms, k=20) == _live_pairs(dist, terms, k=20) == direct
 
 
+def _same_compactions(spark, drv: StreamingIndex, dist: StreamingIndex) -> list:
+    """Assert the two stores' CURRENT snapshots hold the same rows of
+    docmap, postings (blobs and block metadata included) and terms, and
+    their ``docs/base`` the same rows and schema; → the two snapshots."""
+    from pyspark.sql.types import StructType
+
+    snaps = [st.catalog.current() for st in (drv, dist)]
+    for part in ("docmap", "postings", "terms"):
+        rows = [
+            sorted(spark.read.schema(StructType.fromJson(sn.manifest["schemas"][part]))
+                   .parquet(os.path.join(sn.path, part)).collect(), key=str)
+            for sn in snaps
+        ]
+        assert rows[0] == rows[1], part
+        assert rows[0], part
+    assert drv._docs_frame().schema == dist._docs_frame().schema
+    docs = [sorted(st._docs_frame().collect(), key=str) for st in (drv, dist)]
+    assert docs[0] == docs[1]
+    return snaps
+
+
+def _same_live_search(drv: StreamingIndex, dist: StreamingIndex, queries: list[list[str]]):
+    """Live search on both stores equals the direct path over the
+    compacted corpus, for every query of ``queries``."""
+    for terms in queries:
+        direct = [(r["doc_id"], r["score"])
+                  for r in search_direct(drv.current_docs(), terms, k=20).collect()]
+        assert direct, terms
+        assert _live_pairs(drv, terms, k=20) == _live_pairs(dist, terms, k=20) == direct
+
+
+def test_two_compactions_placements_identical(spark, transcripts, tmp_path, monkeypatch):
+    """Two compactions in a row publish the same snapshot and corpus on
+    both placements. Between them an out-of-order epoch is applied and
+    an epoch is re-delivered whose first delivery deleted a base doc,
+    which is live again after it; the second driver merge reads the
+    ``docs/base`` the first one wrote."""
+    from searchengine_spark.oracle import tokenize
+
+    stores = {}
+    for placement in ("driver", "spark"):
+        s = _compaction_store(spark, transcripts, tmp_path, placement)
+        _compact_on(monkeypatch, s, placement)
+        base = sorted(s._docs_frame().collect(), key=lambda r: (r["conv_id"], r["turn_idx"]))
+        victim, edited = [r for r in base if tokenize(r["text"])][5:7]
+        s.apply_batch(_batch(spark, tmp_path, [
+            _msg(20, victim["conv_id"], victim["turn_idx"], "", delete=True),
+            _msg(21, "ztw", 0, "first twice zebratwo"),
+        ]), 7)
+        s.apply_batch(_batch(spark, tmp_path, [
+            _msg(22, edited["conv_id"], edited["turn_idx"], "edited twice zebratwo spark"),
+            _msg(23, "ztw", 1, "older epoch zebratwo query"),
+        ]), 4)
+        s.apply_batch(_batch(spark, tmp_path, [
+            _msg(24, "ztw", 0, "second twice zebratwo zebratwo"),
+            _msg(25, "ztw", 2, "plan text zebratwo"),
+        ]), 7)
+        assert s.delta_ids() == [4, 7]
+        _compact_on(monkeypatch, s, placement)
+        assert s.delta_ids() == []
+        stores[placement] = s
+    drv, dist = stores["driver"], stores["spark"]
+    snaps = _same_compactions(spark, drv, dist)
+    assert [sn.manifest["task_metrics"] == {} for sn in snaps] == [True, False]
+    docs = {(r["conv_id"], r["turn_idx"]): r["text"] for r in drv._docs_frame().collect()}
+    assert len(docs) == 60 - 1 + 4 + 3  # the victim is live again
+    assert (victim["conv_id"], victim["turn_idx"]) in docs
+    assert docs[(edited["conv_id"], edited["turn_idx"])] == "edited twice zebratwo spark"
+    assert docs[("ztw", 0)] == "second twice zebratwo zebratwo"
+    victim_terms = list(dict.fromkeys(tokenize(victim["text"])))[:3]
+    _same_live_search(drv, dist, [["zebratwo"], ["spark", "zebratwo", "query"], victim_terms])
+
+
 def test_compact_job_budget(spark, transcripts, tmp_path, spark_jobs):
-    """A small store compacts with one Spark job, the collect of every
-    stored version; the first live search on the new base then runs
-    none: its term dictionary, postings and doc values are read from the
-    snapshot's files on the driver."""
+    """A small store compacts with no Spark job: its pinned segments are
+    merged on the driver. The first live search on the new base runs
+    none either: its term dictionary, postings and doc values are read
+    from the snapshot's files on the driver."""
     s = _compaction_store(spark, transcripts, tmp_path, "store")
-    assert len(spark_jobs(s.compact)) == 1
+    assert spark_jobs(s.compact) == []
     result = []
     assert spark_jobs(lambda: result.append(s.search(["zebracomp", "spark"]).collect())) == []
     assert {"zcp:0000", "zcp:0002"} <= {d for d, _ in _live_pairs(s, ["zebracomp"])}
@@ -651,28 +724,34 @@ def test_compact_gate_bound(spark, transcripts, tmp_path, monkeypatch, at_bound)
     assert s.catalog.current().stats["n_docs"] == 63
 
 
-def test_compact_driver_failure_leaves_store(spark, transcripts, tmp_path, monkeypatch):
-    """A write that raises in the middle of the driver placement's build
+@pytest.mark.parametrize("target", ["docmap", "postings", "terms", "docs/base.compact"])
+def test_compact_driver_failure_leaves_store(spark, transcripts, tmp_path, monkeypatch, target):
+    """A write that raises in the driver placement — of the snapshot's
+    ``docmap``, ``postings`` or ``terms``, or of the staged corpus —
     leaves CURRENT, ``docs/base`` and the deltas as they were; a rerun
     then publishes cleanly: one file per artifact dir and one ledger
     entry per stage, nothing left from the failed attempt."""
     from searchengine_spark.index import build as B
+    from searchengine_spark.streaming import ingest as ing
 
     s = _compaction_store(spark, transcripts, tmp_path, "store")
     cur, deltas = s.catalog.current_id(), s.delta_ids()
     docs_files = sorted(os.listdir(s.docs_base))
     docs_rows = sorted(s._docs_frame().collect(), key=str)
-    write = B.write_artifact
+    write, failed = B.write_artifact, []
 
     def failing(table, path):
-        if "postings" in path:
+        if target in os.path.relpath(path, s.root):
+            failed.append(path)
             raise OSError("disk full")
         write(table, path)
 
     with monkeypatch.context() as m:
-        m.setattr(B, "write_artifact", failing)
+        m.setattr(B, "write_artifact", failing)  # the snapshot's artifacts
+        m.setattr(ing, "write_artifact", failing)  # the staged corpus
         with pytest.raises(OSError, match="disk full"):
             s.compact()
+    assert len(failed) == 1
     assert s.catalog.current_id() == cur and s.delta_ids() == deltas
     assert sorted(os.listdir(s.docs_base)) == docs_files
     assert sorted(s._docs_frame().collect(), key=str) == docs_rows
@@ -691,6 +770,34 @@ def test_compact_driver_failure_leaves_store(spark, transcripts, tmp_path, monke
     direct = [(r["doc_id"], r["score"])
               for r in search_direct(s.current_docs(), ["zebracomp"]).collect()]
     assert _live_pairs(s, ["zebracomp"]) == direct
+
+
+def test_compact_reruns_over_swapped_corpus(spark, transcripts, tmp_path, monkeypatch):
+    """A compaction that fails after swapping in the new ``docs/base``
+    but before publishing leaves the old CURRENT and its deltas over a
+    corpus that already holds their effect; a rerun merges them to the
+    snapshot and corpus of a compaction that did not fail."""
+    from searchengine_spark.index.catalog import IndexCatalog
+
+    clean = _compaction_store(spark, transcripts, tmp_path, "clean")
+    clean.compact()
+    s = _compaction_store(spark, transcripts, tmp_path, "store")
+    cur, deltas = s.catalog.current_id(), s.delta_ids()
+
+    def failing(*a, **kw):
+        raise OSError("crash before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(IndexCatalog, "publish", failing)
+        with pytest.raises(OSError, match="crash"):
+            s.compact()
+    assert s.catalog.current_id() == cur and s.delta_ids() == deltas
+    assert sorted(s._docs_frame().collect(), key=str) == \
+        sorted(clean._docs_frame().collect(), key=str)
+    s.compact()
+    assert s.delta_ids() == []
+    _same_compactions(spark, clean, s)
+    _same_live_search(clean, s, [["zebracomp"], ["spark", "query", "zebracomp"]])
 
 
 def test_out_of_order_epochs_follow_arrival(spark, transcripts, tmp_path, monkeypatch):

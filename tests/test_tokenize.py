@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from searchengine_spark import oracle
-from searchengine_spark.functions.text import doc_id_col, tokens_no_stop
+from searchengine_spark.functions.text import doc_id_arrow, doc_id_col, tokens_no_stop
 
 CASES = [
     "Hello, World! The quick brown-fox",
@@ -44,6 +44,21 @@ def test_doc_id_order_matches_tuple_order(spark, transcripts):
     )
     tuples = [(r["conv_id"], r["turn_idx"]) for r in rows]
     assert tuples == sorted(tuples)
+
+
+def test_doc_id_arrow_equals_spark(spark):
+    """The Arrow twin of ``doc_id_col`` gives Spark's value on every
+    row: padded turns, a turn of more than 4 digits (which Spark's
+    ``lpad`` cuts to 4 characters), a negative turn, and a null on
+    either side."""
+    rows = [("c", t) for t in (0, 7, 9999, 10000, 123456, -3)] + [(None, 1), ("n", None)]
+    df = spark.createDataFrame(rows, "conv_id STRING, turn_idx INT")
+    want = [r["doc_id"] for r in df.select(doc_id_col().alias("doc_id")).collect()]
+    tbl = df.toArrow()
+    got = doc_id_arrow(tbl["conv_id"], tbl["turn_idx"]).to_pylist()
+    assert got == want
+    assert want[:6] == ["c:0000", "c:0007", "c:9999", "c:1000", "c:1234", "c:00-3"]
+    assert want[6:] == [None, None]
 
 
 def test_underscore_and_digits(spark):
